@@ -82,7 +82,8 @@ object Bench {
     // derives from pairs, fuzzyClusters from fuzzyPairs) so dependent
     // derivations stay single-computed. Sequential staging measured
     // 36-77 s; overlapped ~⅓ of that on the same host. Best-effort as
-    // before: a failed chain just returns the old run-1 behavior.
+    // before: a failed chain just returns the old run-1 behavior, but
+    // is reported on stderr (chain index, exception class, message).
     val stagingSec: Double = {
       val t0 = System.nanoTime()
       import graft.sources.{AnnIndex, CfIndex, DedupStage, GraphStage, MediaStage}
@@ -99,12 +100,27 @@ object Bench {
         () => CfIndex.cfNeighbors(spark, sfDir).count(),
         () => AnnIndex.annIncrementDrift(spark, sfDir).count())
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      val futures = chains.map(c => pool.submit(new Runnable {
+        def run(): Unit = c()
+      }))
+      pool.shutdown()
       try {
-        val futures = chains.map(c => pool.submit(new Runnable {
-          def run(): Unit = try c() catch { case _: Throwable => () }
-        }))
-        futures.foreach(f => try f.get() catch { case _: Throwable => () })
-      } finally pool.shutdown()
+        futures.zipWithIndex.foreach { case (f, i) =>
+          try f.get() catch {
+            case e: java.util.concurrent.ExecutionException =>
+              val cause = e.getCause
+              System.err.println(s"[bench] staging chain $i failed: " +
+                s"${cause.getClass.getName}: ${cause.getMessage}")
+          }
+        }
+        // staging ends when the workers have exited, not at the last get
+        pool.awaitTermination(Long.MaxValue,
+          java.util.concurrent.TimeUnit.NANOSECONDS)
+      } catch {
+        case _: InterruptedException =>
+          pool.shutdownNow()
+          Thread.currentThread().interrupt()
+      }
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.sources.SessionCache
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -425,26 +426,25 @@ object SparkEntry {
   /** The documents corpus materialized once per sf dir as a directory
     * of plain-text files — the reference's actual input format
     * (`sendFileByFile.cpp:422-444`), backing the text-directory and
-    * streaming forms of the wordcount pipeline. Cached so repeated
-    * bench runs measure the query, not the fixture write.
+    * streaming forms of the wordcount pipeline. Cached per SparkContext
+    * so repeated bench runs (and new sessions) measure the query, not
+    * the fixture write.
     */
-  private val textDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docsAsTextDir(s: SparkSession, dir: String): String =
-    textDirCache.computeIfAbsent(dir, _ => {
+    SessionCache.perContext(s, ("SparkEntry.text", dir)) {
       val out = TempDirs.scratchString("graft_textdir_")
       Tables.documents(s, dir)
         .select(org.apache.spark.sql.functions.col("text"))
         .write.mode("overwrite").text(out)
       out
-    })
+    }
 
   /** The documents table round-tripped through a non-parquet format
-    * once per (sf dir, format) — the CSV/JSON source coverage (the
-    * wordcount oracle is format-invariant).
+    * once per (SparkContext, sf dir, format) — the CSV/JSON source
+    * coverage (the wordcount oracle is format-invariant).
     */
-  private val fmtDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docsAsFormat(s: SparkSession, dir: String, fmt: String): String =
-    fmtDirCache.computeIfAbsent(s"$dir:$fmt", _ => {
+    SessionCache.perContext(s, ("SparkEntry.format", dir, fmt)) {
       val out = TempDirs.scratchString(s"graft_${fmt}_")
       val docs = Tables.documents(s, dir)
         .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -458,7 +458,7 @@ object SparkEntry {
           .option("rootTag", "docs").option("rowTag", "doc").save(out)
       }
       out
-    })
+    }
 
   /** One entry per implemented operator from SURVEY.md §2 + extensions. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -801,7 +801,7 @@ object SparkEntry {
       Dedup.dedupIncrement(Tables.documents(s, dir), baseMaxId = 250,
         n = 3, b = 32, r = 4, num = 4, den = 5)),
     // ...and the same report probing the PERSISTED bucketed index:
-    // base indexed once per (session, dir), increments pay only their
+    // base indexed once per (SparkContext, dir), increments pay only their
     // own computation — equivalent by construction, shared oracle
     "dedup_increment_indexed" -> ((s, dir) =>
       graft.sources.DedupIndex.incrementReport(s, dir, baseMaxId = 250)),
@@ -1935,7 +1935,7 @@ object SparkEntry {
       Dedup.winnowIncrement(Tables.documents(s, dir), baseMaxId = 250L)),
     // ...and the same probe against the PERSISTED bucketed winnow
     // index (the cost-model winner at 0.39x shingle postings): base
-    // winnowed once per (session, dir), probe join exchange-free on
+    // winnowed once per (SparkContext, dir), probe join exchange-free on
     // the base side — equivalent by construction, shared oracle
     "dedup_increment_winnow" -> ((s, dir) =>
       graft.sources.DedupIndex.winnowIncrementReport(s, dir, baseMaxId = 250L)),
@@ -2034,7 +2034,7 @@ object SparkEntry {
       TextAnalysis.classifierCalibration(Tables.documents(s, dir))),
     // IN-ENGINE training: 3 integer batch-perceptron rounds over the
     // hashed bigram features, label = (lang = 'en'); output = weights,
-    // registered once per (session, dir) — the model-registry shape
+    // registered once per (SparkContext, dir) — the model-registry shape
     "doc_classifier_train" -> ((s, dir) =>
       TextAnalysis.classifierTrainCached(s, dir)),
     // inference with the LEARNED (registered) weights

@@ -1,9 +1,11 @@
 package graft
 
-/** Session-scoped scratch directories, reaped at JVM exit. Fixture,
-  * checkpoint and sink dirs are created once per (session, sf dir) —
-  * without the exit hook they accumulate in the temp volume across
-  * repeated driver runs (each Verify/Bench invocation is a fresh JVM).
+/** JVM-lifetime scratch directories, reaped at JVM exit. Fixture dirs
+  * are created once per (SparkContext, sf dir) through
+  * [[graft.sources.SessionCache.perContext]]; checkpoint and sink dirs
+  * once per use — without the exit hook they accumulate in the temp
+  * volume across repeated driver runs (each Verify/Bench invocation is
+  * a fresh JVM).
   * Deletion is idempotent and swallows races with Spark's own
   * shutdown hooks (a file already gone is success).
   */

@@ -386,6 +386,7 @@ object Clustering {
     * dimension count, so `limit(1)`'s row choice is immaterial.
     */
   private def powerIterate(centered: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1, s"power iteration needs iters >= 1, got $iters")
     // r16: the direction rides the DRIVER as d ≤ 64 longs of bounded
     // metadata (the bpeLearn 256-slot-registry precedent) instead of a
     // 1-row frame — per iteration the old shape paid a broadcast build

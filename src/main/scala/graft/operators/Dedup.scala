@@ -931,13 +931,11 @@ object Dedup {
     * sinks a result before re-invoking the operator, and a released
     * frame fails loudly (truncated lineage) if that contract is broken.
     */
-  private val perCallCheckpoints =
-    new graft.sources.SessionCache[String,
-      java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]]]()
-
   private def trackPerCall(tag: String, frames: Seq[DataFrame]): Unit = {
-    val ref = perCallCheckpoints.getOrDerive(frames.head.sparkSession, tag)(
-      new java.util.concurrent.atomic.AtomicReference(Seq.empty))
+    val ref = graft.sources.SessionCache.perSession(frames.head.sparkSession,
+        ("Dedup.perCall", tag)) {
+      new java.util.concurrent.atomic.AtomicReference(Seq.empty[DataFrame])
+    }
     ref.getAndSet(frames).foreach(release(_))
   }
 

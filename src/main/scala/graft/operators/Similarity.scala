@@ -203,9 +203,6 @@ object Similarity {
     annIvfWithCentroids(emb,
       Clustering.lloydCentroids(emb, nClusters, iters), nQueries, k)
 
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[annIvfKmeans]] with the index build AMORTIZED: the converged
     * centroid frame is built once per (source dir, nClusters, iters)
     * and cached — it is already `localCheckpoint`ed (executor blocks,
@@ -213,10 +210,7 @@ object Similarity {
     * This is how an IVF index actually serves: build once, query many —
     * the same amortized-layout pattern as [[graft.sources.Bucketing]]'s
     * bucketed-write gate. The checkpoint blocks belong to the session
-    * that built them, so the cache is valid for ONE SparkSession
-    * lifetime (the Verify/Bench/test processes each run exactly one);
-    * a multi-session server would key by session too or rebuild on a
-    * lost-block failure.
+    * that built them, so the cache is per session.
     */
   def annIvfKmeansIndexed(spark: org.apache.spark.sql.SparkSession,
                           dir: String, nQueries: Int, k: Int,
@@ -224,17 +218,20 @@ object Similarity {
     annIvfWithCentroids(graft.Tables.embeddings(spark, dir),
       cachedCentroids(spark, dir, nClusters, iters), nQueries, k)
 
-  /** The shared converged-centroid index: built once per (source dir,
-    * nClusters, iters) and reused by every consumer (IVF ANN, SemDeDup,
-    * prototype pruning) — the amortization that makes running several
-    * embedding-curation passes over one corpus cost ONE k-means.
+  /** The shared converged-centroid index: built once per (session,
+    * source dir, nClusters, iters) and reused by every consumer (IVF
+    * ANN, SemDeDup, prototype pruning) — the amortization that makes
+    * running several embedding-curation passes over one corpus cost ONE
+    * k-means.
     */
   private[graft] def cachedCentroids(spark: org.apache.spark.sql.SparkSession,
                                      dir: String, nClusters: Int = 8,
                                      iters: Int = 5): DataFrame =
-    ivfIndexCache.computeIfAbsent(s"$dir:$nClusters:$iters",
-      _ => Clustering.lloydCentroids(
-        graft.Tables.embeddings(spark, dir), nClusters, iters))
+    graft.sources.SessionCache.perSession(spark,
+        ("Similarity.ivf", dir, nClusters, iters)) {
+      Clustering.lloydCentroids(
+        graft.Tables.embeddings(spark, dir), nClusters, iters)
+    }
 
   private def annIvfWithCentroids(emb: DataFrame, cents: DataFrame,
                                   nQueries: Int, k: Int): DataFrame = {
@@ -685,8 +682,10 @@ object Similarity {
                    codebookK: Int = 8, iters: Int = 3): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
     val books = (0 until m).map { s =>
-      ivfIndexCache.computeIfAbsent(s"$dir:pq:$m:$s:$codebookK:$iters",
-        _ => Clustering.lloydCentroids(pqSlice(emb, s, m), codebookK, iters))
+      graft.sources.SessionCache.perSession(spark,
+          ("Similarity.pq", dir, m, s, codebookK, iters)) {
+        Clustering.lloydCentroids(pqSlice(emb, s, m), codebookK, iters)
+      }
     }
     val (codes, qlut) =
       pqCodesAndLut(emb, nQueries, m, codebookK, iters, books = Some(books))

@@ -1364,25 +1364,23 @@ object TextAnalysis {
     w.orderBy("slot")
   }
 
-  // (dir, slots, rounds) -> learned weights, collected once per
-  // session: the model-registry shape — training runs once, every
-  // consumer (the train gate's output, the scoring gate, any future
-  // filter) reads the same registered weights. The weight vector is
-  // `slots` rows — driver-held loop state, same contract as the Lloyd
-  // centroid frame.
-  private val trainedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[(Long, Long)]]()
-
-  /** [[classifierTrain]] through the per-(session, dir) model
-    * registry: the first caller pays the training run; everyone else
-    * gets the registered weights rebuilt as a tiny local frame.
+  /** [[classifierTrain]] through the per-(SparkContext, dir, slots,
+    * rounds) model registry: the first caller pays the training run;
+    * everyone else gets the registered weights rebuilt as a tiny local
+    * frame. The model-registry shape — training runs once, every
+    * consumer (the train gate's output, the scoring gate, any future
+    * filter) reads the same registered weights. The weight vector is
+    * `slots` rows — driver-held loop state, same contract as the Lloyd
+    * centroid frame.
     */
   def classifierTrainCached(spark: org.apache.spark.sql.SparkSession,
                             dir: String, slots: Int = 256,
                             rounds: Int = 3): DataFrame = {
-    val rows = trainedCache.computeIfAbsent((dir, slots, rounds), _ =>
+    val rows = graft.sources.SessionCache.perContext(spark,
+        ("TextAnalysis.trained", dir, slots, rounds)) {
       classifierTrain(graft.Tables.documents(spark, dir), slots, rounds)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     import spark.implicits._
     rows.toDF("slot", "w").orderBy("slot")
   }
@@ -1440,24 +1438,20 @@ object TextAnalysis {
         expr("tp * 1000000 div greatest(tp + fn, 1)").as("recall_ppm"))
   }
 
-  // (dir, slots, rounds) -> the held-out eval row: a production eval
-  // runs once per trained model and REGISTERS its metrics next to the
-  // weights — consumers read the registry, they don't re-run the eval
-  private val evalCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[Long]]()
-
-  /** [[classifierEval]] through the per-(session, dir) registry —
-    * first caller pays the train+score run, everyone else reads the
-    * registered metrics row.
+  /** [[classifierEval]] through the per-(SparkContext, dir, slots,
+    * rounds) registry — first caller pays the train+score run, everyone
+    * else reads the registered metrics row: a production eval runs once
+    * per trained model and REGISTERS its metrics next to the weights.
     */
   def classifierEvalCached(spark: org.apache.spark.sql.SparkSession,
                            dir: String, slots: Int = 256,
                            rounds: Int = 3): DataFrame = {
-    val vals = evalCache.computeIfAbsent((dir, slots, rounds), _ => {
+    val vals = graft.sources.SessionCache.perContext(spark,
+        ("TextAnalysis.eval", dir, slots, rounds)) {
       val r = classifierEval(graft.Tables.documents(spark, dir),
         slots, rounds).collect()(0)
       (0 until 8).map(r.getLong)
-    })
+    }
     import spark.implicits._
     Seq((vals(0), vals(1), vals(2), vals(3), vals(4), vals(5), vals(6),
         vals(7)))

@@ -78,23 +78,19 @@ object AnnIndex {
       .orderBy("query_id", "rank")
   }
 
-  // dir -> tag, populated under computeIfAbsent so the index write
-  // completes before any concurrent caller can query it
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Gate query: IVF top-k through the PERSISTED index — built once
-    * per (session, sf dir), probed on every rerun; same parameters and
-    * oracle as `ann_ivf_kmeans`.
+    * per (SparkContext, sf dir), probed on every rerun; same parameters
+    * and oracle as `ann_ivf_kmeans`. The memo's once-cell completes the
+    * index write before any concurrent caller can query it.
     */
   def annReport(spark: SparkSession, dir: String, nQueries: Int, k: Int,
                 nClusters: Int = 8, iters: Int = 5): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val tag = staged.computeIfAbsent(dir, { _ =>
+    val tag = SessionCache.perContext(spark, ("AnnIndex", dir)) {
       val t = StagedTags.tagOf(dir)
       writeIndex(emb, t, nClusters, iters)
       t
-    })
+    }
     query(spark, tag, emb.where(col("vec_id") < nQueries), k)
   }
 
@@ -158,23 +154,21 @@ object AnnIndex {
     (graft.Tables.embeddings(spark, dir).agg(max("vec_id")).head().getLong(0)
       + 1L) * 4L / 5L
 
-  private val stagedInc =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // staging key AND table tag both carry the index parameters: a
-  // second caller with different (nClusters, iters) must get its own
-  // build, never a silently-mismatched cached one
+  // one base+append build per (SparkContext, dir, params); staging key
+  // AND table tag both carry the index parameters: a second caller
+  // with different (nClusters, iters) must get its own build, never a
+  // silently-mismatched cached one
   private def ensureInc(spark: SparkSession, dir: String,
                         nClusters: Int, iters: Int): String =
-    stagedInc.computeIfAbsent(s"$dir#$nClusters#$iters", { key =>
-      val t = StagedTags.tagOf(key)
+    SessionCache.perContext(spark, ("AnnIndex.inc", dir, nClusters, iters)) {
+      val t = StagedTags.tagOf(s"$dir#$nClusters#$iters")
       val emb = graft.Tables.embeddings(spark, dir)
       val cut = incCut(spark, dir)
       writeIncBase(emb.where(col("vec_id") < cut),
         emb.where(col("vec_id") < cut), t, nClusters, iters)
       appendDelta(spark, t, emb.where(col("vec_id") >= cut))
       t
-    })
+    }
 
   /** Gate query: IVF top-k through the INCREMENTED index — centroids
     * trained on the base 80%, the delta 20% folded in by append-only
@@ -241,9 +235,6 @@ object AnnIndex {
     cellsC
   }
 
-  private val compacted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Gate query: the increment top-k served AFTER compaction — the
     * full maintenance cycle (base build → append → compact → probe)
     * with the result provably unchanged (same oracle as
@@ -254,8 +245,8 @@ object AnnIndex {
                        k: Int, nClusters: Int = 8,
                        iters: Int = 5): DataFrame = {
     val tag = ensureInc(spark, dir, nClusters, iters)
-    val cellsC = compacted.computeIfAbsent(s"$dir#$nClusters#$iters",
-      { _ => compact(spark, tag) })
+    val cellsC = SessionCache.perContext(spark,
+      ("AnnIndex.compact", dir, nClusters, iters)) { compact(spark, tag) }
     val (centT, _) = tablesInc(tag)
     queryTables(spark, centT, cellsC,
       graft.Tables.embeddings(spark, dir).where(col("vec_id") < nQueries), k)
@@ -300,19 +291,6 @@ object AnnIndex {
     (centR, cellsR)
   }
 
-  // ONE maintenance decision per (session, dir, params) — ADVICE r12:
-  // the tripwire always compares against the FROZEN graft_anni
-  // centroids (never the rebuilt ones), so on a drifted corpus
-  // `rebuild_due` would never clear and every annMaintain call would
-  // retrain and write fresh _g<N> tables. The memo makes repeat calls
-  // idempotent. SESSION-scoped via SessionCache (ADVICE r13): the
-  // rebuilt maintain-tag tables live in the creating session's
-  // catalog/warehouse, so a JVM-global memo would skip the rebuild for
-  // a NEW session whose catalog has no such tables; SessionCache also
-  // runs the derive (several Spark jobs) outside any map lock, unlike
-  // the old computeIfAbsent.
-  private val stagedMt = new SessionCache[String, Boolean]()
-
   /** CONSUME the drift tripwire: compute [[annIncrementDrift]] and,
     * when `rebuild_due`, run the scheduled [[rebuild]] + swap — the
     * production maintenance decision as one call. The returned row is
@@ -335,7 +313,15 @@ object AnnIndex {
                   iters: Int = 5): DataFrame = {
     val drift = annIncrementDrift(spark, dir, nClusters, iters)
     val key = s"$dir#$nClusters#$iters"
-    stagedMt.getOrDerive(spark, key) {
+    // ONE maintenance decision per (SparkContext, dir, params) — ADVICE
+    // r12: the tripwire always compares against the FROZEN graft_anni
+    // centroids (never the rebuilt ones), so on a drifted corpus
+    // `rebuild_due` would never clear and every annMaintain call would
+    // retrain and write fresh _g<N> tables. The memo makes repeat calls
+    // idempotent. Context-scoped like the table stagings it mirrors:
+    // `newSession()` shares the external catalog, so the rebuilt tables
+    // are readable from every session of the context
+    SessionCache.perContext(spark, ("AnnIndex.maintain", key)) {
       val due = drift.head().getAs[Boolean]("rebuild_due")
       if (due) {
         // own base+append build (same split and parameters as the
@@ -361,13 +347,6 @@ object AnnIndex {
   def maintainTag(dir: String, nClusters: Int = 8, iters: Int = 5): String =
     StagedTags.tagOf(s"$dir#$nClusters#$iters#mt")
 
-  // rebuild-family staging: its OWN base+append build (same split and
-  // parameters as the shared increment family), because the rebuild
-  // RETRAINS the quantizer — running it on the shared tag would change
-  // the increment/compact gates' answers depending on gate order
-  private val stagedRb =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Gate query: IVF top-k through the REBUILT index — the full
     * maintenance cycle run to its end (base build → append → scheduled
     * rebuild → probe). The retrain spans all vectors, so the result
@@ -377,16 +356,21 @@ object AnnIndex {
   def annRebuildReport(spark: SparkSession, dir: String, nQueries: Int,
                        k: Int, nClusters: Int = 8,
                        iters: Int = 5): DataFrame = {
-    val (centR, cellsR) = stagedRb.computeIfAbsent(
-      s"$dir#$nClusters#$iters", { key =>
-        val t = StagedTags.tagOf(key + "#rb")
+    // rebuild-family staging, once per (SparkContext, dir, params): its
+    // OWN base+append build (same split and parameters as the shared
+    // increment family), because the rebuild RETRAINS the quantizer —
+    // running it on the shared tag would change the increment/compact
+    // gates' answers depending on gate order
+    val (centR, cellsR) = SessionCache.perContext(spark,
+      ("AnnIndex.rebuild", dir, nClusters, iters)) {
+        val t = StagedTags.tagOf(s"$dir#$nClusters#$iters#rb")
         val emb = graft.Tables.embeddings(spark, dir)
         val cut = incCut(spark, dir)
         writeIncBase(emb.where(col("vec_id") < cut),
           emb.where(col("vec_id") < cut), t, nClusters, iters)
         appendDelta(spark, t, emb.where(col("vec_id") >= cut))
         rebuild(spark, t, nClusters, iters)
-      })
+      }
     queryTables(spark, centR, cellsR,
       graft.Tables.embeddings(spark, dir).where(col("vec_id") < nQueries), k)
   }

@@ -19,14 +19,11 @@ import org.apache.spark.sql.functions._
   */
 object BinaryFiles {
 
-  private val dirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** documents → one binary file per doc under a session temp dir,
-    * once per sf dir.
+  /** documents → one binary file per doc under a scratch dir, once per
+    * (SparkContext, sf dir).
     */
   def docsAsBinaryDir(s: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent(dir, _ => {
+    SessionCache.perContext(s, ("BinaryFiles", dir)) {
       val out = graft.TempDirs.scratchString("graft_bin_")
       graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
         .repartition(8)
@@ -38,7 +35,7 @@ object BinaryFiles {
           }
         }
       out
-    })
+    }
 
   /** Scan the blob dir with the binaryFile source and prove the exact
     * byte round-trip: (doc_id, n_bytes, fp). The scan itself carries

@@ -22,19 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object BloomParquet {
 
-  private val dirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write `lineitem` once per (session, sf dir) with a bloom filter on
+  /** Write `lineitem` once per (SparkContext, sf dir) with a bloom filter on
     * `l_partkey` (high-cardinality, not the sort key — exactly the
     * column bloom filters are for). Row groups kept small so the sf0.01
     * fixture has several groups for the filter to prune between.
     */
   def stage(spark: SparkSession, dir: String): String =
-    // computeIfAbsent: the write completes before ANY caller observes
-    // the path (a check-then-act pair would let a concurrent second
-    // caller read null or a directory mid-write)
-    dirs.computeIfAbsent(dir, { dir =>
+    // the memo's once-cell completes the write before ANY caller
+    // observes the path (a check-then-act pair would let a concurrent
+    // second caller read null or a directory mid-write)
+    SessionCache.perContext(spark, ("BloomParquet", dir)) {
       val out = graft.TempDirs.scratchString("graft_bloom_li_")
       graft.Tables.lineitem(spark, dir)
         .select(col("l_partkey"), col("l_orderkey"), col("l_quantity"),
@@ -54,7 +51,7 @@ object BloomParquet {
         .option("parquet.block.size", (1 << 20).toString)
         .parquet(out)
       out
-    })
+    }
 
   /** Gate query: needle lookup `l_partkey = 1` through the bloom
     * layout — count and exact cents totals for the matching lines. The

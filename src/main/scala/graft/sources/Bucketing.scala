@@ -25,21 +25,16 @@ object Bucketing {
                    key: String): DataFrame =
     spark.table(left).join(spark.table(right), key)
 
-  // dir -> tag under computeIfAbsent: write-before-visible (see
-  // AnnIndex.staged)
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Gate query: revenue per order priority through the bucketed
     * layout — both sides written bucketed+sorted on `orderkey` ONCE per
-    * (session, sf dir), then joined with zero exchanges before the
+    * (SparkContext, sf dir), then joined with zero exchanges before the
     * final priority aggregation. The write cost is the amortized
     * shuffle; every rerun (bench does 3) joins exchange-free, which is
     * the point of the layout.
     */
   def bucketedRevenueByPriority(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tag = staged.computeIfAbsent(dir, { _ =>
+    val tag = SessionCache.perContext(spark, ("Bucketing", dir)) {
       val t = StagedTags.tagOf(dir)
       writeBucketed(graft.Tables.orders(spark, dir)
         .select(col("o_orderkey").as("orderkey"), col("o_orderpriority")),
@@ -50,7 +45,7 @@ object Bucketing {
             .cast("long").as("rev_c")),
         s"graft_bkt_lineitem_$t", "orderkey", 8)
       t
-    })
+    }
     val (ot, lt) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
     joinBucketed(spark, ot, lt, "orderkey")
       .groupBy("o_orderpriority")

@@ -105,18 +105,14 @@ object CfIndex {
     writes.foreach(Await.result(_, Duration.Inf))
   }
 
-  // dir -> tag under computeIfAbsent: write-before-visible (see
-  // AnnIndex.staged); one index build per (session, sf dir), shared
-  // by all three family gates — whichever runs first pays the build
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // one index build per (SparkContext, sf dir), shared by all three
+  // family gates — whichever runs first pays the build
   private def ensure(spark: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir, { _ =>
+    SessionCache.perContext(spark, ("CfIndex", dir)) {
       val tg = StagedTags.tagOf(dir)
       writeIndex(spark, dir, tg)
       tg
-    })
+    }
 
   /** Gate query: [[Basket.cfNeighbors]] through the persisted index —
     * a bucketed scan + the output ordering, no similarity compute.
@@ -307,16 +303,13 @@ object CfIndex {
     (dcp, ddf, dsh, ddeg)
   }
 
-  // base-split index staging, one build per (session, sf dir)
-  private val stagedBase =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // base-split index staging, one build per (SparkContext, sf dir)
   private def ensureBase(spark: SparkSession, dir: String): String =
-    stagedBase.computeIfAbsent(dir, { _ =>
+    SessionCache.perContext(spark, ("CfIndex.base", dir)) {
       val tg = StagedTags.tagOf(dir)
       writeBaseIndex(spark, dir, tg)
       tg
-    })
+    }
 
   /** Gate query: the full-history neighbor graph produced by FOLDING
     * the post-[[CutDate]] delta orders into the persisted base index —
@@ -351,51 +344,15 @@ object CfIndex {
 
   // the derived increment state is checkpointed frames — share ONE
   // derivation per (session, dir, params) between the increment gate
-  // and writePromoted instead of paying the delta fold twice. The
-  // SESSION is part of the key (ADVICE r11): the cached frames hold
-  // localCheckpoint blocks bound to the creating session's context —
-  // a different session in the same JVM must derive its own state,
-  // never be served frames whose blocks die with someone else's
-  // session.
-  // BOUNDED per-session cache (ADVICE r12): the round-11 strong
-  // (SparkSession, …) tuple key retained every session ever used —
-  // plus all its checkpointed frames — for the JVM lifetime, unbounded
-  // growth in exactly the long-lived multi-session JVM the session
-  // scoping targets. A WeakHashMap would NOT fix it: IncState's
-  // frames strongly reference their creating session, and WeakHashMap
-  // holds values strongly, so the value→key chain pins every entry
-  // anyway. Instead: an access-ordered LRU over sessions, capped at
-  // [[MaxCachedSessions]] — evicting a session's entry drops its
-  // frames (and with them the only cache-held reference to the
-  // session); a still-live evicted session merely re-derives on next
-  // use, which is deterministic and answer-identical (localCheckpoint
-  // contents are a pure function of (dir, params)).
-  private val MaxCachedSessions = 4
-  private val incStates =
-    new java.util.LinkedHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int),
-          IncState]](16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession,
-            java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int),
-              IncState]]): Boolean = size() > MaxCachedSessions
-    }
-
+  // and writePromoted instead of paying the delta fold twice
+  // (per-session scope: the frames hold localCheckpoint blocks)
   private[graft] def incrementState(spark: SparkSession, dir: String,
                                     maxDf: Int = 30, minShared: Int = 2,
-                                    kNb: Int = 3): IncState = {
-    val perSession = incStates.synchronized {
-      var m = incStates.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          (String, Int, Int, Int), IncState]()
-        incStates.put(spark, m)
-      }
-      m
+                                    kNb: Int = 3): IncState =
+    SessionCache.perSession(spark,
+        ("CfIndex.inc", dir, maxDf, minShared, kNb)) {
+      deriveIncrementState(spark, dir, maxDf, minShared, kNb)
     }
-    perSession.computeIfAbsent((dir, maxDf, minShared, kNb), _ =>
-      deriveIncrementState(spark, dir, maxDf, minShared, kNb))
-  }
 
   private def deriveIncrementState(spark: SparkSession, dir: String,
                                    maxDf: Int, minShared: Int,
@@ -519,20 +476,17 @@ object CfIndex {
     writes.foreach(Await.result(_, Duration.Inf))
   }
 
-  private val promoted =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Gate query: the neighbor graph served from the PROMOTED tables —
     * probe-only after the one-time promote, byte-equal to the full
     * recompute (shares the cf_neighbors oracle), proving the
     * maintenance loop closes without a graph rebuild.
     */
   def cfPromote(spark: SparkSession, dir: String): DataFrame = {
-    val tag = promoted.computeIfAbsent(dir, { _ =>
+    val tag = SessionCache.perContext(spark, ("CfIndex.promote", dir)) {
       val tg = StagedTags.tagOf(dir)
       writePromoted(spark, dir, tg)
       tg
-    })
+    }
     spark.table(tp("nb", tag))
       .select("c_a", "c_b", "shared", "score_ppm", "rank")
       .orderBy("c_a", "rank")

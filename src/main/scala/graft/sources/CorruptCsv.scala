@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object CorruptCsv {
 
-  private val dirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** documents → "doc_id,n_chars" lines, malformed where id % 7 == 0. */
+  /** documents → "doc_id,n_chars" lines, malformed where id % 7 == 0;
+    * written once per (SparkContext, sf dir).
+    */
   def feedDir(s: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent(dir, _ => {
+    SessionCache.perContext(s, ("CorruptCsv", dir)) {
       val out = graft.TempDirs.scratchString("graft_badcsv_")
       graft.Tables.documents(s, dir)
         .select(concat(
@@ -29,7 +28,7 @@ object CorruptCsv {
           lit(","), col("n_chars").cast("string")).as("value"))
         .write.mode("overwrite").text(out)
       out
-    })
+    }
 
   /** One-row ingest report: total, quarantined, and exact sums over
     * the rows that parsed clean. `doc_id` is null on quarantined rows

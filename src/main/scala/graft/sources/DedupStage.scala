@@ -14,9 +14,10 @@ import graft.operators.Dedup
   * object each gate re-derived them from raw text (shingle explode +
   * self-join + verify: the dominant cost of every dedup_* query, ~90 s
   * of the round-12 sf0.1 sweep concentrated in this family). This is
-  * the same ensure*-staging contract the CF and ANN families already
-  * use: derive once per (session, dir, params), `localCheckpoint` the
-  * result, let every gate probe the checkpointed frame.
+  * the ensure*-staging contract the CF and ANN families use, in the
+  * per-session scope ([[SessionCache.perSession]]): derive once per
+  * (session, dir, params), `localCheckpoint` the result, let every gate
+  * probe the checkpointed frame.
   *
   * In production the staged frames are exactly what a nightly dedup
   * job materializes to parquet between stages (the pair table and the
@@ -27,15 +28,13 @@ import graft.operators.Dedup
   */
 object DedupStage {
 
-  private val cache = new SessionCache[String, DataFrame]()
-
   /** Verified brute-force 3-gram Jaccard pair set (threshold num/den)
     * over the full documents table — (id_a, id_b, inter, uni),
     * unsorted. The truth anchor every rollup gate consumes.
     */
   def pairs(spark: SparkSession, dir: String, n: Int = 3, num: Int = 4,
             den: Int = 5): DataFrame =
-    cache.getOrDerive(spark, s"$dir#jp#$n#$num#$den") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#jp#$n#$num#$den")) {
       Dedup.jaccardPairsUnsorted(Tables.documents(spark, dir), n, num, den)
         .localCheckpoint()
     }
@@ -48,7 +47,7 @@ object DedupStage {
   def minhashPairs(spark: SparkSession, dir: String, n: Int = 3,
                    b: Int = 32, r: Int = 4, num: Int = 4,
                    den: Int = 5): DataFrame =
-    cache.getOrDerive(spark, s"$dir#mh#$n#$b#$r#$num#$den") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#mh#$n#$b#$r#$num#$den")) {
       Dedup.minhashPairsUnsorted(Tables.documents(spark, dir), n, b, r,
           num, den)
         .localCheckpoint()
@@ -63,7 +62,7 @@ object DedupStage {
     */
   def ccLabels(spark: SparkSession, dir: String, n: Int = 3, num: Int = 4,
                den: Int = 5): DataFrame =
-    cache.getOrDerive(spark, s"$dir#cc#$n#$num#$den") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#cc#$n#$num#$den")) {
       Dedup.componentsAdaptive(pairs(spark, dir, n, num, den))
         .localCheckpoint()
     }
@@ -73,7 +72,7 @@ object DedupStage {
     * the span-cut gate, and the corpus_build_v2 capstone.
     */
   def islands(spark: SparkSession, dir: String, w: Int = 8): DataFrame =
-    cache.getOrDerive(spark, s"$dir#isl#$w") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#isl#$w")) {
       Dedup.crossDocSpans(Tables.documents(spark, dir), w)
         .localCheckpoint()
     }
@@ -85,7 +84,7 @@ object DedupStage {
     * gate so the bench measures them, not a cache hit.
     */
   def fuzzyPairs(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrDerive(spark, s"$dir#fz#1") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#fz#1")) {
       Dedup.blockedFuzzyPairs(Tables.customer(spark, dir), maxDist = 1)
         .localCheckpoint()
     }
@@ -95,7 +94,7 @@ object DedupStage {
     * chains; see the fuzzy_entity_clusters gate note).
     */
   def fuzzyClusters(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrDerive(spark, s"$dir#fzcc#1") {
+    SessionCache.perSession(spark, ("DedupStage", s"$dir#fzcc#1")) {
       Dedup.componentsStar(fuzzyPairs(spark, dir))
         .select(col("doc_id").as("custkey"), col("comp"))
         .localCheckpoint()

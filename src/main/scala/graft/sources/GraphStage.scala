@@ -30,14 +30,12 @@ import graft.operators.Graph
   */
 object GraphStage {
 
-  private val cache = new SessionCache[String, DataFrame]()
-
   /** The staged co-purchase edges (a, b, supp) for (session, dir) at
     * support threshold `minSupport`.
     */
   def copurchase(spark: SparkSession, dir: String,
                  minSupport: Long = 2L): DataFrame =
-    cache.getOrDerive(spark, s"$dir#cop#$minSupport") {
+    SessionCache.perSession(spark, ("GraphStage", s"$dir#cop#$minSupport")) {
       Graph.copurchaseEdges(Tables.lineitem(spark, dir), minSupport)
         .localCheckpoint()
     }
@@ -52,7 +50,7 @@ object GraphStage {
     * derivation (the d=2 fuzzy-gate convention).
     */
   def wordEdgeCounts(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrDerive(spark, s"$dir#wec") {
+    SessionCache.perSession(spark, ("GraphStage", s"$dir#wec")) {
       Graph.bigramEdgeCounts(Tables.documents(spark, dir))
         .localCheckpoint()
     }

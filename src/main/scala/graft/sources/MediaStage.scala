@@ -28,14 +28,12 @@ import graft.operators.Multimodal.MediaRow
   */
 object MediaStage {
 
-  private val cache = new SessionCache[String, DataFrame]()
-
   /** The staged media table for (session, dir): all three kinds,
     * payloads encoded once, checkpointed.
     */
   def media(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    cache.getOrDerive(spark, s"$dir#media") {
+    SessionCache.perSession(spark, ("MediaStage", s"$dir#media")) {
       Multimodal.realMedia(Tables.documents(spark, dir))
         .toDF().localCheckpoint()
     }.as[MediaRow]

@@ -12,20 +12,18 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedLake {
 
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write `events` partitioned by event_type once per (session, dir);
+  /** Write `events` partitioned by event_type once per (SparkContext, dir);
     * returns the lake path. Partition count = distinct event types
     * (5 here) — low-cardinality columns only; partitioning on a
     * high-cardinality key would produce millions of tiny files.
     */
   def eventsByTypeLake(spark: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir, _ => {
+    SessionCache.perContext(spark, ("PartitionedLake", dir)) {
       val out = graft.TempDirs.scratchString("graft_lake_")
       graft.Tables.events(spark, dir)
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
       out
-    })
+    }
 
   /** Two-generation parquet lake for schema-evolution reads:
     * generation 1 (even event_ids) wrote (event_id, user_id,
@@ -35,7 +33,7 @@ object PartitionedLake {
     * added column.
     */
   def schemaEvolutionLake(spark: SparkSession, dir: String): String =
-    staged.computeIfAbsent(s"$dir#evolve", _ => {
+    SessionCache.perContext(spark, ("PartitionedLake.evolve", dir)) {
       val out = graft.TempDirs.scratchString("graft_evolve_")
       val ev = graft.Tables.events(spark, dir)
       ev.where(col("event_id") % 2 === 0)
@@ -46,7 +44,7 @@ object PartitionedLake {
           round(col("value") * 100).cast("long").as("value_cents"))
         .write.mode("append").parquet(out)
       out
-    })
+    }
 
   /** Read the evolved lake with `mergeSchema` — the footer-merge that
     * unions all generations' schemas; generation-1 rows surface NULL
@@ -77,7 +75,7 @@ object PartitionedLake {
     * can never inherit dynamic semantics by accident.
     */
   def dynamicOverwriteLake(spark: SparkSession, dir: String): String =
-    staged.computeIfAbsent(s"$dir#dynov", _ => {
+    SessionCache.perContext(spark, ("PartitionedLake.dynov", dir)) {
       val out = graft.TempDirs.scratchString("graft_dynov_")
       val ev = graft.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
@@ -90,7 +88,7 @@ object PartitionedLake {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_type").parquet(out)
       out
-    })
+    }
 
   /** Read-back proof of [[dynamicOverwriteLake]]: the patched
     * partition carries the corrected (doubled) cents, every other

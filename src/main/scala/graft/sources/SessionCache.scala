@@ -1,65 +1,89 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Bounded per-session derive-once cache — the shared staging pattern
-  * behind the CF/ANN/dedup query families: expensive derived state
-  * (checkpointed frames, staged table tags) is computed once per
-  * (session, key) and reused by every gate in the family.
+/** The one staging module: every derive-once memo in the engine goes
+  * through one of its two scopes, picked by the lifetime of the value.
   *
-  * The SESSION is part of the key (ADVICE r11): cached frames hold
-  * localCheckpoint blocks bound to the creating session's context — a
-  * different session in the same JVM must derive its own state, never
-  * be served frames whose blocks die with someone else's session.
+  *  - [[SessionCache.perSession]] — frames holding `localCheckpoint`
+  *    blocks. The blocks are bound to the creating session, so a
+  *    different session in the same JVM derives its own (ADVICE r11).
+  *  - [[SessionCache.perContext]] — scratch directories, catalog table
+  *    tags and driver-side scalars. `newSession()` shares the context,
+  *    its warehouse and its external catalog, so every session of one
+  *    SparkContext is served the same value. Spark runs one context per
+  *    JVM at a time, so the scope holds only the current context's
+  *    memos: the first use under a new context drops the stopped one's.
   *
-  * Growth is BOUNDED (ADVICE r12): a strong (SparkSession, …) tuple
-  * key retains every session ever used — plus all its checkpointed
-  * frames — for the JVM lifetime. A WeakHashMap would not fix it
-  * (cached frames strongly reference their creating session, and
-  * WeakHashMap holds values strongly, so the value→key chain pins
-  * every entry anyway); instead this is an access-ordered LRU over
-  * sessions capped at `maxSessions`. Evicting a session's entry drops
-  * its frames (and the only cache-held reference to the session); a
-  * still-live evicted session merely re-derives on next use, which is
-  * deterministic and answer-identical.
+  * Keys are owner-prefixed tuples (`("Bucketing", dir)`), so call sites
+  * sharing one scope never collide.
+  */
+private[graft] object SessionCache {
+  private val sessions = new SessionCache[Any, Any]()
+  private var context: SparkContext = _
+  private var contextMemos: OnceMap[Any, Any] = _
+
+  def perSession[V](spark: SparkSession, key: Any)(derive: => V): V =
+    sessions.getOrDerive(spark, key)(derive).asInstanceOf[V]
+
+  def perContext[V](spark: SparkSession, key: Any)(derive: => V): V =
+    synchronized {
+      if (context ne spark.sparkContext) {
+        context = spark.sparkContext
+        contextMemos = new OnceMap[Any, Any]
+      }
+      contextMemos
+    }.getOrDerive(key)(derive).asInstanceOf[V]
+}
+
+/** Per-key once-cells: each key derives exactly once, and the derive
+  * runs under that key's cell only — never under a map lock. So a
+  * derive may re-enter for another key (ccLabels stages the pair set
+  * first; CF's increment state stages the base index), unrelated keys
+  * derive concurrently, and a racer for the same key waits for the
+  * one derivation instead of running its own. A derive that throws
+  * leaves the cell empty; the next caller derives again.
+  */
+private[graft] final class OnceMap[K, V] {
+  private final class Cell {
+    @volatile var done = false
+    var value: V = _
+  }
+  private val cells = new ConcurrentHashMap[K, Cell]()
+
+  def getOrDerive(key: K)(derive: => V): V = {
+    val cell = cells.computeIfAbsent(key, _ => new Cell)
+    if (!cell.done) cell.synchronized {
+      if (!cell.done) { cell.value = derive; cell.done = true }
+    }
+    cell.value
+  }
+}
+
+/** Per-session scope, bounded (ADVICE r12): a strong SparkSession key
+  * retains every session ever used — plus all its checkpointed frames —
+  * for the JVM lifetime, and a WeakHashMap would not fix it (cached
+  * frames strongly reference their creating session, and WeakHashMap
+  * holds values strongly, so the value→key chain pins every entry).
+  * Instead this is an access-ordered LRU over sessions capped at
+  * `maxSessions`. Evicting a session drops its frames (and the only
+  * cache-held reference to the session); a still-live evicted session
+  * re-derives on next use, which is deterministic and answer-identical.
   */
 private[graft] final class SessionCache[K, V](maxSessions: Int = 4) {
   private val perSessionMaps =
-    new java.util.LinkedHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[K, V]](
+    new java.util.LinkedHashMap[SparkSession, OnceMap[K, V]](
         16, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession,
-            java.util.concurrent.ConcurrentHashMap[K, V]]): Boolean =
+          e: java.util.Map.Entry[SparkSession, OnceMap[K, V]]): Boolean =
         size() > maxSessions
     }
 
-  /** The cached value for (session, key), deriving it on first use.
-    *
-    * Deliberately NOT computeIfAbsent: a derive that re-enters this
-    * cache for a DIFFERENT key (ccLabels stages the pair set first)
-    * would mutate the map from inside the mapping function —
-    * ConcurrentHashMap detects that as a recursive update and throws
-    * (or deadlocks on a shared bin). get → derive outside any lock →
-    * putIfAbsent instead; two racing callers may both derive, which is
-    * harmless (derivation is deterministic; the loser's frame is
-    * simply dropped).
-    */
-  def getOrDerive(spark: SparkSession, key: K)(derive: => V): V = {
-    val perSession = perSessionMaps.synchronized {
-      var m = perSessionMaps.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[K, V]()
-        perSessionMaps.put(spark, m)
-      }
-      m
-    }
-    val existing = perSession.get(key)
-    if (existing != null) existing
-    else {
-      val derived = derive
-      val raced = perSession.putIfAbsent(key, derived)
-      if (raced != null) raced else derived
-    }
-  }
+  def getOrDerive(spark: SparkSession, key: K)(derive: => V): V =
+    perSessionMaps.synchronized {
+      perSessionMaps.computeIfAbsent(spark, _ => new OnceMap[K, V])
+    }.getOrDerive(key)(derive)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.operators.WordCount
+import graft.sources.SessionCache
 
 /** Structured Streaming surface: the reference is batch-only
   * (SURVEY.md §2 "Streaming: none"), so these are north-star
@@ -132,32 +133,18 @@ object Streams {
       .orderBy(col("cnt").desc, col("word")).limit(k)
   }
 
-  /** [[windowedEventCounts]] over the events parquet read as a file
-    * stream (schema pinned from a batch read), driven to completion:
-    * the watermark+window machinery under the driver's oracle — in
-    * complete mode every window is emitted, so the result equals the
-    * batch tumbling aggregation.
-    */
-  private val streamDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-path corpus-max event time (epoch anything-the-caller-scans) —
-    * a fixture constant, memoized so repeated stream constructions skip
-    * the 1-row max scan job (same lifetime/keying as [[streamDirCache]]).
-    */
-  private val cutoffCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** The file stream source requires a DIRECTORY basePath: stage a
     * single parquet file behind a symlink in a temp dir (cached per
     * source path, exactly one file — so AvailableNow runs one batch).
     */
-  private def stagedFileDir(path: String): String =
-    streamDirCache.computeIfAbsent(path, _ => {
+  private def stagedFileDir(spark: SparkSession, path: String): String =
+    SessionCache.perContext(spark, ("Streams", path)) {
       val d = graft.TempDirs.scratch("graft_stream_src_")
       java.nio.file.Files.createSymbolicLink(
         d.resolve(java.nio.file.Paths.get(path).getFileName.toString),
         java.nio.file.Paths.get(path))
       d.toString
-    })
+    }
 
   /** The testdata events parquet as a file stream with `ts` normalized
     * to epoch-ms, mirroring [[graft.Tables.events]].
@@ -165,7 +152,7 @@ object Streams {
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
     raw.withColumn("ts_ms", graft.Tables.tsMsExpr(raw.schema("ts").dataType))
       .drop("ts")
   }
@@ -203,7 +190,7 @@ object Streams {
                                   rounds: Int = 3): DataFrame = {
     val path = s"$dir/documents.parquet"
     val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
     val wm = graft.operators.TextAnalysis
       .classifierTrainCached(spark, dir, slots, rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -231,7 +218,7 @@ object Streams {
     val schema = spark.read.parquet(path).schema
     // synthetic event time offset above 0: a row at epoch 0 ties the
     // stream's INITIAL watermark and is dropped as late data
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
       .withColumn("ts_ms", col("doc_id") + lit(86400000L))
     runAvailableNow(streamingDedup(raw).select(col("fp")), Seq("fp"),
       mode = "append")
@@ -248,7 +235,7 @@ object Streams {
   def tableChecksumAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/documents.parquet"
     val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
     runAvailableNow(
       raw.select(col("source"), col("doc_id"),
           when(col("doc_id").isNull || col("text").isNull, 1L).otherwise(0L)
@@ -283,7 +270,7 @@ object Streams {
                               m: Int = 64): DataFrame = {
     val path = s"$dir/documents.parquet"
     val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
     val regs = runAvailableNow(
       graft.operators.TextAnalysis.hllRegisters(
         graft.operators.TextAnalysis.hllGramStream(raw, 3), "gram", m),
@@ -317,7 +304,7 @@ object Streams {
         spark.read.parquet(path).where(col("doc_id") <= baseMaxId), 4, 4)
       .select(col("doc_id").as("base_id"),
         explode(array_distinct(col("fps"))).as("fp"))
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
       .where(col("doc_id") > baseMaxId)
     val arrivals = graft.operators.Dedup.winnowSelected(raw, 4, 4)
       .select(col("doc_id").as("new_id"),
@@ -328,13 +315,6 @@ object Streams {
         .where(col("shared") >= minShared),
       Seq("new_id", "base_id"))
   }
-
-  // dir -> staged incremental-ANN tag: the base build + the streamed
-  // delta ingest run ONCE per (session, sf dir) under computeIfAbsent;
-  // every probe afterwards reads the appended index (the DedupIndex
-  // staging discipline)
-  private val annStreamed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Streaming ANN ingest — the realtime twin of
     * [[graft.sources.AnnIndex.appendDelta]]: arriving vectors (vec_id
@@ -355,9 +335,13 @@ object Streams {
                                iters: Int = 5): DataFrame = {
     import graft.sources.AnnIndex
     val path = s"$dir/embeddings.parquet"
-    // the staging key carries the index parameters (the ensureInc
-    // discipline): a non-default caller must get its own build
-    val tag = annStreamed.computeIfAbsent(s"$dir#$nClusters#$iters", { _ =>
+    // the base build + the streamed delta ingest run ONCE per
+    // (SparkContext, sf dir, params) — the index tables live in the
+    // shared catalog; every probe afterwards reads the appended index.
+    // The key carries the index parameters (the ensureInc discipline):
+    // a non-default caller must get its own build
+    val tag = SessionCache.perContext(spark,
+        ("Streams.ann", dir, nClusters, iters)) {
       val t = graft.sources.StagedTags.tagOf(s"$dir#$nClusters#$iters#stream")
       val emb = spark.read.parquet(path)
       val cut = AnnIndex.incCut(spark, dir)
@@ -367,7 +351,7 @@ object Streams {
         emb.where(col("vec_id") < cut), t, nClusters, iters)
       val schema = emb.schema
       val ckpt = graft.TempDirs.scratch("graft_anns_ckpt_")
-      val q = spark.readStream.schema(schema).parquet(stagedFileDir(path))
+      val q = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
         .where(col("vec_id") >= cut)
         .writeStream
         .trigger(Trigger.AvailableNow())
@@ -379,7 +363,7 @@ object Streams {
       q.awaitTermination()
       deleteRecursively(ckpt)
       t
-    })
+    }
     AnnIndex.queryTables(spark, s"graft_anni_cent_$tag",
       s"graft_anni_cells_$tag",
       spark.read.parquet(path).where(col("vec_id") < nQueries), k)
@@ -495,7 +479,7 @@ object Streams {
     */
   private def stagedEventsWithSentinel(spark: SparkSession, dir: String,
                                        nSentinels: Int = 2): String =
-    streamDirCache.computeIfAbsent(s"$dir#sentinel$nSentinels", _ => {
+    SessionCache.perContext(spark, ("Streams", s"$dir#sentinel$nSentinels")) {
       val out = graft.TempDirs.scratch("graft_loj_src_")
       val path = s"$dir/events.parquet"
       java.nio.file.Files.createSymbolicLink(
@@ -536,7 +520,7 @@ object Streams {
             java.nio.file.attribute.FileTime.fromMillis(now + i * 2000L))
         }
       out.toString
-    })
+    }
 
   /** Stream-stream LEFT OUTER interval join: every purchase joined to
     * the views of the same user in the preceding `windowMs`, emitting
@@ -566,12 +550,14 @@ object Streams {
     // the watermark node never advances the watermark (measured: a
     // `purchase_id != -1` guard left the watermark frozen at
     // real-max − delay and the last unmatched purchase never flushed).
-    // the corpus max is a fixture constant per dir — memoized like the
-    // sentinel staging above it (r16: the 1-row max scan was a full
-    // batch job per invocation, paid 3× per bench measurement)
-    val cutoff = timestamp_millis(lit(cutoffCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path)
-        .agg(max(tsMs.cast("long"))).head().getLong(0)) + 3600000L))
+    // the corpus max is a fixture constant per dir — memoized per
+    // SparkContext like the sentinel staging above it (r16: the 1-row
+    // max scan was a full batch job per invocation, paid 3× per bench
+    // measurement)
+    val maxTs = SessionCache.perContext(spark, ("Streams.maxTs", path)) {
+      spark.read.parquet(path).agg(max(tsMs.cast("long"))).head().getLong(0)
+    }
+    val cutoff = timestamp_millis(lit(maxTs + 3600000L))
     val p = ev.withColumn("p_ts", timestamp_millis(col("ts_ms")))
       .withWatermark("p_ts", "1 hour")
       .where(col("event_type") === "purchase" && col("p_ts") < cutoff)
@@ -686,7 +672,7 @@ object Streams {
     */
   private def stagedEventsWithTypeSentinels(spark: SparkSession,
                                             dir: String): String =
-    streamDirCache.computeIfAbsent(s"$dir#typesentinel", _ => {
+    SessionCache.perContext(spark, ("Streams", s"$dir#typesentinel")) {
       val out = graft.TempDirs.scratch("graft_ewma_src_")
       val path = s"$dir/events.parquet"
       java.nio.file.Files.createSymbolicLink(
@@ -723,7 +709,7 @@ object Streams {
           java.nio.file.attribute.FileTime.fromMillis(now + i * 2000L))
       }
       out.toString
-    })
+    }
 
   /** Streaming integer EWMA of daily counts per event type (the 15th
     * streaming gate): ordered per-key replay folds each COMPLETED day
@@ -995,7 +981,7 @@ object Streams {
     * fresh run must reprocess).
     */
   private def stagedEventsSplit(spark: SparkSession, dir: String): String =
-    streamDirCache.computeIfAbsent(s"$dir#split", _ => {
+    SessionCache.perContext(spark, ("Streams", s"$dir#split")) {
       val out = graft.TempDirs.scratchString("graft_fbu_src_")
       val ev = graft.Tables.events(spark, dir)
       ev.where(col("event_id") % 2 === 0)
@@ -1005,7 +991,7 @@ object Streams {
         .coalesce(1).write.mode("append").parquet(out)
       stampFresh(out, 2000000L) // odd half: strictly newer → batch 1
       out
-    })
+    }
 
   /** Pin the mtimes of NOT-yet-stamped parquet files under `dir` to
     * the fixed epoch `t` (< any wall clock this code will ever see).
@@ -1042,7 +1028,7 @@ object Streams {
     * survives a batch boundary mid-stream.
     */
   private def stagedEventsTimeSplit(spark: SparkSession, dir: String): String =
-    streamDirCache.computeIfAbsent(s"$dir#timesplit", _ => {
+    SessionCache.perContext(spark, ("Streams", s"$dir#timesplit")) {
       val out = graft.TempDirs.scratchString("graft_wf_src_")
       val ev = graft.Tables.events(spark, dir)
       val cut = ev.agg(expr("percentile(ts_ms, 0.5D)")).head().getDouble(0)
@@ -1053,7 +1039,7 @@ object Streams {
         .coalesce(1).write.mode("append").parquet(out)
       stampFresh(out, 2000000L) // late half: strictly newer → batches second
       out
-    })
+    }
 
   /** [[graft.operators.Relational.windowFunnel]] as keyed streaming
     * state (23rd streaming gate) — the continuously-maintained
@@ -1199,12 +1185,6 @@ object Streams {
     lastPath
   }
 
-  // dir -> versioned-lake root, built once per (session, sf dir):
-  // the time-travel gate must read a lake SOMEONE wrote, not re-run
-  // the stream per probe (the DedupIndex staging discipline)
-  private val versionedLakes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Lake time-travel: the as-of-version READ half of the versioned
     * snapshot lake the foreachBatch upsert maintains ([[runUpsertStream]]
     * writes `v<batchId>` per micro-batch and never overwrites an older
@@ -1221,12 +1201,15 @@ object Streams {
     snapshotCols(spark.read.parquet(s"${lakeRoot(spark, dir)}/v$version"))
   }
 
+  // the versioned-lake root, built once per (SparkContext, sf dir):
+  // the time-travel gate must read a lake SOMEONE wrote, not re-run
+  // the stream per probe
   private def lakeRoot(spark: SparkSession, dir: String): String =
-    versionedLakes.computeIfAbsent(dir, _ => {
+    SessionCache.perContext(spark, ("Streams.lake", dir)) {
       val last = runUpsertStream(spark, dir)
       require(last != null, s"no micro-batches staged for $dir")
       new java.io.File(last).getParent
-    })
+    }
 
   /** Snapshot-retention accounting — the expiry/VACUUM planning pass
     * every versioned lake runs before deleting anything: per version,
@@ -1261,7 +1244,7 @@ object Streams {
     * micro-batches; cached per sf dir like [[stagedEventsSplit]].
     */
   private def stagedLineitemSplit(spark: SparkSession, dir: String): String =
-    streamDirCache.computeIfAbsent(s"$dir#lisplit", _ => {
+    SessionCache.perContext(spark, ("Streams", s"$dir#lisplit")) {
       val out = graft.TempDirs.scratchString("graft_ivm_src_")
       val li = graft.Tables.lineitem(spark, dir)
       li.where(col("l_orderkey") % 2 === 0)
@@ -1269,7 +1252,7 @@ object Streams {
       li.where(col("l_orderkey") % 2 === 1)
         .coalesce(1).write.mode("append").parquet(out)
       out
-    })
+    }
 
   /** STREAMING materialized-view maintenance — the realtime form of
     * the batch [[graft.operators.Relational.ivmAggDelta]]: each

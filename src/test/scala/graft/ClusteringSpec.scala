@@ -147,4 +147,8 @@ class ClusteringSpec extends SparkSpec {
       .collect().map(_.toString)
     assert(drA.sameElements(drB))
   }
+
+  test("power iteration rejects iters = 0 instead of dereferencing null") {
+    intercept[IllegalArgumentException](Clustering.topDirection(embs, iters = 0))
+  }
 }

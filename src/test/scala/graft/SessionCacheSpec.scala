@@ -2,13 +2,12 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import graft.sources.SessionCache
+import graft.operators.Similarity
+import graft.sources.{AnnIndex, BloomParquet, SessionCache}
 
-/** Concurrency spec for the staging layer's [[SessionCache]] — now
-  * load-bearing for the dedup/CF/ANN families. Its documented races
-  * (double derive on contention, LRU eviction mid-cycle, re-entrant
-  * derive) are argued harmless in the class doc; this spec exercises
-  * each under real threads.
+/** Spec for the staging layer's [[SessionCache]]: the per-key
+  * once-cell under contention, LRU eviction, re-entrant derive, and
+  * which of the two scopes each kind of staged value lands in.
   */
 class SessionCacheSpec extends SparkSpec {
 
@@ -33,32 +32,32 @@ class SessionCacheSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  test("same (session, key) under contention: both racers may derive, " +
-    "but every caller returns the ONE winning value") {
+  test("same (session, key) under contention derives exactly once, " +
+    "and two different keys derive at the same time") {
     val cache = new SessionCache[String, Int]()
     val s = spark.newSession()
     val derives = new AtomicInteger(0)
     val start = new CountDownLatch(1)
     val inDerive = new CountDownLatch(2)
-    val pool = Executors.newFixedThreadPool(2)
+    val pool = Executors.newFixedThreadPool(4)
     try {
-      def racer() = pool.submit(() => {
+      def racer(key: String) = pool.submit(() => {
         start.await()
-        cache.getOrDerive(s, "k") {
+        cache.getOrDerive(s, key) {
           inDerive.countDown()
-          // hold until BOTH racers are inside derive, proving the
-          // derive runs outside any lock (a map-lock derive deadlocks
-          // here; the documented double-derive is the accepted cost)
+          // hold until keys "a" AND "b" are both inside their derives:
+          // a derive under a shared lock never lets the second one in
           assert(inDerive.await(30, TimeUnit.SECONDS))
           derives.incrementAndGet()
         }
       })
-      val (f1, f2) = (racer(), racer())
+      val fs = Seq(racer("a"), racer("a"), racer("b"), racer("b"))
       start.countDown()
-      val (v1, v2) = (f1.get(30, TimeUnit.SECONDS), f2.get(30, TimeUnit.SECONDS))
-      assert(derives.get == 2, "both racers derived (documented, harmless)")
-      assert(v1 == v2, "putIfAbsent: one winner, both callers see it")
-      assert(cache.getOrDerive(s, "k")(fail("must be cached")) == v1)
+      val vs = fs.map(_.get(30, TimeUnit.SECONDS))
+      assert(derives.get == 2, "one derive per key, racers wait for it")
+      assert(vs(0) == vs(1) && vs(2) == vs(3) && vs(0) != vs(2))
+      assert(cache.getOrDerive(s, "a")(fail("must be cached")) == vs(0))
+      assert(cache.getOrDerive(s, "b")(fail("must be cached")) == vs(2))
     } finally pool.shutdownNow()
   }
 
@@ -118,5 +117,57 @@ class SessionCacheSpec extends SparkSpec {
       }
       assert(cache2.getOrDerive(s, "inner")(fail("cached")) == "vI")
     } finally pool.shutdownNow()
+  }
+
+  // ------------------------------------------------ the two scopes
+
+  test("a per-context memo derived in one session is served to " +
+    "newSession() without a re-derive") {
+    val derives = new AtomicInteger(0)
+    val key = ("SessionCacheSpec", "per-context")
+    val v = SessionCache.perContext(spark, key) {
+      derives.incrementAndGet(); "v"
+    }
+    val s2 = spark.newSession()
+    assert(SessionCache.perContext[String](s2, key)(fail("must be cached")) eq v)
+    assert(derives.get == 1)
+    // a real staging: the bloom layout is written once per context
+    assert(BloomParquet.stage(s2, sf0001) eq BloomParquet.stage(spark, sf0001))
+  }
+
+  test("cachedCentroids is per session: a second session is served " +
+    "frames bound to itself") {
+    val s2 = spark.newSession()
+    val c1 = Similarity.cachedCentroids(spark, sf0001)
+    val c2 = Similarity.cachedCentroids(s2, sf0001)
+    assert(c1.sparkSession eq spark)
+    assert(c2.sparkSession eq s2)
+    assert(Similarity.cachedCentroids(s2, sf0001) eq c2)
+    assert(c2.collect().map(_.toString).sorted
+      .sameElements(c1.collect().map(_.toString).sorted))
+  }
+
+  test("annMaintain's rebuilt tables are readable from a newSession(), " +
+    "which reuses the maintenance decision") {
+    import org.apache.spark.sql.functions._
+    // delta shifted +10 per coordinate: the drift wire trips (Round12Spec)
+    val emb = Tables.embeddings(spark, sf0001)
+    val cut = AnnIndex.incCut(spark, sf0001)
+    val dir = TempDirs.scratchString("graft_scope_drift_")
+    emb.withColumn("embedding",
+        when(col("vec_id") >= lit(cut),
+          expr("transform(embedding, x -> x + cast(10.0 as float))"))
+          .otherwise(col("embedding")))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def action(s: org.apache.spark.sql.SparkSession): String =
+      AnnIndex.annMaintain(s, dir).collect()(0).getAs[String]("action")
+    assert(action(spark) == "rebuild")
+    val (cent, cells) = AnnIndex.servingTables(AnnIndex.maintainTag(dir))
+    val s2 = spark.newSession()
+    assert(action(s2) == "rebuild")
+    assert(AnnIndex.servingTables(AnnIndex.maintainTag(dir)) == ((cent, cells)),
+      "a new session must not retrain: serving pointer unchanged")
+    assert(s2.table(cent).count() == spark.table(cent).count())
+    assert(s2.table(cells).count() == emb.count())
   }
 }

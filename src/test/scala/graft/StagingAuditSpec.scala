@@ -1,0 +1,72 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source audit for the staging layer: every derive-once memo goes
+  * through [[graft.sources.SessionCache]]'s two scopes. A hand-rolled
+  * `computeIfAbsent` map or `ConcurrentHashMap` anywhere else in
+  * `src/main/scala` picks its own key, lifetime and concurrency rule —
+  * the drift the staging module exists to end — so it fails here
+  * unless it is named below with the reason it is not a memo.
+  */
+class StagingAuditSpec extends AnyFunSuite {
+
+  private val root = java.nio.file.Paths.get("src/main/scala/graft")
+
+  /** Files that may hold maps outright. */
+  private val allowedFiles = Set(
+    "sources/SessionCache.scala", // the staging module itself
+    "BenchMetrics.scala")         // listener counters, not memos
+
+  /** file -> map names allowed in it. */
+  private val allowedNames = Map(
+    // the serving pointer and the generation counter are state that
+    // maintenance mutates, not derive-once values
+    "sources/AnnIndex.scala" -> Set("current", "gens"),
+    // executor-static kernel table, rebuilt per deserialized instance
+    "functions/expressions.scala" -> Set("planeCache"))
+
+  private val MapUse =
+    """computeIfAbsent\(|new\s+(java\.util\.concurrent\.)?ConcurrentHashMap""".r
+  private val Owner = """val\s+(\w+)\s*[:=]|(\w+)\.computeIfAbsent\(""".r
+
+  /** (file, owning name, line) for every map use under `root`. */
+  private lazy val hits: Seq[(String, String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    files.flatMap { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      lines.indices.filter(i => MapUse.findFirstIn(lines(i)).isDefined)
+        .map { i =>
+          // the name sits on the hit line or on the declaration above
+          val ctx = (if (i > 0) lines(i - 1) + " " else "") + lines(i)
+          val owner = Owner.findAllMatchIn(ctx).toSeq.lastOption
+            .map(m => Option(m.group(1)).getOrElse(m.group(2)))
+            .getOrElse("?")
+          (rel, owner, lines(i).trim)
+        }
+    }
+  }
+
+  test("no derive-once map outside the staging module and the allowlist") {
+    assert(hits.exists(_._1 == "sources/SessionCache.scala"),
+      s"audit scanned nothing under $root")
+    val stray = hits.filterNot { case (file, owner, _) =>
+      allowedFiles(file) || allowedNames.get(file).exists(_(owner))
+    }
+    assert(stray.isEmpty,
+      "route these memos through SessionCache.perSession/perContext:\n" +
+        stray.map { case (f, o, l) => s"  $f ($o): $l" }.mkString("\n"))
+  }
+
+  test("every allowlisted map still exists (the allowlist cannot rot)") {
+    allowedNames.foreach { case (file, names) =>
+      names.foreach { n =>
+        assert(hits.exists(h => h._1 == file && h._2 == n),
+          s"$file no longer declares $n: drop it from the allowlist")
+      }
+    }
+  }
+}
