@@ -69,7 +69,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    def report(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+
+    try SparkEntry.entry(spark).count() catch { case e: Throwable => report("entry", e) }
 
     // derive the session-staged family state up front (see scaladoc);
     // each getter localCheckpoints/saves on first call, so count() /
@@ -108,9 +111,7 @@ object Bench {
         futures.zipWithIndex.foreach { case (f, i) =>
           try f.get() catch {
             case e: java.util.concurrent.ExecutionException =>
-              val cause = e.getCause
-              System.err.println(s"[bench] staging chain $i failed: " +
-                s"${cause.getClass.getName}: ${cause.getMessage}")
+              report(s"staging chain $i", e.getCause)
           }
         }
         // staging ends when the workers have exited, not at the last get
@@ -137,7 +138,7 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         ((System.nanoTime() - t0) / 1e9, meter.snapshot())
-      } catch { case _: Throwable => (-1.0, null) }
+      } catch { case e: Throwable => report(name, e); (-1.0, null) }
     }
 
     // last-capture per-query seconds, for the heaviest-first order:

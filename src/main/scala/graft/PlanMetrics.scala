@@ -9,8 +9,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * SQLMetrics that matter for scale audits — shuffle bytes/records
   * written. Execute the frame first (e.g. noop write); metrics are
   * populated by the run, so this is measurement, not estimation. Used
-  * by [[BenchOne]] under `SPARK_GRAFT_METRICS=1` to turn "this plan
-  * shuffles less" from a claim into a number.
+  * by `PlanAuditSpec` to turn "this plan shuffles less" from a claim
+  * into a number; whole-run totals (staging jobs included) come from
+  * [[BenchMetrics]] instead.
   */
 object PlanMetrics {
 

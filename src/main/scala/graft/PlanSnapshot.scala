@@ -333,18 +333,6 @@ object PlanSnapshot {
     // SPARK_GRAFT_PLAN_FULL=1: write the normalized skeletons instead
     // of digests — the debug mode for chasing a digest instability
     val full = sys.env.get("SPARK_GRAFT_PLAN_FULL").contains("1")
-    // real JSON string escaping (backslash, quote, control chars) — a
-    // lossy quote-substitution would corrupt full-mode skeletons that
-    // contain backslashes or tabs
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     // optional args: restrict to the named queries (flake-chasing aid)
     val only: Option[Set[String]] = if (args.nonEmpty) Some(args.toSet) else None
     val entries = SparkEntry.queries.keys.toSeq.sorted
@@ -355,7 +343,7 @@ object PlanSnapshot {
           .queryExecution.executedPlan.toString
         if (full) normalize(p).mkString("\n") else digest(normalize(p))
       } catch { case _: Throwable => "ERROR" }
-      s""""$name":"${esc(fp)}""""
+      s""""$name":${Json.quote(fp)}"""
     }
     val json = entries.mkString("{", ",", "}")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT",

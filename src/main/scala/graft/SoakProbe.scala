@@ -1,166 +1,189 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Capstone SOAK harness (round 13): the composed end-to-end pipelines
-  * — `corpus_build_v3`, `dedup_increment_indexed`,
-  * `customer_cf_increment` — replicated to 10× and ~100× the base SF
-  * row count and measured for wall seconds AND shuffle bytes/records,
-  * the two curves that expose super-linear composition effects the
-  * per-operator 10× [[ScaleProbe]] can't see (each probe there
-  * isolates one operator; the capstones chain a dozen).
+/** The one scaling harness: time any `SparkEntry` gate on the sf dir
+  * and on factor-× row replications of it, with per-run seconds and
+  * [[BenchMetrics]] counters (jobs, tasks, shuffle bytes/records,
+  * scheduler delay) tallied across EVERY job the run fires — the
+  * staged gates materialize checkpointed state at DataFrame
+  * construction, so plan-local metrics would miss that work.
   *
-  * Replication uses the established salt idiom: ids shift by a large
-  * constant per copy and document text is perturbed PER TOKEN with a
-  * copy tag (every word gets a `c<i>` suffix), so cross-copy documents
-  * share no 3-shingles at all — copies are fresh corpora, not
-  * near-duplicates of each other, and the probe measures clean volume
-  * scaling. Order/customer keys shift together so baskets replicate
-  * per copy without cross-copy pairs. The base of the increment probes
-  * (doc_id ≤ 250 / pre-cut orders in copy 0 only) stays fixed while
-  * arrivals scale — the nightly-increment cost curve, matching
-  * production where the increment grows but yesterday's base is
-  * already indexed.
+  * Usage: `SPARK_GRAFT_SF_DIR=<sf dir> [SPARK_GRAFT_CPUS=…] runMain
+  * graft.SoakProbe [factors…] [gates…]` (default gates:
+  * [[DefaultGates]]). Factor 1 always runs, on the sf dir itself and
+  * after one [[SparkEntry.entry]] warm-up, so `SoakProbe dedup_minhash`
+  * times a single gate and `SoakProbe 10 100 …` adds two
+  * replications. Each (gate, factor) runs three times: run 1 is cold
+  * (it pays the staging derivations for a fresh dir), runs 2–3 are
+  * warm. Every run prints one JSON line; each gate then prints a
+  * summary line with the cold seconds and the warm min, each also as
+  * a ratio to factor 1.
   *
-  * WHY token-level (round 14, closing VERDICT r13 #4): the r13
-  * generator only APPENDED one tag token per copy, which left copies
-  * of the same document genuine near-duplicates (3-shingle Jaccard
-  * stays ≥ 4/5 on long docs) — so the soaked corpus carried Θ(N·F²)
-  * TRUE near-dup pairs by construction, and the measured 150×
-  * shuffle-record growth at 100× was the LSH banding CORRECTLY
-  * finding them, not an index defect. Decomposition (sf0.01): within-
-  * increment band-bucket candidates grew 8 → 22 535 → 2 698 055 at
-  * factor 1/10/100 (∝ F²) while index-probe candidates stayed linear
-  * beyond factor 10 (2 461 → 26 941 for 10× incoming). Candidates ∝
-  * true pairs is the operator's contract — a corpus quadratic in true
-  * pairs costs quadratic work in ANY banding scheme; the generator,
-  * not the operator, owed the fix.
-  *
-  * Usage: `SPARK_GRAFT_SF_DIR=... runMain graft.SoakProbe [factors…]`
-  * (default `10 100`). One JSON line per (capstone, factor) with
-  * wall/shuffle measurements plus the base point, then a summary line.
+  * Replication ([[replicate]]) shifts ids per copy so copies never
+  * join across, and tags every token of copy i > 0 with a fixed-length
+  * lowercase prefix that survives the reference cleaner: copies are
+  * fresh corpora with the same per-document structure, not planted
+  * near-duplicates of each other. The tag is letters because the
+  * cleaner cuts a token at its first digit: a `c<i>` tag would leave
+  * every copy an exact duplicate of copy 0. Copy 0 is the source
+  * verbatim, so the increment gates' bases (doc_id ≤ 250, pre-cut
+  * orders) stay fixed while arrivals scale.
   */
 object SoakProbe {
 
+  /** One gate per operator family worth a scaling curve, plus the
+    * three composed capstones.
+    */
+  val DefaultGates: Seq[String] = Seq(
+    "wordcount", "doc_boilerplate_scrub", "dedup_minhash",
+    "dedup_crossdoc_spans", "doc_sparse_pairs", "events_peak_window",
+    "skipgram_counts", "media_phash_neardup", "events_rolling_7d",
+    "word_hits", "dedup_prefix_filter", "events_pattern_match",
+    "events_seq_bigrams", "events_coactivity_pairs",
+    "events_since_last_error", "events_gap_regularity",
+    "events_stl_decompose", "doc_hapax_ratio", "doc_hybrid_rrf",
+    "word_zipf_slope", "index_increment", "customer_recommendations",
+    "q1_pricing", "dedup_winnow_pairs", "word_walk_corpus",
+    "doc_rake_keyphrases", "doc_char_collision", "table_checksum",
+    "word_ktruss_edges", "word_triangles", "word_modularity",
+    "doc_repetition_gopher", "doc_novelty", "doc_seq_pack",
+    "dedup_minhash_eval", "dedup_bloom_fpr", "part_clustering_coeff",
+    "lake_delete_vectors", "media_silence_profile", "customer_rec_eval",
+    "proximity_search", "distinct_shingles_hll", "events_seq_patterns3",
+    "customer_survival_table", "ivm_agg_delta", "lake_bitmap_index",
+    "doc_classifier_score", "join_card_estimate", "hll_merge_by_source",
+    "events_theilsen_trend", "events_markov_eval",
+    "doc_classifier_calibration", "events_window_funnel",
+    "events_window_funnel_4", "lake_file_ndv", "events_mad_outliers",
+    "events_cusum_changepoint", "events_funnel_latency",
+    "orders_reconciliation", "doc_classifier_train", "corpus_build_v2",
+    "ann_ivf_rebuild", "ann_ivf_increment", "doc_html_extract",
+    "corpus_build_v3", "dedup_increment_indexed", "customer_cf_increment")
+
+  /** Replicated tables: (table, id columns shifted per copy, shift).
+    * Order and customer keys shift together, so baskets replicate per
+    * copy without cross-copy pairs. The other tables are linked as-is.
+    */
+  private[graft] val Replicated: Seq[(String, Seq[String], Long)] = Seq(
+    ("documents", Seq("doc_id"), 10000000L),
+    ("events", Seq("event_id", "user_id"), 10000000L),
+    ("lineitem", Seq("l_orderkey"), 100000000L),
+    ("orders", Seq("o_orderkey", "o_custkey"), 100000000L),
+    ("embeddings", Seq("vec_id"), 10000000L))
+  private val Linked = Seq("customer", "supplier", "part", "nation", "region")
+
+  /** Copy tag: `copy` in base 26 as four lowercase letters. A fixed
+    * length keeps `tag_i ++ w = tag_j ++ w'` impossible for i ≠ j.
+    */
+  private def tag(copy: Column): Column =
+    concat((3 to 0 by -1).map { k =>
+      lit("abcdefghijklmnopqrstuvwxyz")
+        .substr(pmod(copy.divide(math.pow(26, k)).cast("long"), lit(26)) + 1,
+          lit(1))
+    }: _*)
+
+  /** Prefix `prefix` to every token whose first character the cleaner
+    * keeps (token boundaries as in [[operators.WordCount.tokens]]), so
+    * `clean(lower(prefix ++ t)) = prefix ++ clean(lower(t))` for a
+    * lowercase-letter prefix; tokens that clean to empty are left alone
+    * and stay empty.
+    */
+  private def tagTokens(text: Column, prefix: Column): Column = {
+    val ws = operators.WordCount.WhitespacePattern.stripSuffix("+")
+    val kept = operators.WordCount.CleanPattern.stripPrefix("^").stripSuffix("*")
+    regexp_replace(text, lit(s"(?<![^${ws.drop(1)})(?=$kept)"), prefix)
+  }
+
+  /** Write a `factor`× replication of the sf dir `src` to `out`, shaped
+    * like an sf dir: one plan per table for any factor. Raw parquet is
+    * read (not [[Tables.events]], whose normalized `ts_ms` would be
+    * written back as a long that [[Tables.tsMsExpr]] reads as nanos).
+    */
+  def replicate(spark: SparkSession, src: String, factor: Int,
+                out: String): String = {
+    val copies = spark.range(factor).select(col("id").as("copy"))
+    Replicated.foreach { case (table, ids, shift) =>
+      val shifted = ids.foldLeft(
+        Tables(spark, src, table).withColumn("row", monotonically_increasing_id())
+          .crossJoin(copies)) { (df, id) =>
+        df.withColumn(id, col(id) + col("copy") * shift)
+      }
+      val tagged = if (table != "documents") shifted
+        else shifted.withColumn("text", when(col("copy") === 0, col("text"))
+          .otherwise(tagTokens(col("text"), tag(col("copy")))))
+      tagged.orderBy("copy", "row").drop("copy", "row")
+        .write.mode("overwrite").parquet(s"$out/$table.parquet")
+    }
+    Linked.foreach { t =>
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(s"$out/$t.parquet"),
+        java.nio.file.Paths.get(s"$src/$t.parquet").toAbsolutePath)
+    }
+    out
+  }
+
+  /** `[factors…] [gates…]` → (replication factors, gates); unknown gate
+    * names fail here, before any Spark work.
+    */
+  private[graft] def parseArgs(args: Seq[String]): (Seq[Int], Seq[String]) = {
+    val (fs, gs) = args.span(a => a.nonEmpty && a.forall(_.isDigit))
+    val gates = if (gs.isEmpty) DefaultGates else gs
+    val unknown = gates.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"no gate named ${unknown.mkString(", ")}")
+    (fs.map(_.toInt).filter(_ > 1).distinct, gates)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val factors = (if (args.nonEmpty) args.toSeq else Seq("10", "100"))
-      .map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val (factors, gates) = parseArgs(args.toSeq)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR must name an sf dir"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession
       .builder("graft-soak", s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.entry(spark).count()
+    val meter = BenchMetrics.install(spark.sparkContext)
+    val root = TempDirs.scratchString("graft_soak_")
 
-    val outPath = java.nio.file.Files.createTempDirectory("graft_soak_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(outPath).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }))
-
-    /** Write a factor-replicated table dir shaped like a testdata SF
-      * dir, so the dir-keyed index capstones stage against it as they
-      * would against a real corpus drop.
-      */
-    def replicate(factor: Int): String = {
-      val dir = s"$outPath/f$factor"
-      def scale(df: DataFrame, idCols: Seq[String], shift: Long,
-                perturbText: Boolean): DataFrame =
-        (0 until factor).map { i =>
-          var c = df
-          idCols.foreach(id => c = c.withColumn(id, col(id) + lit(i * shift)))
-          // copy 0 keeps the original text (the increment probes' base
-          // lives there); every other copy suffixes EVERY token so
-          // cross-copy docs share no shingles (see object scaladoc) —
-          // within-copy dup/near-dup structure is untouched (a uniform
-          // rewrite preserves pairwise Jaccard inside the copy)
-          if (perturbText && i > 0)
-            c = c.withColumn("text",
-              regexp_replace(col("text"), "(\\S+)", s"$$1c$i"))
-          c
-        }.reduce(_ unionByName _)
-      scale(Tables.documents(spark, sfDir), Seq("doc_id"), 10000000L,
-          perturbText = true)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      scale(Tables.lineitem(spark, sfDir), Seq("l_orderkey"), 100000000L,
-          perturbText = false)
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      scale(Tables.orders(spark, sfDir), Seq("o_orderkey", "o_custkey"),
-          100000000L, perturbText = false)
-        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      dir
+    def once(gate: String, dir: String): (Double, BenchMetrics.Snap) = {
+      meter.reset()
+      val t0 = System.nanoTime()
+      SparkEntry.queries(gate)(spark, dir).write.format("noop").mode("overwrite").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.GraftSparkInternals.waitListenerBusEmpty(spark.sparkContext)
+      (sec, meter.snapshot())
     }
 
-    /** Wall seconds + shuffle (bytes, records) of one capstone run,
-      * measured across EVERY job the run fires — a session-level
-      * listener tally, not plan-local metrics, because the staged
-      * operators materialize checkpointed state eagerly at DataFrame
-      * CONSTRUCTION time (those derivation jobs are the production
-      * cost a soak exists to measure) and their shuffles never appear
-      * in the final serving plan's metrics. Single-shot by design: a
-      * soak measures the cold composed pipeline, not a warmed min.
-      */
-    def measure(f: => DataFrame): (Double, Long, Long) = {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      val recs = new java.util.concurrent.atomic.AtomicLong
-      val tally = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            recs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+    // factor -> gate -> (cold run, min warm run)
+    val points = for (factor <- 1 +: factors) yield {
+      val dir = if (factor == 1) sfDir else replicate(spark, sfDir, factor, s"$root/f$factor")
+      factor -> gates.flatMap { gate =>
+        try {
+          val runs = (1 to 3).map { i =>
+            val (sec, snap) = once(gate, dir)
+            println(f"""{"gate":"$gate","factor":$factor,"run":$i,"sec":$sec%.2f,"metrics":${snap.json}}""")
+            (sec, snap)
           }
+          Some(gate -> (runs.head, runs.tail.minBy(_._1)))
+        } catch { case e: Exception =>
+          System.err.println(s"[soak] $gate x$factor failed: ${e.getClass.getName}: ${e.getMessage}")
+          None
+        }
+      }.toMap
+    }
+    for (gate <- gates; base <- points.head._2.get(gate)) {
+      val pts = points.flatMap { case (factor, byGate) =>
+        byGate.get(gate).map { case ((cold, coldSnap), (warm, warmSnap)) =>
+          f"""{"factor":$factor,"cold_sec":$cold%.2f,"warm_sec":$warm%.2f,""" +
+            f""""cold_x":${cold / base._1._1}%.2f,"warm_x":${warm / base._2._1}%.2f,""" +
+            s""""cold":${coldSnap.json},"warm":${warmSnap.json}}"""
         }
       }
-      spark.sparkContext.addSparkListener(tally)
-      try {
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // listener bus is async: drain it DETERMINISTICALLY before
-        // reading the tally (and before the finally removes the
-        // listener) — a fixed sleep could miss late task-end events on
-        // a loaded host or bleed them into the next capstone
-        org.apache.spark.GraftSparkInternals
-          .waitListenerBusEmpty(spark.sparkContext)
-        (sec, bytes.get, recs.get)
-      } finally spark.sparkContext.removeSparkListener(tally)
+      println(s"""{"gate":"$gate","sf":"$sfDir","points":[${pts.mkString(",")}]}""")
     }
-
-    def capstones(dir: String): Seq[(String, () => DataFrame)] = Seq(
-      ("corpus_build_v3",
-        () => operators.TextAnalysis.corpusBuildV3(
-          Tables.documents(spark, dir))),
-      ("dedup_increment_indexed",
-        () => sources.DedupIndex.incrementReport(spark, dir,
-          baseMaxId = 250L)),
-      ("customer_cf_increment",
-        () => sources.CfIndex.cfIncrement(spark, dir)))
-
-    val rows = (Seq(1) ++ factors).flatMap { factor =>
-      val dir = if (factor == 1) sfDir else replicate(factor)
-      capstones(dir).map { case (name, thunk) =>
-        val (sec, bytes, recs) = measure(thunk())
-        println(f"""{"capstone":"$name","factor":$factor,"sec":$sec%.2f,"shuffle_mb":${bytes / 1e6}%.1f,"shuffle_recs":$recs}""")
-        (name, factor, sec, bytes)
-      }
-    }
-    // summary: per capstone, the wall and shuffle growth vs factor —
-    // the scaling-exponent evidence NOTES records
-    val summary = rows.groupBy(_._1).map { case (name, rs) =>
-      val base = rs.find(_._2 == 1).get
-      val pts = rs.sortBy(_._2).map { case (_, f, sec, bytes) =>
-        f"""{"factor":$f,"sec":$sec%.2f,"wall_x":${sec / base._3}%.2f,"shuffle_x":${
-          if (base._4 > 0) bytes.toDouble / base._4 else 0.0}%.2f}"""
-      }
-      s""""$name":[${pts.mkString(",")}]"""
-    }
-    println(summary.mkString("{", ",", s""","sf":"$sfDir"}"""))
     spark.stop()
   }
 }

@@ -17,7 +17,8 @@ driver-capture ratio alone is NOT adjudicable. Compare clean vs clean
 by default; when a driver capture looks regressed, pass it as
 --confirm alongside the clean sweep: a query is flagged only if BOTH
 captures exceed min_ratio. One capture over = "suspect (not confirmed)"
-— re-measure with BenchOne min-of-3 before believing it.
+— re-measure with `graft.SoakProbe <query>` (warm min of runs 2-3)
+before believing it.
 """
 import json
 import re
@@ -142,7 +143,7 @@ def main(old_path: str, new_path: str, min_ratio: float = 1.3,
                       f"{classify(old_qm.get(q), new_qm.get(q))}")
         if suspect:
             print(f"\nsuspect (NOT confirmed by the second capture — "
-                  f"treat as host noise, adjudicate with BenchOne):")
+                  f"treat as host noise, adjudicate with SoakProbe):")
             for ratio, o, n, q, c in suspect:
                 cs = f"{c:.2f}x" if c is not None else "absent"
                 print(f"  {q}: {o:.2f}s -> {n:.2f}s ({ratio:.2f}x; "
