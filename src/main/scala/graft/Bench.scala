@@ -181,7 +181,10 @@ object Bench {
         s""""qmetrics":$qm,"excursions":$exc,"sf":"$sfDir"}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (full + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () } // bench output file is best-effort
+      catch {
+        case e: Throwable => System.err.println(
+          s"[bench] could not write $outPath: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
 
     // min-of-runs seconds AND the min run's counters (the clean run is

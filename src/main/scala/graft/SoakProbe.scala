@@ -85,7 +85,7 @@ object SoakProbe {
     }: _*)
 
   /** Prefix `prefix` to every token whose first character the cleaner
-    * keeps (token boundaries as in [[operators.WordCount.tokens]]), so
+    * keeps (token boundaries as in [[operators.WordCount.cleanWords]]), so
     * `clean(lower(prefix ++ t)) = prefix ++ clean(lower(t))` for a
     * lowercase-letter prefix; tokens that clean to empty are left alone
     * and stay empty.

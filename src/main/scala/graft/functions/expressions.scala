@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the engine's numeric hot paths.
@@ -382,6 +383,87 @@ object DeletionNeighborhood {
   }
 }
 
+/** The reference tokenizer (`sendFileByFile.cpp:88-93`) as one native
+  * expression: `array<string>` of a text's surviving, lowercased words
+  * in order, from a single pass over its UTF-8 bytes (see
+  * [[CleanWords.compute]]). Replaces `split` → per-element
+  * `transform(lower(regexp_extract))` → `filter`, whose lambdas
+  * Catalyst interprets per token.
+  */
+case class CleanWords(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    CleanWords.compute(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.CleanWords.compute($c);")
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** Tokenizer kernel shared by [[CleanWords]] (bytes) and the RDD word
+  * count (chars). A token is a maximal run of non-whitespace, where
+  * whitespace is the six characters of
+  * [[graft.operators.WordCount.WhitespacePattern]] (9..13 and space,
+  * the reference's `isspace`); its word is its longest prefix of `'`
+  * and 65..122 ([[graft.operators.WordCount.CleanPattern]]) with A-Z
+  * lowercased; empty words are dropped. Both classes are ASCII and
+  * every byte of a multibyte UTF-8 character is >= 0x80, so deciding
+  * per byte equals deciding per character.
+  */
+object CleanWords {
+  private def isSpace(b: Int): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+  private def isKept(b: Int): Boolean = b == '\'' || (b >= 'A' && b <= 'z')
+  private def lower(b: Int): Int = if (b >= 'A' && b <= 'Z') b + 32 else b
+
+  /** Scans the string in place and copies only the surviving bytes,
+    * lowercased, into one buffer per row at their own offsets; each
+    * word is a view of that buffer.
+    */
+  def compute(s: UTF8String): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    val buf = new Array[Byte](n)
+    var words = new Array[Any](16)
+    var nWords = 0
+    var i = 0
+    while (i < n) {
+      val start = i
+      while (i < n && isKept(Platform.getByte(base, off + i))) {
+        buf(i) = lower(Platform.getByte(base, off + i)).toByte
+        i += 1
+      }
+      if (i > start) {
+        if (nWords == words.length) words = Array.copyOf(words, nWords * 2)
+        words(nWords) = UTF8String.fromBytes(buf, start, i - start)
+        nWords += 1
+      }
+      while (i < n && !isSpace(Platform.getByte(base, off + i))) i += 1
+      i += 1
+    }
+    new GenericArrayData(Array.copyOf(words, nWords))
+  }
+
+  /** The same loop over a `String`'s chars, for the RDD spine. */
+  def words(s: String): Array[String] = {
+    val n = s.length
+    val chars = new Array[Char](n)
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < n) {
+      val start = i
+      while (i < n && isKept(s.charAt(i))) {
+        chars(i) = lower(s.charAt(i)).toChar
+        i += 1
+      }
+      if (i > start) out += new String(chars, start, i - start)
+      while (i < n && !isSpace(s.charAt(i))) i += 1
+      i += 1
+    }
+    out.result()
+  }
+}
+
 /** Unicode NFC normalization as a native codegen expression — the
   * canonicalization pass a crawl corpus needs before hashing or
   * deduplication (the same logical text arrives composed on one site
@@ -494,4 +576,5 @@ object functions {
     col(NearestCentroidL2(ex(vec), ex(cents)))
   def winnow_fps(ws: Column, k: Int, w: Int): Column =
     col(WinnowFingerprints(ex(ws), k, w))
+  def clean_words(text: Column): Column = col(CleanWords(ex(text)))
 }

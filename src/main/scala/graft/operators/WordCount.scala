@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
   *   → keep longest prefix of {`'`, ASCII 65-122} (`sendFileByFile.cpp:89-91`)
   *   → drop empty (`sendFileByFile.cpp:92`)
   *   → lowercase (`sendFileByFile.cpp:93`)
+  *   — these four steps are one pass of one kernel,
+  *     [[graft.functions.CleanWords]], in both spines —
   *   → (word, 1) (`sendFileByFile.cpp:94-97`)
   *   → partial agg per mapper (`sendFileByFile.cpp:150,186-200`)
   *   → hash shuffle on word (`sendFileByFile.cpp:256-268`)
@@ -29,20 +31,19 @@ object WordCount {
 
   /** Longest-allowed-prefix pattern per the reference tokenizer
     * (`sendFileByFile.cpp:89-91`): apostrophe plus ASCII 65..122, i.e.
-    * `A-Z [ \ ] ^ _ backtick a-z`. Kept RE2-compatible so the very same
-    * pattern string runs in DuckDB for the oracle.
+    * `A-Z [ \ ] ^ _ backtick a-z`. The engine runs this class in
+    * [[graft.functions.CleanWords]]; the pattern spells it for the
+    * DuckDB oracle (RE2 reads it the same) and for the specs.
     */
   val CleanPattern = "^[A-Za-z\\[\\\\\\]^_`']*"
 
   /** Whitespace class written out explicitly: Java's `\s` is
     * [ \t\n\x0B\f\r] but RE2's (DuckDB's) `\s` omits vertical tab —
-    * spelling the class keeps Spark, the oracle, and the reference's
-    * `isspace` (`sendFileByFile.cpp:88`) in exact agreement.
+    * spelling the class keeps the kernel's six whitespace bytes, the
+    * oracle and the reference's `isspace` (`sendFileByFile.cpp:88`) in
+    * exact agreement. Also used by `regexp_replace` normalisations.
     */
   val WhitespacePattern = "[\\t\\n\\x0B\\f\\r ]+"
-
-  /** Whitespace tokenizer (`operator>>`, `sendFileByFile.cpp:88`). */
-  def tokens(text: Column): Column = split(text, WhitespacePattern)
 
   /** Fill idle cores under a compute-bound per-row stage (round 15,
     * guide §2.6/§6): a parquet scan parallelizes by file SPLITS, and a
@@ -91,25 +92,18 @@ object WordCount {
     else df
   }
 
-  /** Prefix-truncation cleaner (`sendFileByFile.cpp:89-91`). */
-  def clean(tok: Column): Column = regexp_extract(tok, CleanPattern, 0)
-
-  /** Array of surviving, lowercased words for one document — used by the
-    * shingling/dedup operators that need token order preserved.
+  /** Array of surviving, lowercased words for one document, in token
+    * order (`sendFileByFile.cpp:88-93`); null for a null text. One
+    * codegen call of the [[graft.functions.CleanWords]] kernel.
     */
-  def cleanWords(text: Column): Column =
-    filter(transform(tokens(text), t => lower(clean(t))), w => length(w) > 0)
+  def cleanWords(text: Column): Column = graft.functions.functions.clean_words(text)
 
-  /** One row per surviving token: (<keys...>, word). Explodes the raw
-    * whitespace split first and cleans as flat column expressions —
-    * unlike `explode(cleanWords(...))`, every step here (split,
-    * regexp_extract, lower, filter) stays inside whole-stage codegen
-    * instead of an interpreted per-element array lambda.
+  /** One row per surviving token: (<keys...>, word). The kernel and the
+    * `explode` generator both stay inside whole-stage codegen; a null
+    * text yields no rows.
     */
   def explodeWords(docs: DataFrame, textCol: String, keep: Seq[String]): DataFrame =
-    docs.select(keep.map(col) :+ explode(tokens(col(textCol))).as("tok"): _*)
-      .select(keep.map(col) :+ lower(clean(col("tok"))).as("word"): _*)
-      .where(length(col("word")) > 0)
+    docs.select(keep.map(col) :+ explode(cleanWords(col(textCol))).as("word"): _*)
 
   /** The flagship query: (word, cnt) over a text column, alphabetical.
     * DataFrame formulation — partial+final HashAggregate, one Exchange.
@@ -127,12 +121,9 @@ object WordCount {
     */
   def wordCountRdd(spark: SparkSession, docs: DataFrame, textCol: String = "text"): DataFrame = {
     import spark.implicits._
-    val re = CleanPattern.r
     docs.select(col(textCol)).na.drop().as[String].rdd
-      .flatMap(_.split(WhitespacePattern))
-      .map(t => re.findFirstIn(t).getOrElse(""))
-      .filter(_.nonEmpty)
-      .map(w => (w.toLowerCase(java.util.Locale.ROOT), 1L))
+      .flatMap(graft.functions.CleanWords.words)
+      .map(w => (w, 1L))
       .reduceByKey(_ + _)
       .sortByKey()
       .toDF("word", "cnt")

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
 import graft.operators.WordCount
 
 /** Unit + property tests for the core word-count pipeline — the test
@@ -99,6 +102,85 @@ class WordCountSpec extends SparkSpec {
     // comparison made this accidental in the reference; defined here)
     assert(run("héllo") == Map("h" -> 1L))
     assert(run("日本語") == Map.empty)
+  }
+
+  /** The retired regex formulation of `cleanWords`, kept here only as
+    * the reference the kernel is fuzzed against.
+    */
+  private def regexCleanWords(text: Column): Column =
+    filter(transform(split(text, WordCount.WhitespacePattern),
+      t => lower(regexp_extract(t, WordCount.CleanPattern, 0))), w => length(w) > 0)
+
+  /** 2,000 seeded lines over the whitespace bytes, the clean class,
+    * digits, punctuation and non-ASCII text (NBSP, U+2028, U+3000, a
+    * Latin-1 letter, a CJK ideograph, a surrogate-pair emoji), with
+    * leading, trailing and repeated whitespace.
+    */
+  private lazy val fuzzLines: Seq[String] = {
+    val rnd = new scala.util.Random(4242)
+    val ws = Seq("\t", "\n", "\u000B", "\f", "\r", " ")
+    val kept = Seq("'", "[", "\\", "]", "^", "_", "`") ++
+      ('A' to 'Z').map(_.toString) ++ ('a' to 'z').map(_.toString)
+    val other = ('0' to '9').map(_.toString) ++ "!\"#$%&()*+,-./:;<=>?@{|}~".map(_.toString) ++
+      Seq("\u00A0", "\u2028", "\u3000", "é", "日", "\uD83D\uDE00")
+    def pick(xs: Seq[String]) = xs(rnd.nextInt(xs.size))
+    def wsRun = Seq.fill(rnd.nextInt(3) + 1)(pick(ws)).mkString
+    Seq.fill(2000) {
+      val body = Seq.fill(rnd.nextInt(40)) {
+        rnd.nextInt(10) match {
+          case 0 | 1 => wsRun
+          case 2 | 3 => pick(other)
+          case _ => pick(kept)
+        }
+      }.mkString
+      (if (rnd.nextBoolean()) wsRun else "") + body + (if (rnd.nextBoolean()) wsRun else "")
+    }
+  }
+
+  /** An RDD-backed frame, so no optimizer rule folds the projection
+    * over a local relation before the chosen codegen mode runs it.
+    */
+  private def fuzzFrame(s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.parallelize(fuzzLines.zipWithIndex, 4))
+      .toDF("text", "id")
+
+  for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+    test(s"differential fuzz: CleanWords kernel == regex cleanWords ($mode)") {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val rows = fuzzFrame(s)
+        .select(col("id"), WordCount.cleanWords(col("text")).as("k"),
+          regexCleanWords(col("text")).as("r"))
+        .collect()
+      assert(rows.length == fuzzLines.size)
+      rows.foreach { r =>
+        val (k, re) = (r.getSeq[String](1), r.getSeq[String](2))
+        assert(k == re, s"line ${r.getInt(0)} <${fuzzLines(r.getInt(0))}>")
+      }
+      // the explode spine sees the same words, in the same multiset
+      val exploded = WordCount.explodeWords(fuzzFrame(s), "text", Seq("id"))
+        .groupBy("id").agg(sort_array(collect_list("word")).as("ws"))
+        .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
+      rows.foreach { r =>
+        assert(exploded.getOrElse(r.getInt(0), Nil) == r.getSeq[String](2).sorted)
+      }
+    }
+
+  test("CleanWords: null text is a null array and no exploded rows; empty text is empty") {
+    val df = Seq(Some(""), None, Some(" \t ")).toDF("text")
+    val got = df.select(WordCount.cleanWords(col("text"))).collect().map(r =>
+      if (r.isNullAt(0)) null else r.getSeq[String](0))
+    assert(got.toSeq == Seq(Nil, null, Nil))
+    assert(WordCount.explodeWords(df, "text", Nil).count() == 0)
+  }
+
+  test("RDD and DataFrame formulations agree on the fuzz corpus") {
+    val df = WordCount.wordCount(fuzzFrame(spark)).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    val rdd = WordCount.wordCountRdd(spark, fuzzFrame(spark)).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(df.nonEmpty && df.toSeq == rdd.toSeq)
   }
 
   test("salted word count equals plain word count") {
