@@ -155,7 +155,11 @@ object Bench {
         java.nio.file.Paths.get(priorPath)), "UTF-8")
       "\"([A-Za-z0-9_]+)\":(-?[0-9][-0-9.Ee]*)".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not read ordering prior $priorPath: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+      Map.empty
+    }
     val names = orderNames(SparkEntry.queries.keys.toSeq, prior)
 
     val qmetrics =

@@ -3,12 +3,25 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `sfDir outDir [name,name,…]` → (sfDir, outDir, gate filter). The
+    * optional third argument (comma-separated gate names) is an
+    * iteration aid; the driver passes two and gets the full dump. A
+    * missing sf dir or an unregistered name fails here, before Spark
+    * starts.
+    */
+  private[graft] def parseArgs(args: Seq[String]): (String, String, Option[Set[String]]) = {
+    require(args.length == 2 || args.length == 3,
+      s"usage: Verify <sfDir> <outDir> [name,name,...] (got ${args.length} arguments)")
+    val sfDir = args(0)
+    require(new java.io.File(sfDir).isDirectory, s"no sf directory at $sfDir")
+    val only = args.lift(2).map(_.split(',').toSet)
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"no gate named ${unknown.toSeq.sorted.mkString(", ")}")
+    (sfDir, args(1), only)
+  }
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query names (iteration aid; the
-    // driver passes two args and gets the full dump)
-    val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val (sfDir, outDir, only) = parseArgs(args.toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession
       .builder("graft-verify", s"local[$cpus]", cpus.toInt)

@@ -1345,7 +1345,7 @@ object Dedup {
       .distinct()
     // exact verify: sorted shingle arrays meet per candidate pair.
     // The two sides are DISTINCT projections (renamed columns), not
-    // dataset aliases of one frame — a self-aliased join would let the
+    // two `.as()` views of one frame — a self-aliased join would let the
     // analyzer resolve sa.shs and sb.shs to the same attribute and
     // make the intersect trivially the whole set.
     val setsA = sets.select(col("doc_id").as("id_a"),

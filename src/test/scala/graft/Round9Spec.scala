@@ -148,26 +148,6 @@ class Round9Spec extends SparkSpec {
       s"native kernel diverges from the SQL chain:\n${mismatch.take(3).mkString("\n")}")
   }
 
-  test("no duplicate query/oracle registrations (Map would silently shadow)") {
-    // Scala Map literals keep the LAST duplicate key: a re-registered
-    // name silently drops the older query AND its oracle while the
-    // gate stays green (caught live in round 9 with doc_repetition).
-    // Count the registrations in the source and compare to Map sizes.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    val regs = "\"([a-z0-9_]+)\" -> \\(\\(".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val dups = regs.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-    assert(dups.isEmpty, s"duplicate query registrations: ${dups.mkString(",")}")
-    assert(regs.size == SparkEntry.queries.size,
-      s"${regs.size} registrations but ${SparkEntry.queries.size} Map keys")
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
-      "every query needs exactly one oracle (and vice versa): " +
-        (SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet).mkString(",") +
-        " / " +
-        (SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet).mkString(","))
-  }
-
   test("minhashEval: identical documents estimate with zero error") {
     val d = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
