@@ -38,8 +38,9 @@ final class BenchMetrics extends SparkListener {
   // the job's stages (its entry alone measures submit -> first launch)
   private val pendingStages =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  // boxed values: `remove` of a missing job must read null, not 0L
   private val jobSubmitMs =
-    new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
   private val stageJob =
     new java.util.concurrent.ConcurrentHashMap[Int, Int]()
 
@@ -57,7 +58,7 @@ final class BenchMetrics extends SparkListener {
       if (sub != null) {
         // first task of the whole JOB: charge submit -> launch once,
         // and stop tracking the job's other stages
-        schedDelayMs.addAndGet(math.max(0L, e.taskInfo.launchTime - sub))
+        schedDelayMs.addAndGet(math.max(0L, e.taskInfo.launchTime - sub.longValue))
         stageJob.forEach((s, j) => if (j == jid) pendingStages.remove(s))
       }
     }

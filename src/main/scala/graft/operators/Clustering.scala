@@ -100,9 +100,9 @@ object Clustering {
     * Scale shape: ONE job per iteration (the convergence check action
     * over the k-row checkpointed centroid frame drives the scan);
     * driver holds no data — centroids stay a DataFrame, truncated with
-    * `localCheckpoint` each round exactly like
-    * [[Dedup.components]]' iteration (the k·d-row frame is tiny, the
-    * lineage would otherwise grow by one broadcast join per round).
+    * an [[Iterate.untilStable]] checkpoint each round (the k·d-row
+    * frame is tiny, the lineage would otherwise grow by one broadcast
+    * join per round).
     */
   def lloydCentroids(embs: DataFrame, k: Int, maxIters: Int): DataFrame = {
     // r16: every iteration's assignment re-derived the scaled view from
@@ -113,39 +113,29 @@ object Clustering {
     // fan-out only multiplied per-iteration task overhead
     // (kmeans_converged 1.9 → 3.5 s); the loop is fixed-overhead-bound,
     // the r15 applicability rule's losing case.
-    val scaled = scaledView(embs).localCheckpoint()
-    var cents = centroids(embs, k).localCheckpoint()
-    var iter = 0
-    var moved = true
-    while (iter < maxIters && moved) {
-      val stats = assignAgainst(scaled, cents)
+    val scaled = Iterate.materialize(scaledView(embs))
+    val cents0 = Iterate.materialize(centroids(embs, k))
+    val cents = Iterate.untilStable(cents0, maxIters) { cur =>
+      val stats = assignAgainst(scaled, cur)
         .select(col("cluster"), posexplode(col("ev")))
         .groupBy("cluster", "pos")
         .agg(expr("sum(col) div count(1)").as("m"))
         .groupBy("cluster")
         .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("newcv"))
-      val prev = cents.select(col("cluster"), col("cv").as("pcv"))
+      val prev = cur.select(col("cluster"), col("cv").as("pcv"))
       // changed flag rides the one checkpointed frame, and the probe IS
       // the materializing action (r15): lazy checkpoint + one
       // count-changed aggregate per iteration instead of an eager
-      // checkpoint job plus a limit-1 probe job — the aggregate scans
-      // every partition, so the frame is fully persisted before the
-      // superseded round's blocks are freed below
-      val next = prev.join(stats, Seq("cluster"), "left")
+      // checkpoint job plus a limit-1 probe job
+      prev.join(stats, Seq("cluster"), "left")
         .select(col("cluster"), coalesce(col("newcv"), col("pcv")).as("cv"),
           (coalesce(col("newcv"), col("pcv")) =!= col("pcv")).as("changed"))
-        .localCheckpoint(eager = false)
-      val nChanged =
-        next.agg(count(when(col("changed"), 1)).as("n")).head().getLong(0)
-      moved = iter < maxIters - 1 && nChanged > 0
-      Dedup.release(cents) // superseded round's blocks (prev read it above)
-      cents = next.drop("changed")
-      iter += 1
-    }
-    Dedup.release(scaled) // loop-scoped input blocks
-    cents
+    }(Iterate.noneChanged).frame
+    Iterate.release(scaled) // loop-scoped input blocks
+    cents.drop("changed")
   }
+
 
   /** Each vector's nearest centroid from an arbitrary (cluster, cv)
     * set — the IVF cell-assignment step once centroids are learned.
@@ -281,17 +271,14 @@ object Clustering {
     // r16: same loop-input staging as [[lloydCentroids]] — the m-slice
     // union re-derived m parquet scans PER ITERATION before this
     // (fillCores measured and rejected here too, same reason)
-    val scaled = slices.select(col("tag"), col("vec_id"),
-        scaledVec(col("embedding")).as("ev"))
-      .localCheckpoint()
-    var cents = scaled.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("tag"), col("vec_id").as("cluster"), col("ev").as("cv"))
-      .localCheckpoint()
-    var iter = 0
-    var moved = true
-    while (iter < maxIters && moved) {
-      val centsArr = cents.groupBy("tag")
+    val scaled = Iterate.materialize(slices.select(col("tag"), col("vec_id"),
+      scaledVec(col("embedding")).as("ev")))
+    val cents0 = Iterate.materialize(
+      scaled.withColumn("rn", row_number().over(w))
+        .where(col("rn") <= k)
+        .select(col("tag"), col("vec_id").as("cluster"), col("ev").as("cv")))
+    val cents = Iterate.untilStable(cents0, maxIters) { cur =>
+      val centsArr = cur.groupBy("tag")
         .agg(sort_array(collect_list(struct(col("cluster"), col("cv"))))
           .as("cents"))
       val stats = scaled
@@ -304,23 +291,16 @@ object Clustering {
         .groupBy("tag", "cluster")
         .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("newcv"))
-      val prev = cents.select(col("tag"), col("cluster"), col("cv").as("pcv"))
+      val prev = cur.select(col("tag"), col("cluster"), col("cv").as("pcv"))
       // the changed flag rides the ONE checkpointed frame, and the
       // probe IS the materializing action (r15, see [[lloydCentroids]])
-      val next = prev.join(stats, Seq("tag", "cluster"), "left")
+      prev.join(stats, Seq("tag", "cluster"), "left")
         .select(col("tag"), col("cluster"),
           coalesce(col("newcv"), col("pcv")).as("cv"),
           (coalesce(col("newcv"), col("pcv")) =!= col("pcv")).as("changed"))
-        .localCheckpoint(eager = false)
-      val nChanged =
-        next.agg(count(when(col("changed"), 1)).as("n")).head().getLong(0)
-      moved = iter < maxIters - 1 && nChanged > 0
-      Dedup.release(cents)
-      cents = next.drop("changed")
-      iter += 1
-    }
-    Dedup.release(scaled) // loop-scoped input blocks
-    cents
+    }(Iterate.noneChanged).frame
+    Iterate.release(scaled) // loop-scoped input blocks
+    cents.drop("changed")
   }
 
   def lloydConverged(embs: DataFrame, k: Int, maxIters: Int): DataFrame =

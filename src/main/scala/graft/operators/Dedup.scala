@@ -538,44 +538,21 @@ object Dedup {
     */
   def components(pairs: DataFrame, maxIter: Int = 100,
                  reliable: Boolean = false): DataFrame = {
-    val (labels, _, converged) = propagate(pairs, maxIter, reliable)
-    if (!converged)
-      throw new IllegalStateException(
-        s"Dedup.components did not converge within $maxIter iterations " +
-          "(component diameter exceeds maxIter); raise maxIter — " +
-          "returning early would silently under-delete duplicates")
+    val (run, sym) = propagate(pairs, maxIter, reliable)
+    val labels = run.orThrow("Dedup.components", "maxIter",
+      "returning early would silently under-delete duplicates")
+    Iterate.release(sym, reliable)
     labels.select(col("id").as("doc_id"), col("comp")).orderBy("doc_id")
   }
 
   /** Min-label propagation for up to `maxIter` rounds; the shared loop
     * behind [[components]] (which demands convergence) and
     * [[componentsAdaptive]] (which falls back to star contraction).
-    * Returns (labels(id, comp), symmetric edge set, converged).
+    * Returns the labels (id, comp) with the loop's outcome, and the
+    * symmetric edge set.
     */
-  /** Free a materialized (checkpointed) frame that has been superseded:
-    * drop its block-manager blocks, and in reliable mode delete its
-    * checkpoint files — iterative loops otherwise grow storage linearly
-    * with rounds. Shared by every iterative operator (CC, PageRank,
-    * Lloyd, BPE).
-    */
-  private[operators] def release(df: DataFrame, reliable: Boolean = false): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        if (reliable) l.rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(
-            df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-      case _ => // not a checkpointed frame; nothing to free
-    }
-
   private def propagate(pairs: DataFrame, maxIter: Int, reliable: Boolean)
-      : (DataFrame, DataFrame, Boolean) = {
-    require(!reliable || pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable checkpointing needs spark.sparkContext.setCheckpointDir(...)")
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+      : (Iterate.Outcome, DataFrame) = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     // NOTE (measured, round 6): pre-partitioning sym/labels before the
     // checkpoint does NOT make the per-round join exchange-free under
@@ -583,49 +560,35 @@ object Dedup {
     // (verified with explicit partition counts and with AQE disabled,
     // where it DOES work) — so the loop deliberately leaves the frames
     // unpartitioned rather than paying a useless extra shuffle up front
-    val sym = materialize(
-      edges.union(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    // labelsM tracks the materialized frame (labels wraps it with a
-    // projection) so superseded rounds can be released
-    var labelsM = materialize(sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
-    var labels = labelsM
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val sym = Iterate.materialize(
+      edges.union(edges.select(col("dst").as("src"), col("src").as("dst"))),
+      reliable = reliable)
+    val labels0 = Iterate.materialize(sym.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")), reliable = reliable)
+    // the changed flag rides the propagation row, and the convergence
+    // probe IS the materializing action (r15, the componentsStar
+    // signature discipline): the round's frame is checkpointed lazily
+    // and a single count-changed aggregate both persists every
+    // partition and returns the signal — one action per round instead
+    // of checkpoint + isEmpty. Reliable mode (ADVICE r15) keeps the
+    // eager checkpoint, whose write job already materialized the
+    // frame, so its probe is a limit-1 filter over the checkpointed
+    // blocks, not a second full aggregate pass.
+    val run = Iterate.untilStable(labels0, maxIter, eager = reliable,
+        reliable = reliable) { cur =>
+      val labels = cur.drop("changed")
       val neighborMin = sym.join(labels, col("dst") === col("id"))
         .groupBy("src").agg(min("comp").as("ncomp"))
-      // the changed flag rides the propagation row, and the convergence
-      // probe IS the materializing action (r15, the componentsStar
-      // signed() discipline): the round's frame is checkpointed lazily
-      // and a single count-changed aggregate both persists every
-      // partition and returns the signal — one action per round instead
-      // of checkpoint + isEmpty. (Reliable mode keeps the eager
-      // checkpoint; Spark's checkpoint-write job subsumes the pass.)
-      val updated = labels
+      labels
         .join(neighborMin, col("id") === col("src"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
           (coalesce(col("ncomp"), col("comp")) < col("comp")).as("changed"))
-      val updatedM = if (reliable) updated.checkpoint()
-                     else updated.localCheckpoint(eager = false)
-      // lazy path: the count-changed aggregate IS the materializing
-      // action (one job does both). Reliable path (ADVICE r15): the
-      // eager checkpoint already materialized the frame, so the probe
-      // is a limit-1 filter over the checkpointed blocks, not a second
-      // full aggregate pass.
-      converged =
-        if (reliable) updatedM.where(col("changed")).isEmpty
-        else updatedM
-          .agg(count(when(col("changed"), 1)).as("n")).head().getLong(0) == 0L
-      // the aggregate scanned every partition, so the lazy checkpoint is
-      // fully persisted BEFORE the superseded round's blocks are freed
-      release(labelsM, reliable)
-      labelsM = updatedM
-      labels = updatedM.drop("changed")
-      iter += 1
+    } { next =>
+      if (reliable) next.where(col("changed")).isEmpty
+      else Iterate.noneChanged(next)
     }
-    (labels, sym, converged)
+    (run.copy(frame = run.frame.drop("changed")), sym)
   }
 
   /** Diameter-adaptive connected components — the front door the
@@ -651,8 +614,10 @@ object Dedup {
     */
   def componentsAdaptive(pairs: DataFrame, propRounds: Int = 8,
                          reliable: Boolean = false): DataFrame = {
-    val (labels, sym, converged) = propagate(pairs, propRounds, reliable)
-    if (converged) {
+    val (run, sym) = propagate(pairs, propRounds, reliable)
+    val labels = run.frame
+    if (run.converged) {
+      Iterate.release(sym, reliable)
       labels.select(col("id").as("doc_id"), col("comp")).orderBy("doc_id")
     } else {
       val contracted = sym
@@ -662,6 +627,7 @@ object Dedup {
         .select(col("ca").as("id_a"), col("cb").as("id_b"))
       val roots = componentsStar(contracted, reliable = reliable)
         .select(col("doc_id").as("lbl"), col("comp").as("root"))
+      Iterate.release(sym, reliable) // the contraction has run
       labels.join(roots, col("comp") === col("lbl"), "left")
         .select(col("id").as("doc_id"),
           coalesce(col("root"), col("comp")).as("comp"))
@@ -697,9 +663,10 @@ object Dedup {
     * probability ~2⁻¹²⁸ per round. (The first cut re-counted both edge
     * frames and ran `exceptAll` every round: two extra edge-scale
     * shuffles per round on the operator whose whole point is cheap
-    * rounds.) The previous round's checkpoint blocks are unpersisted as
-    * soon as the next round is materialized, so block-manager storage
-    * holds at most two rounds of edges, not O(rounds).
+    * rounds.) The rounds run through [[Iterate.untilStable]], which
+    * releases the previous round's checkpoint blocks as soon as the
+    * next round is materialized, so block-manager storage holds at most
+    * two rounds of edges, not O(rounds).
     *
     * `reliable = true` (requires `setCheckpointDir`) swaps the
     * per-round materialization to reliable `checkpoint` — the mode for
@@ -711,33 +678,23 @@ object Dedup {
     */
   def componentsStar(pairs: DataFrame, maxIter: Int = 60,
                      reliable: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    val sc = pairs.sparkSession.sparkContext
-    require(!reliable || sc.getCheckpointDir.isDefined,
-      "reliable checkpointing needs spark.sparkContext.setCheckpointDir(...)")
-    // lazy checkpoint + signature head(): the ONE action per round
-    // (plus Spark's checkpoint-write job in reliable mode)
-    def signed(df: DataFrame): (DataFrame, Row) = {
-      val cp = if (reliable) df.checkpoint(eager = false)
-               else df.localCheckpoint(eager = false)
-      val s = cp.agg(
-        count(lit(1)),
-        expr("bit_xor(xxhash64(hi, lo))"),
-        expr("bit_xor(xxhash64(lo, hi))")).head()
-      (cp, s)
-    }
-    def unpersistEdges(df: DataFrame): Unit = release(df, reliable)
-    var (edges, sig) = signed(pairs
+    // the signature aggregate is each round's ONE action (plus Spark's
+    // checkpoint-write job in reliable mode): over a lazy checkpoint it
+    // is what materializes the round
+    def signature(df: DataFrame) = df.agg(
+      count(lit(1)),
+      expr("bit_xor(xxhash64(hi, lo))"),
+      expr("bit_xor(xxhash64(lo, hi))")).head()
+    val edges0 = Iterate.materialize(pairs
       .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("hi"),
         least(col("u"), col("v")).as("lo"))
-      .distinct())
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
-        .union(edges.select(col("lo").as("u"), col("hi").as("v")))
+      .distinct(), eager = false, reliable = reliable)
+    var sig = signature(edges0)
+    val edges = Iterate.untilStable(edges0, maxIter, reliable = reliable) { cur =>
+      val sym = cur.select(col("hi").as("u"), col("lo").as("v"))
+        .union(cur.select(col("lo").as("u"), col("hi").as("v")))
       val gmin = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
       // large-star: v > u ≥ m, so (v, m) is already (hi, lo)-canonical
       val large = sym.join(gmin, "u")
@@ -748,23 +705,19 @@ object Dedup {
       val smin = large.groupBy("hi").agg(min("lo").as("m"))
       val joined = large.join(smin, "hi")
       // small-star: attach every down-neighbor AND the center to m
-      val (next, nextSig) = signed(joined
+      joined
         .select(col("lo").as("a"), col("m").as("b"))
         .union(joined.select(col("hi").as("a"), col("m").as("b")))
         .where(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("hi"),
           least(col("a"), col("b")).as("lo"))
-        .distinct())
-      converged = nextSig == sig
-      unpersistEdges(edges)
-      edges = next
-      sig = nextSig
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"Dedup.componentsStar did not converge within $maxIter rounds — " +
-          "raise maxIter (log-round contraction should never need this)")
+        .distinct()
+    } { next =>
+      val prev = sig
+      sig = signature(next)
+      sig == prev
+    }.orThrow("Dedup.componentsStar", "maxIter",
+      "log-round contraction should never need this")
     edges.select(col("hi").as("doc_id"), col("lo").as("comp"))
       .union(edges.select(col("lo").as("doc_id"), col("lo").as("comp")))
       .distinct()
@@ -936,7 +889,7 @@ object Dedup {
         ("Dedup.perCall", tag)) {
       new java.util.concurrent.atomic.AtomicReference(Seq.empty[DataFrame])
     }
-    ref.getAndSet(frames).foreach(release(_))
+    ref.getAndSet(frames).foreach(Iterate.release(_))
   }
 
   private[graft] def verifyJaccardSh(shAll: DataFrame, cands: DataFrame,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over corpus-derived graphs — the centrality
@@ -30,44 +30,60 @@ object Graph {
       .select(col("p.src").as("src"), col("p.dst").as("dst"))
       .distinct()
 
-  /** `iters` PageRank power iterations over (src, dst) edges.
+  /** `iters` PageRank power iterations over (src, dst) edges: the
+    * unit-weight, every-node-teleport case of [[rankFlow]].
+    */
+  def pageRank(rawEdges: DataFrame, iters: Int,
+               init: Long = 1000000000000L): DataFrame =
+    rankFlow(rawEdges, lit(1L), None, iters, init)
+
+  /** The one PageRank recurrence behind [[pageRank]],
+    * [[pageRankWeighted]] and [[personalizedPageRank]]: per round
+    * `rank(v) = jump·[v ∈ seeds] + (85 · Σ_{u→v} (rank(u)·w) div Σw(u)) div 100`,
+    * from initial mass `init` on each seed and 0 elsewhere. With
+    * `weight` 1 the edge share is `rank div outdeg`, and with no seed
+    * set every node is a seed (plain PageRank's uniform mass and
+    * teleport), so all three forms are this body bit for bit.
     *
     * Scale shape: per iteration ONE shuffle on dst (the inflow
     * aggregation) plus the rank⋈edge join on src — both keyed
     * exchanges over edge/node-sized frames, nothing on the driver. The
-    * node-sized rank frame is `localCheckpoint`ed per iteration to
-    * truncate lineage (same pattern as [[Dedup.components]] /
-    * [[Clustering.lloydCentroids]]).
+    * edge derivation is materialized once (every round joins it), and
+    * the node-sized rank frame is an [[Iterate.fixed]] round. A seed
+    * table is tiny by definition and broadcast each round.
     */
-  def pageRank(rawEdges: DataFrame, iters: Int,
-               init: Long = 1000000000000L): DataFrame = {
+  private def rankFlow(rawEdges: DataFrame, weight: Column,
+                       seeds: Option[DataFrame], iters: Int,
+                       init: Long): DataFrame = {
     val jump = init * 15 / 100
-    // materialize the (possibly expensive) edge derivation ONCE: every
-    // iteration joins against edges/outdeg, and without this each of
-    // them would re-run the upstream lineage per iteration
-    val edges = rawEdges.localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
-      .localCheckpoint()
-    var ranks = nodes.withColumn("rank", lit(init)).localCheckpoint()
-    var i = 0
-    while (i < iters) {
+    val edges = Iterate.materialize(rawEdges)
+    val nodes = Iterate.materialize(edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct())
+    val outw = Iterate.materialize(
+      edges.groupBy("src").agg(sum(weight).as("ow")))
+    val seedSet = seeds.map(s => Iterate.materialize(
+      s.select(col("node")).distinct().withColumn("is_seed", lit(1))))
+    // the teleport targets: every node, or the seed set
+    def targets: DataFrame = seedSet.fold(nodes.withColumn("is_seed", lit(1)))(
+      s => nodes.join(broadcast(s), Seq("node"), "left"))
+    def mass(m: Long): Column =
+      when(col("is_seed").isNotNull, lit(m)).otherwise(lit(0L))
+    val ranks0 = Iterate.materialize(
+      targets.select(col("node"), mass(init).as("rank")))
+    val ranks = Iterate.fixed(ranks0, iters) { (cur, _) =>
       val inflow = edges
-        .join(ranks, col("src") === col("node"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr("rank div odeg").as("c"))
+        .join(cur, col("src") === col("node"))
+        .join(outw, "src")
+        .withColumn("w", weight)
+        .select(col("dst"), expr("(rank * w) div ow").as("c"))
         .groupBy("dst").agg(sum("c").as("inflow"))
-      val prev = ranks
-      ranks = nodes.join(inflow, col("node") === col("dst"), "left")
+      targets.join(inflow, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(jump) + expr("(85 * coalesce(inflow, CAST(0 AS BIGINT))) div 100"))
+          (mass(jump) + expr("(85 * coalesce(inflow, CAST(0 AS BIGINT))) div 100"))
             .as("rank"))
-        .localCheckpoint()
-      Dedup.release(prev) // superseded iteration's blocks
-      i += 1
     }
+    // the final ranks stand alone: free the loop's inputs
+    (Seq(edges, nodes, outw) ++ seedSet).foreach(Iterate.release(_))
     ranks.orderBy(col("rank").desc, col("node"))
   }
 
@@ -86,39 +102,14 @@ object Graph {
   /** Weighted PageRank over (src, dst, w) edges: rank flows in
     * proportion to edge weight — `contribution = rank·w div Σw(src)`
     * — the real-link-graph form (a page linked 100× from a hub should
-    * receive 100 shares, not 1). Same integer-determinism contract and
-    * per-iteration shape as [[pageRank]]; the only new overflow term
-    * is `rank·w`, safe while `init·w_max < 2⁶³` (init 10¹² leaves room
-    * for w up to ~9·10⁶ — shrink init for heavier multigraphs).
+    * receive 100 shares, not 1). [[rankFlow]] with weight `w`; the
+    * only new overflow term is `rank·w`, safe while `init·w_max < 2⁶³`
+    * (init 10¹² leaves room for w up to ~9·10⁶ — shrink init for
+    * heavier multigraphs).
     */
   def pageRankWeighted(rawEdges: DataFrame, iters: Int,
-                       init: Long = 1000000000000L): DataFrame = {
-    val jump = init * 15 / 100
-    val edges = rawEdges.localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-      .localCheckpoint()
-    var ranks = nodes.withColumn("rank", lit(init)).localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      val inflow = edges
-        .join(ranks, col("src") === col("node"))
-        .join(outw, "src")
-        .select(col("dst"), expr("(rank * w) div ow").as("c"))
-        .groupBy("dst").agg(sum("c").as("inflow"))
-      val prev = ranks
-      ranks = nodes.join(inflow, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(jump) + expr("(85 * coalesce(inflow, CAST(0 AS BIGINT))) div 100"))
-            .as("rank"))
-        .localCheckpoint()
-      Dedup.release(prev)
-      i += 1
-    }
-    ranks.orderBy(col("rank").desc, col("node"))
-  }
+                       init: Long = 1000000000000L): DataFrame =
+    rankFlow(rawEdges, col("w"), None, iters, init)
 
   /** Gate shape: weighted PageRank where the edge weight is the bigram
     * OCCURRENCE count (how often the adjacency appears corpus-wide) —
@@ -152,50 +143,14 @@ object Graph {
     * set — the rank measures proximity to the seeds rather than global
     * centrality (the standard seeded-relevance primitive: quality
     * propagation from trusted pages, related-entity expansion from a
-    * query node). Same integer-determinism contract as [[pageRank]]
-    * (`init`-scaled BIGINT mass, truncating div per step): initial
+    * query node). [[rankFlow]] over `seedsDf`'s `node` column: initial
     * mass `init` on each seed and 0 elsewhere, per-iteration rank =
-    * `jump·[node ∈ seeds] + (85·inflow) div 100`. The seed table is
-    * tiny by definition and broadcast; everything else is the
-    * [[pageRank]] per-iteration shape (one shuffle on dst, node-sized
-    * frames checkpointed and released per round).
+    * `jump·[node ∈ seeds] + (85·inflow) div 100`.
     */
   def personalizedPageRank(rawEdges: DataFrame, seedsDf: DataFrame,
                            iters: Int,
-                           init: Long = 1000000000000L): DataFrame = {
-    val jump = init * 15 / 100
-    val edges = rawEdges.localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
-      .localCheckpoint()
-    val seeds = seedsDf.select(col("node")).distinct()
-      .withColumn("is_seed", lit(1)).localCheckpoint()
-    var ranks = nodes.join(broadcast(seeds), Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed").isNotNull, lit(init)).otherwise(lit(0L)).as("rank"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      val inflow = edges
-        .join(ranks, col("src") === col("node"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr("rank div odeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("inflow"))
-      val prev = ranks
-      ranks = nodes.join(broadcast(seeds), Seq("node"), "left")
-        .join(inflow, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(col("is_seed").isNotNull, lit(jump)).otherwise(lit(0L))
-            + expr("(85 * coalesce(inflow, CAST(0 AS BIGINT))) div 100"))
-            .as("rank"))
-        .localCheckpoint()
-      Dedup.release(prev) // superseded iteration's blocks
-      i += 1
-    }
-    ranks.orderBy(col("rank").desc, col("node"))
-  }
+                           init: Long = 1000000000000L): DataFrame =
+    rankFlow(rawEdges, lit(1L), Some(seedsDf), iters, init)
 
   /** Gate shape: personalized PageRank of the word-adjacency graph,
     * seeded at the corpus' top `nSeeds` words by count (data-derived —
@@ -324,10 +279,12 @@ object Graph {
     * pays per-job fixed overhead, so jobs are the budget here, per
     * VERDICT r14 #3). The FINAL iteration checkpoints its auth frame
     * too — the output joins auth with hub, and without it the auth
-    * half-step would re-derive through the returned plan. Superseded
-    * hub rounds are released — the [[pageRank]] loop discipline; the
-    * initial `hub = init` frame is a literal column over the
-    * checkpointed nodes, nothing worth a materialization of its own.
+    * half-step would re-derive through the returned plan. That last
+    * auth checkpoint is why HITS keeps its own loop over
+    * [[Iterate.materialize]]/[[Iterate.release]]: superseded hub
+    * rounds are released; the initial `hub = init` frame is a literal
+    * column over the checkpointed nodes, nothing worth a
+    * materialization of its own.
     * Overflow window: with `init = 10⁶`, an intermediate sum is
     * ≤ n·init and the rescale multiplies by init — safe to ~10⁶
     * distinct nodes per the documented `n·init² < 2⁶³` bound; shrink
@@ -335,10 +292,9 @@ object Graph {
     */
   def hits(rawEdges: DataFrame, iters: Int, init: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration (auth is undefined at round 0)")
-    val edges = rawEdges.localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val edges = Iterate.materialize(rawEdges)
+    val nodes = Iterate.materialize(edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct())
     var hubs = nodes.withColumn("hub", lit(init))
     var auths: DataFrame = null
     var i = 0
@@ -353,19 +309,19 @@ object Graph {
       // only the LAST auth frame is ever read twice (hub half-step +
       // final join); intermediate ones flow straight into the hub
       // checkpoint of the same iteration
-      auths = if (i == iters - 1) authPlan.localCheckpoint() else authPlan
+      auths = if (i == iters - 1) Iterate.materialize(authPlan) else authPlan
       val rawHub = edges
         .join(auths.select(col("node").as("anode"), col("auth")),
           col("dst") === col("anode"))
         .groupBy("src").agg(sum("auth").as("h"))
       val hmax = rawHub.agg(max("h").as("hmax"))
       val prevHubs = hubs
-      hubs = nodes.join(rawHub, col("node") === col("src"), "left")
-        .crossJoin(broadcast(hmax))
-        .select(col("node"),
-          expr(s"coalesce(h, CAST(0 AS BIGINT)) * ${init}L div hmax").as("hub"))
-        .localCheckpoint()
-      Dedup.release(prevHubs) // no-op for the un-checkpointed round 0
+      hubs = Iterate.materialize(
+        nodes.join(rawHub, col("node") === col("src"), "left")
+          .crossJoin(broadcast(hmax))
+          .select(col("node"),
+            expr(s"coalesce(h, CAST(0 AS BIGINT)) * ${init}L div hmax").as("hub")))
+      if (i > 0) Iterate.release(prevHubs) // round 0's is the literal plan
       i += 1
     }
     auths.join(hubs, "node")
@@ -401,38 +357,29 @@ object Graph {
     * + two semi-joins pruning the edge list; the convergence probe is
     * an `isEmpty` on the NODE-sized under-degree frame — no
     * edge-scale set difference. Rounds are bounded by the degeneracy
-    * ordering depth, in practice shallow; superseded edge
-    * checkpoints are released per round.
+    * ordering depth, in practice shallow; each peel is an
+    * [[Iterate.rounds]] round (eager checkpoint after the probe).
     */
   def kCore(rawEdges: DataFrame, k: Int, maxRounds: Int = 10): DataFrame = {
     val e0 = rawEdges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    var edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      converged = deg.where(col("d") < k).isEmpty
-      if (!converged) {
+    val sym = Iterate.materialize(
+      e0.select(col("a").as("src"), col("b").as("dst"))
+        .union(e0.select(col("b").as("src"), col("a").as("dst"))))
+    val edges = Iterate.rounds(sym, maxRounds) { (cur, _) =>
+      val deg = cur.groupBy("src").agg(count(lit(1)).as("d"))
+      if (deg.where(col("d") < k).isEmpty) None
+      else {
         val keep = deg.where(col("d") >= k).select("src")
-        val prev = edges
-        edges = edges
+        Some(cur
           .join(keep, Seq("src"), "left_semi")
           .join(keep.toDF("dst"), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .localCheckpoint()
-        Dedup.release(prev)
-        round += 1
+          .select("src", "dst"))
       }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"Graph.kCore did not converge within $maxRounds rounds; raise " +
-          "maxRounds — a partial peel would overstate the k-core")
+    }.orThrow("Graph.kCore", "maxRounds",
+      "a partial peel would overstate the k-core")
     edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .orderBy("node")
   }
@@ -461,31 +408,26 @@ object Graph {
     * The argmax is `min(struct(-count, label))` — one combinable
     * aggregation, no per-node window sort; per round: one shuffle on
     * dst (neighbor-label join) and one on (src, label). Node frames
-    * are checkpointed and released per round like every iterative
-    * loop here.
+    * are [[Iterate.fixed]] rounds.
     */
   def labelPropagation(rawEdges: DataFrame, iters: Int): DataFrame = {
     val e0 = rawEdges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val sym = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    val nodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
-    var labels = nodes.withColumn("lbl", col("node")).localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      val prev = labels
-      labels = sym.join(labels, col("dst") === col("node"))
+    val sym = Iterate.materialize(
+      e0.select(col("a").as("src"), col("b").as("dst"))
+        .union(e0.select(col("b").as("src"), col("a").as("dst"))))
+    val nodes = Iterate.materialize(sym.select(col("src").as("node")).distinct())
+    val labels0 = Iterate.materialize(nodes.withColumn("lbl", col("node")))
+    val labels = Iterate.fixed(labels0, iters) { (cur, _) =>
+      sym.join(cur, col("dst") === col("node"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy("src")
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("src").as("node"), col("m.l").as("lbl"))
-        .localCheckpoint()
-      Dedup.release(prev)
-      i += 1
     }
+    Seq(sym, nodes).foreach(Iterate.release(_))
     labels.select(col("node"), col("lbl").as("community")).orderBy("node")
   }
 
@@ -590,29 +532,32 @@ object Graph {
 
   /** Frontier-expansion BFS from an arbitrary 1-column (word) source
     * frame — the engine behind [[bfsDistances]] and
-    * [[diameter2Sweep]].
+    * [[diameter2Sweep]]. It carries two frames per round (visited and
+    * frontier), so it keeps its own loop over [[Iterate.materialize]]
+    * and [[Iterate.release]].
     */
   private def bfsCore(edges: DataFrame, source: DataFrame,
                       maxHops: Int): DataFrame = {
-    var visited = source.select(col("word"))
-      .withColumn("dist", lit(0L)).localCheckpoint()
+    var visited = Iterate.materialize(
+      source.select(col("word")).withColumn("dist", lit(0L)))
     var frontier = visited
     var d = 0L
     var more = true
     while (more && d < maxHops) {
-      val next = frontier.join(edges, col("word") === col("src"))
-        .select(col("dst").as("word")).distinct()
-        .join(visited.select("word"), Seq("word"), "left_anti")
-        .withColumn("dist", lit(d + 1L)).localCheckpoint()
+      val next = Iterate.materialize(
+        frontier.join(edges, col("word") === col("src"))
+          .select(col("dst").as("word")).distinct()
+          .join(visited.select("word"), Seq("word"), "left_anti")
+          .withColumn("dist", lit(d + 1L)))
       more = next.limit(1).count() > 0
       if (more) {
         val prevVisited = visited
-        visited = visited.unionByName(next).localCheckpoint()
-        Dedup.release(prevVisited)
-        Dedup.release(frontier)
+        visited = Iterate.materialize(visited.unionByName(next))
+        Iterate.release(prevVisited)
+        Iterate.release(frontier)
         frontier = next
         d += 1
-      } else Dedup.release(next)
+      } else Iterate.release(next)
     }
     visited
   }
@@ -880,8 +825,8 @@ object Graph {
     * re-canonicalized (least, greatest) before the support count, so
     * the SQL oracle's canonical enumeration matches bit-for-bit. Per
     * round: one degree agg + two wedge joins + one edge-keyed count,
-    * all edge/triangle-sized; the edge frame is `localCheckpoint`ed
-    * per peel.
+    * all edge/triangle-sized; each peel is an [[Iterate.fixed]]
+    * round.
     */
   def ktrussEdges(docs: DataFrame, minSupport: Long = 2L, rounds: Int = 3,
                   topK: Int = 20): DataFrame =
@@ -917,16 +862,13 @@ object Graph {
         .select(col("e.ea").as("ea"), col("e.eb").as("eb"))
         .groupBy("ea", "eb").agg(count(lit(1)).as("tri_support"))
     }
-    var edges = e
+    val edges0 = Iterate.materialize(e
       .where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("ea"),
         greatest(col("src"), col("dst")).as("eb"))
-      .distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val prev = edges
-      edges = support(edges).where(col("tri_support") >= minSupport)
-        .select("ea", "eb").localCheckpoint()
-      Dedup.release(prev)
+      .distinct())
+    val edges = Iterate.fixed(edges0, rounds) { (cur, _) =>
+      support(cur).where(col("tri_support") >= minSupport).select("ea", "eb")
     }
     support(edges)
       .select(col("ea").as("word_a"), col("eb").as("word_b"),
@@ -946,8 +888,7 @@ object Graph {
     * Scale shape: the frontier frame is (seed × reached) rows, keyed
     * and shuffled on `node` per hop — multi-source BFS batches all
     * seeds through ONE join per round instead of one traversal per
-    * seed; frames are `localCheckpoint`ed per round and superseded
-    * rounds released ([[pageRank]] loop discipline). Degree table and
+    * seed; each hop is an [[Iterate.fixed]] round. Degree table and
     * seed list are part-domain-sized.
     */
   def closenessBfs(lineitem: DataFrame, nSeeds: Int = 5, rounds: Int = 3,
@@ -960,25 +901,21 @@ object Graph {
     */
   private[graft] def closenessBfsFrom(e0: DataFrame, nSeeds: Int = 5,
                                       rounds: Int = 3): DataFrame = {
-    val edges = e0.select(col("a").as("u"), col("b").as("v"))
-      .union(e0.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+    val edges = Iterate.materialize(e0.select(col("a").as("u"), col("b").as("v"))
+      .union(e0.select(col("b").as("u"), col("a").as("v"))))
     val seeds = edges.groupBy("u").agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("u")).limit(nSeeds)
       .select(col("u").as("seed"))
-    var dist = seeds
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val expanded = dist.join(edges, col("node") === col("u"))
+    val dist0 = Iterate.materialize(seeds
+      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist")))
+    val dist = Iterate.fixed(dist0, rounds) { (cur, _) =>
+      val expanded = cur.join(edges, col("node") === col("u"))
         .select(col("seed"), col("v").as("node"),
           (col("dist") + 1L).as("dist"))
-      val prev = dist
-      dist = dist.unionByName(expanded)
+      cur.unionByName(expanded)
         .groupBy("seed", "node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      Dedup.release(prev)
     }
+    Iterate.release(edges)
     dist.groupBy("seed").agg(
         (count(lit(1)) - 1L).as("n_reached"),
         sum("dist").as("sum_dist"))
@@ -998,8 +935,8 @@ object Graph {
     *
     * Scale shape: one shuffle per round — the relax join on src (edges
     * co-keyed) plus the min groupBy on word; the dist frame is
-    * node-sized, never path-sized, and `localCheckpoint` keeps the
-    * iteration lineage flat (the [[pageRank]] idiom). A fixed round
+    * node-sized, never path-sized, and each round is an
+    * [[Iterate.fixed]] round, which keeps the lineage flat. A fixed round
     * budget is the honest contract at 100 TB: k rounds bound every
     * shortest path that uses ≤ k hops, and diameter-chasing belongs to
     * the adaptive CC family ([[graft.operators.Dedup.componentsAdaptive]]).
@@ -1011,23 +948,20 @@ object Graph {
   private[graft] def ssspWordsFrom(counts: DataFrame,
                                    rounds: Int = 6): DataFrame = {
     val e0 = counts
-    val edges = e0.unionByName(
+    val edges = Iterate.materialize(e0.unionByName(
         e0.select(col("dst").as("src"), col("src").as("dst"), col("cnt")))
       .groupBy("src", "dst").agg(sum("cnt").as("cnt"))
-      .select(col("src"), col("dst"), expr("1000000L div cnt").as("cost"))
-      .localCheckpoint()
-    var dist = edges.agg(min(col("src")).as("word"))
+      .select(col("src"), col("dst"), expr("1000000L div cnt").as("cost")))
+    val dist0 = Iterate.materialize(edges.agg(min(col("src")).as("word"))
       .where(col("word").isNotNull)
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(edges, col("word") === col("src"))
+      .withColumn("dist", lit(0L)))
+    val dist = Iterate.fixed(dist0, rounds) { (cur, _) =>
+      val relaxed = cur.join(edges, col("word") === col("src"))
         .select(col("dst").as("word"), (col("dist") + col("cost")).as("dist"))
-      val prev = dist
-      dist = dist.unionByName(relaxed)
+      cur.unionByName(relaxed)
         .groupBy("word").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      Dedup.release(prev)
     }
+    Iterate.release(edges)
     dist.orderBy("word")
   }
 
@@ -1105,14 +1039,13 @@ object Graph {
       .groupBy(col("src"))
       .agg(slice(sort_array(collect_set(col("dst"))), 1, maxNeighbors).as("nb"))
       .localCheckpoint()
-    var walks = adj
+    val start = adj
       .select(col("src").as("start"),
         explode(expr(s"sequence(0, ${nWalks - 1})")).as("w"))
       .select(col("start"), col("w").cast("long").as("walk"),
         col("start").as("cur"), col("start").as("path"))
-    var t = 0
-    while (t < len) {
-      val stepped = walks.join(adj, walks("cur") === adj("src"), "left")
+    def step(walks: DataFrame, t: Int): DataFrame =
+      walks.join(adj, walks("cur") === adj("src"), "left")
         .select(col("start"), col("walk"),
           expr(s"""element_at(nb, cast(1 + pmod(
                   |  cast(conv(substr(md5(concat(cur, ':', '$t', ':', cast(walk AS string))), 1, 15), 16, 10) AS bigint),
@@ -1122,11 +1055,13 @@ object Graph {
           coalesce(col("nx"), col("cur")).as("cur"),
           when(col("nx").isNull, col("path"))
             .otherwise(concat(col("path"), lit(" "), col("nx"))).as("path"))
-      val prev = walks
-      walks = stepped.localCheckpoint()
-      Dedup.release(prev)
-      t += 1
-    }
+    // the first step is the loop's seed: the start frame is a plan over
+    // the checkpointed adjacency, not worth a materialization of its own
+    val walks =
+      if (len == 0) start
+      else Iterate.fixed(Iterate.materialize(step(start, 0)), len - 1) {
+        (cur, t) => step(cur, t + 1)
+      }
     walks.select(col("start"), col("walk"), col("path"))
       .orderBy("start", "walk")
   }

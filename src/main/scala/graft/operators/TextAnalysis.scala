@@ -263,8 +263,9 @@ object TextAnalysis {
     * not the corpus — the corpus is scanned once by the wordcount
     * spine. Each round is one map-side-combined aggregation over the
     * vocab plus a 1-row argmax collect (the merge decision is
-    * inherently sequential); `localCheckpoint` truncates lineage so
-    * round N doesn't replay rounds 1..N-1.
+    * inherently sequential); each merge is an [[Iterate.rounds]]
+    * round, whose checkpoint truncates lineage so round N doesn't
+    * replay rounds 1..N-1.
     */
   def bpeLearn(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -323,14 +324,11 @@ object TextAnalysis {
     */
   private def bpeLoop(docs: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
-    var words = WordCount.wordCount(docs)
-      .select(regexp_replace(col("word"), "(.)", "$1/").as("ts"), col("cnt"))
-      .localCheckpoint()
+    val words0 = Iterate.materialize(WordCount.wordCount(docs)
+      .select(regexp_replace(col("word"), "(.)", "$1/").as("ts"), col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, String, Long)]()
-    var step = 1
-    var done = false
-    while (step <= nMerges && !done) {
-      val top = words
+    val words = Iterate.rounds(words0, nMerges) { (cur, i) =>
+      val top = cur
         .select(col("cnt"), expr("filter(split(ts, '/'), x -> x != '')").as("toks"))
         .where(size(col("toks")) >= 2)
         .select(col("cnt"), explode(expr(
@@ -339,21 +337,15 @@ object TextAnalysis {
         .agg(sum("cnt").as("pc"))
         .orderBy(col("pc").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, pc) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += ((step.toLong, l, r, l + r, pc))
+      top.headOption.map { row =>
+        val (l, r, pc) = (row.getString(0), row.getString(1), row.getLong(2))
+        merges += (((i + 1).toLong, l, r, l + r, pc))
         // Column-API replace: tokens may contain quote/backslash chars,
         // so never splice them into an expr string
-        val prev = words
-        words = words
-          .select(org.apache.spark.sql.functions.replace(col("ts"),
-            lit(s"$l/$r/"), lit(s"$l$r/")).as("ts"), col("cnt"))
-          .localCheckpoint()
-        Dedup.release(prev) // superseded merge round's blocks
-        step += 1
+        cur.select(org.apache.spark.sql.functions.replace(col("ts"),
+          lit(s"$l/$r/"), lit(s"$l$r/")).as("ts"), col("cnt"))
       }
-    }
+    }.frame
     (merges.toSeq, words)
   }
 
@@ -1321,11 +1313,11 @@ object TextAnalysis {
     *
     * Label: `lang = 'en'` — the same cheap reference signal
     * [[classifierCalibration]] scores against (the stand-in for human
-    * labels). The loop is the [[Clustering.lloydCentroids]] pattern:
+    * labels). The loop is [[Iterate.fixed]]:
     * per round one broadcast join (the `slots`-row weight vector — a
     * model this size NEVER shuffles the corpus side), one doc-keyed
-    * aggregate, one slot-keyed gradient aggregate, and a
-    * `localCheckpoint` to cut lineage. Non-converging oscillation is
+    * aggregate, one slot-keyed gradient aggregate, and an eager
+    * checkpoint to cut lineage. Non-converging oscillation is
     * fine (and typical for the perceptron on non-separable data) —
     * the contract is determinism, and the fixed round count is the
     * production budget knob. Scale: per round, cost = one scan of the
@@ -1335,13 +1327,13 @@ object TextAnalysis {
   def classifierTrain(docs: DataFrame, slots: Int = 256,
                       rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
-    val feats = classifierFeatures(docs, slots).localCheckpoint()
-    val labels = docs.select(col("doc_id"),
-      when(col("lang") === "en", 1L).otherwise(0L).as("y")).localCheckpoint()
-    var w = spark.range(slots)
-      .select(col("id").as("slot"), lit(0L).as("w")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val margins = feats.join(broadcast(w), "slot")
+    val feats = Iterate.materialize(classifierFeatures(docs, slots))
+    val labels = Iterate.materialize(docs.select(col("doc_id"),
+      when(col("lang") === "en", 1L).otherwise(0L).as("y")))
+    val w0 = Iterate.materialize(spark.range(slots)
+      .select(col("id").as("slot"), lit(0L).as("w")))
+    val w = Iterate.fixed(w0, rounds) { (cur, _) =>
+      val margins = feats.join(broadcast(cur), "slot")
         .groupBy("doc_id").agg(sum(col("cnt") * col("w")).as("m"))
       val errs = labels.join(margins, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1350,17 +1342,14 @@ object TextAnalysis {
         .where(col("err") =!= 0)
       val grad = feats.join(errs, "doc_id")
         .groupBy("slot").agg(sum(col("cnt") * col("err")).as("g"))
-      val prev = w
-      w = w.join(grad, Seq("slot"), "left")
+      cur.join(grad, Seq("slot"), "left")
         .select(col("slot"), (col("w") + coalesce(col("g"), lit(0L))).as("w"))
-        .localCheckpoint()
-      Dedup.release(prev)
     }
     // the feature table is the pipeline's largest frame — release its
     // blocks (and the labels') now that the final weights stand alone;
     // only the slots-row weight frame stays checkpointed for the caller
-    Dedup.release(feats)
-    Dedup.release(labels)
+    Iterate.release(feats)
+    Iterate.release(labels)
     w.orderBy("slot")
   }
 

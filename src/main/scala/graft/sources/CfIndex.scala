@@ -50,16 +50,9 @@ object CfIndex {
                  buckets: Int = 8): Unit = {
     val lineitem = Tables.lineitem(spark, dir)
     val orders = Tables.orders(spark, dir)
-    // SPARK_GRAFT_TRACE=1: per-phase wall-clock of the index build
-    val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-    def timed[A](label: String)(a: => A): A = {
-      val t0 = System.nanoTime(); val r = a
-      if (trace) println(f"CFX $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     def save(df: DataFrame, name: String, cols: Seq[String]): Unit =
-      timed(s"save:$name")(df.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, cols.head, cols.tail: _*).saveAsTable(t(name, tag)))
+      df.write.mode("overwrite").format("parquet")
+        .bucketBy(buckets, cols.head, cols.tail: _*).saveAsTable(t(name, tag))
     // leave-latest-order-out split (the recEval contract): latest
     // order per customer (orderdate desc, orderkey tiebreak) held out
     val w = Window.partitionBy("o_custkey")
@@ -73,7 +66,7 @@ object CfIndex {
     // and in the held-out TEST baskets iff the customer's latest order
     // carries it (the pair's customer IS that order's customer). Two
     // distinct shuffles + a semi-join collapse into one groupBy.
-    val flagged = timed("flagged")(lineitem
+    val flagged = lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"),
         col("o_orderkey").as("ok"))
@@ -82,7 +75,7 @@ object CfIndex {
       .groupBy("c", "p")
       .agg(max(when(col("held").isNull, 1).otherwise(0)).as("has_train"),
         max(coalesce(col("held"), lit(0))).as("has_held"))
-      .localCheckpoint())
+      .localCheckpoint()
     val cpFull = flagged.select("c", "p")
     val cpTrain = flagged.where(col("has_train") === 1).select("c", "p")
     // the five table builds share no lineage past the checkpoint and
@@ -175,14 +168,6 @@ object CfIndex {
 
   private def ti(name: String, tag: String): String = s"graft_cfi_${name}_$tag"
 
-  // SPARK_GRAFT_TRACE=1: per-phase wall-clock of the increment path
-  private def timedInc[A](label: String)(a: => A): A = {
-    val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-    val t0 = System.nanoTime(); val r = a
-    if (trace) println(f"CFI $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   /** The base/delta split date: orders STRICTLY BEFORE it form the
     * base index; on/after it are the increment. The fixture's orders
     * span 1995..2001-08; 2001-01-01 keeps the delta at the last ~9% —
@@ -257,8 +242,7 @@ object CfIndex {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // truly-new (c, p) pairs: a delta order repeating an owned part
     // adds nothing to the DISTINCT incidence
-    val dcp = timedInc("dcp")(
-      dcpRaw.join(cpB, Seq("c", "p"), "left_anti").localCheckpoint())
+    val dcp = dcpRaw.join(cpB, Seq("c", "p"), "left_anti").localCheckpoint()
     // df bookkeeping only matters for DELTA-TOUCHED parts: an
     // untouched part's kept/banned status cannot change (df only
     // grows, and only via delta rows), so the probe is ddf ⟕ pdf —
@@ -272,7 +256,7 @@ object CfIndex {
     // the delta that lands ABOVE the bar has no base pairs to remove
     val crossing = dfm.where(col("df0") <= maxDf && col("df1") > maxDf)
       .select("p")
-    val dk = timedInc("dk")(dcp.join(keptNew, "p").localCheckpoint())
+    val dk = dcp.join(keptNew, "p").localCheckpoint()
     // Δ×base on surviving parts: c_delta ≠ c_base by construction
     // (the anti-join guarantees the delta customer does NOT own p in
     // base), so no self-pair filter is needed
@@ -286,7 +270,7 @@ object CfIndex {
       .select("c_a", "c_b")
     // crossing parts: EVERY base pair of p leaves the graph (≤ maxDf²
     // per part — the one base-side expansion, df-bounded by contract)
-    val remBase = timedInc("remBase")(cppB.join(crossing, "p").localCheckpoint())
+    val remBase = cppB.join(crossing, "p").localCheckpoint()
     val rem = remBase.select(col("p"), col("c").as("c_a"))
       .join(remBase.select(col("p"), col("c").as("c_b")), "p")
       .where(col("c_a") < col("c_b"))
@@ -367,25 +351,25 @@ object CfIndex {
       .distinct()
     val (dcp, ddf, dsh0, ddeg0) = cfDeltas(dcpRaw, spark.table(ti("cp", tag)),
       spark.table(ti("cpp", tag)), spark.table(ti("pdf", tag)), maxDf)
-    val dsh = timedInc("dsh")(dsh0.localCheckpoint())
-    val ddeg = timedInc("ddeg")(ddeg0.localCheckpoint())
-    val sh1 = timedInc("sh1")(
-      spark.table(ti("sh", tag)).join(dsh, Seq("c_a", "c_b"), "full_outer")
-        .select(col("c_a"), col("c_b"),
-          (coalesce(col("shared"), lit(0L)) + coalesce(col("ds"), lit(0L)))
-            .as("shared"))
-        .where(col("shared") > 0)
-        .localCheckpoint())
+    val dsh = dsh0.localCheckpoint()
+    val ddeg = ddeg0.localCheckpoint()
+    val sh1 = spark.table(ti("sh", tag))
+      .join(dsh, Seq("c_a", "c_b"), "full_outer")
+      .select(col("c_a"), col("c_b"),
+        (coalesce(col("shared"), lit(0L)) + coalesce(col("ds"), lit(0L)))
+          .as("shared"))
+      .where(col("shared") > 0)
+      .localCheckpoint()
     // checkpointed: the scored re-rank joins deg1 on BOTH sides of
     // every pair — without the cut, the bucketed full-outer merge
     // would execute twice in the serving plan
-    val deg1 = timedInc("deg1")(
-      spark.table(ti("deg", tag)).join(ddeg, Seq("c"), "full_outer")
-        .select(col("c"),
-          (coalesce(col("deg"), lit(0L)) + coalesce(col("dd"), lit(0L)))
-            .as("deg"))
-        .where(col("deg") > 0)
-        .localCheckpoint())
+    val deg1 = spark.table(ti("deg", tag))
+      .join(ddeg, Seq("c"), "full_outer")
+      .select(col("c"),
+        (coalesce(col("deg"), lit(0L)) + coalesce(col("dd"), lit(0L)))
+          .as("deg"))
+      .where(col("deg") > 0)
+      .localCheckpoint()
     val degChanged = ddeg.select("c")
     val t0 = degChanged
       .unionByName(dsh.select(col("c_a").as("c")))
@@ -395,8 +379,7 @@ object CfIndex {
       .unionByName(sh1
         .join(broadcast(degChanged.withColumnRenamed("c", "c_a")), "c_a")
         .select(col("c_b").as("c")))
-    val touched = timedInc("touched")(
-      t0.unionByName(t1).distinct().localCheckpoint())
+    val touched = t0.unionByName(t1).distinct().localCheckpoint()
     val ranked = Basket.cfScoreRank(
       Basket.cfMirrored(sh1, minShared)
         .join(broadcast(touched.withColumnRenamed("c", "c_a")),

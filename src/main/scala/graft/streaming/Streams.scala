@@ -87,12 +87,6 @@ object Streams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // SPARK_GRAFT_STREAM_DEBUG=1: dump per-batch progress (batch id,
-      // input rows, watermark) — the tool for diagnosing flush races
-      if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-        q.recentProgress.foreach(pr => println(
-          s"STREAMDEBUG $name batch=${pr.batchId} rows=${pr.numInputRows} " +
-            s"wm=${pr.eventTime.get("watermark")}"))
     } finally spark.conf.set(key, saved)
     val out = spark.table(name).orderBy(orderCols.map(col): _*)
     // resolve the sink relation into the plan NOW, then drop the

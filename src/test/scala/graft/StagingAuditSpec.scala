@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `computeIfAbsent` map or `ConcurrentHashMap` anywhere else in
   * `src/main/scala` picks its own key, lifetime and concurrency rule —
   * the drift the staging module exists to end — so it fails here
-  * unless it is named below with the reason it is not a memo.
+  * unless it is named below with the reason it is not a memo. Likewise
+  * every checkpoint is freed through [[graft.operators.Iterate]]'s one
+  * `release`.
   */
 class StagingAuditSpec extends AnyFunSuite {
 
@@ -30,14 +32,18 @@ class StagingAuditSpec extends AnyFunSuite {
     """computeIfAbsent\(|new\s+(java\.util\.concurrent\.)?ConcurrentHashMap""".r
   private val Owner = """val\s+(\w+)\s*[:=]|(\w+)\.computeIfAbsent\(""".r
 
-  /** (file, owning name, line) for every map use under `root`. */
-  private lazy val hits: Seq[(String, String, String)] = {
+  /** (path under `root`, lines) for every Scala source. */
+  private lazy val sources: Seq[(String, IndexedSeq[String])] = {
     import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    files.flatMap { f =>
-      val rel = root.relativize(f).toString.replace('\\', '/')
-      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      .map(f => (root.relativize(f).toString.replace('\\', '/'),
+        java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq))
+  }
+
+  /** (file, owning name, line) for every map use under `root`. */
+  private lazy val hits: Seq[(String, String, String)] =
+    sources.flatMap { case (rel, lines) =>
       lines.indices.filter(i => MapUse.findFirstIn(lines(i)).isDefined)
         .map { i =>
           // the name sits on the hit line or on the declaration above
@@ -48,7 +54,6 @@ class StagingAuditSpec extends AnyFunSuite {
           (rel, owner, lines(i).trim)
         }
     }
-  }
 
   test("no derive-once map outside the staging module and the allowlist") {
     assert(hits.exists(_._1 == "sources/SessionCache.scala"),
@@ -59,6 +64,21 @@ class StagingAuditSpec extends AnyFunSuite {
     assert(stray.isEmpty,
       "route these memos through SessionCache.perSession/perContext:\n" +
         stray.map { case (f, o, l) => s"  $f ($o): $l" }.mkString("\n"))
+  }
+
+  test("no unpersist or checkpoint-file handling outside the round-loop module") {
+    val Release = """unpersist\(|getCheckpointFile""".r
+    val found = sources.flatMap { case (rel, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if Release.findFirstIn(l).isDefined => (rel, i + 1, l.trim)
+      }
+    }
+    assert(found.exists(_._1 == "operators/Iterate.scala"),
+      s"audit found no release in operators/Iterate.scala under $root")
+    val stray = found.filterNot(_._1 == "operators/Iterate.scala")
+    assert(stray.isEmpty,
+      "free checkpoints through Iterate.release:\n" +
+        stray.map { case (f, n, l) => s"  $f:$n: $l" }.mkString("\n"))
   }
 
   test("every allowlisted map still exists (the allowlist cannot rot)") {
