@@ -50,23 +50,13 @@ object GraftFunctions {
     "graft_deletion_neighborhood" -> (args => DeletionNeighborhood(args(0),
       intLit(args(1), "maxDist"))),
     // aggregates: the sketches are usable directly in SQL GROUP BYs
-    "graft_kmv_distinct" -> (args => KmvDistinct(args(0),
-      intLit(args(1), "k")).toAggregateExpression()),
-    "graft_kmv_sketch" -> (args => KmvSketchAgg(args(0),
-      if (args.length > 1) intLit(args(1), "k") else 1024)
-      .toAggregateExpression()),
-    "graft_kmv_merge_distinct" -> (args => KmvMergeDistinct(args(0),
-      if (args.length > 1) intLit(args(1), "k") else 1024)
-      .toAggregateExpression()),
-    "graft_kmv_jaccard" -> (args => KmvJaccard(args(0), args(1),
-      if (args.length > 2) intLit(args(2), "k") else 1024)
-      .toAggregateExpression()),
+    // (distinct counts: Spark's built-in theta_* functions)
     "graft_cms" -> (args => CountMinAgg(args(0),
       intLit(args(1), "depth"), intLit(args(2), "width"))
       .toAggregateExpression()),
-    "graft_topk_sketch" -> (args => TopKFreqSketch(args(0),
+    "graft_topk_sketch" -> (args => TopKFreqSketch(args(0), Literal(1L),
       intLit(args(1), "m")).toAggregateExpression()),
-    "graft_topk_weighted" -> (args => TopKWeightedSketch(args(0), args(1),
+    "graft_topk_weighted" -> (args => TopKFreqSketch(args(0), args(1),
       intLit(args(2), "m")).toAggregateExpression()),
     // the sketch consumes longs; cast like the Column entry point does
     "graft_kll_quantiles" -> (args => KllQuantiles(
@@ -120,7 +110,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (TopKPerKey.perKey also self-registers for ad-hoc sessions)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKLimitPushdown)
-    // opt-in COUNT(DISTINCT) -> KMV sketch (spark.graft.sketchDistinct)
-    ext.injectOptimizerRule(_ => graft.plans.SketchDistinctRewrite)
   }
 }

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
   * interpolation EXACTLY (quarter-point interpolation over integers is
   * exact in binary doubles). Above k the estimate has ±O(n/k) rank
   * error and is additionally sensitive to partition/merge order —
-  * approximate by design, same caveat family as [[KmvDistinct]] (k
-  * exact window) and [[TopKFreqSketch]] (m exact window).
+  * approximate by design, same caveat family as the theta distinct
+  * sketches (k exact window) and [[TopKFreqSketch]] (m exact window).
   */
 case class KllQuantiles(
     child: Expression,

@@ -13,25 +13,28 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Space-Saving heavy-hitters sketch as a `TypedImperativeAggregate`:
-  * at most `m` (word, count) counters; on overflow the minimum counter
-  * is evicted and inherited (count becomes an upper bound with error
-  * ≤ n/m). While total distinct ≤ m no eviction ever happens and every
-  * count is EXACT — which is what the oracle checks; at 100 TB the
-  * bound is what makes global top-k over an unbounded vocabulary a
-  * fixed-memory single-shuffle aggregation.
+/** Weighted Space-Saving heavy-hitters sketch (Metwally et al.) as a
+  * `TypedImperativeAggregate`: at most `m` (word, total) counters, each
+  * row adding its non-negative long `weight` (1 for plain counts); on
+  * overflow the minimum counter is evicted and inherited (a total
+  * becomes an upper bound with error ≤ W/m, W = total weight seen).
+  * While total distinct ≤ m no eviction ever happens and every total
+  * is EXACT — which is what the oracle checks; at 100 TB the bound is
+  * what makes global top-k over an unbounded vocabulary a fixed-memory
+  * single-shuffle aggregation.
   *
   * Returns array<struct<word string, cnt long>> sorted by
   * (cnt desc, word asc); slice/explode downstream for top-k rows.
   */
 case class TopKFreqSketch(
     child: Expression,
+    weight: Expression,
     m: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKFreqSketch.Summary] {
 
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(child, weight)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("word", StringType), StructField("cnt", LongType))), containsNull = false)
@@ -42,7 +45,12 @@ case class TopKFreqSketch(
   override def update(buf: TopKFreqSketch.Summary,
                       input: InternalRow): TopKFreqSketch.Summary = {
     val v = child.eval(input)
-    if (v != null) buf.admit(v.asInstanceOf[UTF8String], 1L, m)
+    val w = weight.eval(input)
+    if (v != null && w != null) {
+      val wl = w.asInstanceOf[Long]
+      require(wl >= 0, "weighted Space-Saving needs non-negative weights")
+      buf.admit(v.asInstanceOf[UTF8String], wl, m)
+    }
     buf
   }
 
@@ -94,7 +102,7 @@ case class TopKFreqSketch(
   override def withNewInputAggBufferOffset(o: Int): TopKFreqSketch =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(child = cs.head)
+    copy(child = cs(0), weight = cs(1))
 }
 
 object TopKFreqSketch {
@@ -139,8 +147,9 @@ object TopKFreqSketch {
     }
   }
 
-  /** Column entry: heavy-hitters summary of a string column. */
-  def topk_sketch(c: Column, m: Int = 1024): Column =
+  /** Column entry: top keys of a string column by summed long weight. */
+  def topk_weighted(c: Column, w: Column, m: Int = 1024): Column =
     GraftColumnBridge.column(
-      TopKFreqSketch(GraftColumnBridge.expression(c), m).toAggregateExpression())
+      TopKFreqSketch(GraftColumnBridge.expression(c),
+        GraftColumnBridge.expression(w), m).toAggregateExpression())
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, IntegralDivide, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
@@ -557,7 +557,9 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Column-level entry points for the expressions above. */
+/** Column-level entry points for the expressions above, and one
+  * composite of Spark's theta sketches ([[functions.theta_jaccard]]).
+  */
 object functions {
   private def col(e: Expression): Column = GraftColumnBridge.column(e)
   private def ex(c: Column): Expression = GraftColumnBridge.expression(c)
@@ -577,4 +579,25 @@ object functions {
   def winnow_fps(ws: Column, k: Int, w: Int): Column =
     col(WinnowFingerprints(ex(ws), k, w))
   def clean_words(text: Column): Column = col(CleanWords(ex(text)))
+
+  /** Two-set distinct counts over Spark's theta sketches, as an
+    * aggregate: `side` true routes a row's `c` to set A, false to set
+    * B (NULL side or value: neither), and the struct holds
+    * `(n_a, n_b, n_inter, jaccard_ppm)`. Each side is one
+    * `theta_sketch_agg`, `n_inter` their `theta_intersection`. The
+    * union is `n_a + n_b − n_inter`, exact wherever both sides are
+    * (below k = 2^lgNomEntries), where `theta_union` would estimate
+    * once the union alone passes k.
+    */
+  def theta_jaccard(c: Column, side: Column, lgNomEntries: Int): Column = {
+    import org.apache.spark.sql.{functions => F}
+    val a = F.theta_sketch_agg(F.when(side, c), lgNomEntries)
+    val b = F.theta_sketch_agg(F.when(!side, c), lgNomEntries)
+    val (na, nb) = (F.theta_sketch_estimate(a), F.theta_sketch_estimate(b))
+    val ni = F.theta_sketch_estimate(F.theta_intersection(a, b))
+    val u = na + nb - ni
+    F.struct(na.as("n_a"), nb.as("n_b"), ni.as("n_inter"),
+      F.when(u === 0, 0L).otherwise(col(IntegralDivide(ex(ni * 1000000L), ex(u))))
+        .as("jaccard_ppm"))
+  }
 }

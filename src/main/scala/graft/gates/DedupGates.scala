@@ -553,33 +553,24 @@ object DedupGates {
          |SELECT d.word, coalesce(b.df_base, 0) AS df_base, d.df_delta,
          |  coalesce(b.df_base, 0) + d.df_delta AS df_total
          |FROM d LEFT JOIN b USING (word) ORDER BY word""".stripMargin),
-    // two-set KMV sketch with set ops: en/de vocab Jaccard (a planted
-    // en-only doc keeps the overlap strictly partial — the synthetic
-    // corpora share their whole vocabulary otherwise)
+    // two-set theta sketches with set ops: en/de vocab Jaccard (a
+    // planted en-only doc keeps the overlap strictly partial — the
+    // synthetic corpora share their whole vocabulary otherwise)
     Gate("vocab_jaccard_sketch", (s, dir) => {
       import s.implicits._
+      import org.apache.spark.sql.functions.col
       val planted = Seq(("en", "graftplanted graftsingleton"))
         .toDF("lang", "text")
       val docs = Tables.documents(s, dir).select("lang", "text")
         .unionByName(planted)
-        .where(org.apache.spark.sql.functions.col("lang").isin("en", "de"))
-      WordCount.explodeWords(docs, "text", Seq("lang"))
-        .agg(graft.functions.KmvJaccard.kmv_jaccard(
-          org.apache.spark.sql.functions.col("word"),
-          org.apache.spark.sql.functions.col("lang") === "en").as("j"))
-        .select(
-          org.apache.spark.sql.functions.col("j.n_a").as("n_en"),
-          org.apache.spark.sql.functions.col("j.n_b").as("n_de"),
-          org.apache.spark.sql.functions.col("j.n_inter").as("n_shared"),
-          org.apache.spark.sql.functions.col("j.jaccard_ppm"))
-        // below-k exactness contract CHECKED, not assumed: if a larger
-        // sf pushes either side's vocabulary to k=1024 the sketch
-        // silently switches to the estimator — fail loudly instead of
-        // hash-mismatching with no diagnostic
-        .where(org.apache.spark.sql.functions.isnull(
-          org.apache.spark.sql.functions.expr(
-            "assert_true(n_en < 1024 and n_de < 1024, " +
-              "'KMV k=1024 saturated: per-side vocab >= k')")))
+        .where(col("lang").isin("en", "de"))
+      Gate.exactWhile(
+        WordCount.explodeWords(docs, "text", Seq("lang"))
+          .agg(graft.functions.functions.theta_jaccard(
+            col("word"), col("lang") === "en", 10).as("j"))
+          .select(col("j.n_a").as("n_en"), col("j.n_b").as("n_de"),
+            col("j.n_inter").as("n_shared"), col("j.jaccard_ppm")),
+        "theta lg=10", col("n_en") < 1024 && col("n_de") < 1024)
     },
       // exact mirror of the sketch's below-k contract: set counts over
       // the same planted corpus

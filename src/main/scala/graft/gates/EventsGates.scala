@@ -554,11 +554,14 @@ object EventsGates {
     // bounded-state aggregation (m = 4096 > distinct users -> exact)
     Gate("events_top_spenders_sketch", (s, dir) => {
       import org.apache.spark.sql.functions._
-      Tables.events(s, dir)
-        .select(col("user_id").cast("string").as("u"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .agg(graft.functions.TopKWeightedSketch
-          .topk_weighted(col("u"), col("cents"), 4096).as("s"))
+      Gate.exactWhile(
+        Tables.events(s, dir)
+          .select(col("user_id").cast("string").as("u"),
+            expr("cast(round(value * 100) as bigint)").as("cents"))
+          .agg(graft.functions.TopKFreqSketch
+            .topk_weighted(col("u"), col("cents"), 4096).as("s")),
+        // fewer than m counters: no eviction ran
+        "Space-Saving m=4096", size(col("s")) < 4096)
         .select(explode(col("s")).as("e"))
         .select(col("e.word").cast("long").as("user_id"),
           col("e.cnt").as("spend_cents"))
@@ -1183,22 +1186,18 @@ object EventsGates {
         |  2 * dd.d2 - s.s4 AS r4
         |FROM dd JOIN s ON dd.event_type = s.event_type AND dd.dow = s.dow
         |ORDER BY dd.event_type, dd.epoch_day""".stripMargin),
-    // daily KMV sketches MATERIALIZED, then re-merged to weekly
-    // distincts (k=8192 keeps every test sf inside the exact window)
+    // daily theta sketches MATERIALIZED, then re-merged to weekly
+    // distincts (lg 13, k=8192, keeps every test sf inside the exact
+    // window)
     Gate("events_weekly_users_rollup", (s, dir) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      Tables.events(s, dir)
-        .groupBy(expr("ts_ms div 86400000").as("epoch_day"))
-        .agg(graft.functions.KmvSketchAgg
-          .kmv_sketch(col("user_id"), 8192).as("sk"))
-        .groupBy(expr("epoch_day div 7").as("epoch_week"))
-        .agg(graft.functions.KmvMergeDistinct
-          .kmv_merge_distinct(col("sk"), 8192).as("n_users"))
-        // exactness contract checked (see vocab_jaccard_sketch): the
-        // merged sketch is exact only below k
-        .where(org.apache.spark.sql.functions.isnull(expr(
-          "assert_true(n_users < 8192, " +
-            "'KMV k=8192 saturated: weekly distinct users >= k')")))
+      import org.apache.spark.sql.functions._
+      Gate.exactWhile(
+        Tables.events(s, dir)
+          .groupBy(expr("ts_ms div 86400000").as("epoch_day"))
+          .agg(theta_sketch_agg(col("user_id"), 13).as("sk"))
+          .groupBy(expr("epoch_day div 7").as("epoch_week"))
+          .agg(theta_sketch_estimate(theta_union_agg(col("sk"), 13)).as("n_users")),
+        "theta lg=13", col("n_users") < 8192)
         .orderBy("epoch_week")
     },
       // the merged sketch is exact below k, so weekly distinct IS the

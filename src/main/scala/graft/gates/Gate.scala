@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** One registered query: its name, the Spark plan it builds over an sf
   * dir, and the DuckDB SQL that must hash-match that plan's rows over
@@ -25,6 +25,17 @@ final class Gate(val name: String,
 object Gate {
   def apply(name: String, run: (SparkSession, String) => DataFrame,
             oracle: => String): Gate = new Gate(name, run, oracle)
+
+  /** A sketch gate's exact window, checked rather than assumed: `df`
+    * unchanged while `inWindow` holds on every row, otherwise the query
+    * fails naming the sketch (a saturated sketch would switch to its
+    * estimator and hash-mismatch the exact oracle with no diagnostic).
+    */
+  def exactWhile(df: DataFrame, sketch: String, inWindow: Column): DataFrame = {
+    import org.apache.spark.sql.functions.{assert_true, isnull, lit}
+    df.where(isnull(assert_true(inWindow,
+      lit(s"$sketch saturated: past its exact window"))))
+  }
 }
 
 /** The registry: every family's gates, with names checked distinct (a

@@ -127,20 +127,23 @@ object WordCountGates {
     Gate("distinct_words", (s, dir) =>
       WordCount.distinctWords(Tables.documents(s, dir)),
       SqlDistinctWords),
-    // same count through the KMV TypedImperativeAggregate sketch
-    // (exact below k=1024 distinct; the 100 TB approximate path).
+    // same count through Spark's theta sketch (lgNomEntries 10:
+    // exact below k = 1024 distinct; the 100 TB approximate path).
     // ORACLE VALIDITY WINDOW: the exact-count oracle holds only while
-    // corpus vocabulary ≤ 1024 (testdata vocab is tiny at every sf; on
-    // a larger corpus the sketch is ±2/√k approximate by design) —
-    // same caveat for topk_words_sketch (m=1024),
-    // events_value_quantiles_sketch (exact ≤ k=32768 rows/group), and
-    // the LSH queries
+    // corpus vocabulary < 1024 (testdata vocab is 31 words at every
+    // sf; on a larger corpus the sketch is ~1/√k approximate by design
+    // and Gate.exactWhile fails the query) — same caveat for
+    // topk_words_sketch (m=1024), events_value_quantiles_sketch
+    // (exact ≤ k=32768 rows/group), and the LSH queries
     // (dedup_minhash, emb_neardup_lsh) whose exact oracles rely on
     // banded-LSH recall ≈ 1 at the declared thresholds/seeds.
-    Gate("distinct_words_sketch", (s, dir) =>
-      WordCount.explodeWords(Tables.documents(s, dir), "text", Nil)
-        .agg(graft.functions.KmvDistinct.kmv_distinct(
-          org.apache.spark.sql.functions.col("word"), 1024).as("n_words")),
+    Gate("distinct_words_sketch", (s, dir) => {
+      import org.apache.spark.sql.functions._
+      Gate.exactWhile(
+        WordCount.explodeWords(Tables.documents(s, dir), "text", Nil)
+          .agg(theta_sketch_estimate(theta_sketch_agg(col("word"), 10)).as("n_words")),
+        "theta lg=10", col("n_words") < 1024)
+    },
       SqlDistinctWords),
     Gate("top_bigrams", (s, dir) =>
       TextAnalysis.topNgrams(Tables.documents(s, dir), 2, 20),
@@ -153,8 +156,12 @@ object WordCountGates {
     // top-k through the Space-Saving sketch (exact below m=1024 distinct)
     Gate("topk_words_sketch", (s, dir) => {
       import org.apache.spark.sql.functions._
-      WordCount.explodeWords(Tables.documents(s, dir), "text", Nil)
-        .agg(graft.functions.TopKFreqSketch.topk_sketch(col("word"), 1024).as("s"))
+      Gate.exactWhile(
+        WordCount.explodeWords(Tables.documents(s, dir), "text", Nil)
+          .agg(graft.functions.TopKFreqSketch
+            .topk_weighted(col("word"), lit(1L), 1024).as("s")),
+        // fewer than m counters: no eviction ran
+        "Space-Saving m=1024", size(col("s")) < 1024)
         .select(explode(col("s")).as("e"))
         .select(col("e.word").as("word"), col("e.cnt").as("cnt"))
         .orderBy(col("cnt").desc, col("word")).limit(20)
@@ -231,13 +238,16 @@ object WordCountGates {
       WordCount.wordCountSalted(Tables.documents(s, dir), 16),
       // salted partial counts sum to the unsalted ones
       SqlWordcount),
-    // per-group KMV sketch (exact below k per group)
-    Gate("distinct_words_per_source_sketch", (s, dir) =>
-      WordCount.explodeWords(Tables.documents(s, dir), "text", Seq("source"))
-        .groupBy("source")
-        .agg(graft.functions.KmvDistinct.kmv_distinct(
-          org.apache.spark.sql.functions.col("word"), 1024).as("n_words"))
-        .orderBy("source"),
+    // per-group theta sketch (exact below k per group)
+    Gate("distinct_words_per_source_sketch", (s, dir) => {
+      import org.apache.spark.sql.functions._
+      Gate.exactWhile(
+        WordCount.explodeWords(Tables.documents(s, dir), "text", Seq("source"))
+          .groupBy("source")
+          .agg(theta_sketch_estimate(theta_sketch_agg(col("word"), 10)).as("n_words")),
+        "theta lg=10", col("n_words") < 1024)
+        .orderBy("source")
+    },
       s"""SELECT source, count(DISTINCT word) AS n_words FROM (${sqlWords(" source,")})
          |GROUP BY source ORDER BY source""".stripMargin),
     // whole-file binary source: one blob per doc, exact byte round-trip
@@ -256,15 +266,17 @@ object WordCountGates {
          |  CAST(sum(doc_id) FILTER (WHERE doc_id % 7 <> 0) AS BIGINT) AS sum_good_ids,
          |  CAST(sum(n_chars) FILTER (WHERE doc_id % 7 <> 0) AS BIGINT) AS sum_good_nchars
          |FROM documents""".stripMargin),
-    // Catalyst rewrite: COUNT(DISTINCT word) through the KMV sketch
-    // aggregate (k=4096 > vocab -> exact; plan shape spec-audited)
+    // Catalyst rewrite: COUNT(DISTINCT word) through the theta sketch
+    // aggregate (lg 12, k=4096 > vocab -> exact; plan shape spec-audited)
     Gate("distinct_words_rewrite", (s, dir) => {
       import org.apache.spark.sql.functions._
-      graft.plans.SketchDistinctRewrite.rewrite(
-        WordCount.explodeWords(Tables.documents(s, dir), "text", Seq("source"))
-          .groupBy("source")
-          .agg(countDistinct(col("word")).as("n_distinct"))
-          .orderBy("source"))
+      Gate.exactWhile(
+        graft.plans.SketchDistinctRewrite.rewrite(
+          WordCount.explodeWords(Tables.documents(s, dir), "text", Seq("source"))
+            .groupBy("source")
+            .agg(countDistinct(col("word")).as("n_distinct"))),
+        "theta lg=12", col("n_distinct") < 4096)
+        .orderBy("source")
     },
       s"""SELECT source, count(DISTINCT word)::BIGINT AS n_distinct
          |FROM (${sqlWords(" source,")}) GROUP BY source ORDER BY source""".stripMargin))

@@ -2,51 +2,39 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.ThetaSketchEstimate
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, ThetaSketchAgg}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 
-/** Opt-in Catalyst rewrite: `COUNT(DISTINCT x)` → the KMV sketch
-  * aggregate ([[graft.functions.KmvDistinct]]).
+/** Scoped Catalyst rewrite: `COUNT(DISTINCT x)` → Spark's theta sketch
+  * (`theta_sketch_estimate(theta_sketch_agg(x, lgNomEntries))`).
   *
   * Why: exact distinct aggregation is the classic 100 TB chokepoint —
   * Spark plans it as a two-phase expand/shuffle whose intermediate is
-  * one row per (group, value). The KMV sketch replaces that with a
-  * mergeable ≤ 8k-byte buffer per group flowing through ordinary
+  * one row per (group, value). The theta sketch replaces that with a
+  * mergeable bounded buffer per group flowing through ordinary
   * partial/final aggregation: one shuffle of fixed-size state, EXACT
-  * below k distinct values, ~1/√k relative error above.
+  * below 2^lgNomEntries distinct values, ~1/√k relative error above.
   *
-  * Two entry points:
-  *  - session-wide rule, armed by `spark.graft.sketchDistinct=true`
-  *    (k from `spark.graft.sketchDistinct.k`, default 4096), injected
-  *    by [[graft.functions.GraftExtensions]] — the SQL-user path;
-  *  - [[rewrite]] applies the same transformation to one DataFrame
-  *    without touching session state — the scoped path the driver gate
-  *    uses (a session flag flipped inside one query closure would
-  *    leak into every later query of the same session).
+  * [[rewrite]] transforms one DataFrame without touching session state
+  * (a session flag flipped inside one query closure would leak into
+  * every later query of the same session); SQL users write the
+  * `theta_*` built-ins directly.
   *
-  * Only single-child, unfiltered COUNT(DISTINCT) rewrites; grouping
-  * sets / multi-column distinct / FILTER clauses keep exact semantics.
+  * Only single-child, unfiltered COUNT(DISTINCT) over a type the theta
+  * sketch accepts rewrites; grouping sets / multi-column distinct /
+  * FILTER clauses / other input types keep exact semantics.
   */
-object SketchDistinctRewrite extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.sketchDistinct"
-  val ConfKKey = "spark.graft.sketchDistinct.k"
-
-  private def rewritePlan(plan: LogicalPlan, k: Int): LogicalPlan =
-    plan.transform {
-      case agg: Aggregate =>
-        agg.transformExpressions {
-          case AggregateExpression(Count(Seq(c)), _, true, None, _) =>
-            graft.functions.KmvDistinct(c, k).toAggregateExpression()
-        }
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(ConfKey, "false").toBoolean) plan
-    else rewritePlan(plan, conf.getConfString(ConfKKey, "4096").toInt)
-
-  /** Scoped application to one DataFrame (no session-state mutation). */
-  def rewrite(df: DataFrame, k: Int = 4096): DataFrame =
+object SketchDistinctRewrite {
+  def rewrite(df: DataFrame, lgNomEntries: Int = 12): DataFrame =
     GraftColumnBridge.ofRows(df.sparkSession,
-      rewritePlan(df.queryExecution.analyzed, k))
+      df.queryExecution.analyzed.transform {
+        case agg: Aggregate =>
+          agg.transformExpressions {
+            case e @ AggregateExpression(Count(Seq(c)), _, true, None, _) =>
+              val sketch = new ThetaSketchAgg(c, lgNomEntries)
+              if (sketch.checkInputDataTypes().isFailure) e
+              else ThetaSketchEstimate(sketch.toAggregateExpression())
+          }
+      })
 }

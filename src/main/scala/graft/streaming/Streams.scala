@@ -120,7 +120,7 @@ object Streams {
                                   m: Int = 1024, k: Int = 20): DataFrame = {
     val sk = spark.readStream.text(dir)
       .select(explode(WordCount.cleanWords(col("value"))).as("word"))
-      .agg(graft.functions.TopKFreqSketch.topk_sketch(col("word"), m).as("s"))
+      .agg(graft.functions.TopKFreqSketch.topk_weighted(col("word"), lit(1L), m).as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.word").as("word"), col("e.cnt").as("cnt"))
     runAvailableNow(sk, Seq("word"))

@@ -392,17 +392,6 @@ class DedupSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("componentsStar frees prior rounds' checkpoint blocks") {
-    import spark.implicits._
-    val chain = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Dedup.componentsStar(chain, maxIter = 20).collect()
-    // only the final round's edge checkpoint may stay live (the result
-    // frame still reads it); earlier rounds must have been unpersisted
-    val added = spark.sparkContext.getPersistentRDDs.size - before
-    assert(added <= 1, s"expected ≤ 1 new live checkpoint RDD, saw $added")
-  }
-
   test("componentsStar matches components on a multi-component graph") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 9L), (9L, 8L), (20L, 21L))

@@ -93,23 +93,79 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("kmv_distinct: exact below k, merge-consistent across partitions") {
-    import graft.functions.KmvDistinct.kmv_distinct
+    // the KMV route is Spark's theta sketch (DataSketches' generalized
+    // k-minimum-values), k = 2^lgNomEntries
+    def thetaDistinct(c: org.apache.spark.sql.Column, lg: Int) =
+      theta_sketch_estimate(theta_sketch_agg(c, lg))
     val words = (1 to 500).map(i => s"w${i % 137}")  // 137 distinct
     val exact = words.toDF("w").repartition(8)
-      .agg(kmv_distinct(col("w"), 1024)).as[Long].collect().head
+      .agg(thetaDistinct(col("w"), 10)).as[Long].collect().head
     assert(exact == 137L)
     // above k: estimator within 3/sqrt(k) relative error
     val big = (1 to 20000).map(i => s"x$i")
     val est = big.toDF("w").repartition(8)
-      .agg(kmv_distinct(col("w"), 256)).as[Long].collect().head
+      .agg(thetaDistinct(col("w"), 8)).as[Long].collect().head
     assert(math.abs(est - 20000.0) / 20000.0 < 3.0 / math.sqrt(256))
   }
 
+  test("Gate.exactWhile passes an in-window sketch and names a saturated one") {
+    def distinct(n: Int) = (1 to n).map(i => s"x$i").toDF("w").repartition(4)
+      .agg(theta_sketch_estimate(theta_sketch_agg(col("w"), 10)).as("n"))
+    val guard = (df: org.apache.spark.sql.DataFrame) =>
+      graft.gates.Gate.exactWhile(df, "theta lg=10", col("n") < 1024)
+    assert(guard(distinct(1000)).as[Long].collect().toSeq == Seq(1000L))
+    val e = intercept[Exception](guard(distinct(2000)).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("theta lg=10 saturated")), e.toString)
+  }
+
+  test("theta_jaccard: exact set ops below k, duplicates collapse") {
+    val rows = Seq(("a", true), ("b", true), ("c", true), ("b", true),
+      ("b", false), ("c", false), ("d", false), ("d", false))
+      .toDF("word", "side").repartition(4)
+    val r = rows.agg(theta_jaccard(col("word"), col("side"), 10).as("j"))
+      .select("j.n_a", "j.n_b", "j.n_inter", "j.jaccard_ppm")
+      .collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      == ((3L, 3L, 2L, 500000L)))
+    // estimator path (k=16 < 400 per side) stays in [0, 1e6]
+    val many = (0 until 400).flatMap(i => Seq((s"v$i", true), (s"v${i + 200}", false)))
+      .toDF("word", "side").repartition(4)
+    val e = many.agg(theta_jaccard(col("word"), col("side"), 4).as("j"))
+      .select("j.jaccard_ppm").collect().head.getLong(0)
+    assert(e >= 0L && e <= 1000000L)
+  }
+
+  test("SketchDistinctRewrite: plan swaps to theta, exact below k, estimates above") {
+    val d = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val exact = d.agg(countDistinct(col("v")).as("n"))
+    // scoped rewrite, k above cardinality: plan shows the sketch, value exact
+    val sk = graft.plans.SketchDistinctRewrite.rewrite(exact, lgNomEntries = 10)
+    val plan = sk.queryExecution.executedPlan.toString
+    assert(plan.contains("theta_sketch_agg"),
+      s"rewritten plan must aggregate through the sketch:\n$plan")
+    assert(!plan.contains("Expand"),
+      s"the two-phase exact-distinct Expand must be gone:\n$plan")
+    assert(sk.collect()(0).getLong(0) == 100L)
+    // k below cardinality: the estimator runs (any value; just not the
+    // exact-path guarantee) — proves the sketch, not a hidden exact path
+    val est = graft.plans.SketchDistinctRewrite.rewrite(exact, lgNomEntries = 4)
+      .collect()(0).getLong(0)
+    assert(est > 0L)
+    // a type theta does not take stays exact
+    val dates = d.select(expr("date_add(DATE'2020-01-01', CAST(id AS INT))").as("v"))
+      .agg(countDistinct(col("v")).as("n"))
+    val kept = graft.plans.SketchDistinctRewrite.rewrite(dates)
+    assert(!kept.queryExecution.executedPlan.toString.contains("theta_sketch_agg"))
+    assert(kept.collect()(0).getLong(0) == 100L)
+  }
+
   test("topk_sketch: exact counts below capacity, bounded above it") {
-    import graft.functions.TopKFreqSketch.topk_sketch
+    import graft.functions.TopKFreqSketch.topk_weighted
     val words = Seq.fill(5)("a") ++ Seq.fill(3)("b") ++ Seq("c")
     val got = words.toDF("w").repartition(4)
-      .agg(topk_sketch(col("w"), 16).as("s"))
+      .agg(topk_weighted(col("w"), lit(1L), 16).as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.word"), col("e.cnt"))
       .as[(String, Long)].collect().toSeq
@@ -117,7 +173,7 @@ class FunctionsSpec extends SparkSpec {
     // above capacity: heavy hitter survives with count >= truth
     val skewed = Seq.fill(100)("hot") ++ (1 to 50).map(i => s"cold$i")
     val top = skewed.toDF("w").repartition(4)
-      .agg(topk_sketch(col("w"), 8).as("s"))
+      .agg(topk_weighted(col("w"), lit(1L), 8).as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.word"), col("e.cnt"))
       .as[(String, Long)].collect()
@@ -196,7 +252,7 @@ class FunctionsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val rows = Seq(("a", 10L), ("b", 1L), ("a", 5L), ("c", 2L), ("b", 3L))
       .toDF("k", "w")
-    val exact = rows.agg(graft.functions.TopKWeightedSketch
+    val exact = rows.agg(graft.functions.TopKFreqSketch
         .topk_weighted(col("k"), col("w"), 16).as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.word"), col("e.cnt")).collect()
@@ -204,7 +260,7 @@ class FunctionsSpec extends SparkSpec {
     assert(exact == Seq(("a", 15L), ("b", 4L), ("c", 2L)))
     // m = 2 forces eviction: every reported total is >= the true total
     // and the heaviest key is still on top with its weight preserved
-    val approx = rows.agg(graft.functions.TopKWeightedSketch
+    val approx = rows.agg(graft.functions.TopKFreqSketch
         .topk_weighted(col("k"), col("w"), 2).as("s"))
       .select(explode(col("s")).as("e"))
       .select(col("e.word"), col("e.cnt")).collect()

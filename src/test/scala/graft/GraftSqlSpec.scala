@@ -37,39 +37,13 @@ class GraftSqlSpec extends SparkSpec {
   test("sketch aggregates are first-class SQL functions") {
     GraftSql.registerViews(spark, sf0001)
     val r = spark.sql(
-      """SELECT graft_kmv_distinct(lang, 256) AS n_langs,
-        |       graft_topk_sketch(lang, 16)[0].word AS top_lang
+      """SELECT graft_topk_sketch(lang, 16)[0].word AS top_lang
         |FROM documents""".stripMargin).collect().head
-    val nLangs = spark.sql("SELECT count(DISTINCT lang) FROM documents")
-      .collect().head.getLong(0)
     val topLang = spark.sql(
       """SELECT lang FROM (SELECT lang, count(*) AS c FROM documents
         |GROUP BY lang ORDER BY c DESC, lang LIMIT 1)""".stripMargin)
       .collect().head.getString(0)
-    assert(r.getLong(0) == nLangs) // exact below k
-    assert(r.getString(1) == topLang)
-  }
-
-  test("kmv_jaccard set-op sketch is a first-class SQL function") {
-    GraftSql.registerViews(spark, sf0001)
-    val r = spark.sql(
-      """SELECT graft_kmv_jaccard(source, lang = 'en', 1024) AS j
-        |FROM documents WHERE lang IN ('en', 'de')""".stripMargin)
-      .select("j.n_a", "j.n_b", "j.n_inter", "j.jaccard_ppm")
-      .collect().head
-    val ex = spark.sql(
-      """SELECT
-        |  (SELECT count(DISTINCT source) FROM documents WHERE lang='en') a,
-        |  (SELECT count(DISTINCT source) FROM documents WHERE lang='de') b,
-        |  (SELECT count(*) FROM (
-        |     SELECT DISTINCT source FROM documents WHERE lang='en'
-        |     INTERSECT
-        |     SELECT DISTINCT source FROM documents WHERE lang='de')) i"""
-        .stripMargin).collect().head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) ==
-      ((ex.getLong(0), ex.getLong(1), ex.getLong(2))))
-    val (i, u) = (ex.getLong(2), ex.getLong(0) + ex.getLong(1) - ex.getLong(2))
-    assert(r.getLong(3) == (if (u == 0) 0L else i * 1000000L / u))
+    assert(r.getString(0) == topLang)
   }
 
   test("kll and bloom aggregates are first-class SQL functions") {

@@ -62,7 +62,10 @@ class IterateSpec extends SparkSpec {
     "Graph.kCore" -> (() => Graph.kCore(
       (graph ++ Seq(("e", "f"), ("f", "g"))).toDF("src", "dst"), k = 2)),
     "Dedup.components" -> (() => Dedup.components(
-      (0L until 16L).map(i => (i, i + 1)).toDF("id_a", "id_b"))))
+      (0L until 16L).map(i => (i, i + 1)).toDF("id_a", "id_b"))),
+    // a 64-edge chain runs several star rounds before it settles
+    "Dedup.componentsStar" -> (() => Dedup.componentsStar(
+      (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b"), maxIter = 20)))
 
   forms.foreach { case (op, run) =>
     test(s"$op keeps only its final frame live") {

@@ -376,23 +376,6 @@ class Round7Spec extends SparkSpec {
     assert(got(5L) == ((3L, 6L, 500000L)))
   }
 
-  test("kmv_jaccard: exact set ops below k, duplicates collapse") {
-    val rows = Seq(("a", true), ("b", true), ("c", true), ("b", true),
-      ("b", false), ("c", false), ("d", false), ("d", false))
-      .toDF("word", "side").repartition(4)
-    val r = rows.agg(functions.KmvJaccard.kmv_jaccard(
-        col("word"), col("side")).as("j"))
-      .select("j.n_a", "j.n_b", "j.n_inter", "j.jaccard_ppm")
-      .collect().head
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      == ((3L, 3L, 2L, 500000L)))
-    // estimator path (k=2 < cardinality) stays in [0, 1e6] and bounded
-    val e = rows.agg(functions.KmvJaccard.kmv_jaccard(
-        col("word"), col("side"), 2).as("j"))
-      .select("j.jaccard_ppm").collect().head.getLong(0)
-    assert(e >= 0L && e <= 1000000L)
-  }
-
   test("gapRegularity: constant cadence scores 0, known CV2 exact") {
     val events = ev(Seq(
       // user 1: gaps 2000s, 2000s -> CV2 = 0

@@ -291,44 +291,6 @@ class Round8Spec extends SparkSpec {
       ("source->lang", 2L, 1L, 2L)))  // s2 maps to {en,de}
   }
 
-  test("SketchDistinctRewrite: plan swaps to KMV, exact below k, estimates above") {
-    import org.apache.spark.sql.functions.{col, countDistinct}
-    val d = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val exact = d.agg(countDistinct(col("v")).as("n"))
-    // scoped rewrite, k above cardinality: plan shows the sketch, value exact
-    val sk = graft.plans.SketchDistinctRewrite.rewrite(exact, k = 1024)
-    val plan = sk.queryExecution.executedPlan.toString
-    assert(plan.contains("kmvdistinct") || plan.contains("KmvDistinct"),
-      s"rewritten plan must aggregate through the sketch:\n$plan")
-    assert(!plan.contains("Expand"),
-      s"the two-phase exact-distinct Expand must be gone:\n$plan")
-    assert(sk.collect()(0).getLong(0) == 100L)
-    // k below cardinality: the estimator runs (any value; just not the
-    // exact-path guarantee) — proves the sketch, not a hidden exact path
-    val est = graft.plans.SketchDistinctRewrite.rewrite(exact, k = 16)
-      .collect()(0).getLong(0)
-    assert(est > 0L)
-    // session-wide path: armed by conf through extraOptimizations
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.SketchDistinctRewrite
-    try {
-      spark.conf.set(graft.plans.SketchDistinctRewrite.ConfKey, "true")
-      val p2 = exact.queryExecution.executedPlan.toString
-      assert(p2.contains("kmvdistinct") || p2.contains("KmvDistinct"))
-      assert(exact.collect()(0).getLong(0) == 100L)
-    } finally {
-      spark.conf.set(graft.plans.SketchDistinctRewrite.ConfKey, "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.SketchDistinctRewrite)
-    }
-    // disarmed: a FRESH frame optimizes to the exact plan (the old DF
-    // caches its queryExecution, so rebuild rather than re-inspect)
-    val p3 = d.agg(countDistinct(col("v")).as("n"))
-      .queryExecution.executedPlan.toString
-    assert(!p3.contains("kmvdistinct") && !p3.contains("KmvDistinct"))
-  }
-
   test("zoneMapSkipping: date files prune, arrival-order files cannot") {
     def ts(day: Long) = new java.sql.Timestamp(day * 86400000L)
     // natural files {0,1} and {600,601} EACH contain one in-range day,

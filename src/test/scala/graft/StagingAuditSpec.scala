@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the drift the staging module exists to end — so it fails here
   * unless it is named below with the reason it is not a memo. Likewise
   * every checkpoint is freed through [[graft.operators.Iterate]]'s one
-  * `release`.
+  * `release`, and every hand-rolled `TypedImperativeAggregate` is named
+  * with the reason no Spark built-in serves.
   */
 class StagingAuditSpec extends AnyFunSuite {
 
@@ -79,6 +80,45 @@ class StagingAuditSpec extends AnyFunSuite {
     assert(stray.isEmpty,
       "free checkpoints through Iterate.release:\n" +
         stray.map { case (f, n, l) => s"  $f:$n: $l" }.mkString("\n"))
+  }
+
+  /** Hand-rolled aggregates that stay, each with why Spark's own does
+    * not serve. Distinct counts and their set operations are Spark's
+    * `theta_*` built-ins; a new `TypedImperativeAggregate` must first
+    * show that no built-in answers the same oracle.
+    */
+  private val allowedAggregates = Map(
+    // Spark's count_min_sketch is a binary blob with no probe
+    // expression; this one is probed by codegen'd builtin expressions
+    "CountMinAgg" -> "point-frequency probe without custom eval",
+    // Spark's might_contain takes its filter as a constant; the gates
+    // probe a joined filter column with builtin xxhash64 expressions
+    "BloomFilterAgg" -> "per-row probe against a joined filter column",
+    // Spark's KLL returns a retained item; the oracle is quantile_cont
+    // interpolation, which this sketch reproduces exactly below k
+    "KllQuantiles" -> "interpolated quantiles, exact below k",
+    // Spark has no heavy-hitters aggregate
+    "TopKFreqSketch" -> "weighted Space-Saving top-k")
+
+  test("no TypedImperativeAggregate outside the allowlist") {
+    val Decl = """(?:class|object)\s+(\w+)""".r
+    val found = sources.flatMap { case (rel, lines) =>
+      lines.indices.collect {
+        case i if lines(i).matches(""".*(extends|with)\s+TypedImperativeAggregate\b.*""") =>
+          // the declared name sits on the hit line or a line above
+          val name = (i to 0 by -1).iterator
+            .flatMap(j => Decl.findFirstMatchIn(lines(j)).map(_.group(1)))
+            .nextOption().getOrElse("?")
+          (rel, name)
+      }
+    }
+    assert(found.nonEmpty, s"audit found no aggregate under $root")
+    val stray = found.filterNot { case (_, n) => allowedAggregates.contains(n) }
+    assert(stray.isEmpty,
+      "use a Spark built-in aggregate (theta_*, count_min_sketch, kll_*) or allowlist with a reason:\n" +
+        stray.map { case (f, n) => s"  $f: $n" }.mkString("\n"))
+    val gone = allowedAggregates.keySet -- found.map(_._2)
+    assert(gone.isEmpty, s"allowlisted aggregates no longer declared: ${gone.mkString(", ")}")
   }
 
   test("every allowlisted map still exists (the allowlist cannot rot)") {
