@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.Partitioner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +28,9 @@ import org.apache.spark.sql.functions._
   * partial `HashAggregate` → `Exchange hashpartitioning(word)` → final
   * `HashAggregate`, all inside whole-stage codegen. At 100 TB the only
   * shuffle is the one exchange on `word`, with map-side combine shrinking
-  * it to ~|vocabulary| rows per task.
+  * it to ~|vocabulary| rows per task. The RDD spine ([[wordCountRdd]])
+  * takes the same three steps by hand: one bounded partial map per task,
+  * one hash shuffle, one merge per reducer.
   */
 object WordCount {
 
@@ -114,19 +119,76 @@ object WordCount {
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
-  /** RDD formulation — the canonical `flatMap → map → reduceByKey →
-    * sortByKey` spine (BASELINE.json `spark_approach`). Same semantics
-    * as [[wordCount]]; `reduceByKey` does map-side combine exactly like
-    * the reference's per-file partial maps (`sendFileByFile.cpp:150`).
+  /** Distinct words one map task's partial count holds before it
+    * flushes: 2^17 = 131,072. It is above the whole vocabulary of the
+    * bench corpus (40,000 words) and of the testdata, so those never
+    * flush. Heaps' law with typical English parameters (V ≈ 44·n^0.49)
+    * gives ~170k distinct words for a full 128 MiB scan split (~20M
+    * tokens), so such a split flushes about once; each flush re-emits
+    * only the words seen since the last one, and the Zipf head that
+    * carries most tokens is counted in every run. At roughly 100 bytes
+    * per entry (a short `String`, a boxed count, the hash node) the
+    * bound is ~13 MB per running task. 2^16 would flush a full split
+    * several times; 2^18 would let a 32-core executor hold ~0.8 GB of
+    * partial maps.
     */
-  def wordCountRdd(spark: SparkSession, docs: DataFrame, textCol: String = "text"): DataFrame = {
+  private[graft] val CombineCap = 1 << 17
+
+  /** RDD formulation (BASELINE.json `spark_approach`), built on the
+    * reference's own three steps. Same semantics as [[wordCount]].
+    *
+    *  1. Per task, a word → count map ([[partialCounts]]), flushed
+    *     whenever it holds [[CombineCap]] distinct words: the
+    *     reference's per-file partial map (`sendFileByFile.cpp:150,
+    *     186-200`) with the flush bound on size instead of file end.
+    *  1. One hash shuffle on the word (`sendFileByFile.cpp:256-268`),
+    *     `combineByKey` with `mapSideCombine = false`, and
+    *  1. its merge on each reducer (`sendFileByFile.cpp:353-374`).
+    *  1. Alphabetic order is a Catalyst `orderBy`, so a sink that
+    *     repartitions by word ([[graft.sources.TextDirectory.writeSharded]])
+    *     drops the sort, and building the frame runs no job.
+    *
+    * Why not `reduceByKey(_ + _).sortByKey()`: in a Java Flight
+    * Recorder profile Spark's generic map-side combine
+    * (`AppendOnlyMap.changeValue`: boxing, `BoxesRunTime.equals`,
+    * `SizeEstimator` sampling) took ~15% of executor samples and
+    * `ExternalSorter` sorted its output by key hash even without a
+    * spill (~5%). A per-task map followed by a shuffle with no
+    * map-side combine takes the bypass-merge writer, which does no
+    * sort; `sortByKey` added a range shuffle and a sampling job that
+    * ran while the frame was being built. Measured effect in NOTES
+    * "Word-count profile".
+    */
+  def wordCountRdd(spark: SparkSession, docs: DataFrame, textCol: String = "text"): DataFrame =
+    wordCountRdd(spark, docs, textCol, CombineCap)
+
+  /** [[wordCountRdd]] with the partial map flushed at `cap` distinct words. */
+  private[graft] def wordCountRdd(spark: SparkSession, docs: DataFrame, textCol: String,
+                                  cap: Int): DataFrame = {
     import spark.implicits._
-    docs.select(col(textCol)).na.drop().as[String].rdd
-      .flatMap(graft.functions.CleanWords.words)
-      .map(w => (w, 1L))
-      .reduceByKey(_ + _)
-      .sortByKey()
+    val partial = docs.select(col(textCol)).na.drop().as[String].rdd
+      .mapPartitions(lines => partialCounts(lines.flatMap(graft.functions.CleanWords.words), cap))
+    partial
+      .combineByKey((c: Long) => c, (a: Long, c: Long) => a + c, (a: Long, b: Long) => a + b,
+        Partitioner.defaultPartitioner(partial), mapSideCombine = false)
       .toDF("word", "cnt")
+      .orderBy("word")
+  }
+
+  /** Counts of `words`, emitted in runs: each run is a map filled until
+    * it holds `cap` distinct words or the input ends. A word can appear
+    * in several runs; the counts of one word sum to its occurrences.
+    */
+  private[graft] def partialCounts(words: Iterator[String], cap: Int): Iterator[(String, Long)] = {
+    require(cap > 0, s"cap must be positive, got $cap")
+    Iterator.continually {
+      val m = mutable.HashMap.empty[String, Long]
+      while (words.hasNext && m.size < cap) {
+        val w = words.next()
+        m.update(w, m.getOrElse(w, 0L) + 1L)
+      }
+      m
+    }.takeWhile(_.nonEmpty).flatten
   }
 
   /** Word count keyed by extra grouping columns (e.g. source, lang). */

@@ -42,13 +42,45 @@ object TextDirectory {
     * shard — the moral equivalent of the numP×4 `Rank_*_Thread_*.txt`
     * outputs. `sortWithinPartitions` keeps each file alphabetical like
     * the reference's `std::map` iteration (`sendFileByFile.cpp:385`).
+    *
+    * One exchange from the aggregate into the files, as the reference
+    * routes each word once (`sendFileByFile.cpp:256-268`): for the
+    * write it sets, and afterwards restores or unsets,
+    *  - `spark.sql.shuffle.partitions` to `numShards`, so a
+    *    `groupBy(word)` aggregate in `counts` already shuffles into
+    *    `hashpartitioning(word, numShards)` and EnsureRequirements
+    *    removes the `repartition`'s own exchange;
+    *  - `spark.sql.adaptive.coalescePartitions.enabled` to false,
+    *    because that exchange is now the aggregate's, which AQE may
+    *    coalesce: on a small corpus it merged all shards into one
+    *    partition and the sink wrote one file instead of `numShards`.
+    * An upstream sort on `word` (the `orderBy` of [[WordCount.wordCount]]
+    * and [[WordCount.wordCountRdd]]) is dropped under the repartition.
+    *
+    * Both confs are session-wide while the write runs: a query planned
+    * at the same time on the same session sees `numShards` shuffle
+    * partitions and no coalescing. That changes how its rows are
+    * partitioned, never its result.
     */
-  def writeSharded(counts: DataFrame, out: String, numShards: Int): Unit =
-    counts
+  def writeSharded(counts: DataFrame, out: String, numShards: Int): Unit = {
+    val conf = counts.sparkSession.conf
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> numShards.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    // getAll holds only the keys set on the session: `getOption` would
+    // read an unset key as its default and the restore would then set it
+    val saved = scoped.map { case (k, _) => k -> conf.getAll.get(k) }
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try counts
       .repartition(numShards, col("word"))
       .sortWithinPartitions("word")
       .select(concat_ws(" ", col("word"), col("cnt")).as("value"))
       .write.mode("overwrite").text(out)
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 
   /** Single merged output file — the reference's own TODO 3
     * (`README.md:11`): globally sorted, one file.

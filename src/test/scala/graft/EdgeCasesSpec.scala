@@ -54,14 +54,22 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Dedup.simhash(digits).count() == 0) // size(ws) > 0 filter
   }
 
+  private lazy val withNull = spark.createDataFrame(
+    spark.sparkContext.parallelize(Seq(Row(1L, "a b"), Row(2L, null))),
+    StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+
   test("null text rows are dropped, not fatal") {
-    val withNull = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, "a b"), Row(2L, null))),
-      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
     val got = WordCount.wordCount(withNull).collect().map(_.getString(0)).toSet
     assert(got == Set("a", "b"))
     assert(WordCount.wordCountRdd(spark, withNull).count() == 2)
     assert(TextAnalysis.docStats(withNull).count() >= 1)
+  }
+
+  test("RDD word count flushing at every distinct word: empty and null input") {
+    assert(WordCount.wordCountRdd(spark, emptyDocs, "text", 1).count() == 0)
+    val got = WordCount.wordCountRdd(spark, withNull, "text", 1).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got == Seq("a" -> 1L, "b" -> 1L))
   }
 
   test("similarity on empty and single-row input") {

@@ -2,6 +2,19 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ExternalRDD, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.{GraftSparkInternals, HashPartitioner, ShuffleDependency}
+
+import graft.operators.WordCount
 import graft.sources.TextDirectory
 
 /** End-to-end test of the reference-fidelity source/sink: a directory
@@ -46,6 +59,137 @@ class TextDirectorySpec extends SparkSpec {
       assert(sharded.toSet == Set("the 3", "cat 1", "sat 1", "on 1", "mat 1", "dog 1"))
       val merged = spark.read.textFile(s"$out/merged").collect()
       assert(merged.toSeq == merged.sorted.toSeq && merged.length == 6)
+    }
+  }
+
+  /** Three files over 300 distinct words (more than the 8 shards), with
+    * case and punctuation the cleaner folds and a skewed count per word.
+    */
+  private def withWideCorpus[T](f: String => T): T = {
+    val words = for (a <- 'a' to 'o'; b <- 'a' to 't') yield s"$a$b"
+    val dir = Files.createTempDirectory("graft_wide").toFile
+    for (i <- 0 until 3) {
+      val text = words.zipWithIndex.filter(_._2 % 3 == i).map { case (w, j) =>
+        Seq.fill(1 + j % 5)(if (j % 7 == 0) w.capitalize + "!" else w).mkString(" ")
+      }.mkString("\n")
+      Files.writeString(new java.io.File(dir, s"f$i.txt").toPath, text)
+    }
+    try f(dir.getAbsolutePath)
+    finally { dir.listFiles().foreach(_.delete()); dir.delete() }
+  }
+
+  private def counts(df: DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The `part-` files of a sharded write, each as its (word, count) lines. */
+  private def shards(out: String): Seq[Seq[(String, Long)]] =
+    new java.io.File(out).listFiles().filter(_.getName.startsWith("part-")).toSeq
+      .map(f => Files.readAllLines(f.toPath).asScala.toSeq.map { l =>
+        val Array(w, c) = l.split(' '); w -> c.toLong
+      })
+
+  /** Runs `f`, then returns its result, the jobs it started, the number
+    * of its stages that wrote shuffle output, and the shuffle exchanges
+    * of the final physical plan of each SQL command it ran.
+    */
+  private def executed[T](f: => T): (T, Int, Int, Seq[ShuffleExchangeExec]) = {
+    val sc = spark.sparkContext
+    @volatile var jobs, shuffleStages = 0
+    val exchanges = new java.util.concurrent.ConcurrentLinkedQueue[ShuffleExchangeExec]()
+    val stages = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) shuffleStages += 1
+    }
+    val plans = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        exchanges.addAll(collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }.asJava)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftSparkInternals.waitListenerBusEmpty(sc)
+    sc.addSparkListener(stages)
+    spark.listenerManager.register(plans)
+    val result = try f
+    finally {
+      GraftSparkInternals.waitListenerBusEmpty(sc)
+      sc.removeSparkListener(stages)
+      spark.listenerManager.unregister(plans)
+    }
+    (result, jobs, shuffleStages, exchanges.asScala.toSeq)
+  }
+
+  /** Every shuffle dependency in an RDD's lineage. */
+  private def shuffleDeps(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => s +: shuffleDeps(s.rdd)
+      case d => shuffleDeps(d.rdd)
+    }
+
+  test("sharded sink: both spines write exactly numShards sorted files, one per word") {
+    withWideCorpus { dir =>
+      val lines = spark.read.textFile(dir).toDF("text")
+      val expected = counts(WordCount.wordCount(lines))
+      assert(expected.size == 300)
+      val out = Files.createTempDirectory("graft_shards").toFile.getAbsolutePath
+      for ((spine, df) <- Seq("df" -> TextDirectory.wordCountDir(spark, dir),
+                              "rdd" -> WordCount.wordCountRdd(spark, lines))) {
+        TextDirectory.writeSharded(df, s"$out/$spine", 8)
+        val files = shards(s"$out/$spine")
+        val n = files.size
+        assert(n == 8, s"$spine spine")
+        files.foreach(f => assert(f.map(_._1) == f.map(_._1).sorted, s"$spine shard unsorted"))
+        val all = files.flatten
+        assert(all.map(_._1).distinct.size == all.size, s"$spine: a word in two shards")
+        assert(all.toMap == expected, spine)
+      }
+    }
+  }
+
+  test("sharded sink: the DataFrame spine shuffles once, the RDD spine twice with no range exchange") {
+    withWideCorpus { dir =>
+      val out = Files.createTempDirectory("graft_stages").toFile.getAbsolutePath
+      val (_, _, dfShuffles, dfExchanges) = executed(
+        TextDirectory.writeSharded(TextDirectory.wordCountDir(spark, dir), s"$out/df", 8))
+      assert(dfShuffles == 1 && dfExchanges.size == 1,
+        s"DataFrame spine: $dfShuffles shuffle stages, exchanges $dfExchanges")
+      assert(dfExchanges.head.outputPartitioning.numPartitions == 8)
+
+      val (rdd, buildJobs, _, _) =
+        executed(WordCount.wordCountRdd(spark, spark.read.textFile(dir).toDF("text")))
+      assert(buildJobs == 0, "building the RDD spine ran a job (a range partitioner's sample)")
+      val deps = rdd.queryExecution.logical.collect { case e: ExternalRDD[_] => e.rdd }
+        .flatMap(shuffleDeps)
+      assert(deps.size == 1 && deps.head.partitioner.isInstanceOf[HashPartitioner] &&
+        !deps.head.mapSideCombine, s"RDD spine lineage: ${deps.map(_.partitioner)}")
+      val (_, _, rddShuffles, rddExchanges) = executed(
+        TextDirectory.writeSharded(rdd, s"$out/rdd", 8))
+      assert(rddShuffles == 2, s"RDD spine: $rddShuffles shuffle stages")
+      assert(rddExchanges.map(_.outputPartitioning) match {
+        case Seq(h: HashPartitioning) => h.numPartitions == 8
+        case _ => false
+      }, s"RDD spine under the sink: $rddExchanges")
+    }
+  }
+
+  test("writeSharded restores both confs after a write and after a failed one") {
+    val s = spark.newSession()
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    s.conf.set(keys.head, "5")
+    s.conf.unset(keys(1))
+    def state = keys.map(k => (s.conf.getOption(k), s.conf.getAll.contains(k)))
+    val before = state
+    assert(!before(1)._2, "the coalescing key should start unset")
+    withCorpus { dir =>
+      val counts = TextDirectory.wordCountDir(s, dir)
+      val out = Files.createTempDirectory("graft_scope").toFile
+      TextDirectory.writeSharded(counts, s"$out/ok", 2)
+      assert(state == before, "after a write")
+      val file = new java.io.File(out, "file")
+      Files.writeString(file.toPath, "x")
+      // an overwrite deletes a regular file at the output path itself;
+      // a path beneath one cannot be created
+      intercept[Exception](TextDirectory.writeSharded(counts, s"$file/sharded", 2))
+      assert(state == before, "after a failed write")
     }
   }
 }

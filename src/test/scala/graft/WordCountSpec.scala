@@ -183,6 +183,29 @@ class WordCountSpec extends SparkSpec {
     assert(df.nonEmpty && df.toSeq == rdd.toSeq)
   }
 
+  test("bounded in-mapper combine: a flush bound far below the vocabulary keeps the counts") {
+    val df = WordCount.wordCount(fuzzFrame(spark)).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(df.length > 100)
+    for (cap <- Seq(1, 3)) {
+      val rdd = WordCount.wordCountRdd(spark, fuzzFrame(spark), "text", cap).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      assert(df.toSeq == rdd.toSeq, s"cap $cap")
+    }
+  }
+
+  test("partialCounts: runs of at most cap distinct words that sum to the token counts") {
+    val ws = Seq("a", "a", "b", "a", "c", "c", "a")
+    val total = Map("a" -> 4L, "b" -> 1L, "c" -> 2L)
+    val flushed = WordCount.partialCounts(ws.iterator, 2).toSeq
+    // runs {a:2, b:1}, {a:1, c:1}, {c:1, a:1}
+    assert(flushed.size == 6 && flushed.groupMapReduce(_._1)(_._2)(_ + _) == total)
+    val whole = WordCount.partialCounts(ws.iterator, 4).toSeq
+    assert(whole.size == 3 && whole.toMap == total)
+    assert(WordCount.partialCounts(Iterator.empty, 1).isEmpty)
+    intercept[IllegalArgumentException](WordCount.partialCounts(ws.iterator, 0))
+  }
+
   test("salted word count equals plain word count") {
     val docs = Tables.documents(spark, sf0001)
     val plain = WordCount.wordCount(docs).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
