@@ -70,4 +70,30 @@ object GraftConf {
   def applyTo(builder: org.apache.spark.sql.SparkSession.Builder,
               conf: Map[String, String]): org.apache.spark.sql.SparkSession.Builder =
     conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+
+  /** The one session-conf scope: run `body` with each `key -> value`
+    * set on `spark`'s session, then put every key back as it was —
+    * restored to its saved value, or unset if it was unset — also when
+    * `body` throws. The saved value comes from `conf.getAll`, which
+    * holds only the keys set on the session: `get`/`getOption` read an
+    * unset key as its default, and the restore would then set it.
+    *
+    * Concurrency: the keys are session-wide while `body` runs, so a
+    * query planned at the same time on the same session sees them.
+    * Scope only confs that change how rows are partitioned or where
+    * state is kept, never what a query computes; two scopes that
+    * overlap on one session each restore what they saw on entry.
+    */
+  def scoped[T](spark: org.apache.spark.sql.SparkSession,
+                confs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

@@ -57,30 +57,22 @@ object TextDirectory {
     * An upstream sort on `word` (the `orderBy` of [[WordCount.wordCount]]
     * and [[WordCount.wordCountRdd]]) is dropped under the repartition.
     *
-    * Both confs are session-wide while the write runs: a query planned
-    * at the same time on the same session sees `numShards` shuffle
-    * partitions and no coalescing. That changes how its rows are
-    * partitioned, never its result.
+    * Both confs are scoped by [[graft.GraftConf.scoped]], whose
+    * concurrency contract applies: a query planned at the same time on
+    * the same session sees `numShards` shuffle partitions and no
+    * coalescing, which changes how its rows are partitioned, never its
+    * result.
     */
-  def writeSharded(counts: DataFrame, out: String, numShards: Int): Unit = {
-    val conf = counts.sparkSession.conf
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" -> numShards.toString,
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    // getAll holds only the keys set on the session: `getOption` would
-    // read an unset key as its default and the restore would then set it
-    val saved = scoped.map { case (k, _) => k -> conf.getAll.get(k) }
-    scoped.foreach { case (k, v) => conf.set(k, v) }
-    try counts
-      .repartition(numShards, col("word"))
-      .sortWithinPartitions("word")
-      .select(concat_ws(" ", col("word"), col("cnt")).as("value"))
-      .write.mode("overwrite").text(out)
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
+  def writeSharded(counts: DataFrame, out: String, numShards: Int): Unit =
+    graft.GraftConf.scoped(counts.sparkSession,
+        "spark.sql.shuffle.partitions" -> numShards.toString,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      counts
+        .repartition(numShards, col("word"))
+        .sortWithinPartitions("word")
+        .select(concat_ws(" ", col("word"), col("cnt")).as("value"))
+        .write.mode("overwrite").text(out)
     }
-  }
 
   /** Single merged output file — the reference's own TODO 3
     * (`README.md:11`): globally sorted, one file.

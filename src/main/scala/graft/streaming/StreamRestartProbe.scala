@@ -16,32 +16,34 @@ import org.apache.spark.sql.streaming.Trigger
   *
   *  1. `sessions` — [[Streams.sessionCounts]] (mapGroupsWithState,
   *     update mode) → foreachBatch newest-emission-wins merge into a
-  *     versioned parquet state table. Recovery carries each user's
+  *     versioned parquet state table ([[Streams.mergeVersions]]).
+  *     Recovery carries each user's
   *     (lastMs, count) state across the JVM boundary: a session whose
   *     gap straddles the phase cut is only counted once if the state
   *     genuinely survived.
-  *  2. `ijoin` — the stream-stream interval join (purchases ⋈ views
-  *     within 10 min, both sides watermarked 1 h) → the transactional
+  *  2. `ijoin` — the stream-stream interval join
+  *     ([[Streams.intervalJoin]]: purchases ⋈ views within 10 min,
+  *     both sides watermarked 1 h) → the transactional
   *     parquet FILE sink (its `_spark_metadata` commit log is the
   *     exactly-once story). Recovery reloads the buffered view state:
   *     cross-phase pairs (view before the cut, purchase after) exist
   *     only if the join state survived.
   *  3. `upsert` — the foreachBatch MERGE shape: latest-per-
   *     (user, event_type) snapshot versioned per micro-batch, where
-  *     each batch merges against the newest version ON DISK (not
-  *     driver memory — the restart-robust form of
-  *     [[Streams.foreachBatchUpsertAvailableNow]]'s in-memory
-  *     `lastPath`). Groups whose last event is in phase 1 win their
-  *     final row from the version the FIRST JVM wrote — only the
+  *     each batch merges against the newest earlier version ON DISK
+  *     ([[Streams.mergeVersion]], the same helper the in-process
+  *     upsert lake uses). Groups whose last event is in phase 1 win
+  *     their final row from the version the FIRST JVM wrote — only the
   *     on-disk merge can carry it.
   *
-  * Input staging: the events table split BY TIME at the median into
-  * two single-file micro-batches (mtime-stamped; the
-  * [[Streams]] staged-split discipline). Phase `first` stages and
-  * processes the early half; phase `rest` (a NEW JVM via spark-submit)
-  * adds the late half — the file source's own checkpoint log knows the
-  * first file is done. Phase `single` stages both and runs once — the
-  * control. All three run on the RocksDB state-store provider per
+  * Input staging: the events table split BY TIME at the cut into two
+  * parts of one ordered stage ([[StagedFiles]], the stager every
+  * streaming gate uses), part `i` one file pinned at
+  * `(i + 1) × 1,000,000` ms, so the order holds across JVMs. Phase
+  * `first` adds and processes the early half; phase `rest` (a NEW JVM
+  * via spark-submit) adds the late half — the file source's own
+  * checkpoint log knows the first file is done. Phase `single` adds
+  * both and runs once — the control. All three run on the RocksDB state-store provider per
   * `GraftConf.streaming` (changelog checkpointing on), so the proof
   * covers the documented 100 TB posture, not just the default HDFS
   * provider.
@@ -133,154 +135,90 @@ object StreamRestartProbe {
     }
   }
 
+  /** Add this phase's parts to the shared ordered stage under
+    * `workDir/input`: the early half is part 0, the late half part 1.
+    */
   private def stageInput(spark: SparkSession, phase: String,
                          workDir: String, sfDir: String): Unit = {
-    val input = s"$workDir/input"
+    val input = java.nio.file.Paths.get(workDir, "input")
     val ev = graft.Tables.events(spark, sfDir)
     val cut = persistedCut(spark, workDir, sfDir)
-    def write(half: DataFrame, mtime: Long): Unit = {
-      half.coalesce(1).write.mode("append").parquet(input)
-      // FileStreamSource orders by mtime; pin phase order explicitly
-      // (freshly written files carry a real mtime >> 2000000, so the
-      // guard stamps exactly this write's files)
-      new java.io.File(input).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && f.lastModified() > 2000000L)
-        .foreach(f => require(f.setLastModified(mtime), s"setLastModified: $f"))
-    }
-    phase match {
-      case "first" => write(ev.where(col("ts_ms") <= cut), 1000000L)
-      case "rest"  => write(ev.where(col("ts_ms") > cut), 2000000L)
-      case "single" =>
-        write(ev.where(col("ts_ms") <= cut), 1000000L)
-        write(ev.where(col("ts_ms") > cut), 2000000L)
+    val halves = Seq(ev.where(col("ts_ms") <= cut), ev.where(col("ts_ms") > cut))
+    val parts = phase match {
+      case "first" => Seq(0)
+      case "rest" => Seq(1)
+      case "single" => Seq(0, 1)
       case other => throw new IllegalArgumentException(s"phase: $other")
     }
+    parts.foreach(i => StagedFiles.add(input, i, StagedFiles.FramePart(halves(i))))
   }
 
-  private def inputStream(spark: SparkSession, workDir: String): DataFrame = {
-    val input = s"$workDir/input"
-    val schema = spark.read.parquet(input).schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(input)
-  }
+  private def inputStream(spark: SparkSession, workDir: String): DataFrame =
+    StagedFiles.read(spark, s"$workDir/input", filePerBatch = true)
 
   // ---------------------------------------------------------- shapes
 
   /** mapGroupsWithState session counts → versioned newest-wins merge. */
-  private def runSessions(spark: SparkSession, workDir: String): Unit = {
-    val out = s"$workDir/out/sessions"
-    val q = Streams.sessionCounts(spark, inputStream(spark, workDir), gapMs)
-      .writeStream
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt/sessions")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // newest emission wins: mapGroupsWithState re-emits a user's
-        // RUNNING total each batch that touches the user
-        mergeVersion(batch, out, batchId) { (prev, b) =>
-          prev.join(b.select("user_id"), Seq("user_id"), "left_anti")
-            .unionByName(b)
-        }
-      }
-      .start()
-    q.awaitTermination()
-  }
+  private def runSessions(spark: SparkSession, workDir: String): Unit =
+    Streams.mergeVersions(
+        Streams.sessionCounts(spark, inputStream(spark, workDir), gapMs),
+        s"$workDir/out/sessions", mode = "update",
+        checkpoint = Some(s"$workDir/ckpt/sessions")) { (prev, b) =>
+      // newest emission wins: mapGroupsWithState re-emits a user's
+      // RUNNING total each batch that touches the user
+      prev.fold(b)(_.join(b.select("user_id"), Seq("user_id"), "left_anti")
+        .unionByName(b))
+    }
 
   /** Stream-stream interval join → transactional parquet file sink. */
-  private def runIjoin(spark: SparkSession, workDir: String): Unit = {
-    val ev = inputStream(spark, workDir)
-    val p = ev.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        timestamp_millis(col("ts_ms")).as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val v = ev.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"),
-        timestamp_millis(col("ts_ms")).as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val joined = p.join(v,
-      col("p_user") === col("v_user") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMs MILLISECONDS") &&
-        col("v_ts") < col("p_ts"))
-      .select(col("purchase_id"), unix_millis(col("v_ts")).as("view_ms"))
-    val q = joined.writeStream
+  private def runIjoin(spark: SparkSession, workDir: String): Unit =
+    Streams.intervalJoin(inputStream(spark, workDir), windowMs)
+      .writeStream
       .format("parquet")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$workDir/ckpt/ijoin")
       .option("path", s"$workDir/out/ijoin")
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** foreachBatch MERGE: latest-per-(user, event_type) versioned
-    * snapshot, merging against the newest version ON DISK
+    * snapshot, merging against the newest earlier version ON DISK
     * (restart-robust). The two-column key makes the proof non-vacuous
     * on corpora where every USER stays active past any cut: a rare
     * event type that a user stops emitting early wins its final row
     * from phase 1.
     */
   private def runUpsert(spark: SparkSession, workDir: String): Unit = {
-    val out = s"$workDir/out/upsert"
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id", "event_type")
       .orderBy(col("ts_ms").desc, col("event_id").desc)
-    def latest(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(w))
+    Streams.mergeVersions(
+        inputStream(spark, workDir)
+          .select("user_id", "ts_ms", "event_id", "event_type", "value"),
+        s"$workDir/out/upsert",
+        checkpoint = Some(s"$workDir/ckpt/upsert")) { (prev, b) =>
+      prev.fold(b)(_.unionByName(b))
+        .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1).drop("rn")
-    val q = inputStream(spark, workDir)
-      .select("user_id", "ts_ms", "event_id", "event_type", "value")
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$workDir/ckpt/upsert")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeVersion(batch, out, batchId)((prev, b) =>
-          latest(prev.unionByName(b)))
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Write `out/v<batchId>` = merge(newest version on disk, batch).
-    * Disk-based prev lookup is what survives the JVM boundary; a
-    * re-executed batch (at-least-once foreachBatch) overwrites its own
-    * version with an identical merge — idempotent by construction
-    * because both merge shapes are.
-    */
-  private def mergeVersion(batch: DataFrame, out: String, batchId: Long)
-                          (merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val prevPath = newestVersion(out)
-    val merged = prevPath match {
-      case Some(p) => merge(spark.read.parquet(p), batch)
-      case None    => batch
     }
-    merged.write.mode("overwrite").parquet(s"$out/v$batchId")
   }
 
-  private def newestVersion(out: String): Option[String] = {
-    val dir = new java.io.File(out)
-    if (!dir.isDirectory) return None
-    dir.listFiles().filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .map(_.getName.drop(1).toLong)
-      .sorted.lastOption.map(v => s"$out/v$v")
-  }
+  /** The newest version of a versioned output. */
+  private def newest(out: String): String =
+    Streams.versionPath(out, Streams.versions(out).lastOption
+      .getOrElse(sys.error(s"no version under $out")))
 
   /** The three final result tables of a completed workDir — what the
     * spec compares across phased-restart / single-run / batch oracle.
     */
   def finalTables(spark: SparkSession, workDir: String):
       (DataFrame, DataFrame, DataFrame) = {
-    val sessions = spark.read
-      .parquet(newestVersion(s"$workDir/out/sessions")
-        .getOrElse(sys.error("no sessions version")))
+    val sessions = spark.read.parquet(newest(s"$workDir/out/sessions"))
       .orderBy("user_id")
     val ijoin = spark.read.parquet(s"$workDir/out/ijoin")
       .orderBy("purchase_id", "view_ms")
-    val upsert = spark.read
-      .parquet(newestVersion(s"$workDir/out/upsert")
-        .getOrElse(sys.error("no upsert version")))
+    val upsert = spark.read.parquet(newest(s"$workDir/out/upsert"))
       .orderBy("user_id", "event_type")
     (sessions, ijoin, upsert)
   }

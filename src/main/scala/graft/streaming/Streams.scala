@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -63,10 +65,14 @@ object Streams {
     * pipeline writes `.format("parquet")`/Kafka with a checkpoint
     * location and keeps nothing on the driver; don't copy this shape
     * into a deployment.
+    *
+    * `confs` are further session confs the query starts under, in the
+    * same [[graft.GraftConf.scoped]] scope as the state-partition count.
     */
   def runAvailableNow(stream: DataFrame, orderCols: Seq[String],
                       mode: String = "complete",
-                      statePartitions: Option[Int] = None): DataFrame = {
+                      statePartitions: Option[Int] = None,
+                      confs: Seq[(String, String)] = Nil): DataFrame = {
     val spark = stream.sparkSession
     val name = "graft_stream_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
@@ -74,20 +80,18 @@ object Streams {
     // every micro-batch; heavily-stateful queries (stream-stream joins
     // keep 4 stores per partition) want fewer, larger state partitions
     // (see [[defaultStatePartitions]] for the sizing rule).
-    // The conf is read at query START and baked into the checkpoint, so
-    // scoping it around start() is safe; restore afterwards.
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key,
-      statePartitions.getOrElse(defaultStatePartitions(spark)).toString)
-    try {
-      val q = stream
+    // The confs are read at query START and baked into the checkpoint,
+    // so scoping them around start() is safe.
+    val partitions = "spark.sql.shuffle.partitions" ->
+      statePartitions.getOrElse(defaultStatePartitions(spark)).toString
+    graft.GraftConf.scoped(spark, partitions +: confs: _*) {
+      stream
         .writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, saved)
+        .awaitTermination()
+    }
     val out = spark.table(name).orderBy(orderCols.map(col): _*)
     // resolve the sink relation into the plan NOW, then drop the
     // catalog name: repeated runs in one session (bench sweeps, test
@@ -127,26 +131,20 @@ object Streams {
       .orderBy(col("cnt").desc, col("word")).limit(k)
   }
 
-  /** The file stream source requires a DIRECTORY basePath: stage a
-    * single parquet file behind a symlink in a temp dir (cached per
-    * source path, exactly one file — so AvailableNow runs one batch).
+  /** One fixture table as a one-batch file stream: the file stream
+    * source requires a DIRECTORY basePath, so the table is staged as a
+    * one-file stage, a symlink (cached per source path).
     */
-  private def stagedFileDir(spark: SparkSession, path: String): String =
-    SessionCache.perContext(spark, ("Streams", path)) {
-      val d = graft.TempDirs.scratch("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(java.nio.file.Paths.get(path).getFileName.toString),
-        java.nio.file.Paths.get(path))
-      d.toString
-    }
+  private def fileStream(spark: SparkSession, path: String): DataFrame =
+    StagedFiles.read(spark,
+      StagedFiles.stage(spark, ("Streams", path), "graft_stream_src_")(
+        Seq(StagedFiles.FilePart(path))))
 
   /** The testdata events parquet as a file stream with `ts` normalized
     * to epoch-ms, mirroring [[graft.Tables.events]].
     */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, s"$dir/events.parquet")
     raw.withColumn("ts_ms", graft.Tables.tsMsExpr(raw.schema("ts").dataType))
       .drop("ts")
   }
@@ -182,9 +180,7 @@ object Streams {
   def classifierServeAvailableNow(spark: SparkSession, dir: String,
                                   slots: Int = 256,
                                   rounds: Int = 3): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, s"$dir/documents.parquet")
     val wm = graft.operators.TextAnalysis
       .classifierTrainCached(spark, dir, slots, rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -208,11 +204,9 @@ object Streams {
   }
 
   def dedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
     // synthetic event time offset above 0: a row at epoch 0 ties the
     // stream's INITIAL watermark and is dropped as late data
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, s"$dir/documents.parquet")
       .withColumn("ts_ms", col("doc_id") + lit(86400000L))
     runAvailableNow(streamingDedup(raw).select(col("fp")), Seq("fp"),
       mode = "append")
@@ -227,9 +221,7 @@ object Streams {
     * oracle, via the alias map).
     */
   def tableChecksumAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, s"$dir/documents.parquet")
     runAvailableNow(
       raw.select(col("source"), col("doc_id"),
           when(col("doc_id").isNull || col("text").isNull, 1L).otherwise(0L)
@@ -263,8 +255,7 @@ object Streams {
   def hllDistinctAvailableNow(spark: SparkSession, dir: String,
                               m: Int = 64): DataFrame = {
     val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, path)
     val regs = runAvailableNow(
       graft.operators.TextAnalysis.hllRegisters(
         graft.operators.TextAnalysis.hllGramStream(raw, 3), "gram", m),
@@ -293,12 +284,11 @@ object Streams {
                                   baseMaxId: Long = 250L,
                                   minShared: Int = 3): DataFrame = {
     val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
     val base = graft.operators.Dedup.winnowSelected(
         spark.read.parquet(path).where(col("doc_id") <= baseMaxId), 4, 4)
       .select(col("doc_id").as("base_id"),
         explode(array_distinct(col("fps"))).as("fp"))
-    val raw = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+    val raw = fileStream(spark, path)
       .where(col("doc_id") > baseMaxId)
     val arrivals = graft.operators.Dedup.winnowSelected(raw, 4, 4)
       .select(col("doc_id").as("new_id"),
@@ -343,9 +333,8 @@ object Streams {
       // stream owns the delta
       AnnIndex.writeIncBase(emb.where(col("vec_id") < cut),
         emb.where(col("vec_id") < cut), t, nClusters, iters)
-      val schema = emb.schema
       val ckpt = graft.TempDirs.scratch("graft_anns_ckpt_")
-      val q = spark.readStream.schema(schema).parquet(stagedFileDir(spark, path))
+      val q = fileStream(spark, path)
         .where(col("vec_id") >= cut)
         .writeStream
         .trigger(Trigger.AvailableNow())
@@ -355,7 +344,7 @@ object Streams {
         }
         .start()
       q.awaitTermination()
-      deleteRecursively(ckpt)
+      graft.TempDirs.deleteRecursively(ckpt)
       t
     }
     AnnIndex.queryTables(spark, s"graft_anni_cent_$tag",
@@ -376,11 +365,11 @@ object Streams {
     * API superseding mapGroupsWithState): a [[UserSpendProcessor]]
     * with a typed ValueState accumulating each user's event count and
     * integer-cents spend. Runs on the RocksDB state-store provider —
-    * the API requires it; the conf is read at query start, so scoping
-    * it around the run is safe (same pattern as the shuffle-partition
-    * scoping in [[runAvailableNow]]). One staged file = one batch, so
-    * update mode emits each user exactly once with the final totals,
-    * equal to the batch per-user aggregate.
+    * the API requires it; the conf is read at query start, so it rides
+    * in [[runAvailableNow]]'s conf scope beside the state-partition
+    * count. One staged file = one batch, so update mode emits each
+    * user exactly once with the final totals, equal to the batch
+    * per-user aggregate.
     */
   def twsUserSpendAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -392,45 +381,70 @@ object Streams {
       .transformWithState(new UserSpendProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
       .toDF("user_id", "n_events", "cents")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runAvailableNow(out, Seq("user_id"), mode = "update")
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case scala.None => spark.conf.unset(key)
-    }
+    runAvailableNow(out, Seq("user_id"), mode = "update",
+      confs = Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
   }
 
-  /** Stream-stream interval join: purchases ⋈ views by user within the
-    * preceding `windowMs`, both sides watermarked (the time-range
-    * condition is what lets Spark bound each side's join state — an
-    * unconstrained stream-stream join would buffer forever). Inner
-    * join + append mode emits each matched (purchase, view) pair once;
-    * equals the batch interval join's pair set.
+  /** The one purchase ⋈ view interval join over an event stream with
+    * an epoch-ms `ts_ms`: each purchase joined to the same user's views
+    * in the preceding `windowMs`, both sides watermarked 1 h (the
+    * time-range condition is what lets Spark bound each side's join
+    * state — an unconstrained stream-stream join would buffer forever).
+    * Output `(purchase_id, view_ms)`; a `left_outer` join emits
+    * `view_ms = -1` for a purchase with no view (BIGINT on both
+    * engines).
+    *
+    * With a heartbeat `cutoff` (see [[stagedEventsWithSentinel]]) each
+    * side assigns its watermark BEFORE its filters and drops rows at or
+    * past the cutoff with a predicate on the watermark column: Catalyst
+    * pushes any predicate NOT referencing that column below the
+    * EventTimeWatermark node (PushPredicateThroughNonJoin), and a
+    * heartbeat filtered below the watermark node never advances the
+    * watermark (measured: a `purchase_id != -1` guard left the
+    * watermark frozen at real-max − delay and the last unmatched
+    * purchase never flushed). Without one, each side filters first.
+    */
+  private[streaming] def intervalJoin(ev: DataFrame, windowMs: Long,
+                                      joinType: String = "inner",
+                                      cutoff: Option[Column] = None): DataFrame = {
+    def side(eventType: String, ts: String, cols: Column*): DataFrame =
+      cutoff match {
+        case None =>
+          ev.where(col("event_type") === eventType)
+            .select(cols :+ timestamp_millis(col("ts_ms")).as(ts): _*)
+            .withWatermark(ts, "1 hour")
+        case Some(c) =>
+          ev.withColumn(ts, timestamp_millis(col("ts_ms")))
+            .withWatermark(ts, "1 hour")
+            .where(col("event_type") === eventType && col(ts) < c)
+            .select(cols :+ col(ts): _*)
+      }
+    val p = side("purchase", "p_ts",
+      col("event_id").as("purchase_id"), col("user_id").as("p_user"))
+    val v = side("view", "v_ts", col("user_id").as("v_user"))
+    val view = unix_millis(col("v_ts"))
+    p.join(v,
+        col("p_user") === col("v_user") &&
+          // millisecond-granularity interval: `INTERVAL n SECONDS` would
+          // silently truncate a windowMs that isn't a whole second and
+          // diverge from the batch/oracle bound (exact milliseconds)
+          col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMs MILLISECONDS") &&
+          col("v_ts") < col("p_ts"),
+        joinType)
+      .select(col("purchase_id"),
+        (if (joinType == "inner") view else coalesce(view, lit(-1L))).as("view_ms"))
+  }
+
+  /** Stream-stream interval join ([[intervalJoin]]) over the events
+    * file stream. Inner join + append mode emits each matched
+    * (purchase, view) pair once; equals the batch interval join's pair
+    * set.
     */
   def intervalJoinAvailableNow(spark: SparkSession, dir: String,
-                               windowMs: Long = 600000L): DataFrame = {
-    val ev = eventsStream(spark, dir)
-    val p = ev.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        timestamp_millis(col("ts_ms")).as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val v = ev.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), timestamp_millis(col("ts_ms")).as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val joined = p.join(v,
-      col("p_user") === col("v_user") &&
-        // millisecond-granularity interval: `INTERVAL n SECONDS` would
-        // silently truncate a windowMs that isn't a whole second and
-        // diverge from the batch/oracle bound (exact milliseconds)
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMs MILLISECONDS") &&
-        col("v_ts") < col("p_ts"))
-      .select(col("purchase_id"), unix_millis(col("v_ts")).as("view_ms"))
-    runAvailableNow(joined, Seq("purchase_id", "view_ms"), mode = "append",
-      statePartitions = Some(8))
-  }
+                               windowMs: Long = 600000L): DataFrame =
+    runAvailableNow(intervalJoin(eventsStream(spark, dir), windowMs),
+      Seq("purchase_id", "view_ms"), mode = "append", statePartitions = Some(8))
 
   /** Staged events source for the OUTER join: the corpus file plus
     * FOUR watermark-heartbeat sentinel files 2/4/6/8 h past the corpus
@@ -457,8 +471,8 @@ object Streams {
     * push below the watermark node.
     * This is the standard idle-source heartbeat pattern, staged as
     * data because the file source has no per-partition idle-timeout
-    * hook; file modification times are forced ascending so
-    * `maxFilesPerTrigger=1` batches corpus → hb1 → hb2 in order.
+    * hook; the stage's part order ([[StagedFiles]]) makes
+    * `maxFilesPerTrigger=1` batch corpus → hb1 → hb2 in order.
     *
     * Round 11 trims the heartbeat count 4 → 2 (the fixture was the
     * sweep's slowest query and drifting up ~1 s/round): at the worst
@@ -472,49 +486,35 @@ object Streams {
     * the flush determinism at this count.
     */
   private def stagedEventsWithSentinel(spark: SparkSession, dir: String,
-                                       nSentinels: Int = 2): String =
-    SessionCache.perContext(spark, ("Streams", s"$dir#sentinel$nSentinels")) {
-      val out = graft.TempDirs.scratch("graft_loj_src_")
-      val path = s"$dir/events.parquet"
-      java.nio.file.Files.createSymbolicLink(
-        out.resolve("0_events.parquet"), java.nio.file.Paths.get(path))
-      val ev = spark.read.parquet(path)
-      // ts is TIMESTAMP(NANOS)-as-long under the session's legacy flag;
-      // handle a genuine timestamp too (same branch as eventsStream)
-      def bump(hours: Long) = ev.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          col("ts") + lit(hours * 3600L * 1000 * 1000 * 1000)
-        case _ => col("ts") + expr(s"INTERVAL $hours HOURS")
+                                       nSentinels: Int = 2): String = {
+    val path = s"$dir/events.parquet"
+    StagedFiles.stage(spark, ("Streams", s"$dir#sentinel$nSentinels"),
+        "graft_loj_src_") {
+      StagedFiles.FilePart(path) +: (1 to nSentinels).map { i =>
+        val hb = latestEventRestamped(spark.read.parquet(path), 2L * i)
+        StagedFiles.FramePart(hb.withColumn("event_type", lit("purchase"))
+          .unionByName(hb.withColumn("event_type", lit("view"))))
       }
-      for (i <- 1 to nSentinels) {
-        val tmp = graft.TempDirs.scratch("graft_loj_tmp_")
-        val base = ev.orderBy(col("ts").desc).limit(1)
-          .withColumn("ts", bump(2L * i))
-          .withColumn("event_id", lit(-1L))
-          .withColumn("user_id", lit(-1L))
-        base.withColumn("event_type", lit("purchase"))
-          .unionByName(base.withColumn("event_type", lit("view")))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).iterator()
-        var moved = false
-        while (part.hasNext && !moved) {
-          val f = part.next()
-          if (f.getFileName.toString.endsWith(".parquet")) {
-            java.nio.file.Files.move(f, out.resolve(s"${i}_sentinel.parquet"))
-            moved = true
-          }
-        }
-        require(moved, s"sentinel $i parquet part file not produced")
-      }
-      // ascending mod times: corpus first, then heartbeats in order
-      val now = System.currentTimeMillis()
-      ("0_events.parquet" +: (1 to nSentinels).map(i => s"${i}_sentinel.parquet"))
-        .zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.setLastModifiedTime(out.resolve(f),
-            java.nio.file.attribute.FileTime.fromMillis(now + i * 2000L))
-        }
-      out.toString
     }
+  }
+
+  /** The corpus' latest event moved `hours` later, keyed `event_id =
+    * user_id = −1` — the row every sentinel file is made of, so its
+    * schema tracks the fixture verbatim. `ts` is TIMESTAMP(NANOS)-as-
+    * long under the session's legacy flag; a genuine timestamp is
+    * handled too (same branch as [[eventsStream]]).
+    */
+  private def latestEventRestamped(ev: DataFrame, hours: Long): DataFrame = {
+    val ts = ev.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        col("ts") + lit(hours * 3600L * 1000 * 1000 * 1000)
+      case _ => col("ts") + expr(s"INTERVAL $hours HOURS")
+    }
+    ev.orderBy(col("ts").desc).limit(1)
+      .withColumn("ts", ts)
+      .withColumn("event_id", lit(-1L))
+      .withColumn("user_id", lit(-1L))
+  }
 
   /** Stream-stream LEFT OUTER interval join: every purchase joined to
     * the views of the same user in the preceding `windowMs`, emitting
@@ -530,44 +530,19 @@ object Streams {
   def leftOuterIntervalJoinAvailableNow(spark: SparkSession, dir: String,
                                         windowMs: Long = 600000L): DataFrame = {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val staged = stagedEventsWithSentinel(spark, dir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+    val raw = StagedFiles.read(spark, stagedEventsWithSentinel(spark, dir),
+      filePerBatch = true)
     val tsMs = graft.Tables.tsMsExpr(raw.schema("ts").dataType)
-    val ev = raw.withColumn("ts_ms", tsMs)
     // Heartbeat cutoff: real events end at the corpus max; heartbeats
-    // start 2 h past it. The heartbeat-dropping predicate MUST
-    // reference the watermark column — Catalyst pushes any predicate
-    // NOT referencing it below the EventTimeWatermark node
-    // (PushPredicateThroughNonJoin), and a heartbeat filtered below
-    // the watermark node never advances the watermark (measured: a
-    // `purchase_id != -1` guard left the watermark frozen at
-    // real-max − delay and the last unmatched purchase never flushed).
-    // the corpus max is a fixture constant per dir — memoized per
-    // SparkContext like the sentinel staging above it (r16: the 1-row
-    // max scan was a full batch job per invocation, paid 3× per bench
-    // measurement)
+    // start 2 h past it. The corpus max is a fixture constant per dir —
+    // memoized per SparkContext like the sentinel staging (r16: the
+    // 1-row max scan was a full batch job per invocation, paid 3× per
+    // bench measurement)
     val maxTs = SessionCache.perContext(spark, ("Streams.maxTs", path)) {
       spark.read.parquet(path).agg(max(tsMs.cast("long"))).head().getLong(0)
     }
-    val cutoff = timestamp_millis(lit(maxTs + 3600000L))
-    val p = ev.withColumn("p_ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("p_ts", "1 hour")
-      .where(col("event_type") === "purchase" && col("p_ts") < cutoff)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("p_ts"))
-    val v = ev.withColumn("v_ts", timestamp_millis(col("ts_ms")))
-      .withWatermark("v_ts", "1 hour")
-      .where(col("event_type") === "view" && col("v_ts") < cutoff)
-      .select(col("user_id").as("v_user"), col("v_ts"))
-    val joined = p.join(v,
-        col("p_user") === col("v_user") &&
-          col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowMs MILLISECONDS") &&
-          col("v_ts") < col("p_ts"),
-        "left_outer")
-      .select(col("purchase_id"),
-        coalesce(unix_millis(col("v_ts")), lit(-1L)).as("view_ms"))
+    val joined = intervalJoin(raw.withColumn("ts_ms", tsMs), windowMs,
+      "left_outer", Some(timestamp_millis(lit(maxTs + 3600000L))))
     // 4 state partitions: the join state is user-keyed and tiny at any
     // SF the fixture runs; fewer stores = less per-batch provider
     // overhead on a 3-batch harness (measured, same result)
@@ -654,145 +629,100 @@ object Streams {
     */
   /** Corpus ∪ one sentinel row PER EVENT TYPE one day past the global
     * max event time — the flush companion for keyed day-fold state
-    * ([[ewmaAvailableNow]]): a day's aggregate is only known complete
-    * when a LATER day arrives on the same key, so the last real day
-    * would otherwise sit in state forever. One sentinel per type
-    * reaches every group (flatMapGroupsWithState state is per-key;
-    * a single sentinel of one type would flush one group only — the
-    * per-branch cousin of the watermark-heartbeat rule in
-    * [[stagedEventsWithSentinel]]). The sentinel is the corpus' latest
-    * row re-stamped, so its schema tracks the fixture verbatim; its
-    * own pending day never folds, so it is invisible in the output.
+    * ([[dayFold]]): a day's aggregate is only known complete when a
+    * LATER day arrives on the same key, so the last real day would
+    * otherwise sit in state forever. One sentinel per type reaches
+    * every group (flatMapGroupsWithState state is per-key; a single
+    * sentinel of one type would flush one group only — the per-branch
+    * cousin of the watermark-heartbeat rule in
+    * [[stagedEventsWithSentinel]]). The sentinel's own pending day
+    * never folds, so it is invisible in the output. Both parts are read
+    * in one batch.
     */
   private def stagedEventsWithTypeSentinels(spark: SparkSession,
-                                            dir: String): String =
-    SessionCache.perContext(spark, ("Streams", s"$dir#typesentinel")) {
-      val out = graft.TempDirs.scratch("graft_ewma_src_")
-      val path = s"$dir/events.parquet"
-      java.nio.file.Files.createSymbolicLink(
-        out.resolve("0_events.parquet"), java.nio.file.Paths.get(path))
+                                            dir: String): String = {
+    val path = s"$dir/events.parquet"
+    StagedFiles.stage(spark, ("Streams", s"$dir#typesentinel"),
+        "graft_ewma_src_") {
       val ev = spark.read.parquet(path)
-      def bump = ev.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          col("ts") + lit(86400L * 1000 * 1000 * 1000)
-        case _ => col("ts") + expr("INTERVAL 1 DAY")
-      }
       val types = ev.select("event_type").distinct()
         .collect().map(_.getString(0)).sorted
-      val base = ev.orderBy(col("ts").desc).limit(1)
-        .withColumn("ts", bump)
-        .withColumn("event_id", lit(-1L))
-        .withColumn("user_id", lit(-1L))
-      val tmp = graft.TempDirs.scratch("graft_ewma_tmp_")
-      types.map(t => base.withColumn("event_type", lit(t)))
-        .reduce(_ unionByName _)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator()
-      var moved = false
-      while (part.hasNext && !moved) {
-        val f = part.next()
-        if (f.getFileName.toString.endsWith(".parquet")) {
-          java.nio.file.Files.move(f, out.resolve("1_sentinel.parquet"))
-          moved = true
-        }
-      }
-      require(moved, "type-sentinel parquet part file not produced")
-      val now = System.currentTimeMillis()
-      Seq("0_events.parquet", "1_sentinel.parquet").zipWithIndex.foreach {
-        case (f, i) => java.nio.file.Files.setLastModifiedTime(out.resolve(f),
-          java.nio.file.attribute.FileTime.fromMillis(now + i * 2000L))
-      }
-      out.toString
+      val base = latestEventRestamped(ev, 24L)
+      Seq(StagedFiles.FilePart(path), StagedFiles.FramePart(
+        types.map(t => base.withColumn("event_type", lit(t))).reduce(_ unionByName _)))
     }
+  }
+
+  /** The keyed day-fold shared by the streaming EWMA and Holt gates:
+    * ordered per-key replay folds each COMPLETED day of an event type
+    * into a recurrence — a day completes when the first later-day row
+    * of the same type arrives, so the staged per-type sentinel (see
+    * [[stagedEventsWithTypeSentinels]]) flushes the final real day and
+    * itself never emits. State per type is (pending day, pending count,
+    * recurrence values, has-previous) — O(1), no watermark needed.
+    * `recur(previous, n)` gives the new values from the previous ones
+    * (`None` before the first completed day) and the day's count `n`;
+    * `emit` shapes one output row per completed day.
+    */
+  private def dayFold[R: TypeTag, O <: Product : TypeTag](
+      spark: SparkSession, dir: String, zero: R, cols: String*)(
+      recur: (Option[R], Long) => R)(
+      emit: (String, Long, Long, R) => O): DataFrame = {
+    import spark.implicits._
+    val raw = StagedFiles.read(spark, stagedEventsWithTypeSentinels(spark, dir))
+    val ev = raw.withColumn("ts_ms",
+      graft.Tables.tsMsExpr(raw.schema("ts").dataType))
+    val out = ev.select(col("event_type").as[String],
+        expr("ts_ms div 86400000").as[Long], col("event_id").as[Long])
+      .as[(String, Long, Long)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState(
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (typ: String, rows: Iterator[(String, Long, Long)],
+         state: GroupState[(Long, Long, R, Boolean)]) =>
+          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
+          var (pd, pc, r, has) =
+            state.getOption.getOrElse((Long.MinValue, 0L, zero, false))
+          val outRows = scala.collection.mutable.ArrayBuffer.empty[O]
+          sorted.foreach { case (_, d, _) =>
+            if (d != pd) {
+              if (pd != Long.MinValue) {
+                r = recur(Option.when(has)(r), pc); has = true
+                outRows += emit(typ, pd, pc, r)
+              }
+              pd = d; pc = 0L
+            }
+            pc += 1
+          }
+          state.update((pd, pc, r, has))
+          outRows.iterator
+      }.toDF(cols: _*)
+    runAvailableNow(out, Seq("event_type", "epoch_day"), mode = "update")
+  }
 
   /** Streaming integer EWMA of daily counts per event type (the 15th
-    * streaming gate): ordered per-key replay folds each COMPLETED day
-    * into the α=1/2 halving recurrence — a day completes when the
-    * first later-day row of the same type arrives, so the staged
-    * per-type sentinel (see [[stagedEventsWithTypeSentinels]]) flushes
-    * the final real day and itself never emits. State per type is
-    * (pending day, pending count, ewma) — O(1), no watermark needed.
+    * streaming gate): [[dayFold]] with the α=1/2 halving recurrence.
     * Equality with the batch [[graft.operators.Relational.eventsEwma]]
     * recurrence is the driver-gated contract.
     */
-  def ewmaAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val staged = stagedEventsWithTypeSentinels(spark, dir)
-    val raw = spark.readStream.schema(schema).parquet(staged)
-    val ev = raw.withColumn("ts_ms",
-      graft.Tables.tsMsExpr(raw.schema("ts").dataType))
-    val out = ev.select(col("event_type").as[String],
-        expr("ts_ms div 86400000").as[Long], col("event_id").as[Long])
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long, Long, Boolean)]) =>
-          // state: (pendingDay, pendingCount, prevEwma, hasPrev)
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var (pd, pc, ew, has) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L, false))
-          val outRows = scala.collection.mutable.ArrayBuffer
-            .empty[(String, Long, Long, Long)]
-          def fold(): Unit = if (pd != Long.MinValue) {
-            val s = if (has) (pc + ew) / 2 else pc
-            outRows += ((typ, pd, pc, s)); ew = s; has = true
-          }
-          sorted.foreach { case (_, d, _) =>
-            if (d != pd) { fold(); pd = d; pc = 0L }
-            pc += 1
-          }
-          state.update((pd, pc, ew, has))
-          outRows.iterator
-      }.toDF("event_type", "epoch_day", "n", "ewma")
-    runAvailableNow(out, Seq("event_type", "epoch_day"), mode = "update")
-  }
+  def ewmaAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    dayFold(spark, dir, 0L, "event_type", "epoch_day", "n", "ewma")(
+      (prev, n) => prev.fold(n)(e => (n + e) / 2))(
+      (typ, day, n, e) => (typ, day, n, e))
 
-  /** Streaming Holt level+trend smoothing — [[ewmaAvailableNow]]'s
-    * day-fold with the two-state recurrence of
-    * [[graft.operators.Relational.eventsHolt]] (lₜ = (nₜ+l+b) div 2,
-    * bₜ = (lₜ−l+b) div 2). Same per-type sentinel flush, same O(1)
-    * state per key — the pattern scales to any fixed-arity recurrence.
+  /** Streaming Holt level+trend smoothing — [[dayFold]] with the
+    * two-state recurrence of [[graft.operators.Relational.eventsHolt]]
+    * (lₜ = (nₜ+l+b) div 2, bₜ = (lₜ−l+b) div 2). Same per-type sentinel
+    * flush, same O(1) state per key.
     */
-  def holtAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val staged = stagedEventsWithTypeSentinels(spark, dir)
-    val raw = spark.readStream.schema(schema).parquet(staged)
-    val ev = raw.withColumn("ts_ms",
-      graft.Tables.tsMsExpr(raw.schema("ts").dataType))
-    val out = ev.select(col("event_type").as[String],
-        expr("ts_ms div 86400000").as[Long], col("event_id").as[Long])
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long, Boolean)]) =>
-          // state: (pendingDay, pendingCount, level, trend, hasPrev)
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var (pd, pc, l, b, has) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L, 0L, false))
-          val outRows = scala.collection.mutable.ArrayBuffer
-            .empty[(String, Long, Long, Long, Long)]
-          def fold(): Unit = if (pd != Long.MinValue) {
-            val nl = if (has) (pc + l + b) / 2 else pc
-            val nb = if (has) (nl - l + b) / 2 else 0L
-            outRows += ((typ, pd, pc, nl, nb)); l = nl; b = nb; has = true
-          }
-          sorted.foreach { case (_, d, _) =>
-            if (d != pd) { fold(); pd = d; pc = 0L }
-            pc += 1
-          }
-          state.update((pd, pc, l, b, has))
-          outRows.iterator
-      }.toDF("event_type", "epoch_day", "n", "level", "trend")
-    runAvailableNow(out, Seq("event_type", "epoch_day"), mode = "update")
-  }
+  def holtAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    dayFold(spark, dir, (0L, 0L),
+        "event_type", "epoch_day", "n", "level", "trend")({
+      case (Some((l, b)), n) =>
+        val nl = (n + l + b) / 2
+        (nl, (nl - l + b) / 2)
+      case (None, n) => (n, 0L)
+    })((typ, day, n, lb) => (typ, day, n, lb._1, lb._2))
 
   /** Per-purchase last-touch attribution as an ordered per-key state
     * replay (flatMapGroupsWithState, the 14th streaming gate): each
@@ -969,70 +899,31 @@ object Streams {
     df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 
-  /** Staged copy of the events table split into TWO parquet files (by
-    * event_id parity) so `maxFilesPerTrigger=1` replays it as two
-    * micro-batches. Cached per sf dir; checkpoints are NOT cached (a
-    * fresh run must reprocess).
+  /** The events table staged as TWO parts (by event_id parity), so a
+    * one-file-per-batch read replays it as two micro-batches, even
+    * half first. Cached per sf dir; checkpoints are NOT cached (a fresh
+    * run must reprocess).
     */
   private def stagedEventsSplit(spark: SparkSession, dir: String): String =
-    SessionCache.perContext(spark, ("Streams", s"$dir#split")) {
-      val out = graft.TempDirs.scratchString("graft_fbu_src_")
+    StagedFiles.stage(spark, ("Streams", s"$dir#split"), "graft_fbu_src_") {
       val ev = graft.Tables.events(spark, dir)
-      ev.where(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(out)
-      stampFresh(out, 1000000L) // even half: fixed old mtime → batch 0
-      ev.where(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(out)
-      stampFresh(out, 2000000L) // odd half: strictly newer → batch 1
-      out
+      Seq(0, 1).map(r => StagedFiles.FramePart(ev.where(col("event_id") % 2 === r)))
     }
 
-  /** Pin the mtimes of NOT-yet-stamped parquet files under `dir` to
-    * the fixed epoch `t` (< any wall clock this code will ever see).
-    * `FileStreamSource` orders files by modification time, so two
-    * write phases stamped 1000000/2000000 replay as two micro-batches
-    * in a deterministic order — wall-clock write mtimes can tie on a
-    * coarse-granularity FS and deliver the halves in either order.
-    * Freshly written files carry a real (≫ 2000000) mtime, so the
-    * `> 2000000` guard stamps exactly the files of the current write
-    * phase and never re-bumps an earlier phase's stamp; the distinct-
-    * stamps invariant is asserted after the second phase.
-    */
-  private def stampFresh(dir: String, t: Long): Unit = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    files.foreach { f =>
-      if (f.lastModified() > 2000000L)
-        require(f.setLastModified(t), s"setLastModified failed: $f")
-    }
-    if (t == 2000000L) {
-      val stamps = files.map(_.lastModified()).toSet
-      require(stamps == Set(1000000L, 2000000L),
-        s"staged two-batch source must carry both stamps, got $stamps")
-    }
-  }
-
-  /** Staged copy of the events table split into TWO parquet files BY
-    * TIME (below/above the median ts) with explicit modification
-    * times, so `maxFilesPerTrigger=1` replays it as two micro-batches
-    * in event-time order — the delivery contract the ordered state
-    * replays ([[attributionAvailableNow]] and the funnel) assume. The
-    * parity split deliberately violates that order (it exists to prove
-    * order-INDEPENDENT folds); this one exists to prove chain state
-    * survives a batch boundary mid-stream.
+  /** The events table staged as TWO parts BY TIME (below/above the
+    * median ts), so a one-file-per-batch read replays it as two
+    * micro-batches in event-time order — the delivery contract the
+    * ordered state replays ([[attributionAvailableNow]] and the funnel)
+    * assume. The parity split deliberately violates that order (it
+    * exists to prove order-INDEPENDENT folds); this one exists to prove
+    * chain state survives a batch boundary mid-stream.
     */
   private def stagedEventsTimeSplit(spark: SparkSession, dir: String): String =
-    SessionCache.perContext(spark, ("Streams", s"$dir#timesplit")) {
-      val out = graft.TempDirs.scratchString("graft_wf_src_")
+    StagedFiles.stage(spark, ("Streams", s"$dir#timesplit"), "graft_wf_src_") {
       val ev = graft.Tables.events(spark, dir)
       val cut = ev.agg(expr("percentile(ts_ms, 0.5D)")).head().getDouble(0)
-      ev.where(col("ts_ms") <= cut)
-        .coalesce(1).write.mode("append").parquet(out)
-      stampFresh(out, 1000000L) // early half: fixed old mtime
-      ev.where(col("ts_ms") > cut)
-        .coalesce(1).write.mode("append").parquet(out)
-      stampFresh(out, 2000000L) // late half: strictly newer → batches second
-      out
+      Seq(ev.where(col("ts_ms") <= cut), ev.where(col("ts_ms") > cut))
+        .map(StagedFiles.FramePart)
     }
 
   /** [[graft.operators.Relational.windowFunnel]] as keyed streaming
@@ -1054,11 +945,8 @@ object Streams {
                                windowHours: Int = 6): DataFrame = {
     import spark.implicits._
     val w = windowHours * 3600000L
-    val staged = stagedEventsTimeSplit(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    val ev = raw
+    val ev = StagedFiles.read(spark, stagedEventsTimeSplit(spark, dir),
+        filePerBatch = true)
       .select(col("user_id").as[Long], col("event_id").as[Long],
         col("event_type").as[String], col("ts_ms").as[Long])
       .as[(Long, Long, String, Long)]
@@ -1124,15 +1012,16 @@ object Streams {
     * rewrites only the touched buckets.
     */
   def foreachBatchUpsertAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val lastPath = runUpsertStream(spark, dir)
-    val latest =
-      if (lastPath == null) {
+    val (root, versions) = runUpsertStream(spark, dir)
+    val latest = versions.lastOption match {
+      case Some(v) => spark.read.parquet(versionPath(root, v))
+      case None =>
         // zero micro-batches staged (empty input): empty state table,
-        // NOT an NPE — same schema as the populated path
+        // same schema as the populated path
         import spark.implicits._
         spark.emptyDataset[(Long, Long, String, Double)]
           .toDF("user_id", "ts_ms", "event_type", "value")
-      } else spark.read.parquet(lastPath)
+    }
     snapshotCols(latest)
   }
 
@@ -1143,44 +1032,77 @@ object Streams {
     .orderBy("user_id")
 
   /** Run the foreachBatch upsert stream over the parity-split events
-    * and return the LATEST version path (null on empty input). The
-    * version directories v0..vN stay on disk for the session — they
-    * are the versioned lake [[lakeTimeTravel]] reads back.
+    * into a fresh lake root; returns the root and its versions. The
+    * version directories stay on disk for the JVM (the root is reaped
+    * at exit) — they are the versioned lake [[lakeTimeTravel]] reads
+    * back.
     */
-  private def runUpsertStream(spark: SparkSession, dir: String): String = {
-    val staged = stagedEventsSplit(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val ckpt = graft.TempDirs.scratch("graft_fbu_ckpt_")
-    val targetRoot = graft.TempDirs.scratch("graft_fbu_tgt_")
-    @volatile var lastPath: String = null
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = lastPath
-        val all =
-          if (prev == null) batch
-          else batch.sparkSession.read.parquet(prev).unionByName(batch)
-        val out = s"$targetRoot/v$batchId"
-        latestPerUser(all).write.mode("overwrite").parquet(out)
-        lastPath = out
-      }
-      .start()
-    q.awaitTermination()
-    // the checkpoint is dead once the AvailableNow run terminates; the
-    // snapshot dirs must outlive this call (read back lazily, and by
-    // the time-travel gate), so they are reaped at JVM exit instead
-    // (targetRoot is registered for exit-time deletion by
-    // TempDirs.scratch); the dead checkpoint goes now
-    deleteRecursively(ckpt)
-    lastPath
+  private def runUpsertStream(spark: SparkSession, dir: String): (String, Seq[Long]) = {
+    val root = graft.TempDirs.scratchString("graft_fbu_tgt_")
+    val staged = StagedFiles.read(spark, stagedEventsSplit(spark, dir),
+      filePerBatch = true)
+    (root, mergeVersions(staged, root) { (prev, batch) =>
+      latestPerUser(prev.fold(batch)(_.unionByName(batch)))
+    })
   }
 
+  /** The one versioned foreachBatch merge. `stream` runs to AvailableNow
+    * completion, and micro-batch `b` writes `root/v<b>` =
+    * `merge(previous, batch)` through [[mergeVersion]] — never
+    * overwriting the version it reads, the overwrite-while-read trap.
+    * The checkpoint is `checkpoint` when the caller keeps it (a restart
+    * resumes from it); otherwise a scratch directory, deleted once the
+    * run ends and it is dead. Returns the versions in numeric order.
+    */
+  private[graft] def mergeVersions(stream: DataFrame, root: String,
+                                   mode: String = "append",
+                                   checkpoint: Option[String] = None)
+                                  (merge: (Option[DataFrame], DataFrame) => DataFrame): Seq[Long] = {
+    val ckpt = checkpoint.getOrElse(graft.TempDirs.scratchString("graft_merge_ckpt_"))
+    stream.writeStream
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        mergeVersion(root, batch, batchId)(merge)
+      }
+      .start()
+      .awaitTermination()
+    if (checkpoint.isEmpty)
+      graft.TempDirs.deleteRecursively(java.nio.file.Paths.get(ckpt))
+    versions(root)
+  }
+
+  /** Write `root/v<batchId>` = `merge(previous, batch)`, where previous
+    * is the newest version STRICTLY BELOW `batchId` (`None` for the
+    * first), looked up on disk. foreachBatch is at-least-once: a batch
+    * re-executed after a crash or a restart rewrites its own version
+    * from the same previous one, so the re-run is idempotent for every
+    * merge shape — including an additive one (IVM), which a lookup of
+    * the newest version, or of the last path written, would count
+    * twice, since that is the batch's own version. The disk lookup is
+    * also what survives a JVM boundary.
+    */
+  private[graft] def mergeVersion(root: String, batch: DataFrame, batchId: Long)
+                                 (merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    val prev = versions(root).filter(_ < batchId).lastOption
+      .map(v => batch.sparkSession.read.parquet(versionPath(root, v)))
+    merge(prev, batch).write.mode("overwrite").parquet(versionPath(root, batchId))
+  }
+
+  /** The `v<n>` version numbers under `root`, in numeric order (v2 before v10). */
+  private[graft] def versions(root: String): Seq[Long] = {
+    val Version = "v(\\d+)".r
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getName)
+      .collect { case Version(n) => n.toLong }.sorted
+  }
+
+  private[graft] def versionPath(root: String, version: Long): String =
+    s"$root/v$version"
+
   /** Lake time-travel: the as-of-version READ half of the versioned
-    * snapshot lake the foreachBatch upsert maintains ([[runUpsertStream]]
+    * snapshot lake the foreachBatch upsert maintains ([[mergeVersions]]
     * writes `v<batchId>` per micro-batch and never overwrites an older
     * version — exactly the snapshot chain an Iceberg/Delta table keeps).
     * Version v's read-back must equal the batch recompute over the
@@ -1192,7 +1114,7 @@ object Streams {
     */
   def lakeTimeTravel(spark: SparkSession, dir: String,
                      version: Int = 0): DataFrame = {
-    snapshotCols(spark.read.parquet(s"${lakeRoot(spark, dir)}/v$version"))
+    snapshotCols(spark.read.parquet(versionPath(lakeRoot(spark, dir), version)))
   }
 
   // the versioned-lake root, built once per (SparkContext, sf dir):
@@ -1200,9 +1122,9 @@ object Streams {
   // the stream per probe
   private def lakeRoot(spark: SparkSession, dir: String): String =
     SessionCache.perContext(spark, ("Streams.lake", dir)) {
-      val last = runUpsertStream(spark, dir)
-      require(last != null, s"no micro-batches staged for $dir")
-      new java.io.File(last).getParent
+      val (root, versions) = runUpsertStream(spark, dir)
+      require(versions.nonEmpty, s"no micro-batches staged for $dir")
+      root
     }
 
   /** Snapshot-retention accounting — the expiry/VACUUM planning pass
@@ -1218,34 +1140,24 @@ object Streams {
   def snapshotExpiry(spark: SparkSession, dir: String,
                      keepLast: Int = 1): DataFrame = {
     val root = lakeRoot(spark, dir)
-    val versions = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName.drop(1).toLong).sorted
-    val cut = versions.max - keepLast + 1
-    versions.map { v =>
-      spark.read.parquet(s"$root/v$v")
+    val vs = versions(root)
+    val cut = vs.max - keepLast + 1
+    vs.map { v =>
+      spark.read.parquet(versionPath(root, v))
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(v).as("version"), col("n_rows"),
           lit(v >= cut).as("retained"))
     }.reduce(_.unionByName(_)).orderBy("version")
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.TempDirs.deleteRecursively(p)
-
-  /** Staged copy of the lineitem table split into TWO parquet files
-    * (by orderkey parity) so `maxFilesPerTrigger=1` replays it as two
-    * micro-batches; cached per sf dir like [[stagedEventsSplit]].
+  /** The lineitem table staged as TWO parts (by orderkey parity), so a
+    * one-file-per-batch read replays it as two micro-batches, even half
+    * first; cached per sf dir like [[stagedEventsSplit]].
     */
   private def stagedLineitemSplit(spark: SparkSession, dir: String): String =
-    SessionCache.perContext(spark, ("Streams", s"$dir#lisplit")) {
-      val out = graft.TempDirs.scratchString("graft_ivm_src_")
+    StagedFiles.stage(spark, ("Streams", s"$dir#lisplit"), "graft_ivm_src_") {
       val li = graft.Tables.lineitem(spark, dir)
-      li.where(col("l_orderkey") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(out)
-      li.where(col("l_orderkey") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(out)
-      out
+      Seq(0, 1).map(r => StagedFiles.FramePart(li.where(col("l_orderkey") % 2 === r)))
     }
 
   /** STREAMING materialized-view maintenance — the realtime form of
@@ -1255,61 +1167,47 @@ object Streams {
     * per-row, so a batch's contribution is self-contained no matter
     * how the stream was cut), aggregates ONLY that slice, and
     * full-outer-merges the group-key-sized delta into a versioned
-    * parquet snapshot of the view (the foreachBatch MERGE shape of
-    * [[foreachBatchUpsertAvailableNow]], applied to an AGGREGATE
-    * instead of latest-row state). Signed sums are associative and
-    * commutative, so driven to completion the final version equals
-    * the batch IVM output — the driver's oracle via the alias map.
+    * parquet snapshot of the view ([[mergeVersions]], the foreachBatch
+    * MERGE shape of [[foreachBatchUpsertAvailableNow]], applied to an
+    * AGGREGATE instead of latest-row state). Signed sums are
+    * associative and commutative, so driven to completion the final
+    * version equals the batch IVM output — the driver's oracle via the
+    * alias map.
     * Scale note: per batch the stored state rewritten is O(group
     * keys), never O(rows seen) — the streaming-materialized-view
     * contract that makes a 100 TB rollup maintainable at all.
     */
   def ivmAggAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedLineitemSplit(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val ckpt = graft.TempDirs.scratch("graft_ivm_ckpt_")
-    val targetRoot = graft.TempDirs.scratch("graft_ivm_tgt_")
-    @volatile var lastPath: String = null
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = graft.operators.Relational.ivmSignedAgg(
-          graft.operators.Relational.ivmSignedRows(batch))
-        val prev = lastPath
-        val merged =
-          if (prev == null) delta
-          else {
-            val m = batch.sparkSession.read.parquet(prev)
-            m.select(col("l_returnflag"), col("cnt").as("m_cnt"),
-                col("sum_qty").as("m_qty"), col("sum_price_c").as("m_price"))
-              .join(delta, Seq("l_returnflag"), "full_outer")
-              .select(col("l_returnflag"),
-                (coalesce(col("m_cnt"), lit(0L)) + coalesce(col("cnt"), lit(0L)))
-                  .as("cnt"),
-                (coalesce(col("m_qty"), lit(0L)) + coalesce(col("sum_qty"), lit(0L)))
-                  .as("sum_qty"),
-                (coalesce(col("m_price"), lit(0L))
-                  + coalesce(col("sum_price_c"), lit(0L))).as("sum_price_c"))
-          }
-        val out = s"$targetRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(out)
-        lastPath = out
-      }
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt)
-    val state =
-      if (lastPath == null) {
+    val root = graft.TempDirs.scratchString("graft_ivm_tgt_")
+    val staged = StagedFiles.read(spark, stagedLineitemSplit(spark, dir),
+      filePerBatch = true)
+    val versions = mergeVersions(staged, root) { (prev, batch) =>
+      val delta = graft.operators.Relational.ivmSignedAgg(
+        graft.operators.Relational.ivmSignedRows(batch))
+      prev.fold(delta)(ivmMerge(_, delta))
+    }
+    val state = versions.lastOption match {
+      case Some(v) => spark.read.parquet(versionPath(root, v))
+      case None =>
         import spark.implicits._
         spark.emptyDataset[(String, Long, Long, Long)]
           .toDF("l_returnflag", "cnt", "sum_qty", "sum_price_c")
-      } else spark.read.parquet(lastPath)
+    }
     state.where(col("cnt") > 0).orderBy("l_returnflag")
   }
+
+  /** A stored IVM view plus a batch's signed delta, per return flag. */
+  private def ivmMerge(view: DataFrame, delta: DataFrame): DataFrame =
+    view.select(col("l_returnflag"), col("cnt").as("m_cnt"),
+        col("sum_qty").as("m_qty"), col("sum_price_c").as("m_price"))
+      .join(delta, Seq("l_returnflag"), "full_outer")
+      .select(col("l_returnflag"),
+        (coalesce(col("m_cnt"), lit(0L)) + coalesce(col("cnt"), lit(0L)))
+          .as("cnt"),
+        (coalesce(col("m_qty"), lit(0L)) + coalesce(col("sum_qty"), lit(0L)))
+          .as("sum_qty"),
+        (coalesce(col("m_price"), lit(0L))
+          + coalesce(col("sum_price_c"), lit(0L))).as("sum_price_c"))
 
   /** Stream-static join: the event stream enriched against a BATCH
     * dimension (customer → nation) then aggregated. The static side is

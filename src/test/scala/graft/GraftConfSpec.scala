@@ -31,4 +31,20 @@ class GraftConfSessionSpec extends SparkSpec {
       assert(spark.conf.get(k) == v, s"conf $k must be $v")
     }
   }
+
+  test("scoped sets its confs for the body, then restores each or unsets it, also on a throw") {
+    val s = spark.newSession()
+    val (set, unset) = ("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    s.conf.set(set, "7")
+    s.conf.unset(unset)
+    def after() = assert(s.conf.get(set) == "7" && !s.conf.getAll.contains(unset))
+    val seen = GraftConf.scoped(s, set -> "3", unset -> "false")(
+      (s.conf.get(set), s.conf.get(unset)))
+    assert(seen == ("3", "false"))
+    after()
+    intercept[IllegalStateException](
+      GraftConf.scoped(s, set -> "4", unset -> "true")(throw new IllegalStateException("body")))
+    after()
+  }
 }

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * unless it is named below with the reason it is not a memo. Likewise
   * every checkpoint is freed through [[graft.operators.Iterate]]'s one
   * `release`, and every hand-rolled `TypedImperativeAggregate` is named
-  * with the reason no Spark built-in serves.
+  * with the reason no Spark built-in serves. A session conf is set
+  * only by [[graft.GraftConf.scoped]], and a file's modification time
+  * only by [[graft.streaming.StagedFiles]].
   */
 class StagingAuditSpec extends AnyFunSuite {
 
@@ -67,19 +69,36 @@ class StagingAuditSpec extends AnyFunSuite {
         stray.map { case (f, o, l) => s"  $f ($o): $l" }.mkString("\n"))
   }
 
-  test("no unpersist or checkpoint-file handling outside the round-loop module") {
-    val Release = """unpersist\(|getCheckpointFile""".r
+  /** Fails on a line matching `pattern` in any file but `owner`, naming
+    * each as `file:line`; `owner` must itself match (the audit cannot
+    * pass by scanning nothing).
+    */
+  private def assertOnlyIn(owner: String, pattern: String, fix: String): Unit = {
+    val re = pattern.r
     val found = sources.flatMap { case (rel, lines) =>
       lines.zipWithIndex.collect {
-        case (l, i) if Release.findFirstIn(l).isDefined => (rel, i + 1, l.trim)
+        case (l, i) if re.findFirstIn(l).isDefined => (rel, i + 1, l.trim)
       }
     }
-    assert(found.exists(_._1 == "operators/Iterate.scala"),
-      s"audit found no release in operators/Iterate.scala under $root")
-    val stray = found.filterNot(_._1 == "operators/Iterate.scala")
+    assert(found.exists(_._1 == owner), s"audit found no $pattern in $owner under $root")
+    val stray = found.filterNot(_._1 == owner)
     assert(stray.isEmpty,
-      "free checkpoints through Iterate.release:\n" +
-        stray.map { case (f, n, l) => s"  $f:$n: $l" }.mkString("\n"))
+      s"$fix:\n" + stray.map { case (f, n, l) => s"  $f:$n: $l" }.mkString("\n"))
+  }
+
+  test("no unpersist or checkpoint-file handling outside the round-loop module") {
+    assertOnlyIn("operators/Iterate.scala", """unpersist\(|getCheckpointFile""",
+      "free checkpoints through Iterate.release")
+  }
+
+  test("no session conf set or unset outside the one conf scope") {
+    assertOnlyIn("GraftConf.scala", """conf\.(set|unset)\(""",
+      "set session confs through GraftConf.scoped")
+  }
+
+  test("no modification time set outside the one stager") {
+    assertOnlyIn("streaming/StagedFiles.scala", """setLastModified""",
+      "order staged files through StagedFiles")
   }
 
   /** Hand-rolled aggregates that stay, each with why Spark's own does

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftSparkInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.streaming.Streams
 
@@ -329,5 +333,63 @@ class StreamsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got.nonEmpty, "the sf0.001 fixture must produce probe hits")
     assert(got == want)
+  }
+
+  test("ordered stages leave the fixture untouched and hold only their own files") {
+    val fixture = java.nio.file.Paths.get(sf0001, "events.parquet")
+    val before = Files.getLastModifiedTime(fixture)
+    val sources = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.sources.foreach(s => sources.add(s.description))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val outer = try {
+      val first = Streams.leftOuterIntervalJoinAvailableNow(spark, sf0001)
+        .as[(Long, Long)].collect().toSeq.sorted
+      Streams.ewmaAvailableNow(spark, sf0001).collect()
+      Streams.holtAvailableNow(spark, sf0001).collect()
+      GraftSparkInternals.waitListenerBusEmpty(spark.sparkContext)
+      first
+    } finally spark.streams.removeListener(listener)
+    assert(Files.getLastModifiedTime(fixture) == before, "staging moved the fixture's mtime")
+    val Source = """FileStreamSource\[(.+)\]""".r
+    val stages = sources.asScala.toSet[String].collect {
+      case Source(p) => java.nio.file.Paths.get(new java.net.URI(p)).toRealPath()
+    }
+    assert(stages.size == 2, s"expected the outer-join and the day-fold stages, got $stages")
+    for (stage <- stages; f <- Files.list(stage).iterator().asScala) {
+      assert(!Files.isSymbolicLink(f) && f.toRealPath().startsWith(stage),
+        s"$f lies outside its stage $stage")
+    }
+    val again = Streams.leftOuterIntervalJoinAvailableNow(spark, sf0001)
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(again == outer)
+  }
+
+  test("versioned merge: a re-executed batch rewrites its version identically; versions sort numerically") {
+    import org.apache.spark.sql.functions.sum
+    val root = graft.TempDirs.scratchString("graft_versions_")
+    // the IVM shape: the merge ADDS the batch to the previous version
+    def add(prev: Option[org.apache.spark.sql.DataFrame],
+            b: org.apache.spark.sql.DataFrame) =
+      prev.fold(b)(_.unionByName(b).groupBy("k").agg(sum("n").as("n")))
+    def rows(v: Long) = spark.read.parquet(Streams.versionPath(root, v))
+      .as[(String, Long)].collect().toSeq.sorted
+    Streams.mergeVersion(root, Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), 0)(add)
+    val batch1 = Seq(("a", 10L), ("c", 5L)).toDF("k", "n")
+    Streams.mergeVersion(root, batch1, 1)(add)
+    val v1 = rows(1)
+    assert(v1 == Seq(("a", 11L), ("b", 2L), ("c", 5L)))
+    Streams.mergeVersion(root, batch1, 1)(add)
+    assert(rows(1) == v1, "re-executing batch 1 counted it twice")
+    for (v <- Seq(2L, 10L))
+      Streams.mergeVersion(root, Seq(("z", v)).toDF("k", "n"), v)(add)
+    assert(Streams.versions(root) == Seq(0L, 1L, 2L, 10L))
+    // v10 merges onto v2, the newest version below it
+    assert(rows(10) == Seq(("a", 11L), ("b", 2L), ("c", 5L), ("z", 12L)))
   }
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{ExternalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -16,6 +16,7 @@ import org.apache.spark.{GraftSparkInternals, HashPartitioner, ShuffleDependency
 
 import graft.operators.WordCount
 import graft.sources.TextDirectory
+import graft.streaming.Streams
 
 /** End-to-end test of the reference-fidelity source/sink: a directory
   * of plain-text files in, `word count` text shards out — the complete
@@ -171,25 +172,78 @@ class TextDirectorySpec extends SparkSpec {
     }
   }
 
-  test("writeSharded restores both confs after a write and after a failed one") {
+  private val partitions = "spark.sql.shuffle.partitions"
+  private val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+  private val provider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** On a fresh session whose keys start as `start` (a value, or
+    * unset), runs `ok` and then `fail`, which must throw; afterwards
+    * every key must read exactly as before: an unset key stays unset,
+    * a set key keeps its value.
+    */
+  private def assertScopeExact(start: Seq[(String, Option[String])],
+                               ok: SparkSession => Unit,
+                               fail: SparkSession => Unit): Unit = {
     val s = spark.newSession()
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
-    s.conf.set(keys.head, "5")
-    s.conf.unset(keys(1))
-    def state = keys.map(k => (s.conf.getOption(k), s.conf.getAll.contains(k)))
+    start.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+    def state = start.map { case (k, _) => (s.conf.getOption(k), s.conf.getAll.contains(k)) }
     val before = state
-    assert(!before(1)._2, "the coalescing key should start unset")
+    assert(before.map(_._2) == start.map(_._2.isDefined), s"start state $start")
+    ok(s)
+    assert(state == before, s"after a normal return from $start")
+    intercept[Exception](fail(s))
+    assert(state == before, s"after a throwing body from $start")
+  }
+
+  /** An events table whose one row has a NULL user_id: a stream over it
+    * fails at run time, when the row is decoded as a primitive Long.
+    */
+  private lazy val nullUserEvents: String = {
+    val dir = TempDirs.scratch("graft_bad_events_")
+    val tmp = TempDirs.scratch("graft_bad_events_tmp_")
+    spark.createDataFrame(Seq((Option.empty[Long], 0L, 1.0, "view")))
+      .toDF("user_id", "ts", "value", "event_type")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = Files.list(tmp).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, dir.resolve("events.parquet"))
+    dir.toString
+  }
+
+  // the three callers of GraftConf.scoped: (test name, starting states,
+  // a normal call, a throwing call), each given the corpus dir
+  private val scopeCallers: Seq[(String, Seq[Seq[(String, Option[String])]],
+                                 (SparkSession, String) => Unit,
+                                 (SparkSession, String) => Unit)] = Seq(
+    ("writeSharded restores both confs after a write and after a failed one",
+      Seq(Seq(partitions -> Some("5"), coalescing -> None),
+        Seq(partitions -> None, coalescing -> Some("true"))),
+      (s, dir) => TextDirectory.writeSharded(TextDirectory.wordCountDir(s, dir),
+        Files.createTempDirectory("graft_scope").toString + "/ok", 2),
+      (s, dir) => {
+        val file = Files.createTempFile("graft_scope", ".txt")
+        // an overwrite deletes a regular file at the output path itself;
+        // a path beneath one cannot be created
+        TextDirectory.writeSharded(TextDirectory.wordCountDir(s, dir), s"$file/sharded", 2)
+      }),
+    ("runAvailableNow restores the state-partition count after a run and after a failed one",
+      Seq(Seq(partitions -> None), Seq(partitions -> Some("3"))),
+      (s, dir) => Streams.runAvailableNow(Streams.wordCountStream(s, dir), Seq("word")),
+      (s, dir) => Streams.runAvailableNow(Streams.wordCountStream(s, dir), Seq("word"),
+        mode = "no_such_mode")),
+    ("twsUserSpendAvailableNow restores the state-store provider after a run and after a failed one",
+      Seq(Seq(provider -> None),
+        Seq(provider -> Some(
+          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))),
+      (s, _) => Streams.twsUserSpendAvailableNow(s, sf0001),
+      (s, _) => Streams.twsUserSpendAvailableNow(s, nullUserEvents)))
+
+  for ((name, starts, ok, fail) <- scopeCallers) test(name) {
     withCorpus { dir =>
-      val counts = TextDirectory.wordCountDir(s, dir)
-      val out = Files.createTempDirectory("graft_scope").toFile
-      TextDirectory.writeSharded(counts, s"$out/ok", 2)
-      assert(state == before, "after a write")
-      val file = new java.io.File(out, "file")
-      Files.writeString(file.toPath, "x")
-      // an overwrite deletes a regular file at the output path itself;
-      // a path beneath one cannot be created
-      intercept[Exception](TextDirectory.writeSharded(counts, s"$file/sharded", 2))
-      assert(state == before, "after a failed write")
+      starts.foreach(st => assertScopeExact(st, ok(_, dir), fail(_, dir)))
     }
   }
 }
