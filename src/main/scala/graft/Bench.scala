@@ -1,6 +1,5 @@
 package graft
 
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints the per-query JSON line, BRACKETED by
   * an identical compact headline line before and after it (captures
@@ -9,57 +8,58 @@ package graft
   * which lets Catalyst prune most of the work); a small warmup query
   * absorbs JVM/session startup so measured numbers are steady-state.
   *
-  * Round-13 budget hardening (BENCH_r12 was rc 124 with `wordcount`
-  * itself unmeasured — the sweep was cut at the alphabetical tail and
-  * every unreached query charged a 600 s penalty):
-  *
-  *  - HEAVIEST-FIRST order: queries run by descending last-capture
-  *    time (read from the committed BENCH_SELF.json; queries with no
-  *    prior — i.e. new this round — run first, as unknown cost). A
-  *    budget-cut sweep now truncates the cheap tail, never the
-  *    flagship queries. The output map stays name-keyed, so ordering
-  *    is invisible to consumers.
-  *  - INCREMENTAL flush: the per-query map is rewritten to
-  *    SPARK_GRAFT_BENCH_OUT after EVERY query (marked "partial":true
-  *    until the sweep completes). A killed sweep keeps everything it
-  *    measured instead of recording nothing but penalties.
-  *  - ADAPTIVE repeats: run 1 pays Catalyst plan compile + JIT (~3×
-  *    inflation on complex plans), so every query gets ≥ 2 runs and
-  *    reports the min; the third run happens when the first two
-  *    disagree by > 20% OR the query is expensive (min > 1.0 s) —
-  *    regression adjudication reads the heavy queries' minimums, so
-  *    those keep full min-of-3, while cheap stable queries take a
-  *    min-of-2 fast path, cutting sweep wall-clock by ~⅓.
-  *  - STAGING pre-warm (ADVICE r13): the session-staged families
+  *  - HEAVIEST-FIRST order ([[orderNames]]) from the committed
+  *    ordering prior, so a sweep cut by its time budget truncates the
+  *    cheap tail, never the flagship queries (an alphabetical sweep
+  *    once lost its tail, `wordcount` included, at 600 s a query).
+  *    The output map stays name-keyed, so ordering is invisible to
+  *    consumers.
+  *  - INCREMENTAL flush: the per-query map is rewritten to the output
+  *    path ([[paths]]) after EVERY query (marked "partial":true until
+  *    the sweep completes), so a killed sweep keeps what it measured.
+  *  - ADAPTIVE repeats: run 1 pays Catalyst plan compile + JIT (~3× on
+  *    complex plans), so every query reports the min of ≥ 2 runs; a
+  *    third runs when the first two disagree by > 20% or the min
+  *    exceeds 1 s. The heavy minimums regression adjudication reads
+  *    keep min-of-3; cheap stable queries cut the sweep by ~⅓.
+  *  - STAGING pre-warm: the session-staged families
   *    (DedupStage/CfIndex/AnnIndex) derive their shared state BEFORE
-  *    any timed run, and the derivation cost is reported as its own
-  *    top-level `staging` field. Without this, whichever staged-family
-  *    gate the prior-file order happened to run first paid the
-  *    derivation in its run 1 — discarded by min, but leaving run-1
-  *    noise and wall-clock attribution order-dependent round-over-
-  *    round. Deliberately-live derivations (the d=2 fuzzy gate) are
-  *    not pre-warmed — the sweep still measures them.
+  *    any timed run and report its cost as the top-level `staging`
+  *    field; otherwise whichever staged gate ran first would carry the
+  *    derivation in its run 1, order-dependently. Deliberately-live
+  *    derivations (the d=2 fuzzy gate) are not pre-warmed.
   */
 object Bench {
   /** Sweep order: by DESCENDING last-capture time, alphabetical within
-    * ties; queries with no prior (new this round) first. A budget-cut
-    * sweep then truncates the cheap tail, never the flagship queries.
+    * ties; queries with no prior first, as unknown cost.
     */
   private[graft] def orderNames(names: Seq[String],
                                 prior: Map[String, Double]): Seq[String] =
     names.sorted.sortBy(n => -prior.getOrElse(n, Double.MaxValue))
 
-  /** Excursion detector (round 15, VERDICT r14 #4): BENCH_r14 carries
-    * `word_hits` 66.9 s and `corpus_build_v3` 59.8 s — lone host
-    * stalls 13–20× the same-code steady state that became the round's
-    * permanent record AND the next sweep's ordering prior. A measured
-    * min is an excursion worth one end-of-sweep re-run when it exceeds
-    * 3× the committed prior and is expensive enough (> 1 s) that the
-    * ratio is not sub-second noise-floor jitter. Failed queries (−1)
-    * are not excursions — they must stay loud.
+  /** Excursion detector: a lone host stall can read 13–20× the
+    * same-code steady state (`word_hits` once read 66.9 s against
+    * 3.3 s) and would become both the record and the next sweep's
+    * ordering prior. A measured min is an excursion worth one
+    * end-of-sweep re-run when it exceeds 3× the committed prior and is
+    * expensive enough (> 1 s) that the ratio is not sub-second
+    * noise-floor jitter. Failed queries (−1) are not excursions — they
+    * must stay loud.
     */
   private[graft] def isExcursion(min: Double, prior: Double): Boolean =
     prior > 0 && min > 3 * prior && min > 1.0
+
+  /** (output, prior) paths from the environment and the working
+    * directory. The prior defaults to the committed `BENCH_SELF.json`;
+    * the output defaults to the gitignored `target/BENCH_SELF.json`,
+    * so a default sweep never rewrites the prior it ordered by.
+    * `SPARK_GRAFT_BENCH_OUT` and `SPARK_GRAFT_BENCH_PRIOR` override
+    * either.
+    */
+  private[graft] def paths(env: Map[String, String],
+                           cwd: String): (String, String) =
+    (env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"$cwd/target/BENCH_SELF.json"),
+     env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", s"$cwd/BENCH_SELF.json"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -78,12 +78,12 @@ object Bench {
     // each getter localCheckpoints/saves on first call, so count() /
     // the cheapest consumer forces materialization. Best-effort: a
     // failed pre-warm just returns the old run-1 behavior.
-    // r16: the nine family chains are INDEPENDENT, so they overlap on
-    // a small driver thread pool (guide §2.6 — Spark happily runs
-    // concurrent jobs; each chain's tail leaves cores the next chain's
-    // tasks back-fill). Within a chain order is preserved (ccLabels
-    // derives from pairs, fuzzyClusters from fuzzyPairs) so dependent
-    // derivations stay single-computed. Sequential staging measured
+    // The nine family chains are INDEPENDENT, so they overlap on a
+    // small driver thread pool (Spark happily runs concurrent jobs;
+    // each chain's tail leaves cores the next chain's tasks back-fill).
+    // Within a chain order is preserved (ccLabels derives from pairs,
+    // fuzzyClusters from fuzzyPairs) so dependent derivations stay
+    // single-computed. Sequential staging measured
     // 36-77 s; overlapped ~⅓ of that on the same host. Best-effort as
     // before: a failed chain just returns the old run-1 behavior, but
     // is reported on stderr (chain index, exception class, message).
@@ -125,10 +125,10 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // deterministic run counters (VERDICT r14 #1/#2): jobs, tasks,
-    // shuffle bytes/records, scheduler latency per query — recorded
-    // alongside seconds so host-vs-code adjudication is mechanical
-    // (benchdiff auto-classifies: seconds up + counters flat = host)
+    // deterministic run counters: jobs, tasks, shuffle bytes/records,
+    // scheduler latency per query — recorded alongside seconds so
+    // host-vs-code adjudication is mechanical (benchdiff
+    // auto-classifies: seconds up + counters flat = host)
     val meter = BenchMetrics.install(spark.sparkContext)
 
     def once(name: String): (Double, BenchMetrics.Snap) = {
@@ -141,15 +141,11 @@ object Bench {
       } catch { case e: Throwable => report(name, e); (-1.0, null) }
     }
 
-    // last-capture per-query seconds, for the heaviest-first order:
-    // SPARK_GRAFT_BENCH_PRIOR if set, else the repo's committed
-    // BENCH_SELF.json next to the output path. Regex-parsed ("name":N
-    // pairs) — the non-query headline keys it also picks up ("value",
-    // "sf") never collide with query names.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      sys.props.getOrElse("user.dir", ".") + "/BENCH_SELF.json")
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
-      sys.props.getOrElse("user.dir", ".") + "/BENCH_SELF.json")
+    // last-capture per-query seconds, for the heaviest-first order.
+    // Regex-parsed ("name":N pairs) — the non-query headline keys it
+    // also picks up ("value", "sf") never collide with query names.
+    val (outPath, priorPath) =
+      paths(sys.env, sys.props.getOrElse("user.dir", "."))
     val prior: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(priorPath)), "UTF-8")
@@ -183,9 +179,11 @@ object Bench {
         s""""unit":"sec","n_queries":${done.size},"queries":$qs,""" +
         s""""failed":$failedJson,"staging":$stagingSec,""" +
         s""""qmetrics":$qm,"excursions":$exc,"sf":"$sfDir"}"""
-      try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (full + "\n").getBytes("UTF-8"))
-      catch {
+      try {
+        val out = java.nio.file.Paths.get(outPath)
+        Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
+      } catch {
         case e: Throwable => System.err.println(
           s"[bench] could not write $outPath: ${e.getClass.getName}: ${e.getMessage}")
       }
@@ -225,9 +223,9 @@ object Bench {
       results += name -> measure(name)
       writeOut(results.toSeq, partial = true)
     }
-    // end-of-sweep excursion retry (VERDICT r14 #4): a min > 3× its
-    // committed prior is re-measured ONCE now that the host has moved
-    // past whatever stalled it; the original value is preserved in the
+    // end-of-sweep excursion retry: a min > 3× its committed prior is
+    // re-measured ONCE now that the host has moved past whatever
+    // stalled it; the original value is preserved in the
     // `excursions` field so the stall is recorded, not laundered, and
     // the query's reported value stays the min over ALL its runs —
     // the sweep's existing methodology.
@@ -252,21 +250,19 @@ object Bench {
     val total = sortedR.map(_._2).filter(_ >= 0).sum + 600.0 * failed.size
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // compact headline FIRST: a tail-truncated capture of the big
-    // per-query line (it happened to BENCH_r02.json) must still retain
-    // the total + failure list
+    // per-query line must still retain the total + failure list
     val headline =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${sortedR.size},"failed":$failedJson,"sf":"$sfDir"}"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"staging":$stagingSec,"sf":"$sfDir"}"""
     println(headline)
     println(full)
-    // ...and AGAIN after it: BENCH_r04.json was tail-captured (kept the
-    // END of output), which lost the leading headline — emitting it on
-    // both sides survives truncation from either direction.
+    // ...and AGAIN after it: a capture that keeps only the END of the
+    // output loses the leading headline — emitting it on both sides
+    // survives truncation from either direction.
     println(headline)
-    // The stdout capture has been truncated to ~15% of the per-query
-    // map every round; the full map is also persisted at outPath
-    // (final form: no "partial" flag).
+    // A stdout capture can keep a fraction of the per-query map; the
+    // full map is also persisted at outPath, without "partial".
     writeOut(results.toSeq, partial = false)
     spark.stop()
   }

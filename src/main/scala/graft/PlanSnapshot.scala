@@ -13,22 +13,14 @@ package graft
   * `tools/plandiff.py`; only queries whose skeleton digest changed
   * need a human look.
   *
-  * The round-9 q21 digest flake is ROOT-CAUSED (round 10): Spark's
-  * `RewriteDistinctAggregates` expands a multi-`countDistinct`
-  * aggregate through gid-tagged groups whose NUMBERING and key order
-  * come from hash-collection iteration over expression groups —
-  * per-JVM nondeterministic, semantically irrelevant (captured
-  * variants differ ONLY by gid 1↔2 and the matching column
-  * permutation in Expand/intermediate HashAggregates/their Exchange).
-  * [[canonGid]] canonicalizes gid-bearing lines SURGICALLY: the gid
-  * filter literals (`gid#x = k`) → `n`, each Expand projection
-  * group's TRAILING constant (the gid tag) → `n`, and the top-level
-  * projection groups of the Expand list sorted — exactly the three
-  * spots the rewrite's labeling freedom touches. Within-group column
-  * order, non-trailing constants, and every non-gid line stay
-  * verbatim, so a changed projection constant or reordered output
-  * column still flips the digest (round-11 narrowing of the round-10
-  * whole-line segment sort, which over-normalized).
+  * Spark's `RewriteDistinctAggregates` numbers the gid groups of a
+  * multi-`countDistinct` aggregate from hash-collection iteration: per
+  * JVM, and semantically irrelevant. [[canonGid]] canonicalizes only
+  * what that labeling touches (the `gid#x = k` literals, each Expand
+  * group's gid tag, the order of the groups); within-group column
+  * order, other constants and every non-gid line stay verbatim, so a
+  * real plan change still flips the digest. NOTES "Plan snapshot:
+  * keeping digests stable" lists the rules.
   */
 object PlanSnapshot {
   /** Strip everything session- or data-dependent from a plan line so
@@ -57,7 +49,7 @@ object PlanSnapshot {
         // maintenance-generation suffix (_g<N> on compacted/rebuilt
         // ANN tables): the counter is per-JVM — a second maintenance
         // round on one tag would shift every later generation number
-        // and flip digests that are plan-identical (ADVICE r12)
+        // and flip digests that are plan-identical
         .replaceAll("(_TAG)_g\\d+", "$1_gN")
         .replaceAll("(graft_bkt_\\w+?_)[0-9a-f]+", "$1TAG")
         .replaceAll("(graft_cfx_\\w+?_)[0-9a-f]+", "$1TAG")
@@ -323,6 +315,22 @@ object PlanSnapshot {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
+  /** One gate's entry: the digest of `query`'s normalized executed
+    * plan, or with `full` the normalized skeleton itself. A query that
+    * fails to build or plan records `ERROR <exception class>` and
+    * prints the class and message to stderr.
+    */
+  private[graft] def fingerprint(name: String, full: Boolean)(
+      query: => org.apache.spark.sql.DataFrame): String =
+    try {
+      val p = query.queryExecution.executedPlan.toString
+      if (full) normalize(p).mkString("\n") else digest(normalize(p))
+    } catch { case e: Throwable =>
+      Console.err.println(
+        s"[plansnap] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      s"ERROR ${e.getClass.getName}"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -338,11 +346,7 @@ object PlanSnapshot {
     val entries = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
       .map { name =>
-      val fp = try {
-        val p = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        if (full) normalize(p).mkString("\n") else digest(normalize(p))
-      } catch { case _: Throwable => "ERROR" }
+      val fp = fingerprint(name, full)(SparkEntry.queries(name)(spark, sfDir))
       s""""$name":${Json.quote(fp)}"""
     }
     val json = entries.mkString("{", ",", "}")

@@ -158,11 +158,6 @@ object Streams {
     runAvailableNow(windowedEventCounts(eventsStream(spark, dir)),
       Seq("window_start_ms", "event_type"))
 
-  /** [[streamingDedup]] over the documents file stream (synthetic
-    * event time = doc_id ms), driven to completion in append mode; the
-    * surviving fingerprint set equals batch `SELECT DISTINCT md5(text)`
-    * regardless of which duplicate row won the race.
-    */
   /** Streaming MODEL SERVING (24th streaming gate): score the
     * documents file stream with the trained classifier
     * ([[graft.operators.TextAnalysis.classifierTrain]] weights from
@@ -203,6 +198,11 @@ object Streams {
     runAvailableNow(scored, Seq("doc_id"), mode = "append")
   }
 
+  /** [[streamingDedup]] over the documents file stream (synthetic
+    * event time = doc_id ms), driven to completion in append mode; the
+    * surviving fingerprint set equals batch `SELECT DISTINCT md5(text)`
+    * regardless of which duplicate row won the race.
+    */
   def dedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     // synthetic event time offset above 0: a row at epoch 0 ties the
     // stream's INITIAL watermark and is dropped as late data
@@ -618,15 +618,6 @@ object Streams {
       .toDF("user_id", "n_sessions")
   }
 
-  /** Full session ROWS via `flatMapGroupsWithState` — the multi-row
-    * custom-state API (mapGroupsWithState emits exactly one row per
-    * group; this emits one per session). Events arrive in one staged
-    * batch, so each user's history is sessionized in one invocation and
-    * the emitted rows equal batch
-    * [[graft.operators.Relational.sessions]]. Per-user buffering is
-    * bounded by events/user (the sessionization sort), same contract as
-    * the batch window.
-    */
   /** Corpus ∪ one sentinel row PER EVENT TYPE one day past the global
     * max event time — the flush companion for keyed day-fold state
     * ([[dayFold]]): a day's aggregate is only known complete when a
@@ -819,6 +810,15 @@ object Streams {
       .orderBy("user_id")
   }
 
+  /** Full session ROWS via `flatMapGroupsWithState` — the multi-row
+    * custom-state API (mapGroupsWithState emits exactly one row per
+    * group; this emits one per session). Events arrive in one staged
+    * batch, so each user's history is sessionized in one invocation and
+    * the emitted rows equal batch
+    * [[graft.operators.Relational.sessions]]. Per-user buffering is
+    * bounded by events/user (the sessionization sort), same contract as
+    * the batch window.
+    */
   def sessionRows(spark: SparkSession, events: DataFrame,
                   gapMs: Long = 1800000L): DataFrame = {
     import spark.implicits._

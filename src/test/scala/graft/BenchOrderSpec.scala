@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-13 bench-budget ordering contract (BENCH_r12 was rc 124
-  * with the alphabetical tail — `wordcount` included — unmeasured).
+/** The bench-budget ordering contract (an alphabetical sweep cut by
+  * its time budget leaves the tail, `wordcount` included, unmeasured),
+  * and where a sweep reads its ordering prior and writes its map.
   */
 class BenchOrderSpec extends AnyFunSuite {
 
@@ -24,10 +25,10 @@ class BenchOrderSpec extends AnyFunSuite {
       Seq("a", "b", "c"))
   }
 
-  // Round-15 excursion retry (VERDICT r14 #4): a stall 13-20x the
-  // committed prior (word_hits 66.9 s vs 3.3 s steady state in
-  // BENCH_r14) earns one end-of-sweep re-run; noise-floor jitter,
-  // new queries and failures do not.
+  // Excursion retry: a host stall 13-20x the committed prior
+  // (word_hits once read 66.9 s against a 3.3 s steady state) earns
+  // one end-of-sweep re-run; noise-floor jitter, new queries and
+  // failures do not.
   test("excursion: >3x the committed prior and >1s") {
     assert(Bench.isExcursion(66.9, 3.3))
     assert(Bench.isExcursion(3.1, 1.0))
@@ -38,5 +39,21 @@ class BenchOrderSpec extends AnyFunSuite {
     assert(!Bench.isExcursion(0.9, 0.1)) // >3x but under the 1s floor
     assert(!Bench.isExcursion(5.0, 0.0)) // no committed prior
     assert(!Bench.isExcursion(-1.0, 2.0)) // failed stays loud, no retry
+  }
+
+  test("paths: a default sweep writes under target/, never over the prior") {
+    val (out, prior) = Bench.paths(Map.empty, "/repo")
+    assert(prior == "/repo/BENCH_SELF.json")
+    assert(out == "/repo/target/BENCH_SELF.json")
+    assert(out != prior)
+  }
+
+  test("paths: SPARK_GRAFT_BENCH_OUT and SPARK_GRAFT_BENCH_PRIOR still win") {
+    assert(Bench.paths(Map("SPARK_GRAFT_BENCH_OUT" -> "/x/out.json"), "/repo") ==
+      (("/x/out.json", "/repo/BENCH_SELF.json")))
+    assert(Bench.paths(Map("SPARK_GRAFT_BENCH_PRIOR" -> "/x/prior.json"), "/repo") ==
+      (("/repo/target/BENCH_SELF.json", "/x/prior.json")))
+    assert(Bench.paths(Map("SPARK_GRAFT_BENCH_OUT" -> "/a.json",
+      "SPARK_GRAFT_BENCH_PRIOR" -> "/b.json"), "/repo") == (("/a.json", "/b.json")))
   }
 }

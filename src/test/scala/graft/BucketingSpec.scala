@@ -15,9 +15,7 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(li, "li_b", "l_orderkey", 4)
     Bucketing.writeBucketed(o, "o_b", "l_orderkey", 4)
 
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val bucketed = Bucketing.joinBucketed(spark, "li_b", "o_b", "l_orderkey")
       assert(bucketed.count() > 0)
       val bucketedPlan = bucketed.queryExecution.executedPlan.toString
@@ -27,7 +25,7 @@ class BucketingSpec extends SparkSpec {
       val plain = li.join(o, "l_orderkey")
       assert(plain.count() > 0)
       assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("dedup index probe: the persisted band table joins without its own exchange") {
@@ -35,9 +33,7 @@ class BucketingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     graft.sources.DedupIndex.writeIndex(docs.where(col("doc_id") <= 25),
       tag = "planspec", n = 3, b = 32, r = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val report = graft.sources.DedupIndex.incrementAgainstIndex(spark,
         "planspec", docs.where(col("doc_id") > 25),
         n = 3, b = 32, r = 4, num = 4, den = 5)
@@ -48,6 +44,6 @@ class BucketingSpec extends SparkSpec {
       assert(plan.contains("Bucketed: true"),
         s"band index scan should read its bucket layout:\n$plan")
       assert(report.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

@@ -204,10 +204,7 @@ class PlanAuditSpec extends SparkSpec {
     // when stats undersell a selective filter
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val aqeKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    spark.conf.set(aqeKey, "10m")
-    try {
+    GraftConf.scoped(spark, key -> "-1", aqeKey -> "10m") {
       val small = Tables.orders(spark, sf0001)
         .where(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
       val j = Tables.lineitem(spark, sf0001).select("l_orderkey")
@@ -217,9 +214,6 @@ class PlanAuditSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"))
       assert(plan.contains("BroadcastHashJoin"),
         s"AQE should have upgraded to broadcast:\n$plan")
-    } finally {
-      spark.conf.set(key, saved)
-      spark.conf.unset(aqeKey)
     }
   }
 
@@ -386,17 +380,11 @@ class PlanAuditSpec extends SparkSpec {
     val dim = spark.read.parquet(dimPath).where(col("w") === 1L)
     val statsKey = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
     val ratioKey = "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio"
-    val (prevStats, prevRatio) = (spark.conf.get(statsKey), spark.conf.get(ratioKey))
-    try {
-      spark.conf.set(statsKey, "false")
-      spark.conf.set(ratioKey, "10")
+    GraftConf.scoped(spark, statsKey -> "false", ratioKey -> "10") {
       val p = facts.join(broadcast(dim), "event_type")
         .queryExecution.executedPlan.toString
       assert(p.toLowerCase.contains("dynamicpruning"),
         s"the fact scan must carry a dynamic partition filter:\n$p")
-    } finally {
-      spark.conf.set(statsKey, prevStats)
-      spark.conf.set(ratioKey, prevRatio)
     }
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 import graft.operators.Relational
 
 class RelationalSpec extends SparkSpec {
@@ -768,4 +770,84 @@ class RelationalSpec extends SparkSpec {
     assert(got == Seq((0L, 5L, 5L), (1L, 3L, 4L), (2L, 10L, 7L)))
   }
 
+  private val H = 3600000L
+
+  private def funnelEvents(rows: (Long, Long, String, Long)*) =
+    rows.toDF("user_id", "event_id", "event_type", "ts_ms")
+
+  test("windowFunnelN: greedy earliest-next-step chain hand-trace") {
+    // user 1 completes all 4 steps inside 6h of the view; user 2's
+    // signup lands OUTSIDE the view window (click ok, then 7h gap);
+    // user 3 has click before any view (never starts a chain);
+    // user 4 completes step 4 exactly AT vt + w (inclusive bound)
+    val e = funnelEvents(
+      (1L, 1L, "view", 0L), (1L, 2L, "click", H), (1L, 3L, "signup", 2 * H),
+      (1L, 4L, "purchase", 3 * H),
+      (2L, 5L, "view", 0L), (2L, 6L, "click", H), (2L, 7L, "signup", 8 * H),
+      (3L, 8L, "click", 0L), (3L, 9L, "view", H),
+      (4L, 10L, "view", 0L), (4L, 11L, "click", H), (4L, 12L, "signup", 2 * H),
+      (4L, 13L, "purchase", 6 * H))
+    val r = operators.Relational.windowFunnelN(e,
+      Seq("view", "click", "signup", "purchase")).collect()(0)
+    // step1: users 1,2,3,4 viewed; step2: 1,2,4 clicked in-window;
+    // step3: 1,4; step4: 1,4 (user 4 at the inclusive boundary)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((4L, 3L, 2L, 2L)))
+  }
+
+  test("windowFunnelN: a later view rescues a failed first chain") {
+    // first view's window closes before the purchase; the second view
+    // starts a fresh chain that completes — the user converts
+    val e = funnelEvents(
+      (1L, 1L, "view", 0L), (1L, 2L, "signup", H),
+      (1L, 3L, "view", 10 * H), (1L, 4L, "signup", 11 * H),
+      (1L, 5L, "purchase", 12 * H))
+    val r = operators.Relational.windowFunnelN(e,
+      Seq("view", "signup", "purchase")).collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((1L, 1L, 1L)))
+  }
+
+  test("windowFunnelN(3 steps) values equal the hard-wired windowFunnel") {
+    val events = Tables.events(spark, sf0001)
+    val n = operators.Relational.windowFunnelN(events,
+      Seq("view", "signup", "purchase")).collect()(0)
+    val w = operators.Relational.windowFunnel(events).collect()(0)
+    assert(Seq(n.getLong(0), n.getLong(1), n.getLong(2)) ==
+      Seq(w.getLong(0), w.getLong(1), w.getLong(2)))
+  }
+
+  test("madOutliers: one spike day flagged against a zero-MAD baseline") {
+    // type 'a': days 0-3 carry 1 event, day 4 carries 10 → med2 = 2,
+    // dev2 = [0,0,0,0,18], mad4 = 0; only the spike satisfies
+    // 2·dev2 > 3·mad4 (a zero MAD means ANY deviation is anomalous)
+    val rows = (0 to 3).map(d => (1L, d.toLong * 86400000L, "a")) ++
+      (0 until 10).map(i => (1L, 4L * 86400000L + i, "a"))
+    val e = rows.toDF("user_id", "ts_ms", "event_type")
+    val got = operators.Relational.madOutliers(e).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+    assert(got.toSeq == Seq(("a", 4L, 10L, 18L, 0L)))
+  }
+
+  test("cusumChangepoint: level shift located at the pre-shift day") {
+    // daily counts [1,1,4]: T=6, D=3 → S = [-3,-6,0]; |S| max at day 1
+    val rows = Seq((1L, 0L), (1L, 86400000L)) ++
+      (0 until 4).map(i => (1L, 2L * 86400000L + i))
+    val e = rows.toDF("user_id", "ts_ms")
+      .withColumn("event_type", org.apache.spark.sql.functions.lit("x"))
+    val r = operators.Relational.cusumChangepoint(e).collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((3L, 1L, 6L)))
+  }
+
+  test("funnelLatency: per-user latency is the FASTEST completed chain") {
+    val H = 3600000L
+    val e = funnelEvents(
+      (1L, 1L, "view", 0L), (1L, 2L, "signup", H), (1L, 3L, "purchase", 2 * H),
+      (1L, 4L, "view", 10 * H), (1L, 5L, "signup", 10 * H + H / 2),
+      (1L, 6L, "purchase", 11 * H))
+    val r = operators.Relational.funnelLatency(e).collect()(0)
+    // chains complete at 2h and 1h; the user's latency is 1h
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((1L, H, 2 * H, H)))
+  }
 }

@@ -85,7 +85,7 @@ class Round8Spec extends SparkSpec {
   }
 
   // letter-only synthetic words (digits would be stripped by the
-  // reference cleaner — NOTES round-7 spec-data trap)
+  // reference cleaner, which keeps only a token's leading letter run)
   private def w8(i: Int): String =
     "" + ('a' + i % 26).toChar + ('a' + (i / 26) % 26).toChar + ('a' + i / 676).toChar
 

@@ -324,4 +324,196 @@ class SimilaritySpec extends SparkSpec {
       (0L, 2L, 4000L, 10000000L, 4000000L),
       (1L, 2L, 0L, 500000L, 1000000L)))
   }
+
+  // ------------------------------------------ incremental ANN index
+
+  test("ANN append: base posting files untouched; equals one-shot build") {
+    import graft.sources.AnnIndex
+    val emb = Tables.embeddings(spark, sf0001)
+    val cut = AnnIndex.incCut(spark, sf0001)
+    val base = emb.where(col("vec_id") < cut)
+    AnnIndex.writeIncBase(base, base, "r11inc", nClusters = 8, iters = 5)
+    val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+        "graft_anni_cells_r11inc")).location.toString))
+    def snap = loc.listFiles()
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+    val before = snap
+    // two appends (delta split by id parity): the nightly loop run
+    // twice, so the postings dir accumulates strictly more files than
+    // one bucket round — making the compaction shrink check meaningful
+    // regardless of how many files one bucketed write happens to land
+    val delta = emb.where(col("vec_id") >= cut)
+    AnnIndex.appendDelta(spark, "r11inc", delta.where(col("vec_id") % 2 === 0))
+    AnnIndex.appendDelta(spark, "r11inc", delta.where(col("vec_id") % 2 =!= 0))
+    val after = snap
+    assert(before.subsetOf(after), "append must not rewrite base postings")
+    assert(after.size > before.size, "append must add new posting files")
+    // the incremented index answers exactly like a one-shot build with
+    // the same frozen (base-trained) centroids over ALL vectors
+    AnnIndex.writeIncBase(base, emb, "r11ref", nClusters = 8, iters = 5)
+    val q = emb.where(col("vec_id") < 10)
+    val got = AnnIndex.queryTables(spark, "graft_anni_cent_r11inc",
+      "graft_anni_cells_r11inc", q, 5).collect().map(_.toString).toSeq
+    val want = AnnIndex.queryTables(spark, "graft_anni_cent_r11ref",
+      "graft_anni_cells_r11ref", q, 5).collect().map(_.toString).toSeq
+    assert(got == want)
+    // compaction: a NEW table with one file per bucket, same rows,
+    // same answers; the source table is untouched (it is the recovery
+    // path if the compaction write dies) and the serving pointer swaps
+    val rowsBefore = spark.table("graft_anni_cells_r11inc").count()
+    val cellsC = AnnIndex.compact(spark, "r11inc")
+    assert(cellsC != "graft_anni_cells_r11inc")
+    assert(spark.table(cellsC).count() == rowsBefore)
+    assert(snap == after, "compaction must not touch the source table")
+    val locC = new java.io.File(new java.net.URI(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+        cellsC)).location.toString))
+    val filesAfter = locC.listFiles()
+      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(filesAfter <= 8, s"compaction must leave <= 1 file/bucket, got $filesAfter")
+    assert(filesAfter < after.size, "compaction must shrink the file count")
+    val gotC = AnnIndex.queryTables(spark, "graft_anni_cent_r11inc",
+      cellsC, q, 5).collect().map(_.toString).toSeq
+    assert(gotC == want, "compaction must not change a single answer")
+    assert(AnnIndex.servingTables("r11inc") ==
+      ("graft_anni_cent_r11inc", cellsC),
+      "the serving pointer must track the compaction swap")
+  }
+
+  test("ANN increment drift: counts partition the corpus, ppm positive") {
+    val d = graft.sources.AnnIndex.annIncrementDrift(spark, sf0001)
+      .collect()(0)
+    assert(d.getLong(0) + d.getLong(1) ==
+      Tables.embeddings(spark, sf0001).count())
+    assert(d.getLong(4) > 0L) // drift_ppm
+  }
+
+  private def tableFiles(t: String): Set[(String, Long, Long)] = {
+    val loc = new java.io.File(new java.net.URI(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+      .location.toString))
+    loc.listFiles()
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  // ------------------------------------------------ ANN rebuild
+
+  test("ANN rebuild: equals a from-scratch build over base∪delta; " +
+    "old tables untouched; serving pointer swaps") {
+    import graft.sources.AnnIndex
+    val emb = Tables.embeddings(spark, sf0001)
+    val cut = AnnIndex.incCut(spark, sf0001)
+    val base = emb.where(col("vec_id") < cut)
+    AnnIndex.writeIncBase(base, base, "r12rb", nClusters = 8, iters = 5)
+    AnnIndex.appendDelta(spark, "r12rb", emb.where(col("vec_id") >= cut))
+    val beforeCent = tableFiles("graft_anni_cent_r12rb")
+    val beforeCells = tableFiles("graft_anni_cells_r12rb")
+    val (centR, cellsR) = AnnIndex.rebuild(spark, "r12rb", 8, 5)
+    assert(centR.startsWith("graft_annr_cent_r12rb") &&
+      cellsR.startsWith("graft_annr_cells_r12rb"))
+    // the superseded index is the recovery path — never rewritten
+    assert(tableFiles("graft_anni_cent_r12rb") == beforeCent)
+    assert(tableFiles("graft_anni_cells_r12rb") == beforeCells)
+    // the atomic swap: production probes now read the rebuilt tables
+    assert(AnnIndex.servingTables("r12rb") == ((centR, cellsR)))
+    // rebuilt state ≡ from-scratch writeIncBase over base∪delta:
+    // same centroids table, same probe answers
+    AnnIndex.writeIncBase(emb, emb, "r12ref", nClusters = 8, iters = 5)
+    assert(rows(spark.table(centR)) ==
+      rows(spark.table("graft_anni_cent_r12ref")),
+      "retrained centroids must equal the from-scratch Lloyd run")
+    assert(rows(spark.table(cellsR)) ==
+      rows(spark.table("graft_anni_cells_r12ref")),
+      "re-encoded postings must equal the from-scratch assignment")
+    val q = emb.where(col("vec_id") < 10)
+    val got = AnnIndex.queryTables(spark, centR, cellsR, q, 5)
+      .collect().map(_.toString).toSeq
+    val want = AnnIndex.queryTables(spark, "graft_anni_cent_r12ref",
+      "graft_anni_cells_r12ref", q, 5).collect().map(_.toString).toSeq
+    assert(got == want)
+  }
+
+  test("ANN maintain consumes the tripwire: drifted delta → rebuild, " +
+    "in-distribution delta → keep") {
+    import graft.sources.{AnnIndex, StagedTags}
+    // synthetic corpus: base = the fixture, delta shifted +10 per
+    // coordinate — a fresh delta far from the frozen base-trained
+    // centroids, so quantization error explodes and drift fires
+    val emb = Tables.embeddings(spark, sf0001)
+    val cut = AnnIndex.incCut(spark, sf0001)
+    val dir = TempDirs.scratchString("graft_r12_drift_")
+    emb.withColumn("embedding",
+        when(col("vec_id") >= lit(cut),
+          expr("transform(embedding, x -> x + cast(10.0 as float))"))
+          .otherwise(col("embedding")))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val rep = AnnIndex.annMaintain(spark, dir).collect()(0)
+    assert(rep.getAs[Boolean]("rebuild_due"),
+      s"shifted delta must trip the drift wire: $rep")
+    assert(rep.getAs[String]("action") == "rebuild")
+    // the rebuild runs on a DEDICATED maintenance family —
+    // the shared increment tag's serving pointer must stay untouched,
+    // so a later compact on it still pairs matching centroid/posting
+    // tables (rebuilding the shared tag would swap its pointer and
+    // poison annCompactReport's frozen-centroid pinning)
+    val shared = StagedTags.tagOf(s"$dir#8#5")
+    assert(AnnIndex.servingTables(shared) ==
+      ((s"graft_anni_cent_$shared", s"graft_anni_cells_$shared")),
+      "shared increment tag must not be rebuilt or swapped by maintain")
+    val mt = AnnIndex.maintainTag(dir)
+    val (centS, cellsS) = AnnIndex.servingTables(mt)
+    assert(centS.startsWith(s"graft_annr_cent_$mt") &&
+      cellsS.startsWith(s"graft_annr_cells_$mt"))
+    val all = spark.read.parquet(s"$dir/embeddings.parquet")
+    assert(rows(spark.table(centS)) ==
+      rows(operators.Clustering.lloydCentroids(all, 8, 5)))
+    // the decision is memoized per (dir, params) — the
+    // tripwire never clears (it always compares against the frozen
+    // anni centroids), so without the memo every call would retrain
+    // and write fresh _g<N> generations
+    val rep2x = AnnIndex.annMaintain(spark, dir).collect()(0)
+    assert(rep2x.getAs[String]("action") == "rebuild")
+    assert(AnnIndex.servingTables(mt) == ((centS, cellsS)),
+      "repeat maintain must not retrain: serving pointer unchanged")
+    // in-distribution delta (the fixture): the tripwire stays quiet
+    // and nothing is rebuilt
+    val rep2 = AnnIndex.annMaintain(spark, sf0001).collect()(0)
+    assert(!rep2.getAs[Boolean]("rebuild_due"))
+    assert(rep2.getAs[String]("action") == "keep")
+  }
+
+  test("repeat maintenance on one tag: each round writes a NEW table, " +
+    "answers unchanged, pointer tracks") {
+    import graft.sources.AnnIndex
+    val emb = Tables.embeddings(spark, sf0001)
+    val cut = AnnIndex.incCut(spark, sf0001)
+    AnnIndex.writeIncBase(emb.where(col("vec_id") < cut),
+      emb.where(col("vec_id") < cut), "r12mx", nClusters = 8, iters = 5)
+    AnnIndex.appendDelta(spark, "r12mx", emb.where(col("vec_id") >= cut))
+    val q = emb.where(col("vec_id") < 10)
+    def probe(): Seq[String] = {
+      val (c, p) = AnnIndex.servingTables("r12mx")
+      AnnIndex.queryTables(spark, c, p, q, 5).collect().map(_.toString).toSeq
+    }
+    val before = probe()
+    // compact → rebuild → compact again: the second compact reads the
+    // REBUILT postings through the pointer and must not overwrite them
+    // (each maintenance round gets its own _g<N> table)
+    val c1 = AnnIndex.compact(spark, "r12mx")
+    assert(probe() == before)
+    val (centR, cellsR) = AnnIndex.rebuild(spark, "r12mx", 8, 5)
+    assert(cellsR != c1)
+    val afterRebuild = probe() // full-retrain answers (may differ)
+    val c2 = AnnIndex.compact(spark, "r12mx")
+    assert(c1 != c2, "each compaction must write a fresh table")
+    assert(AnnIndex.servingTables("r12mx") == ((centR, c2)))
+    assert(probe() == afterRebuild,
+      "compaction after a rebuild must not change an answer")
+  }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `release`, and every hand-rolled `TypedImperativeAggregate` is named
   * with the reason no Spark built-in serves. A session conf is set
   * only by [[graft.GraftConf.scoped]], and a file's modification time
-  * only by [[graft.streaming.StagedFiles]].
+  * only by [[graft.streaming.StagedFiles]]. Specs live in per-family
+  * suites, and every root record a source or tool names still exists.
   */
 class StagingAuditSpec extends AnyFunSuite {
 
@@ -147,5 +148,42 @@ class StagingAuditSpec extends AnyFunSuite {
           s"$file no longer declares $n: drop it from the allowlist")
       }
     }
+  }
+
+  private def filesUnder(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+  }
+
+  // the four round-named suites not yet folded into their family
+  // suites; the set may only shrink
+  private val UnfoldedRoundSpecs =
+    Set("Round7Spec.scala", "Round8Spec.scala", "Round9Spec.scala", "Round9cSpec.scala")
+
+  test("no round-named spec file under src/test beyond the unfolded four") {
+    val specs = filesUnder("src/test").map(_.getFileName.toString)
+      .filter(_.endsWith("Spec.scala"))
+    assert(specs.contains("StagingAuditSpec.scala"), "audit found no spec under src/test")
+    val round = specs.filter(_.matches("""Round\w*Spec\.scala""")).toSet
+    assert(round.subsetOf(UnfoldedRoundSpecs),
+      s"fold these into the suite of the family they test: ${(round -- UnfoldedRoundSpecs).mkString(", ")}")
+  }
+
+  test("every root record named in src/ or tools/ exists") {
+    val Cited = """(?<![\w.-])([A-Z][A-Za-z0-9_]*\.(?:json|md))\b""".r
+    val cited = (filesUnder("src") ++ filesUnder("tools"))
+      .filter(f => f.toString.endsWith(".scala") || f.toString.endsWith(".py"))
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        Cited.findAllMatchIn(text).map(m => (m.group(1), f.toString)).toSeq
+      }
+    assert(cited.exists(_._1 == "BENCH_SELF.json"), "audit found no cited record")
+    val missing = cited.filterNot { case (name, _) =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(name))
+    }
+    assert(missing.isEmpty,
+      "cite the record that is kept, or state the reason without a file name:\n" +
+        missing.distinct.map { case (n, f) => s"  $f: $n" }.mkString("\n"))
   }
 }

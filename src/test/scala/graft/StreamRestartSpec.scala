@@ -64,13 +64,8 @@ class StreamRestartSpec extends SparkSpec {
     submit(jar, "rest", phased)
 
     // single-run control, in-process, on the same RocksDB posture
-    val saved = GraftConf.streaming.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    GraftConf.streaming.foreach { case (k, v) => spark.conf.set(k, v) }
-    try StreamRestartProbe.runPhase(spark, "single", single, sfDir)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    GraftConf.scoped(spark, GraftConf.streaming.toSeq: _*) {
+      StreamRestartProbe.runPhase(spark, "single", single, sfDir)
     }
 
     val (psess, pijoin, pupsert) = StreamRestartProbe.finalTables(spark, phased)

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftSparkInternals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.streaming.Streams
@@ -391,5 +392,53 @@ class StreamsSpec extends SparkSpec {
     assert(Streams.versions(root) == Seq(0L, 1L, 2L, 10L))
     // v10 merges onto v2, the newest version below it
     assert(rows(10) == Seq(("a", 11L), ("b", 2L), ("c", 5L), ("z", 12L)))
+  }
+
+  test("streaming window funnel equals the batch funnel (2-batch replay)") {
+    val got = graft.streaming.Streams
+      .windowFunnelAvailableNow(spark, sf0001).collect()(0)
+    val want = operators.Relational.windowFunnel(
+      Tables.events(spark, sf0001)).collect()(0)
+    assert((0 to 4).map(got.getLong) == (0 to 4).map(want.getLong))
+  }
+
+  test("lakeTimeTravel: v0 equals the batch recompute over batch 0") {
+    val got = graft.streaming.Streams.lakeTimeTravel(spark, sf0001, 0)
+      .collect().map(_.toString).toSeq
+    val ev0 = Tables.events(spark, sf0001).where(col("event_id") % 2 === 0)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id")
+      .orderBy(col("ts_ms").desc, col("event_id").desc)
+    val want = ev0.withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .select(col("user_id"), col("ts_ms").as("last_ts_ms"),
+        col("event_type").as("last_type"),
+        round(col("value") * 100).cast("long").as("last_value_c"))
+      .orderBy("user_id")
+      .collect().map(_.toString).toSeq
+    assert(got == want)
+  }
+
+  test("streaming classifier serving equals the batch trained score") {
+    val got = graft.streaming.Streams
+      .classifierServeAvailableNow(spark, sf0001, 64, 2)
+      .collect().map(_.toString).toSeq
+    val w = operators.TextAnalysis.classifierTrainCached(spark, sf0001, 64, 2)
+    val want = operators.TextAnalysis.classifierTrainedScore(
+        Tables.documents(spark, sf0001), 64, 2, weights = Some(w))
+      .collect().map(_.toString).toSeq
+    assert(got == want && got.nonEmpty)
+  }
+
+  // ------------------------------------------- streaming ANN ingest
+
+  test("streaming ANN ingest equals the batch increment") {
+    val got = graft.streaming.Streams
+      .annIncrementAvailableNow(spark, sf0001)
+      .collect().map(_.toString).toSeq
+    val want = graft.sources.AnnIndex
+      .annIncrementReport(spark, sf0001, nQueries = 10, k = 5)
+      .collect().map(_.toString).toSeq
+    assert(got == want)
   }
 }

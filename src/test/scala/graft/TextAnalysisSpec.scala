@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 import graft.operators.TextAnalysis
 
 class TextAnalysisSpec extends SparkSpec {
@@ -456,5 +458,107 @@ class TextAnalysisSpec extends SparkSpec {
     val again = graft.operators.TextAnalysis.skipgramNegatives(d, nCenters = 3, k = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     assert(rows.toSeq == again.toSeq)
+  }
+
+  // ------------------------------------- in-engine classifier training
+
+  test("classifierTrain round 1 from zero = sum of positive-doc features") {
+    // zero weights → margin 0 → pred 0 → err = y, so after one round
+    // w_s must equal the summed feature counts of the lang='en' docs
+    val docs = Tables.documents(spark, sf0001)
+    val got = operators.TextAnalysis.classifierTrain(docs, 64, rounds = 1)
+      .where(col("w") =!= 0L).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val want = operators.TextAnalysis.classifierFeatures(
+        docs.where(col("lang") === "en"), 64)
+      .groupBy("slot").agg(sum("cnt").as("w"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .filter(_._2 != 0L)
+    assert(got == want && got.nonEmpty)
+  }
+
+  test("classifierTrainedScore: correct ⟺ accept agrees with label") {
+    val sc = operators.TextAnalysis.classifierTrainedScore(
+      Tables.documents(spark, sf0001), 64, 2)
+    assert(sc.where(col("correct") =!=
+      (col("accept") === (col("is_en") === 1L))).count() == 0)
+    // the learned model must carry SOME signal: more correct than not
+    val n = sc.count(); val ok = sc.where(col("correct")).count()
+    assert(ok * 2 > n, s"trained classifier below coin-flip: $ok/$n")
+  }
+
+  test("classifierEval: held-out confusion counts are self-consistent") {
+    val docs = Tables.documents(spark, sf0001)
+    val cut = (docs.agg(max("doc_id")).head().getLong(0) + 1L) * 4L / 5L
+    val r = operators.TextAnalysis.classifierEval(docs, 64, 2).collect()(0)
+    val (nTest, nPos, tp, fp, fn) =
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+    assert(nTest == docs.where(col("doc_id") >= cut).count())
+    assert(tp + fn == nPos, "positives partition into tp + fn")
+    assert(r.getLong(5) == (nTest - fp - fn) * 1000000L / nTest)
+    // leakage check by reconstruction: the reported confusion equals
+    // scoring the held-out split with weights trained on the REST
+    val w = operators.TextAnalysis.classifierTrain(
+      docs.where(col("doc_id") < cut), 64, 2)
+    val sc = operators.TextAnalysis.classifierTrainedScore(
+      docs.where(col("doc_id") >= cut), 64, 2, weights = Some(w))
+    assert(sc.where(col("accept") && col("is_en") === 1L).count() == tp)
+  }
+
+  test("classifierTrain is deterministic across runs") {
+    val docs = Tables.documents(spark, sf0001)
+    val a = operators.TextAnalysis.classifierTrain(docs, 64, 2)
+      .collect().map(_.toString).toSeq
+    val b = operators.TextAnalysis.classifierTrain(docs, 64, 2)
+      .collect().map(_.toString).toSeq
+    assert(a == b)
+  }
+
+  // ------------------------------------------------ corpus build v2
+
+  test("corpusBuildV2: non-empty, consistent mixture shares per split") {
+    val r = operators.TextAnalysis.corpusBuildV2(
+      Tables.documents(spark, sf0001))
+    val rows = r.collect()
+    assert(rows.nonEmpty, "capstone must keep SOME documents")
+    // floor-rounded shares per split must sum to ≤ 1e6 and close to it
+    rows.groupBy(_.getString(0)).foreach { case (split, rs) =>
+      val s = rs.map(_.getLong(5)).sum
+      assert(s <= 1000000L && s > 1000000L - rs.length,
+        s"split $split share sum $s")
+      // every (split, source) cell carries documents and tokens
+      rs.foreach(row => assert(row.getLong(2) > 0 && row.getLong(4) > 0))
+    }
+    // chunk accounting: n_chunks >= n_docs (every kept doc chunks)
+    rows.foreach(row => assert(row.getLong(3) >= row.getLong(2)))
+  }
+
+  // ------------------------------------------- HTML extraction
+
+  test("htmlExtractCol: script decoys, entities, inline/block tags") {
+    import operators.TextAnalysis
+    val html = "<html><head><script>if (a < b) { emit(\"</div>\") }" +
+      "</script><style>p {x: 1}</style></head><body><p>x &amp;amp; y" +
+      "</p><b>z</b>&nbsp;&#39;q&#39;</body></html>"
+    val got = spark.range(1).select(
+      TextAnalysis.htmlExtractCol(lit(html)).as("t")).head().getString(0)
+    // &amp;amp; must decode to the LITERAL &amp; (amp decodes last),
+    // the script's decoy </div> and comparison operators must vanish
+    assert(got == "x &amp; y z 'q'")
+  }
+
+  test("htmlExtract recovers exactly the planted-wrapper contract") {
+    import operators.TextAnalysis
+    val docs = Tables.documents(spark, sf0001)
+    val got = TextAnalysis.htmlExtract(docs).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val want = docs.select(col("doc_id"),
+        trim(regexp_replace(
+          concat(lit("doc & meta heading <"), col("doc_id").cast("string"),
+            lit("> "), col("text")),
+          operators.WordCount.WhitespacePattern, " ")).as("t"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == want,
+      "extraction must recover title + h1 + body text, nothing else")
   }
 }

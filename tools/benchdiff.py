@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Diff two Bench per-query JSON maps (BENCH_SELF*.json or a driver
-BENCH_r*.json tail) and print regressions/improvements sorted by ratio.
+"""Diff two Bench per-query JSON maps (BENCH_SELF.json, a fresh
+Bench output, or a driver BENCH_r*.json tail) and print
+regressions/improvements sorted by ratio.
 
 Usage: python3 tools/benchdiff.py <old.json> <new.json> [min_ratio]
            [--confirm <other_new.json>]
@@ -9,16 +10,17 @@ Accepts either the full one-line Bench JSON ({"queries": {...}}) or a
 driver capture whose "tail" field embeds a truncated queries map — in
 the latter case only the queries present in the capture are compared.
 
-PROTOCOL (round 10+): the committed clean exclusive-CPU sweep
-(BENCH_SELF_r*.json) is the regression record — driver-host captures
-carry contention scatter that has produced a phantom >1.5x "regression"
-every round (r8 word_ktruss, r9 dedup_keep_best_quality), so a
-driver-capture ratio alone is NOT adjudicable. Compare clean vs clean
-by default; when a driver capture looks regressed, pass it as
---confirm alongside the clean sweep: a query is flagged only if BOTH
-captures exceed min_ratio. One capture over = "suspect (not confirmed)"
-— re-measure with `graft.SoakProbe <query>` (warm min of runs 2-3)
-before believing it.
+PROTOCOL: the record is the committed ordering prior BENCH_SELF.json
+set against a fresh clean exclusive-CPU capture (a default `graft.Bench`
+run writes it to target/BENCH_SELF.json and never rewrites the prior).
+Driver-host captures carry contention scatter that has produced a
+phantom >1.5x "regression" before (word_ktruss, then
+dedup_keep_best_quality), so a driver-capture ratio alone is NOT
+adjudicable. Compare clean vs clean by default; when a driver capture
+looks regressed, pass it as --confirm alongside the clean sweep: a
+query is flagged only if BOTH captures exceed min_ratio. One capture
+over = "suspect (not confirmed)" — re-measure with
+`graft.SoakProbe <query>` (warm min of runs 2-3) before believing it.
 """
 import json
 import re
