@@ -61,6 +61,26 @@ object Bench {
     (env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"$cwd/target/BENCH_SELF.json"),
      env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", s"$cwd/BENCH_SELF.json"))
 
+  /** The sweep summary that both the output file and stdout print:
+    * the name-sorted per-query map (JSON), the failed queries in name
+    * order, and the total. A failed query (−1) must make the bench
+    * LOUDER, not faster: it lands in `failed` and adds a 600 s penalty
+    * to the total.
+    */
+  private[graft] final case class Summary(qs: String, failed: Seq[String],
+                                          total: Double) {
+    def failedJson: String = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+  }
+
+  private[graft] def summarize(done: Seq[(String, Double)]): Summary = {
+    val sorted = done.sortBy(_._1)
+    val failed = sorted.collect { case (k, v) if v < 0 => k }
+    Summary(
+      sorted.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"),
+      failed,
+      sorted.map(_._2).filter(_ >= 0).sum + 600.0 * failed.size)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -163,11 +183,7 @@ object Bench {
     val excursions = scala.collection.mutable.Map[String, Double]()
 
     def writeOut(done: Seq[(String, Double)], partial: Boolean): Unit = {
-      val qs = done.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val failed = done.collect { case (k, v) if v < 0 => k }
-      val total = done.map(_._2).filter(_ >= 0).sum + 600.0 * failed.size
-      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val summary = summarize(done)
       val flag = if (partial) "\"partial\":true," else ""
       val qm = qmetrics.toSeq.sortBy(_._1)
         .map { case (k, s) => "\"" + k + "\":" + s.json }
@@ -175,9 +191,9 @@ object Bench {
       val exc = excursions.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      val full = s"""{"metric":"total",$flag"value":$total,""" +
-        s""""unit":"sec","n_queries":${done.size},"queries":$qs,""" +
-        s""""failed":$failedJson,"staging":$stagingSec,""" +
+      val full = s"""{"metric":"total",$flag"value":${summary.total},""" +
+        s""""unit":"sec","n_queries":${done.size},"queries":${summary.qs},""" +
+        s""""failed":${summary.failedJson},"staging":$stagingSec,""" +
         s""""qmetrics":$qm,"excursions":$exc,"sf":"$sfDir"}"""
       try {
         val out = java.nio.file.Paths.get(outPath)
@@ -241,20 +257,13 @@ object Bench {
       }
     }
     if (excursions.nonEmpty) writeOut(results.toSeq, partial = true)
-    val sortedR = results.toSeq.sortBy(_._1)
-    val qs = sortedR.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // a failed query must make the bench LOUDER, not faster: each one
-    // lands in "failed" and adds a 600 s penalty to the total
-    val failed = sortedR.collect { case (k, v) if v < 0 => k }
-    val total = sortedR.map(_._2).filter(_ >= 0).sum + 600.0 * failed.size
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val summary = summarize(results.toSeq)
     // compact headline FIRST: a tail-truncated capture of the big
     // per-query line must still retain the total + failure list
     val headline =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${sortedR.size},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${summary.total},"unit":"sec","n_queries":${results.size},"failed":${summary.failedJson},"sf":"$sfDir"}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"staging":$stagingSec,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${summary.total},"unit":"sec","queries":${summary.qs},"failed":${summary.failedJson},"staging":$stagingSec,"sf":"$sfDir"}"""
     println(headline)
     println(full)
     // ...and AGAIN after it: a capture that keeps only the END of the

@@ -12,11 +12,15 @@ object GraftSql {
     "supplier", "part", "orders", "lineitem", "documents", "embeddings")
 
   /** Register `<table>` views over `dir` and the graft functions.
-    * `events` is registered with the normalized `ts_ms` column.
+    * `events` is registered with the normalized `ts_ms` column. The
+    * views follow `dir` on every call; the functions do not depend on
+    * it, so each session registers them once.
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {
     TableNames.foreach(t => Tables(spark, dir, t).createOrReplaceTempView(t))
     Tables.events(spark, dir).createOrReplaceTempView("events")
-    functions.GraftFunctions.register(spark)
+    sources.SessionCache.perSession(spark, ("GraftSql", "functions")) {
+      functions.GraftFunctions.register(spark)
+    }
   }
 }

@@ -90,33 +90,6 @@ object PlanSnapshot {
       .takeWhile(l => !l.startsWith("= Subqueries ="))
       .toSeq
 
-  /** Canonicalize one gid-bearing plan line (see object scaladoc).
-    * The rewrite's labeling freedom shows up in THREE places, each
-    * treated as narrowly as it allows:
-    *
-    *  1. `gid#x = k` filter literals → `n` (pure renumbering);
-    *  2. a well-formed `Expand [[…], …], [output]` line: the labeling
-    *     freedom permutes the OUTPUT attribute list and with it every
-    *     group's internal column order (the q21 residual) and the gid
-    *     tag values (round 10's finding) — and when countDistinct
-    *     co-occurs with regular aggregates the tag is not even the
-    *     trailing group element (the customer_rec_eval residual). So:
-    *     erase each group's tag at the gid column's output position,
-    *     sort the output attributes, apply the SAME permutation to
-    *     every group, then sort the groups. Only the output-induced
-    *     permutation is undone — a changed expression, constant, or
-    *     multiset still flips. Bracket/paren depth is tracked so
-    *     commas inside nested expressions never split an element.
-    *     Lines that don't parse (no `gid#x` output column, arity
-    *     mismatch) fall back to positional-or-trailing tag erase +
-    *     group sort + segment sort around the region;
-    *  3. everything OUTSIDE the projection list on bracketless lines —
-    *     the intermediate HashAggregate/Exchange key lists that
-    *     inherit the rewrite's group enumeration order — has its comma
-    *     segments sorted (attributes are all `#x`-normalized names, so
-    *     only their PERMUTATION varies; a multiset change still
-    *     flips).
-    */
   /** Depth-aware recursive comma-list canonicalization for gid-bearing
     * NON-Expand lines (r13, the customer_rec_eval residual): the old
     * flat `", "` split sheared inside parens AND attached structural
@@ -184,6 +157,33 @@ object PlanSnapshot {
     parts.map(p => one(stripSp(p))).sorted.mkString(", ")
   }
 
+  /** Canonicalize one gid-bearing plan line (see object scaladoc).
+    * The rewrite's labeling freedom shows up in THREE places, each
+    * treated as narrowly as it allows:
+    *
+    *  1. `gid#x = k` filter literals → `n` (pure renumbering);
+    *  2. a well-formed `Expand [[…], …], [output]` line: the labeling
+    *     freedom permutes the OUTPUT attribute list and with it every
+    *     group's internal column order (the q21 residual) and the gid
+    *     tag values (round 10's finding) — and when countDistinct
+    *     co-occurs with regular aggregates the tag is not even the
+    *     trailing group element (the customer_rec_eval residual). So:
+    *     erase each group's tag at the gid column's output position,
+    *     sort the output attributes, apply the SAME permutation to
+    *     every group, then sort the groups. Only the output-induced
+    *     permutation is undone — a changed expression, constant, or
+    *     multiset still flips. Bracket/paren depth is tracked so
+    *     commas inside nested expressions never split an element.
+    *     Lines that don't parse (no `gid#x` output column, arity
+    *     mismatch) fall back to positional-or-trailing tag erase +
+    *     group sort + segment sort around the region;
+    *  3. everything OUTSIDE the projection list on bracketless lines —
+    *     the intermediate HashAggregate/Exchange key lists that
+    *     inherit the rewrite's group enumeration order — has its comma
+    *     segments sorted (attributes are all `#x`-normalized names, so
+    *     only their PERMUTATION varies; a multiset change still
+    *     flips).
+    */
   private[graft] def canonGid(line: String): String = {
     val norm = line.replaceAll("gid#x = \\d+", "gid#x = n")
     def sortSegs(s: String): String = canonDeep(s)

@@ -163,7 +163,7 @@ object DedupGates {
          |SELECT doc_id, tok_start, tok_end, n_windows FROM isl
          |ORDER BY doc_id, tok_start""".stripMargin),
     Gate("dedup_cut_spans", (s, dir) =>
-      Dedup.cutSpansFrom(Tables.documents(s, dir),
+      Dedup.cutSpans(Tables.documents(s, dir),
         graft.sources.DedupStage.islands(s, dir)),
       s"""WITH $SqlCrossDocCtes,
          |toks AS (SELECT doc_id, i AS pos, ws[i + 1] AS tok
@@ -225,7 +225,7 @@ object DedupGates {
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
          |ORDER BY id_a, id_b""".stripMargin),
     Gate("dedup_keep_list", (s, dir) =>
-      Dedup.keepListFrom(Tables.documents(s, dir),
+      Dedup.keepList(Tables.documents(s, dir),
         graft.sources.DedupStage.pairs(s, dir)),
       s"""WITH pairs AS (${sqlJaccard(4, 5)}),
          |reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
@@ -258,7 +258,7 @@ object DedupGates {
         propRounds = 1),
       SqlDedupComponents),
     Gate("dedup_keep_list_cc", (s, dir) =>
-      Dedup.keepListCCFrom(Tables.documents(s, dir),
+      Dedup.keepListCC(Tables.documents(s, dir),
         graft.sources.DedupStage.ccLabels(s, dir)),
       s"""WITH RECURSIVE pairs AS (${sqlJaccard(4, 5)}),
          |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -276,7 +276,7 @@ object DedupGates {
          |ORDER BY doc_id""".stripMargin),
     // per-cluster QUALITY argmax instead of the id-order root
     Gate("dedup_keep_best_quality", (s, dir) =>
-      Dedup.keepBestQualityFrom(Tables.documents(s, dir),
+      Dedup.keepBestQuality(Tables.documents(s, dir),
         graft.sources.DedupStage.ccLabels(s, dir)),
       s"""WITH RECURSIVE pairs AS (${sqlJaccard(4, 5)}),
          |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -352,7 +352,7 @@ object DedupGates {
     // the filter VERDICT table: per-doc reason bitmask (gopher=1,
     // exact-dup copy=2, contaminated=4, near-dup drop=8) + keep flag
     Gate("corpus_filter_report", (s, dir) =>
-      Dedup.corpusFilterReportFrom(Tables.documents(s, dir),
+      Dedup.corpusFilterReport(Tables.documents(s, dir),
         graft.sources.DedupStage.pairs(s, dir)),
       s"""WITH base AS (SELECT doc_id, text, $SqlWs AS ws FROM documents
          |  WHERE doc_id > 50),
@@ -482,7 +482,7 @@ object DedupGates {
          |FROM f""".stripMargin),
     // dedup observability: near-dup cluster-size histogram
     Gate("dedup_cluster_sizes", (s, dir) =>
-      Dedup.clusterSizeHistogramFrom(Tables.documents(s, dir),
+      Dedup.clusterSizeHistogram(Tables.documents(s, dir),
         graft.sources.DedupStage.ccLabels(s, dir)),
       s"""WITH RECURSIVE pairs AS (${sqlJaccard(4, 5)}),
          |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -629,7 +629,7 @@ object DedupGates {
     // MDM survivorship: one golden record per fuzzy entity cluster
     // (clusters STAGED — shared with fuzzy_entity_clusters)
     Gate("fuzzy_golden_record", (s, dir) =>
-      Dedup.goldenRecordFrom(Tables.customer(s, dir),
+      Dedup.goldenRecord(Tables.customer(s, dir),
         graft.sources.DedupStage.fuzzyClusters(s, dir)),
       s"""WITH RECURSIVE pairs AS (
          |  SELECT a.c_custkey AS id_a, c.c_custkey AS id_b
@@ -675,7 +675,7 @@ object DedupGates {
     // the same jaccardPairs(3,4,5) derivation, paid once per session;
     // dedup_minhash_eval keeps its truth live at its own threshold)
     Gate("dedup_winnow_eval", (s, dir) =>
-      Dedup.winnowEvalFrom(Tables.documents(s, dir),
+      Dedup.winnowEval(Tables.documents(s, dir),
         graft.sources.DedupStage.pairs(s, dir)),
       s"""WITH $SqlWinnowCtes,
          |e AS (SELECT DISTINCT doc_id, unnest(fps) AS f FROM fp),
@@ -772,7 +772,7 @@ object DedupGates {
     // sampled endpoints (pair Jaccard is independent of other docs, so
     // the filtered frame equals the sampled-corpus truth join exactly)
     Gate("dedup_rand_index", (s, dir) =>
-      Dedup.randIndexEvalFrom(Tables.documents(s, dir),
+      Dedup.randIndexEval(Tables.documents(s, dir),
         graft.sources.DedupStage.pairs(s, dir), samplePct = 50),
       // two recursive-CTE component labelings (exact-jaccard vs winnow
       // pairs), co-clustered pair sets per labeling, then the pair-level

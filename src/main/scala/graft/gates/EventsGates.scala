@@ -1244,7 +1244,9 @@ object EventsGates {
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
     // conversion-window funnel: every step within 6h of the view
     Gate("events_window_funnel", (s, dir) =>
-      Relational.windowFunnel(Tables.events(s, dir)),
+      Relational.windowFunnelN(Tables.events(s, dir),
+        Seq("view", "signup", "purchase"))
+        .withColumnRenamed("n_step1", "n_view_users"),
       SqlEventsWindowFunnel),
     // variadic funnel, 4 steps: one greedy join+min round per step
     Gate("events_window_funnel_4", (s, dir) =>

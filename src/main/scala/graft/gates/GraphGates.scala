@@ -76,7 +76,7 @@ object GraphGates {
     // PageRank over the word-adjacency graph: integer-scaled damped
     // power iteration, 3 unrolled rounds in the oracle
     Gate("word_pagerank", (s, dir) =>
-      Graph.wordPageRankFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.wordPageRank(graft.sources.GraphStage.wordEdges(s, dir)),
       {
         val init = 1000000000000L
         val jump = init * 15 / 100
@@ -102,7 +102,7 @@ object GraphGates {
       }),
     // seeded teleport: rank = proximity to the top-2 corpus words
     Gate("word_ppr", (s, dir) =>
-      Graph.wordPprFrom(Tables.documents(s, dir),
+      Graph.wordPpr(Tables.documents(s, dir),
         graft.sources.GraphStage.wordEdges(s, dir)),
       // personalized variant: same unrolled recurrence, teleport mass
       // confined to the derived 2-word seed set
@@ -136,7 +136,7 @@ object GraphGates {
       }),
     // degree-oriented wedge-join triangle count of the same word graph
     Gate("word_triangles", (s, dir) =>
-      Graph.triangleCount(Tables.documents(s, dir)),
+      Graph.triangleCount(Graph.bigramEdges(Tables.documents(s, dir))),
       s"""WITH edges AS (SELECT DISTINCT ws[i+1] AS s, ws[i+2] AS t
          |  FROM (SELECT $SqlWs AS ws FROM documents),
          |       LATERAL (SELECT unnest(range(0, len(ws) - 1)) AS i) r
@@ -154,7 +154,7 @@ object GraphGates {
          |JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst""".stripMargin),
     // BFS hop distances from the smallest word (frontier expansion)
     Gate("word_bfs_dist", (s, dir) =>
-      Graph.bfsDistancesFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.bfsDistances(graft.sources.GraphStage.wordEdges(s, dir)),
       // recursive-CTE BFS: UNION (not UNION ALL) dedups (word, dist)
       // rows per step, so paths collapse and the recursion is bounded by
       // nodes × maxHops; min(dist) per word = first-reach depth
@@ -174,7 +174,7 @@ object GraphGates {
     // HITS hubs/authorities: integer max-normalized half-steps,
     // 2 unrolled rounds in the oracle
     Gate("word_hits", (s, dir) =>
-      Graph.wordHitsFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.wordHits(graft.sources.GraphStage.wordEdges(s, dir)),
       // HITS: two half-steps per round (auth <- sum in-hub, hub <- sum
       // out-auth), integer MAX-normalization after each — the scalar max
       // is a subquery, mirroring the 1-row broadcast on the Spark side
@@ -206,7 +206,7 @@ object GraphGates {
       }),
     // 24-core by iterative peeling (order-independent fixpoint)
     Gate("word_kcore", (s, dir) =>
-      Graph.wordKCoreFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.wordKCore(graft.sources.GraphStage.wordEdges(s, dir)),
       // k-core: 10 unrolled peel rounds; peeling is monotone, so the
       // rounds past convergence are no-ops and the Spark side (which
       // iterates to convergence, throwing past 10) lands identically.
@@ -236,7 +236,7 @@ object GraphGates {
       }),
     // rank flow proportional to bigram occurrence counts
     Gate("word_pagerank_weighted", (s, dir) =>
-      Graph.wordPageRankWeightedFrom(graft.sources.GraphStage.wordEdgeCounts(s, dir)),
+      Graph.wordPageRankWeighted(graft.sources.GraphStage.wordEdgeCounts(s, dir)),
       // weighted variant: inflow shares proportional to bigram counts
       {
         val init = 1000000000000L
@@ -263,7 +263,7 @@ object GraphGates {
       }),
     // synchronous LPA communities, 2 deterministic rounds
     Gate("word_communities", (s, dir) =>
-      Graph.wordCommunitiesFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.wordCommunities(graft.sources.GraphStage.wordEdges(s, dir)),
       // synchronous LPA: adopt the most frequent neighbor label, ties to
       // the smallest — a pure function of the prior round, so 2 unrolled
       // rounds land identically on both engines
@@ -292,7 +292,7 @@ object GraphGates {
       }),
     // Newman modularity of the LPA partition, exact-integer ppm
     Gate("word_modularity", (s, dir) =>
-      Graph.wordModularityFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.wordModularity(graft.sources.GraphStage.wordEdges(s, dir)),
       {
         val iters = 2
         val base =
@@ -452,11 +452,11 @@ object GraphGates {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // Bellman-Ford weighted SSSP over the word adjacency graph
     Gate("word_sssp", (s, dir) =>
-      Graph.ssspWordsFrom(graft.sources.GraphStage.wordEdgeCounts(s, dir)),
+      Graph.ssspWords(graft.sources.GraphStage.wordEdgeCounts(s, dir)),
       ssspOracle(6)),
     // two-sweep BFS diameter lower bound of the word graph
     Gate("word_diameter_2sweep", (s, dir) =>
-      Graph.diameter2SweepFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.diameter2Sweep(graft.sources.GraphStage.wordEdges(s, dir)),
       s"""WITH RECURSIVE e0 AS (SELECT DISTINCT ws[i+1] AS s, ws[i+2] AS t
          |  FROM (SELECT $SqlWs AS ws FROM documents),
          |       LATERAL (SELECT unnest(range(0, len(ws) - 1)) AS i) r
@@ -485,11 +485,11 @@ object GraphGates {
          |  (SELECT dist FROM f2) AS diameter_lb""".stripMargin),
     // bounded k-truss peel: cohesive word-graph edges by tri support
     Gate("word_ktruss_edges", (s, dir) =>
-      Graph.ktrussEdgesFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.ktrussEdges(graft.sources.GraphStage.wordEdges(s, dir)),
       ktrussOracle(2, 3)),
     // radius-bounded multi-source BFS closeness on co-purchase graph
     Gate("part_closeness", (s, dir) =>
-      Graph.closenessBfsFrom(
+      Graph.closenessBfs(
         graft.sources.GraphStage.copurchase(s, dir).select("a", "b")),
       // unrolled 3-hop multi-source BFS; MATERIALIZED per round (each
       // d$i is referenced twice by d${i+1})
@@ -546,7 +546,7 @@ object GraphGates {
     // bowtie decomposition of the DIRECTED word graph: the pivot's SCC
     // exactly (fwd ∩ bwd reachability) plus in/out wings + disconnected
     Gate("word_bowtie", (s, dir) =>
-      Graph.bowtieFrom(graft.sources.GraphStage.wordEdges(s, dir)),
+      Graph.bowtie(graft.sources.GraphStage.wordEdges(s, dir)),
       s"""WITH RECURSIVE e0 AS (SELECT DISTINCT ws[i+1] AS s, ws[i+2] AS t
          |  FROM (SELECT $SqlWs AS ws FROM documents),
          |       LATERAL (SELECT unnest(range(0, len(ws) - 1)) AS i) r
@@ -577,7 +577,7 @@ object GraphGates {
     // skip-gram graph-embedding model trains on, hash-driven so both
     // engines walk identical trajectories
     Gate("word_walk_corpus", (s, dir) =>
-      Graph.walkCorpusFrom(graft.sources.GraphStage.wordEdges(s, dir), nWalks = 2, len = 3),
+      Graph.walkCorpus(graft.sources.GraphStage.wordEdges(s, dir), nWalks = 2, len = 3),
       // deterministic walk corpus: 3 unrolled hash-driven steps; the
       // nibble index var is `q` so it can't shadow the walk columns
       {
@@ -608,7 +608,8 @@ object GraphGates {
     // embedding trains on)
     Gate("walk_skipgram_pmi", (s, dir) => {
       import org.apache.spark.sql.functions._
-      val sentences = Graph.walkCorpus(Tables.documents(s, dir), 2, 3)
+      val sentences = Graph.walkCorpus(
+        Graph.bigramEdges(Tables.documents(s, dir)), 2, 3)
         .select(col("path").as("text"), lit(0L).as("doc_id"))
       TextAnalysis.bigramPmi(sentences, minCnt = 2, k = 25)
     },

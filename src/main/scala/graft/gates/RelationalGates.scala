@@ -105,7 +105,7 @@ object RelationalGates {
          |FROM spend, cuts GROUP BY 1 ORDER BY 1""".stripMargin),
     // association rules: ppm confidence + lift over the directed pairs
     Gate("part_assoc_rules", (s, dir) =>
-      Graph.associationRulesFrom(Tables.lineitem(s, dir),
+      Graph.associationRules(Tables.lineitem(s, dir),
         graft.sources.GraphStage.copurchase(s, dir)),
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |no AS (SELECT count(DISTINCT o)::BIGINT AS n_orders FROM op),

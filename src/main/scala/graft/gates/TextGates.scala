@@ -290,7 +290,7 @@ object TextGates {
          |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
     Gate("corpus_build", (s, dir) =>
       TextAnalysis.corpusBuild(Tables.documents(s, dir),
-        cc = Some(graft.sources.DedupStage.ccLabels(s, dir))),
+        cc = graft.sources.DedupStage.ccLabels(s, dir)),
       s"""WITH RECURSIVE pairs AS (${sqlJaccard(4, 5)}),
          |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
          |          UNION ALL SELECT id_b, id_a FROM pairs),
@@ -687,7 +687,7 @@ object TextGates {
     // split assigned by hash of the near-dup COMPONENT, not the doc id —
     // near-duplicates can never straddle train/test (leakage-proof)
     Gate("dataset_split_leakproof", (s, dir) =>
-      Dedup.splitLeakproofFrom(Tables.documents(s, dir),
+      Dedup.splitLeakproof(Tables.documents(s, dir),
         graft.sources.DedupStage.ccLabels(s, dir)),
       // group-wise split: same recursive-CTE CC, then the md5-prefix hash
       // of the component label decides the split for every member at once

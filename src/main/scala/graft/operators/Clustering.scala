@@ -246,9 +246,6 @@ object Clustering {
       .orderBy("vec_id")
   }
 
-  /** Gate shape for [[lloydCentroids]]: the converged centroids
-    * unpacked to (cluster, dim, v) rows with a total ordering.
-    */
   /** m INDEPENDENT Lloyd runs fused into one job per iteration:
     * `slices` holds (tag, vec_id, embedding) and centroids are keyed
     * (tag, cluster). Per tag this computes exactly what
@@ -303,6 +300,9 @@ object Clustering {
     cents.drop("changed")
   }
 
+  /** Gate shape for [[lloydCentroids]]: the converged centroids
+    * unpacked to (cluster, dim, v) rows with a total ordering.
+    */
   def lloydConverged(embs: DataFrame, k: Int, maxIters: Int): DataFrame =
     lloydCentroids(embs, k, maxIters)
       .select(col("cluster"), posexplode(col("cv")))

@@ -353,16 +353,12 @@ object Dedup {
     * predicate as the join condition (hash anti join, NOT a nested
     * loop) — and one doc_id rollup for the reassembly; both ride the
     * same hash(doc_id) partitioning.
+    *
+    * Takes the islands frame ([[crossDocSpans]], staged as
+    * [[graft.sources.DedupStage.islands]]). `w` only shapes island
+    * detection, so the cut itself needs no window parameter.
     */
-  def cutSpans(docs: DataFrame, w: Int): DataFrame =
-    cutSpansFrom(docs, crossDocSpans(docs, w))
-
-  /** [[cutSpans]] over a pre-built islands frame (the staged entry
-    * point — [[graft.sources.DedupStage.islands]]). `w` only shapes
-    * island detection, so the cut itself needs no window parameter.
-    */
-  private[graft] def cutSpansFrom(docs: DataFrame,
-                                  islandsIn: DataFrame): DataFrame = {
+  def cutSpans(docs: DataFrame, islandsIn: DataFrame): DataFrame = {
     val islands = islandsIn
       .select(col("doc_id").as("i_doc"), col("tok_start"), col("tok_end"))
     val toks = docs
@@ -504,15 +500,10 @@ object Dedup {
     * every exact-duplicate group, minus the higher-id member of every
     * near-duplicate pair — i.e. what a training pipeline actually
     * materializes after dedup. One aggregation + one left-anti join.
+    * Takes the near-dup pair frame ([[jaccardPairsUnsorted]], staged as
+    * [[graft.sources.DedupStage.pairs]]).
     */
-  def keepList(docs: DataFrame, n: Int, num: Int, den: Int): DataFrame =
-    keepListFrom(docs, jaccardPairsUnsorted(docs, n, num, den))
-
-  /** [[keepList]] over a pre-built near-dup pair frame (the staged
-    * entry point — [[graft.sources.DedupStage.pairs]]).
-    */
-  private[graft] def keepListFrom(docs: DataFrame,
-                                  pairs: DataFrame): DataFrame = {
+  def keepList(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val reps = exact(docs).select(col("keep_id").as("doc_id"))
     val drops = pairs.select(col("id_b").as("doc_id")).distinct()
     reps.join(drops, Seq("doc_id"), "left_anti").orderBy("doc_id")
@@ -729,16 +720,10 @@ object Dedup {
     * handles transitive chains that pair-wise [[keepList]] misses.
     * Clusters via [[componentsAdaptive]]: propagation speed on the
     * usual shallow graphs, star-contraction bound on deep chains.
+    * Takes the component labels (doc_id, comp) (staged as
+    * [[graft.sources.DedupStage.ccLabels]]).
     */
-  def keepListCC(docs: DataFrame, n: Int, num: Int, den: Int): DataFrame =
-    keepListCCFrom(docs,
-      componentsAdaptive(jaccardPairsUnsorted(docs, n, num, den)))
-
-  /** [[keepListCC]] over pre-built component labels (doc_id, comp) —
-    * the staged entry point ([[graft.sources.DedupStage.ccLabels]]).
-    */
-  private[graft] def keepListCCFrom(docs: DataFrame,
-                                    comp: DataFrame): DataFrame = {
+  def keepListCC(docs: DataFrame, comp: DataFrame): DataFrame = {
     val reps = exact(docs).select(col("keep_id").as("doc_id"))
     val drops = comp.where(col("doc_id") =!= col("comp")).select("doc_id")
     reps.join(drops, Seq("doc_id"), "left_anti").orderBy("doc_id")
@@ -752,16 +737,10 @@ object Dedup {
     * first. Exact copies have identical scores, so the tie-break keeps
     * the exact-dedup representative. One aggregate per cluster (the
     * argmax rides a struct max — no window, no second shuffle).
+    * Takes the component labels (staged as
+    * [[graft.sources.DedupStage.ccLabels]]).
     */
-  def keepBestQuality(docs: DataFrame, n: Int, num: Int, den: Int): DataFrame =
-    keepBestQualityFrom(docs,
-      componentsAdaptive(jaccardPairsUnsorted(docs, n, num, den)))
-
-  /** [[keepBestQuality]] over pre-built component labels — the staged
-    * entry point ([[graft.sources.DedupStage.ccLabels]]).
-    */
-  private[graft] def keepBestQualityFrom(docs: DataFrame,
-                                         comp: DataFrame): DataFrame = {
+  def keepBestQuality(docs: DataFrame, comp: DataFrame): DataFrame = {
     val winners = comp
       .join(graft.operators.TextAnalysis.qualityScore(docs), "doc_id")
       .groupBy("comp")
@@ -786,17 +765,10 @@ object Dedup {
     * own singleton group (comp = doc_id), so the split rates still
     * hold corpus-wide. Plan: pair generation + adaptive CC (both
     * existing scale paths) + one left join; the hash is the
-    * dual-engine md5-prefix used by every sampling operator.
+    * dual-engine md5-prefix used by every sampling operator. Takes the
+    * component labels (staged as [[graft.sources.DedupStage.ccLabels]]).
     */
-  def splitLeakproof(docs: DataFrame, n: Int, num: Int, den: Int): DataFrame =
-    splitLeakproofFrom(docs,
-      componentsAdaptive(jaccardPairsUnsorted(docs, n, num, den)))
-
-  /** [[splitLeakproof]] over pre-built component labels — the staged
-    * entry point ([[graft.sources.DedupStage.ccLabels]]).
-    */
-  private[graft] def splitLeakproofFrom(docs: DataFrame,
-                                        cc: DataFrame): DataFrame = {
+  def splitLeakproof(docs: DataFrame, cc: DataFrame): DataFrame = {
     docs.select("doc_id")
       .join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
@@ -870,10 +842,6 @@ object Dedup {
                             num: Int, den: Int): DataFrame =
     verifyJaccardSh(shingles(docs, n), cands, num, den)
 
-  /** [[verifyJaccard]] over a PRE-BUILT (doc_id, shingle) frame — the
-    * entry point for index-backed callers whose base shingles are
-    * persisted rather than recomputed.
-    */
   /** Per-(session, operator) registry of the LAST invocation's eager
     * per-call checkpoints (ADVICE r15): verifyJaccardSh / dedupIncrement
     * / prefixFilterPairs checkpoint at DataFrame-construction time and
@@ -892,6 +860,10 @@ object Dedup {
     ref.getAndSet(frames).foreach(Iterate.release(_))
   }
 
+  /** [[verifyJaccard]] over a PRE-BUILT (doc_id, shingle) frame — the
+    * entry point for index-backed callers whose base shingles are
+    * persisted rather than recomputed.
+    */
   private[graft] def verifyJaccardSh(shAll: DataFrame, cands: DataFrame,
                                      num: Int, den: Int): DataFrame = {
     // r15: the verify consumed its two inputs from THREE subtree copies
@@ -1020,11 +992,6 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.functions.simhash64(col("hs")).as("simhash"))
 
-  /** SimHash near-duplicate pairs with Hamming distance <= maxDist,
-    * found via pigeonhole banding on four 16-bit blocks (a pair within
-    * distance 3 must agree on at least one block), then verified with
-    * bit_count(xor). Output: (id_a, id_b, hamming).
-    */
   /** The corpus ∪ deterministic "half-doc" plants: for every doc with
     * `doc_id % mod == 0`, a synthetic document whose text is the first
     * ⌊len/2⌋ cleaned tokens — a sub-document fully CONTAINED in its
@@ -1105,26 +1072,16 @@ object Dedup {
     * (per-row codegen rules, one fp shuffle, broadcast bench probe,
     * banded-verify pairs at scale); the verdict is three left joins on
     * doc_id against frames far smaller than the corpus.
+    *
+    * `pairs` must cover AT LEAST the post-benchmark corpus. Accepts the
+    * full-corpus pair set ([[graft.sources.DedupStage.pairs]]): Jaccard
+    * is pair-local, so pairs-over-the-subset equals pairs-over-everything
+    * filtered to `id_a > benchMaxId` (id_a < id_b makes that condition
+    * cover both endpoints).
     */
-  def corpusFilterReport(docs: DataFrame, benchMaxId: Long = 50L,
-                         benchN: Int = 8, n: Int = 3, num: Int = 4,
-                         den: Int = 5): DataFrame = {
-    val corpus = docs.where(col("doc_id") > benchMaxId)
-    corpusFilterReportFrom(docs, jaccardPairsUnsorted(corpus, n, num, den),
-      benchMaxId, benchN)
-  }
-
-  /** [[corpusFilterReport]] over a pre-built pair frame covering AT
-    * LEAST the post-benchmark corpus — the staged entry point.
-    * Accepts the full-corpus pair set ([[graft.sources.DedupStage
-    * .pairs]]): Jaccard is pair-local, so pairs-over-the-subset equals
-    * pairs-over-everything filtered to `id_a > benchMaxId` (id_a < id_b
-    * makes that condition cover both endpoints).
-    */
-  private[graft] def corpusFilterReportFrom(docs: DataFrame,
-                                            pairs: DataFrame,
-                                            benchMaxId: Long = 50L,
-                                            benchN: Int = 8): DataFrame = {
+  def corpusFilterReport(docs: DataFrame, pairs: DataFrame,
+                         benchMaxId: Long = 50L,
+                         benchN: Int = 8): DataFrame = {
     val corpus = docs.where(col("doc_id") > benchMaxId)
     val gopher = TextAnalysis.gopherRules(corpus)
       .select(col("doc_id"), col("gopher_ok"))
@@ -1182,20 +1139,13 @@ object Dedup {
     * fat tail here means one template is flooding the corpus — the
     * first thing a curation on-call looks at. Cost beyond the CC run:
     * two tiny keyed aggs over component-sized frames.
+    *
+    * Takes the component labels (staged as
+    * [[graft.sources.DedupStage.ccLabels]]; every CC variant converges
+    * to the same min-id fixed point, so the propRounds used to derive
+    * the labels doesn't change them).
     */
-  def clusterSizeHistogram(docs: DataFrame, n: Int, num: Int,
-                           den: Int): DataFrame =
-    clusterSizeHistogramFrom(docs,
-      componentsAdaptive(jaccardPairsUnsorted(docs, n, num, den),
-        propRounds = 1))
-
-  /** [[clusterSizeHistogram]] over pre-built component labels — the
-    * staged entry point ([[graft.sources.DedupStage.ccLabels]]; every
-    * CC variant converges to the same min-id fixed point, so the
-    * propRounds used to derive the labels doesn't change them).
-    */
-  private[graft] def clusterSizeHistogramFrom(docs: DataFrame,
-                                              comp: DataFrame): DataFrame = {
+  def clusterSizeHistogram(docs: DataFrame, comp: DataFrame): DataFrame = {
     val sizes = comp.groupBy("comp").agg(count(lit(1)).as("sz"))
     val nonSingleton = sizes.agg(sum("sz").as("covered"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
@@ -1211,6 +1161,11 @@ object Dedup {
       .orderBy("cluster_size")
   }
 
+  /** SimHash near-duplicate pairs with Hamming distance <= maxDist,
+    * found via pigeonhole banding on four 16-bit blocks (a pair within
+    * distance 3 must agree on at least one block), then verified with
+    * bit_count(xor). Output: (id_a, id_b, hamming).
+    */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame = {
     // 4-block banding only guarantees a shared block for distance <= 3
     // (pigeonhole); a larger radius needs maxDist+1 blocks.
@@ -1390,18 +1345,13 @@ object Dedup {
     * guarantee catches every Jaccard-0.8 pair on this corpus), while
     * precision is what the cheap verify stage exists to fix. All three
     * counts are 1-row aggregates crossed broadcast-style.
+    *
+    * Takes the truth pair set ([[jaccardPairsUnsorted]] at (3, 4, 5);
+    * [[graft.sources.DedupStage.pairs]] is the same derivation,
+    * materialized once per session).
     */
-  def winnowEval(docs: DataFrame, n: Int = 3, num: Int = 4, den: Int = 5,
-                 k: Int = 4, w: Int = 4): DataFrame =
-    winnowEvalFrom(docs, jaccardPairsUnsorted(docs, n, num, den), k, w)
-
-  /** [[winnowEval]] over a pre-built truth pair set — the staged entry
-    * point ([[graft.sources.DedupStage.pairs]] IS the same
-    * jaccardPairs(3, 4, 5) derivation, materialized once per session;
-    * r16 stops this gate re-deriving it from raw text).
-    */
-  private[graft] def winnowEvalFrom(docs: DataFrame, truthPairs: DataFrame,
-                                    k: Int = 4, w: Int = 4): DataFrame = {
+  def winnowEval(docs: DataFrame, truthPairs: DataFrame,
+                 k: Int = 4, w: Int = 4): DataFrame = {
     val det = winnowPairs(docs, k, w, minShared = 1).select("id_a", "id_b")
     val truth = truthPairs.select("id_a", "id_b")
     val hit = truth.join(det, Seq("id_a", "id_b"))
@@ -1441,18 +1391,10 @@ object Dedup {
     * one master record each. Cluster shape is [[componentsStar]] over
     * [[blockedFuzzyPairs]]; the survivorship pick is one window over
     * cluster-sized groups, so the whole merge is two keyed shuffles.
+    * Takes the entity clusters (custkey, comp) (staged as
+    * [[graft.sources.DedupStage.fuzzyClusters]]).
     */
-  def goldenRecord(customer: DataFrame, maxDist: Int = 1): DataFrame =
-    goldenRecordFrom(customer,
-      componentsStar(blockedFuzzyPairs(customer, maxDist))
-        .select(col("doc_id").as("custkey"), col("comp")))
-
-  /** [[goldenRecord]] over pre-built entity clusters (custkey, comp) —
-    * the staged entry point ([[graft.sources.DedupStage
-    * .fuzzyClusters]]).
-    */
-  private[graft] def goldenRecordFrom(customer: DataFrame,
-                                      cl: DataFrame): DataFrame = {
+  def goldenRecord(customer: DataFrame, cl: DataFrame): DataFrame = {
     // NOTE: m feeds two consumers (survivorship window + balance
     // rollup); componentsStar already materializes the expensive CC
     // state internally, so re-deriving the cheap join twice measured
@@ -1512,26 +1454,18 @@ object Dedup {
     * the truth join pays pct²/10⁴ of the full cost while the Rand
     * index stays an exact measurement over a well-defined
     * sub-population. samplePct = 100 is the full-corpus eval.
+    *
+    * Takes the FULL-corpus truth pair set (staged as
+    * [[graft.sources.DedupStage.pairs]]). Jaccard of a pair depends only
+    * on the two documents' own shingle sets, so the sampled-corpus
+    * truth `jaccardPairs(sample(docs))` equals the full-corpus pair set
+    * filtered to pairs whose BOTH endpoints pass the sample predicate —
+    * which lets the gate probe the session-staged frame instead of
+    * re-running the quadratic truth join over the sample.
     */
-  def randIndexEval(docs: DataFrame, n: Int = 3, num: Int = 4,
-                    den: Int = 5, k: Int = 4, w: Int = 4,
-                    minShared: Int = 3, samplePct: Int = 100): DataFrame =
-    randIndexEvalFrom(docs, jaccardPairsUnsorted(docs, n, num, den),
-      k, w, minShared, samplePct)
-
-  /** [[randIndexEval]] over a pre-built FULL-corpus truth pair set —
-    * the staged entry point ([[graft.sources.DedupStage.pairs]]).
-    * Jaccard of a pair depends only on the two documents' own shingle
-    * sets, so the sampled-corpus truth `jaccardPairs(sample(docs))`
-    * equals the full-corpus pair set filtered to pairs whose BOTH
-    * endpoints pass the sample predicate — the r16 rewrite that lets
-    * the gate probe the session-staged frame instead of re-running the
-    * quadratic truth join over the sample.
-    */
-  private[graft] def randIndexEvalFrom(docs: DataFrame, fullPairs: DataFrame,
-                                       k: Int = 4, w: Int = 4,
-                                       minShared: Int = 3,
-                                       samplePct: Int = 100): DataFrame = {
+  def randIndexEval(docs: DataFrame, fullPairs: DataFrame,
+                    k: Int = 4, w: Int = 4, minShared: Int = 3,
+                    samplePct: Int = 100): DataFrame = {
     def pri(c: String) = pmod(expr(
       s"cast(conv(substr(md5(cast($c AS string)), 1, 15), 16, 10) AS bigint)"),
       lit(100L))

@@ -87,15 +87,11 @@ object Graph {
     ranks.orderBy(col("rank").desc, col("node"))
   }
 
-  /** Gate shape: PageRank of the corpus word-adjacency graph. */
-  def wordPageRank(docs: DataFrame, iters: Int = 3): DataFrame =
-    wordPageRankFrom(bigramEdges(docs), iters)
-
-  /** [[wordPageRank]] over a pre-built directed distinct edge set —
-    * the staged entry point ([[graft.sources.GraphStage.wordEdges]]).
+  /** Gate shape: PageRank of the corpus word-adjacency graph, over its
+    * directed distinct edge set ([[bigramEdges]], staged as
+    * [[graft.sources.GraphStage.wordEdges]]).
     */
-  private[graft] def wordPageRankFrom(e0: DataFrame,
-                                      iters: Int = 3): DataFrame =
+  def wordPageRank(e0: DataFrame, iters: Int = 3): DataFrame =
     pageRank(e0, iters)
       .select(col("node"), col("rank"))
 
@@ -111,13 +107,6 @@ object Graph {
                        init: Long = 1000000000000L): DataFrame =
     rankFlow(rawEdges, col("w"), None, iters, init)
 
-  /** Gate shape: weighted PageRank where the edge weight is the bigram
-    * OCCURRENCE count (how often the adjacency appears corpus-wide) —
-    * the multigraph the unweighted gate collapses with `distinct()`.
-    */
-  def wordPageRankWeighted(docs: DataFrame, iters: Int = 3): DataFrame =
-    wordPageRankWeightedFrom(bigramEdgeCounts(docs), iters)
-
   /** Directed word-adjacency MULTIGRAPH counts (src, dst, cnt) — the
     * weighted family's shared derivation ([[wordPageRankWeighted]],
     * [[ssspWords]]); [[bigramEdges]] is its distinct key set.
@@ -131,11 +120,13 @@ object Graph {
       .select(col("p.src").as("src"), col("p.dst").as("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
 
-  /** [[wordPageRankWeighted]] over pre-built multigraph counts — the
-    * staged entry point ([[graft.sources.GraphStage.wordEdgeCounts]]).
+  /** Gate shape: weighted PageRank where the edge weight is the bigram
+    * OCCURRENCE count (how often the adjacency appears corpus-wide) —
+    * the multigraph the unweighted gate collapses with `distinct()`.
+    * Takes the multigraph counts ([[bigramEdgeCounts]], staged as
+    * [[graft.sources.GraphStage.wordEdgeCounts]]).
     */
-  private[graft] def wordPageRankWeightedFrom(counts: DataFrame,
-                                              iters: Int = 3): DataFrame =
+  def wordPageRankWeighted(counts: DataFrame, iters: Int = 3): DataFrame =
     pageRankWeighted(counts.withColumnRenamed("cnt", "w"), iters)
       .select(col("node"), col("rank"))
 
@@ -154,17 +145,12 @@ object Graph {
 
   /** Gate shape: personalized PageRank of the word-adjacency graph,
     * seeded at the corpus' top `nSeeds` words by count (data-derived —
-    * no corpus-dependent literal in the query).
+    * no corpus-dependent literal in the query). Ranks run over the
+    * edge set `e0` ([[bigramEdges]]); the seeds derive from the docs
+    * wordcount.
     */
-  def wordPpr(docs: DataFrame, iters: Int = 3, nSeeds: Int = 2): DataFrame =
-    wordPprFrom(docs, bigramEdges(docs), iters, nSeeds)
-
-  /** [[wordPpr]] over a pre-built edge set (seeds still derive from
-    * the docs wordcount) — the staged entry point.
-    */
-  private[graft] def wordPprFrom(docs: DataFrame, e0: DataFrame,
-                                 iters: Int = 3,
-                                 nSeeds: Int = 2): DataFrame = {
+  def wordPpr(docs: DataFrame, e0: DataFrame, iters: Int = 3,
+              nSeeds: Int = 2): DataFrame = {
     val seeds = WordCount.wordCount(docs)
       .orderBy(col("cnt").desc, col("word")).limit(nSeeds)
       .select(col("word").as("node"))
@@ -182,15 +168,9 @@ object Graph {
     * wedge set. Degree table is vocabulary-sized — un-hinted so AQE
     * sizes the join (broadcast at this scale, shuffle when the
     * vocabulary outgrows an executor); the two big joins shuffle on
-    * wedge keys.
+    * wedge keys. Takes a directed distinct edge set ([[bigramEdges]]).
     */
-  def triangleCount(docs: DataFrame): DataFrame =
-    triangleCountFrom(bigramEdges(docs))
-
-  /** [[triangleCount]] over a pre-built directed distinct edge set —
-    * the staged entry point.
-    */
-  private[graft] def triangleCountFrom(e: DataFrame): DataFrame = {
+  def triangleCount(e: DataFrame): DataFrame = {
     val e0 = e
       .where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
@@ -329,15 +309,10 @@ object Graph {
       .orderBy(col("auth").desc, col("node"))
   }
 
-  /** Gate shape: HITS of the corpus word-adjacency graph. Delegates to
-    * the staged entry point (ADVICE r15: one derivation path, the
-    * wordPageRank/wordModularity convention).
+  /** Gate shape: HITS of the corpus word-adjacency graph, over its
+    * edge set ([[bigramEdges]]).
     */
-  def wordHits(docs: DataFrame, iters: Int = 2): DataFrame =
-    wordHitsFrom(bigramEdges(docs), iters)
-
-  /** [[wordHits]] over a pre-built edge set — the staged entry point. */
-  private[graft] def wordHitsFrom(e0: DataFrame, iters: Int = 2): DataFrame =
+  def wordHits(e0: DataFrame, iters: Int = 2): DataFrame =
     hits(e0, iters)
 
   /** k-core decomposition of the UNDIRECTED graph by iterative
@@ -386,12 +361,9 @@ object Graph {
 
   /** Gate shape: 24-core of the corpus word-adjacency graph (the
     * vocabulary graph is dense, so the interesting peel threshold
-    * sits near the top of the degree distribution). */
-  def wordKCore(docs: DataFrame, k: Int = 24): DataFrame =
-    wordKCoreFrom(bigramEdges(docs), k)
-
-  /** [[wordKCore]] over a pre-built edge set — the staged entry point. */
-  private[graft] def wordKCoreFrom(e0: DataFrame, k: Int = 24): DataFrame =
+    * sits near the top of the degree distribution), over its edge set
+    * ([[bigramEdges]]). */
+  def wordKCore(e0: DataFrame, k: Int = 24): DataFrame =
     kCore(e0, k)
 
   /** Synchronous label propagation (Raghavan et al.) over the
@@ -431,13 +403,9 @@ object Graph {
     labels.select(col("node"), col("lbl").as("community")).orderBy("node")
   }
 
-  /** Gate shape: 2-round label propagation on the word graph. */
-  def wordCommunities(docs: DataFrame, iters: Int = 2): DataFrame =
-    wordCommunitiesFrom(bigramEdges(docs), iters)
-
-  /** [[wordCommunities]] over a pre-built edge set — staged entry. */
-  private[graft] def wordCommunitiesFrom(e0: DataFrame,
-                                         iters: Int = 2): DataFrame =
+  /** Gate shape: 2-round label propagation on the word graph's edge
+    * set ([[bigramEdges]]). */
+  def wordCommunities(e0: DataFrame, iters: Int = 2): DataFrame =
     labelPropagation(e0, iters)
 
   /** Newman modularity of a partition over the undirected `(a < b)`
@@ -475,15 +443,9 @@ object Graph {
 
   /** [[modularity]] of the 2-round LPA partition of the word graph —
     * the clustering-quality readout next to [[wordCommunities]]
-    * itself. Both consume the same normalized edge set.
+    * itself. Both consume the same edge set ([[bigramEdges]]).
     */
-  def wordModularity(docs: DataFrame, iters: Int = 2): DataFrame =
-    wordModularityFrom(bigramEdges(docs), iters)
-
-  /** [[wordModularity]] over a pre-built edge set — staged entry. */
-  private[graft] def wordModularityFrom(e: DataFrame,
-                                        iters: Int = 2): DataFrame = {
-    val raw = e
+  def wordModularity(raw: DataFrame, iters: Int = 2): DataFrame = {
     val e0 = raw.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -507,14 +469,10 @@ object Graph {
     * for the deep-chain case). The source is a 1-row aggregate
     * cross-joined in, NOT a driver-side fetch; superseded rounds'
     * checkpoints are released like every other iterative loop here.
+    * Takes the directed edge set ([[bigramEdges]]).
     */
-  def bfsDistances(docs: DataFrame, maxHops: Int = 20): DataFrame =
-    bfsDistancesFrom(bigramEdges(docs), maxHops)
-
-  /** [[bfsDistances]] over a pre-built edge set — staged entry. */
-  private[graft] def bfsDistancesFrom(e0: DataFrame,
-                                      maxHops: Int = 20): DataFrame = {
-    val edges = undirectedFrom(e0)
+  def bfsDistances(e0: DataFrame, maxHops: Int = 20): DataFrame = {
+    val edges = undirected(e0)
     // min over an EMPTY edge set is one NULL row — drop it, or an
     // empty graph would report a phantom (null, 0) source
     val source = edges.agg(min(col("src")).as("word"))
@@ -522,10 +480,7 @@ object Graph {
     bfsCore(edges, source, maxHops).orderBy("word")
   }
 
-  private def undirectedWordEdges(docs: DataFrame): DataFrame =
-    undirectedFrom(bigramEdges(docs))
-
-  private def undirectedFrom(e0: DataFrame): DataFrame =
+  private def undirected(e0: DataFrame): DataFrame =
     e0.unionByName(
         e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
@@ -571,15 +526,11 @@ object Graph {
     *
     * Scale shape: exactly two [[bfsCore]] runs (frontier-sized joins,
     * diameter-many rounds); the "farthest" picks are 1-row aggregates
-    * chained as frames, never driver fetches.
+    * chained as frames, never driver fetches. Takes the directed edge
+    * set ([[bigramEdges]]).
     */
-  def diameter2Sweep(docs: DataFrame, maxHops: Int = 20): DataFrame =
-    diameter2SweepFrom(bigramEdges(docs), maxHops)
-
-  /** [[diameter2Sweep]] over a pre-built edge set — staged entry. */
-  private[graft] def diameter2SweepFrom(e0: DataFrame,
-                                        maxHops: Int = 20): DataFrame = {
-    val edges = undirectedFrom(e0)
+  def diameter2Sweep(e0: DataFrame, maxHops: Int = 20): DataFrame = {
+    val edges = undirected(e0)
     val start = edges.agg(min(col("src")).as("word"))
       .where(col("word").isNotNull)
     val b1 = bfsCore(edges, start, maxHops)
@@ -629,21 +580,14 @@ object Graph {
     * broadcast. Overflow-safe while `supp(ab)·nOrders < 2⁶³/10⁶`
     * (≈ 9·10¹² basket-pair incidences — far past 100 TB's realistic
     * support counts after thresholding).
+    *
+    * Takes the co-purchase pair set (a, b, supp) ([[copurchaseEdges]],
+    * staged as [[graft.sources.GraphStage.copurchase]]); item supports
+    * and the order count stay live (one distinct (order, part) frame,
+    * both rollups reuse its exchange).
     */
-  def associationRules(lineitem: DataFrame, minSupport: Long = 2L,
-                       topK: Int = 50): DataFrame =
-    associationRulesFrom(lineitem, copurchaseEdges(lineitem, minSupport),
-      topK)
-
-  /** [[associationRules]] over a pre-built co-purchase pair set
-    * (a, b, supp) — the staged entry point
-    * ([[graft.sources.GraphStage.copurchase]]); item supports and the
-    * order count stay live (one distinct (order, part) frame, both
-    * rollups reuse its exchange).
-    */
-  private[graft] def associationRulesFrom(lineitem: DataFrame,
-                                          pairs: DataFrame,
-                                          topK: Int = 50): DataFrame = {
+  def associationRules(lineitem: DataFrame, pairs: DataFrame,
+                       topK: Int = 50): DataFrame = {
     val op = lineitem
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
@@ -665,37 +609,6 @@ object Graph {
       .limit(topK)
   }
 
-  /** Common-neighbors link prediction over an undirected graph given
-    * as normalized edges `(a < b, distinct)`: for every NON-adjacent
-    * pair, the number of shared neighbors — the classic "who should be
-    * connected next" score — top `topK` by (count desc, a, b) (a total
-    * order: pairs are unique). On the co-purchase graph this is
-    * item-to-item recommendation ("bought together with the same
-    * third parts, never yet together").
-    *
-    * Shape: wedges are generated at their MIDDLE vertex (neighbor
-    * pairs u < v per node), counted per pair — cost Σ deg(w)², the
-    * inherent wedge bound — then adjacent pairs leave via LEFT ANTI
-    * against the edge set. Two shuffles: wedge keys, then the anti
-    * join. The `maxDeg` hub prune (same shape as
-    * [[Basket.cfNeighbors]]'s `maxDf`) drops middle vertices above the
-    * cap BEFORE the self-join, bounding wedge volume at
-    * Σ min(deg, maxDeg)² — one "everyone buys it" part no longer
-    * contributes deg² rows. The prune is part of the operator's
-    * contract and mirrored verbatim in the oracle; the oriented trick
-    * from [[triangleCount]] does NOT apply here — a common neighbor
-    * must see BOTH endpoints, whatever their degrees.
-    */
-  /** Resource-allocation link prediction (Zhou et al. 2009): like
-    * [[commonNeighborPairs]] but each shared neighbor `w` contributes
-    * `1/deg(w)` instead of 1 — a hub connecting half the catalog says
-    * little; a rare part bridging two others says a lot. Integer-exact
-    * as `Σ 10⁶ div deg(w)` (per-wedge truncation, mirrored verbatim in
-    * the oracle). Same wedge bound, with the `maxDeg` hub prune ACTIVE
-    * (middles above the cap dropped before fan-out, mirrored in the
-    * oracle); the degree frame is one extra (node)-keyed agg joined
-    * back at the wedge middle, where it also carries the prune.
-    */
   /** Hub prune shared by the link-prediction family: keep only
     * adjacency rows whose MIDDLE vertex `w` has degree ≤ `maxDeg`,
     * bounding wedge volume at Σ min(deg, maxDeg)² — the
@@ -709,6 +622,16 @@ object Graph {
       .select("w", "n")
   }
 
+  /** Resource-allocation link prediction (Zhou et al. 2009): like
+    * [[commonNeighborPairs]] but each shared neighbor `w` contributes
+    * `1/deg(w)` instead of 1 — a hub connecting half the catalog says
+    * little; a rare part bridging two others says a lot. Integer-exact
+    * as `Σ 10⁶ div deg(w)` (per-wedge truncation, mirrored verbatim in
+    * the oracle). Same wedge bound, with the `maxDeg` hub prune ACTIVE
+    * (middles above the cap dropped before fan-out, mirrored in the
+    * oracle); the degree frame is one extra (node)-keyed agg joined
+    * back at the wedge middle, where it also carries the prune.
+    */
   def resourceAllocationPairs(e0: DataFrame, topK: Int = 50,
                               maxDeg: Long = 1000L): DataFrame = {
     val adj = e0.select(col("a").as("w"), col("b").as("n"))
@@ -791,6 +714,27 @@ object Graph {
       .withColumn("r_ppm", expr("num * 1000000 div den"))
   }
 
+  /** Common-neighbors link prediction over an undirected graph given
+    * as normalized edges `(a < b, distinct)`: for every NON-adjacent
+    * pair, the number of shared neighbors — the classic "who should be
+    * connected next" score — top `topK` by (count desc, a, b) (a total
+    * order: pairs are unique). On the co-purchase graph this is
+    * item-to-item recommendation ("bought together with the same
+    * third parts, never yet together").
+    *
+    * Shape: wedges are generated at their MIDDLE vertex (neighbor
+    * pairs u < v per node), counted per pair — cost Σ deg(w)², the
+    * inherent wedge bound — then adjacent pairs leave via LEFT ANTI
+    * against the edge set. Two shuffles: wedge keys, then the anti
+    * join. The `maxDeg` hub prune (same shape as
+    * [[Basket.cfNeighbors]]'s `maxDf`) drops middle vertices above the
+    * cap BEFORE the self-join, bounding wedge volume at
+    * Σ min(deg, maxDeg)² — one "everyone buys it" part no longer
+    * contributes deg² rows. The prune is part of the operator's
+    * contract and mirrored verbatim in the oracle; the oriented trick
+    * from [[triangleCount]] does NOT apply here — a common neighbor
+    * must see BOTH endpoints, whatever their degrees.
+    */
   def commonNeighborPairs(e0: DataFrame, topK: Int = 50,
                           maxDeg: Long = 1000L): DataFrame = {
     val adj = e0.select(col("a").as("w"), col("b").as("n"))
@@ -826,16 +770,10 @@ object Graph {
     * the SQL oracle's canonical enumeration matches bit-for-bit. Per
     * round: one degree agg + two wedge joins + one edge-keyed count,
     * all edge/triangle-sized; each peel is an [[Iterate.fixed]]
-    * round.
+    * round. Takes the directed edge set ([[bigramEdges]]).
     */
-  def ktrussEdges(docs: DataFrame, minSupport: Long = 2L, rounds: Int = 3,
-                  topK: Int = 20): DataFrame =
-    ktrussEdgesFrom(bigramEdges(docs), minSupport, rounds, topK)
-
-  /** [[ktrussEdges]] over a pre-built edge set — staged entry. */
-  private[graft] def ktrussEdgesFrom(e: DataFrame, minSupport: Long = 2L,
-                                     rounds: Int = 3,
-                                     topK: Int = 20): DataFrame = {
+  def ktrussEdges(e: DataFrame, minSupport: Long = 2L, rounds: Int = 3,
+                  topK: Int = 20): DataFrame = {
     def support(edges: DataFrame): DataFrame = {
       val deg = edges.select(col("ea").as("w"))
         .union(edges.select(col("eb").as("w")))
@@ -889,18 +827,12 @@ object Graph {
     * and shuffled on `node` per hop — multi-source BFS batches all
     * seeds through ONE join per round instead of one traversal per
     * seed; each hop is an [[Iterate.fixed]] round. Degree table and
-    * seed list are part-domain-sized.
+    * seed list are part-domain-sized. Takes the normalized co-purchase
+    * edge set (a, b) ([[copurchaseEdges]], staged as
+    * [[graft.sources.GraphStage.copurchase]]).
     */
-  def closenessBfs(lineitem: DataFrame, nSeeds: Int = 5, rounds: Int = 3,
-                   minSupport: Long = 2L): DataFrame =
-    closenessBfsFrom(copurchaseEdges(lineitem, minSupport).select("a", "b"),
-      nSeeds, rounds)
-
-  /** [[closenessBfs]] over a pre-built normalized edge set (a, b) —
-    * the staged entry point ([[graft.sources.GraphStage.copurchase]]).
-    */
-  private[graft] def closenessBfsFrom(e0: DataFrame, nSeeds: Int = 5,
-                                      rounds: Int = 3): DataFrame = {
+  def closenessBfs(e0: DataFrame, nSeeds: Int = 5,
+                   rounds: Int = 3): DataFrame = {
     val edges = Iterate.materialize(e0.select(col("a").as("u"), col("b").as("v"))
       .union(e0.select(col("b").as("u"), col("a").as("v"))))
     val seeds = edges.groupBy("u").agg(count(lit(1)).as("d"))
@@ -940,16 +872,11 @@ object Graph {
     * budget is the honest contract at 100 TB: k rounds bound every
     * shortest path that uses ≤ k hops, and diameter-chasing belongs to
     * the adaptive CC family ([[graft.operators.Dedup.componentsAdaptive]]).
+    * Takes the multigraph counts ([[bigramEdgeCounts]]).
     */
-  def ssspWords(docs: DataFrame, rounds: Int = 6): DataFrame =
-    ssspWordsFrom(bigramEdgeCounts(docs), rounds)
-
-  /** [[ssspWords]] over pre-built multigraph counts — staged entry. */
-  private[graft] def ssspWordsFrom(counts: DataFrame,
-                                   rounds: Int = 6): DataFrame = {
-    val e0 = counts
-    val edges = Iterate.materialize(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("cnt")))
+  def ssspWords(counts: DataFrame, rounds: Int = 6): DataFrame = {
+    val edges = Iterate.materialize(counts.unionByName(
+        counts.select(col("dst").as("src"), col("src").as("dst"), col("cnt")))
       .groupBy("src", "dst").agg(sum("cnt").as("cnt"))
       .select(col("src"), col("dst"), expr("1000000L div cnt").as("cost")))
     val dist0 = Iterate.materialize(edges.agg(min(col("src")).as("word"))
@@ -979,16 +906,12 @@ object Graph {
     * one anti-join, nothing quadratic), which is why it scales where
     * any pairwise mutual-reachability formulation cannot. The oracle
     * mirrors both sweeps as depth-capped recursive CTEs.
-    */
-  def bowtie(docs: DataFrame, maxHops: Int = 20): DataFrame =
-    bowtieFrom(bigramEdges(docs).localCheckpoint(), maxHops)
-
-  /** [[bowtie]] over a pre-built (already materialized) edge set —
-    * staged entry; both BFS sweeps re-join the frame, so the caller
+    *
+    * Takes the directed edge set ([[bigramEdges]]) already
+    * materialized: both BFS sweeps re-join the frame, so the caller
     * passes a checkpointed one.
     */
-  private[graft] def bowtieFrom(e: DataFrame,
-                                maxHops: Int = 20): DataFrame = {
+  def bowtie(e: DataFrame, maxHops: Int = 20): DataFrame = {
     val nodes = e.select(col("src").as("word"))
       .union(e.select(col("dst").as("word"))).distinct().localCheckpoint()
     val pivot = nodes.agg(min(col("word")).as("word"))
@@ -1025,16 +948,11 @@ object Graph {
     * Scale shape: adjacency is node-sized with bounded lists; the walk
     * frontier is |V|·nWalks rows; each step is ONE keyed join on the
     * current node — len shuffles total, no driver state, no explosion
-    * (frontier cardinality is invariant across steps).
+    * (frontier cardinality is invariant across steps). Takes the
+    * directed edge set ([[bigramEdges]]).
     */
-  def walkCorpus(docs: DataFrame, nWalks: Int = 2, len: Int = 3,
-                 maxNeighbors: Int = 64): DataFrame =
-    walkCorpusFrom(bigramEdges(docs), nWalks, len, maxNeighbors)
-
-  /** [[walkCorpus]] over a pre-built edge set — staged entry. */
-  private[graft] def walkCorpusFrom(e0: DataFrame, nWalks: Int = 2,
-                                    len: Int = 3,
-                                    maxNeighbors: Int = 64): DataFrame = {
+  def walkCorpus(e0: DataFrame, nWalks: Int = 2, len: Int = 3,
+                 maxNeighbors: Int = 64): DataFrame = {
     val adj = e0
       .groupBy(col("src"))
       .agg(slice(sort_array(collect_set(col("dst"))), 1, maxNeighbors).as("nb"))

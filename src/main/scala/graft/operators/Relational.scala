@@ -2335,22 +2335,6 @@ object Relational {
       .limit(100)
   }
 
-  /** Last-touch marketing attribution: each purchase is credited to
-    * the user's most recent PRIOR `click`/`view` within `windowMs`
-    * (else `direct`), then purchase count + cents revenue roll up per
-    * channel.
-    *
-    * Shape: ONE shuffle on user_id for the window pass — the carried
-    * "last marketing touch" is `last(..., ignoreNulls)` over
-    * `ROWS UNBOUNDED PRECEDING .. 1 PRECEDING` in (ts_ms, event_id)
-    * order (total, so deterministic), which Spark evaluates as a
-    * running frame in a single sorted sweep per user — no self-join of
-    * purchases against touch history (the naive formulation is a
-    * per-purchase range join). The two carried columns (`ts`, type)
-    * come from the same frame and the same non-null predicate, so they
-    * always describe the SAME touch row. Channel rollup is a
-    * three-row aggregate.
-    */
   /** DAU / WAU stickiness: daily active users over 7-day-window active
     * users, in ppm. The rolling DISTINCT is rewritten as an explode —
     * each (user, day) activity emits the 7 window-end days it
@@ -2530,6 +2514,22 @@ object Relational {
       .limit(topK)
   }
 
+  /** Last-touch marketing attribution: each purchase is credited to
+    * the user's most recent PRIOR `click`/`view` within `windowMs`
+    * (else `direct`), then purchase count + cents revenue roll up per
+    * channel.
+    *
+    * Shape: ONE shuffle on user_id for the window pass — the carried
+    * "last marketing touch" is `last(..., ignoreNulls)` over
+    * `ROWS UNBOUNDED PRECEDING .. 1 PRECEDING` in (ts_ms, event_id)
+    * order (total, so deterministic), which Spark evaluates as a
+    * running frame in a single sorted sweep per user — no self-join of
+    * purchases against touch history (the naive formulation is a
+    * per-purchase range join). The two carried columns (`ts`, type)
+    * come from the same frame and the same non-null predicate, so they
+    * always describe the SAME touch row. Channel rollup is a
+    * three-row aggregate.
+    */
   def lastTouchAttribution(events: DataFrame,
                            windowMs: Long = 604800000L): DataFrame = {
     val w = Window.partitionBy("user_id")
@@ -3135,52 +3135,18 @@ object Relational {
 
   /** Conversion-window funnel (the ClickHouse `windowFunnel`
     * semantics, which [[funnel]]'s unconstrained first-occurrence
-    * chain cannot express): a user converts at step k only if some
-    * view starts a chain view → signup → purchase with EVERY step
-    * inside `windowHours` of that view. Greedy earliest-next-step is
-    * exact here, not a heuristic: taking the FIRST signup after a
-    * view maximizes the residual window for the purchase, so a chain
-    * exists iff the greedy one completes — which keeps the plan at
-    * two (user-keyed join + min-rollup) rounds instead of an
-    * exists-quantified triple join (measured: the triple join form
-    * runs minutes at sf0.1 on this very-active-user fixture; this
-    * shape is sub-second). One shuffle key (user_id) throughout;
-    * per-user fan-out is views × signups, never cubed.
-    */
-  def windowFunnel(events: DataFrame, windowHours: Int = 6): DataFrame = {
-    val w = windowHours * 3600000L
-    val e = events.select(col("user_id"), col("event_type"), col("ts_ms"))
-    val v = e.where(col("event_type") === "view")
-      .select(col("user_id"), col("ts_ms").as("vt"))
-    val s = e.where(col("event_type") === "signup")
-      .select(col("user_id"), col("ts_ms").as("st"))
-    val p = e.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts_ms").as("pt"))
-    val s1 = v.join(s, Seq("user_id"))
-      .where(col("st") > col("vt") && col("st") <= col("vt") + w)
-      .groupBy("user_id", "vt").agg(min("st").as("st"))
-    val p1 = s1.join(p, Seq("user_id"))
-      .where(col("pt") > col("st") && col("pt") <= col("vt") + w)
-      .groupBy("user_id", "vt").agg(min("pt").as("pt"))
-    v.agg(count_distinct(col("user_id")).as("n_view_users"))
-      .crossJoin(s1.agg(count_distinct(col("user_id")).as("n_step2")))
-      .crossJoin(p1.agg(count_distinct(col("user_id")).as("n_step3")))
-      .select(col("n_view_users"), col("n_step2"), col("n_step3"),
-        expr("n_step2 * 1000000 div n_view_users").as("step2_ppm"),
-        expr("n_step3 * 1000000 div n_view_users").as("step3_ppm"))
-  }
-
-  /** Variadic [[windowFunnel]] (full ClickHouse `windowFunnel`
-    * semantics): a user reaches step k iff some step-1 event starts a
-    * chain step1 → … → stepk with EVERY step inside `windowHours` of
-    * that first event. The greedy earliest-next-step argument extends
-    * inductively — at each step, taking the FIRST qualifying event
-    * maximizes the residual window for every later step, so a chain
-    * exists iff the greedy one completes — which keeps the plan at ONE
-    * user-keyed (join + min-rollup) round PER STEP instead of an
-    * exists-quantified k-way join (events^k shaped). One shuffle key
-    * (user_id) throughout; per-user fan-out at each round is chains ×
-    * step events, never powered.
+    * chain cannot express): a user reaches step k iff some step-1
+    * event starts a chain step1 → … → stepk with EVERY step inside
+    * `windowHours` of that first event. Greedy earliest-next-step is
+    * exact, not a heuristic: at each step, taking the FIRST qualifying
+    * event maximizes the residual window for every later step, so a
+    * chain exists iff the greedy one completes — which keeps the plan
+    * at ONE user-keyed (join + min-rollup) round PER STEP instead of an
+    * exists-quantified k-way join (events^k shaped; measured: the
+    * 3-step triple join runs minutes at sf0.1 on this very-active-user
+    * fixture, this shape is sub-second). One shuffle key (user_id)
+    * throughout; per-user fan-out at each round is chains × step
+    * events, never powered.
     */
   def windowFunnelN(events: DataFrame, steps: Seq[String],
                     windowHours: Int = 6): DataFrame = {
@@ -3264,7 +3230,7 @@ object Relational {
         col("abs_s").as("max_abs_s"))
   }
 
-  /** Conversion-latency distribution of the [[windowFunnel]] chains:
+  /** Conversion-latency distribution of the [[windowFunnelN]] chains:
     * for each converted user, the FASTEST completed view→signup→
     * purchase chain's end-to-end latency (min over that user's
     * completed chains of pt − vt), summarized as count / min /
@@ -3376,21 +3342,6 @@ object Relational {
         expr("n_base_hits * 1000000 div n_users").as("base_ppm"))
   }
 
-  /** Incremental view maintenance of a grouped aggregate: the
-    * materialized pricing rollup M = γ(base) is patched with a CDC
-    * batch — deletes (every line of orders ≡ 0 mod 97) carry weight
-    * −1, inserts (corrected copies of orders ≡ 0 mod 101) weight +1 —
-    * by aggregating ONLY the delta and full-outer-merging it into M:
-    * M' = M ⊕ γ±(Δ). count/sum are the self-maintainable aggregates
-    * (each is a signed sum), and a group whose maintained count
-    * reaches zero is dropped — the delete-to-empty case a naive
-    * "just add the delta" merge gets wrong. The oracle recomputes
-    * γ((base ∖ deletes) ⊎ inserts) from scratch; equality is the IVM
-    * contract. Scale shape: at 100 TB the base scan disappears (M is
-    * stored state) and the update costs one delta-sized aggregate
-    * plus a group-key-sized merge join — the reason nightly pipelines
-    * maintain instead of recompute.
-    */
   /** The signed CDC row stream behind [[ivmAggDelta]] — base rows
     * carry +1, the delete predicate (orderkey ≡ 0 mod 97) re-emits
     * its rows at −1, the correction predicate (≡ 0 mod 101) emits the
@@ -3425,6 +3376,21 @@ object Relational {
       sum(col("sgn") * col("qty")).as("sum_qty"),
       sum(col("sgn") * col("price_c")).as("sum_price_c"))
 
+  /** Incremental view maintenance of a grouped aggregate: the
+    * materialized pricing rollup M = γ(base) is patched with a CDC
+    * batch — deletes (every line of orders ≡ 0 mod 97) carry weight
+    * −1, inserts (corrected copies of orders ≡ 0 mod 101) weight +1 —
+    * by aggregating ONLY the delta and full-outer-merging it into M:
+    * M' = M ⊕ γ±(Δ). count/sum are the self-maintainable aggregates
+    * (each is a signed sum), and a group whose maintained count
+    * reaches zero is dropped — the delete-to-empty case a naive
+    * "just add the delta" merge gets wrong. The oracle recomputes
+    * γ((base ∖ deletes) ⊎ inserts) from scratch; equality is the IVM
+    * contract. Scale shape: at 100 TB the base scan disappears (M is
+    * stored state) and the update costs one delta-sized aggregate
+    * plus a group-key-sized merge join — the reason nightly pipelines
+    * maintain instead of recompute.
+    */
   def ivmAggDelta(lineitem: DataFrame): DataFrame = {
     val li = lineitem.select(
       col("l_orderkey"), col("l_returnflag"),

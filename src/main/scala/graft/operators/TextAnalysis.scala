@@ -411,15 +411,13 @@ object TextAnalysis {
     * exact+near dedup keep-list ∩ quality filter → chunking → split
     * assignment → per-split chunk/token counts. Every stage is an
     * already-oracle-checked operator; this is the end-to-end shape a
-    * 100 TB dataset build actually runs.
+    * 100 TB dataset build actually runs. `cc` is the near-dup
+    * component labels (staged as [[graft.sources.DedupStage.ccLabels]]),
+    * so the pair derivation is paid once per session, not per capstone.
     */
-  def corpusBuild(docs: DataFrame, chunkSize: Int = 32, overlap: Int = 8,
-                  cc: Option[DataFrame] = None): DataFrame = {
-    // `cc`: pre-built near-dup component labels (the staged frame from
-    // [[graft.sources.DedupStage.ccLabels]]) — same keep list, pair
-    // derivation paid once per session instead of per capstone
-    val kept = cc.map(Dedup.keepListCCFrom(docs, _))
-      .getOrElse(Dedup.keepListCC(docs, n = 3, num = 4, den = 5))
+  def corpusBuild(docs: DataFrame, cc: DataFrame, chunkSize: Int = 32,
+                  overlap: Int = 8): DataFrame = {
+    val kept = Dedup.keepListCC(docs, cc)
     val good = qualityScore(docs).where(col("quality_ok")).select("doc_id")
     val chunks = chunk(docs.join(kept, "doc_id").join(good, "doc_id"),
       chunkSize, overlap)
@@ -478,8 +476,7 @@ object TextAnalysis {
       .agg(min("doc_id").as("doc_id")).select("doc_id")
     val gok = gopherRules(d).where(col("gopher_ok")).select("doc_id")
     val rok = repetitionProfile(d).where(col("rep_ok")).select("doc_id")
-    val nk = islands.map(Dedup.cutSpansFrom(d, _))
-      .getOrElse(Dedup.cutSpans(d, w))
+    val nk = Dedup.cutSpans(d, islands.getOrElse(Dedup.crossDocSpans(d, w)))
       .select("doc_id", "n_kept")
     val surv = d.select("doc_id", "source")
       .join(keep, "doc_id").join(gok, "doc_id").join(rok, "doc_id")
@@ -514,7 +511,8 @@ object TextAnalysis {
     */
   def writeCorpus(docs: DataFrame, out: String,
                   chunkSize: Int = 32, overlap: Int = 8): Unit = {
-    val kept = Dedup.keepListCC(docs, n = 3, num = 4, den = 5)
+    val kept = Dedup.keepListCC(docs,
+      Dedup.componentsAdaptive(Dedup.jaccardPairsUnsorted(docs, 3, 4, 5)))
     val good = qualityScore(docs).where(col("quality_ok")).select("doc_id")
     chunk(docs.join(kept, "doc_id").join(good, "doc_id"), chunkSize, overlap)
       .withColumn("split",
@@ -1126,20 +1124,25 @@ object TextAnalysis {
     * stream through — the property that makes HLL the 100 TB distinct
     * sketch (registers merge by elementwise max across partitions,
     * shards, or days, unlike COUNT(DISTINCT)'s full-key shuffle).
+    * `keys` keeps one register table per key (the per-source tables
+    * [[hllDistinctMerged]] merges).
     */
-  def hllRegisters(items: DataFrame, itemCol: String, m: Int): DataFrame = {
+  def hllRegisters(items: DataFrame, itemCol: String, m: Int,
+                   keys: Seq[String] = Nil): DataFrame = {
     require(m >= 2 && (m & (m - 1)) == 0 && m <= 4096,
       "bucket count must be a power of two (the hash-split needs exact bit fields)")
     val w = 60 - java.lang.Integer.numberOfTrailingZeros(m) // rest-field width
+    val k = keys.map(col)
+    val groups = keys :+ "bucket"
     items
-      .select(expr(s"cast(conv(substr(md5($itemCol), 1, 15), 16, 10) AS bigint)")
-        .as("h"))
-      .select((col("h") % m).as("bucket"), expr(s"h div $m").as("rest"))
-      .select(col("bucket"),
+      .select(k :+ expr(s"cast(conv(substr(md5($itemCol), 1, 15), 16, 10) AS bigint)")
+        .as("h"): _*)
+      .select(k ++ Seq((col("h") % m).as("bucket"), expr(s"h div $m").as("rest")): _*)
+      .select(k ++ Seq(col("bucket"),
         when(col("rest") === 0, lit(w + 1))
           .otherwise(lit(w + 1) - (length(expr("bin(rest)"))))
-          .cast("long").as("rho"))
-      .groupBy("bucket").agg(max(col("rho")).as("max_rho"))
+          .cast("long").as("rho")): _*)
+      .groupBy(groups.head, groups.tail: _*).agg(max(col("rho")).as("max_rho"))
   }
 
   /** The measured-accuracy HLL report (sibling of `dedup_minhash_eval`
@@ -1191,20 +1194,8 @@ object TextAnalysis {
     * oracle via the alias map).
     */
   def hllDistinctMerged(docs: DataFrame, m: Int = 64): DataFrame = {
-    // same bit-field contract as hllRegisters: m must be a power of two
-    require(m >= 2 && (m & (m - 1)) == 0 && m <= 4096,
-      s"m must be a power of two in [2, 4096], got $m")
-    val perSource = hllGramStream(docs, 3, Seq("source"))
-      .select(col("source"),
-        expr("cast(conv(substr(md5(gram), 1, 15), 16, 10) AS bigint)").as("h"))
-      .select(col("source"), (col("h") % m).as("bucket"),
-        expr(s"h div $m").as("rest"))
-      .select(col("source"), col("bucket"),
-        when(col("rest") === 0, lit(61 - java.lang.Integer.numberOfTrailingZeros(m)))
-          .otherwise(lit(61 - java.lang.Integer.numberOfTrailingZeros(m))
-            - length(expr("bin(rest)")))
-          .cast("long").as("rho"))
-      .groupBy("source", "bucket").agg(max(col("rho")).as("max_rho"))
+    val perSource = hllRegisters(hllGramStream(docs, 3, Seq("source")),
+      "gram", m, Seq("source"))
     val merged = perSource.groupBy("bucket").agg(max("max_rho").as("max_rho"))
     hllSummarize(merged,
       hllGramStream(docs, 3).agg(count_distinct(col("gram")).as("n_exact")), m)
@@ -1625,20 +1616,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** Phrase retrieval through a POSITIONAL inverted index: per-doc
-    * occurrence counts of the corpus's top bigram, found by
-    * intersecting the two words' postings at adjacent positions
-    * (`pos_b = pos_a + 1`) — the index mechanics behind quoted-phrase
-    * search, distinct from [[invertedIndex]]'s document-level
-    * postings. The phrase itself is computed inside the query (top
-    * bigram by count desc, ngram — a total order), so there is no
-    * data-dependent literal to drift between engines or scale factors.
-    *
-    * Scale shape: postings shuffle once on (doc_id, pos±) for the
-    * adjacency join; the 1-row phrase is a broadcast. For an n-word
-    * phrase, chain n−1 adjacency joins — each intersection shrinks the
-    * posting stream, so join the rarest word first in a real engine.
-    */
   /** Skip-gram co-occurrence counts — word pairs within `k` positions
     * (ordered: w1 strictly before w2), the word2vec/GloVe
     * co-occurrence-statistics preprocessing pass. The window
@@ -1666,6 +1643,20 @@ object TextAnalysis {
       .limit(top)
   }
 
+  /** Phrase retrieval through a POSITIONAL inverted index: per-doc
+    * occurrence counts of the corpus's top bigram, found by
+    * intersecting the two words' postings at adjacent positions
+    * (`pos_b = pos_a + 1`) — the index mechanics behind quoted-phrase
+    * search, distinct from [[invertedIndex]]'s document-level
+    * postings. The phrase itself is computed inside the query (top
+    * bigram by count desc, ngram — a total order), so there is no
+    * data-dependent literal to drift between engines or scale factors.
+    *
+    * Scale shape: postings shuffle once on (doc_id, pos±) for the
+    * adjacency join; the 1-row phrase is a broadcast. For an n-word
+    * phrase, chain n−1 adjacency joins — each intersection shrinks the
+    * posting stream, so join the rarest word first in a real engine.
+    */
   def phraseSearch(docs: DataFrame): DataFrame = {
     val words = docs.select(col("doc_id"), ws.as("ws"))
       .select(col("doc_id"), posexplode(col("ws")))
@@ -1926,17 +1917,6 @@ object TextAnalysis {
       .orderBy("pct")
   }
 
-  /** Deterministic domain-mixture sampling: draw a corpus whose source
-    * composition matches target weights (here w = 1 + src_number mod 4,
-    * a stand-in for externally supplied mixture weights à la
-    * DoReMi-style static reweighting). Per source the quota is
-    * `min(n_src, budget·w/Σw)`; rows are ranked inside each source by
-    * (md5(doc_id), doc_id) — a total order — and the first `quota`
-    * survive, so the sample is reproducible run-to-run and engine-to-
-    * engine. Scale shape: quotas are a 20-row broadcast; ranking is one
-    * window shuffle on source (salt or pre-bucket if one source
-    * dominates); no global sort.
-    */
   /** Mixture PLANNING — the arithmetic a pretraining mix answers
     * BEFORE any sampler runs ([[mixtureSample]] executes a plan; this
     * emits one): given target mixture weights (ppm per source) and a
@@ -1973,6 +1953,17 @@ object TextAnalysis {
       .orderBy("source")
   }
 
+  /** Deterministic domain-mixture sampling: draw a corpus whose source
+    * composition matches target weights (here w = 1 + src_number mod 4,
+    * a stand-in for externally supplied mixture weights à la
+    * DoReMi-style static reweighting). Per source the quota is
+    * `min(n_src, budget·w/Σw)`; rows are ranked inside each source by
+    * (md5(doc_id), doc_id) — a total order — and the first `quota`
+    * survive, so the sample is reproducible run-to-run and engine-to-
+    * engine. Scale shape: quotas are a 20-row broadcast; ranking is one
+    * window shuffle on source (salt or pre-bucket if one source
+    * dominates); no global sort.
+    */
   def mixtureSample(docs: DataFrame, budget: Int): DataFrame = {
     // try_cast + coalesce: a digit-less source value must fall back to
     // weight 1, not throw under ANSI mode (cast('' AS int) does)

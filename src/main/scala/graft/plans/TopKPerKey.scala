@@ -320,8 +320,8 @@ object TopK {
     * set among ties is partition-dependent and will disagree with
     * `row_number()` — with a total order no two rows compare equal and
     * the result is exactly the window formulation's.
-    */
-  /** `maxRetained`: per-partition retained-row budget (#keys × k must
+    *
+    * `maxRetained`: per-partition retained-row budget (#keys × k must
     * stay under it — default 8M rows ≈ low hundreds of MB of retained
     * UnsafeRows, well inside an executor's task memory). Past the
     * budget the operator degrades per partition instead of OOM-ing:

@@ -295,19 +295,6 @@ object CfIndex {
       tg
     }
 
-  /** Gate query: the full-history neighbor graph produced by FOLDING
-    * the post-[[CutDate]] delta orders into the persisted base index —
-    * byte-identical to [[Basket.cfNeighbors]] over all orders (the
-    * driver shares that oracle), with base×base work bounded as
-    * [[cfDeltas]] documents. Re-ranking touches only customers whose
-    * score inputs changed: endpoints of changed pairs, customers with
-    * changed degree, and holders of a pair whose COUNTERPARTY's degree
-    * changed (score = shared²·10⁶/(deg_a·deg_b) reads both degrees);
-    * everyone else's rows are served verbatim from the base `nb`
-    * table. The changed-degree set is delta-proportional, so it rides
-    * a broadcast; the pair-table merge and every probe are keyed on
-    * the bucketed tables' keys.
-    */
   /** The increment's MERGED state, exposed so [[writePromoted]] can
     * persist it as the next nightly base: the new incidence rows, the
     * part-df deltas, the merged pair/degree state, and the updated
@@ -321,6 +308,19 @@ object CfIndex {
                                      nb: DataFrame, dsh: DataFrame,
                                      ddeg: DataFrame, touched: DataFrame)
 
+  /** Gate query: the full-history neighbor graph produced by FOLDING
+    * the post-[[CutDate]] delta orders into the persisted base index —
+    * byte-identical to [[Basket.cfNeighbors]] over all orders (the
+    * driver shares that oracle), with base×base work bounded as
+    * [[cfDeltas]] documents. Re-ranking touches only customers whose
+    * score inputs changed: endpoints of changed pairs, customers with
+    * changed degree, and holders of a pair whose COUNTERPARTY's degree
+    * changed (score = shared²·10⁶/(deg_a·deg_b) reads both degrees);
+    * everyone else's rows are served verbatim from the base `nb`
+    * table. The changed-degree set is delta-proportional, so it rides
+    * a broadcast; the pair-table merge and every probe are keyed on
+    * the bucketed tables' keys.
+    */
   def cfIncrement(spark: SparkSession, dir: String, maxDf: Int = 30,
                   minShared: Int = 2, kNb: Int = 3): DataFrame =
     incrementState(spark, dir, maxDf, minShared, kNb).nb

@@ -926,9 +926,10 @@ object Streams {
         .map(StagedFiles.FramePart)
     }
 
-  /** [[graft.operators.Relational.windowFunnel]] as keyed streaming
-    * state (23rd streaming gate) — the continuously-maintained
-    * conversion funnel a production team watches live. Per user the
+  /** [[graft.operators.Relational.windowFunnelN]] over view → signup →
+    * purchase as keyed streaming state (23rd streaming gate) — the
+    * continuously-maintained conversion funnel a production team
+    * watches live. Per user the
     * state is the greedy chain frontier: the max step level reached,
     * the views still awaiting their FIRST qualifying signup, and the
     * (vt, st) chains awaiting a purchase inside the window anchored at

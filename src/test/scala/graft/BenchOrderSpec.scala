@@ -56,4 +56,13 @@ class BenchOrderSpec extends AnyFunSuite {
     assert(Bench.paths(Map("SPARK_GRAFT_BENCH_OUT" -> "/a.json",
       "SPARK_GRAFT_BENCH_PRIOR" -> "/b.json"), "/repo") == (("/a.json", "/b.json")))
   }
+
+  test("summary: a failed query adds 600 s and is listed in failed") {
+    val s = Bench.summarize(Seq("b" -> 2.0, "zz" -> -1.0, "a" -> 1.5))
+    assert(s.failed == Seq("zz"))
+    assert(s.failedJson == "[\"zz\"]")
+    assert(s.total == 1.5 + 2.0 + 600.0)
+    assert(s.qs == "{\"a\":1.5,\"b\":2.0,\"zz\":-1.0}")
+    assert(Bench.summarize(Seq("a" -> 1.5)).failed.isEmpty)
+  }
 }

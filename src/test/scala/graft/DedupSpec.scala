@@ -7,6 +7,11 @@ class DedupSpec extends SparkSpec {
 
   private val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+  // the keep-list family's inputs, derived live at jaccard(3, 4/5)
+  private def nearPairs(d: org.apache.spark.sql.DataFrame) =
+    Dedup.jaccardPairsUnsorted(d, 3, 4, 5)
+  private def nearCC(d: org.apache.spark.sql.DataFrame) =
+    Dedup.componentsAdaptive(nearPairs(d))
 
   test("exact dedup groups identical texts, keeps min id") {
     val d = docs(1L -> "a b c", 2L -> "a b c", 3L -> "x y")
@@ -119,7 +124,8 @@ class DedupSpec extends SparkSpec {
       102L -> "tiny doc",                // gopher fail (too short) -> bit 0
       103L -> ("the a of " + bench + " " + longTail.drop(10).mkString(" ")), // shares 8-gram -> bit 2
       104L -> ("the a of " + longTail.mkString(" ") + " zz"))  // near-dup of 100 -> bit 3
-    val got = Dedup.corpusFilterReport(d).collect()
+    val got = Dedup.corpusFilterReport(d,
+        nearPairs(d.where($"doc_id" > 50))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(got(100L) == ((0L, true)))
     assert(got(101L)._1 == 2L || got(101L)._1 == 10L) // dup copy (may also near-dup)
@@ -131,7 +137,8 @@ class DedupSpec extends SparkSpec {
   test("clusterSizeHistogram: dup pairs cluster, the rest are singletons") {
     val d = docs(1L -> base, 2L -> base, 3L -> base,
       4L -> "one two three four five six", 5L -> "seven eight nine ten el tw")
-    val got = Dedup.clusterSizeHistogram(d, 3, 4, 5).collect()
+    val got = Dedup.clusterSizeHistogram(d,
+        Dedup.componentsAdaptive(nearPairs(d), propRounds = 1)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     // docs 1-3 form one cluster of 3; docs 4 and 5 are singletons
     assert(got == Seq((1L, 2L), (3L, 1L)))
@@ -158,10 +165,10 @@ class DedupSpec extends SparkSpec {
       1L -> base,
       2L -> (base + " the"),
       3L -> "completely different words entirely unrelated content here the end")
-    val got = Dedup.keepBestQuality(d, n = 3, num = 4, den = 5)
+    val got = Dedup.keepBestQuality(d, nearCC(d))
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(2L, 3L), s"got $got")
-    val idOrder = Dedup.keepListCC(d, n = 3, num = 4, den = 5)
+    val idOrder = Dedup.keepListCC(d, nearCC(d))
       .collect().map(_.getLong(0)).toSeq
     assert(idOrder == Seq(1L, 3L))  // the contrast this operator fixes
   }
@@ -194,7 +201,7 @@ class DedupSpec extends SparkSpec {
       1L -> base, 2L -> base,                       // near/exact dup of 1
       3L -> "one two three four five six seven",    // unique
       4L -> (base + " extra"))                      // near-dup of 1 (high jaccard)
-    val keep = Dedup.keepList(d, 3, 4, 5).collect().map(_.getLong(0)).toSet
+    val keep = Dedup.keepList(d, nearPairs(d)).collect().map(_.getLong(0)).toSet
     assert(keep == Set(1L, 3L))
   }
 
@@ -319,7 +326,7 @@ class DedupSpec extends SparkSpec {
       1L -> "a b c d e f g h",   // shares [0,4] with doc 2 at w=3
       2L -> "x y a b c d e q",
       3L -> "u v w")             // untouched
-    val got = Dedup.cutSpans(d, 3).collect()
+    val got = Dedup.cutSpans(d, Dedup.crossDocSpans(d, 3)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     // doc 1 keeps "f g h", doc 2 keeps "x y" + "q", doc 3 keeps all
     import org.apache.spark.sql.functions.md5
@@ -426,7 +433,7 @@ class DedupSpec extends SparkSpec {
 
   test("splitLeakproof: every member of a near-dup component shares its split") {
     val d = Tables.documents(spark, sf0001)
-    val got = Dedup.splitLeakproof(d, n = 3, num = 4, den = 5).collect()
+    val got = Dedup.splitLeakproof(d, nearCC(d)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(got.length == d.count())
     assert(got.map(_._3).toSet.subsetOf(Set("train", "val", "test")))

@@ -48,34 +48,43 @@ class DedupStageSpec extends SparkSpec {
   test("staged islands == crossDocSpans, and cutSpansFrom == cutSpans") {
     val docs = Tables.documents(spark, dir)
     val staged = DedupStage.islands(spark, dir)
-    assert(rows(staged) == rows(Dedup.crossDocSpans(docs, w = 8)))
-    assert(rows(Dedup.cutSpansFrom(docs, staged)) ==
-      rows(Dedup.cutSpans(docs, w = 8)))
+    val live = Dedup.crossDocSpans(docs, w = 8)
+    assert(rows(staged) == rows(live))
+    assert(rows(Dedup.cutSpans(docs, staged)) ==
+      rows(Dedup.cutSpans(docs, live)))
   }
 
   test("From-variants equal their self-deriving forms") {
+    // each operator over the staged frame equals it over the live
+    // derivation the staged frame replaces
     val docs = Tables.documents(spark, dir)
     val pairs = DedupStage.pairs(spark, dir)
     val cc = DedupStage.ccLabels(spark, dir)
-    assert(rows(Dedup.keepListFrom(docs, pairs)) ==
-      rows(Dedup.keepList(docs, n = 3, num = 4, den = 5)))
-    assert(rows(Dedup.keepListCCFrom(docs, cc)) ==
-      rows(Dedup.keepListCC(docs, n = 3, num = 4, den = 5)))
-    assert(rows(Dedup.keepBestQualityFrom(docs, cc)) ==
-      rows(Dedup.keepBestQuality(docs, n = 3, num = 4, den = 5)))
-    assert(rows(Dedup.splitLeakproofFrom(docs, cc)) ==
-      rows(Dedup.splitLeakproof(docs, n = 3, num = 4, den = 5)))
-    assert(rows(Dedup.clusterSizeHistogramFrom(docs, cc)) ==
-      rows(Dedup.clusterSizeHistogram(docs, n = 3, num = 4, den = 5)))
-    assert(rows(Dedup.corpusFilterReportFrom(docs, pairs)) ==
-      rows(Dedup.corpusFilterReport(docs)))
+    val livePairs = Dedup.jaccardPairsUnsorted(docs, 3, 4, 5)
+    val liveCC = Dedup.componentsAdaptive(livePairs)
+    assert(rows(Dedup.keepList(docs, pairs)) ==
+      rows(Dedup.keepList(docs, livePairs)))
+    assert(rows(Dedup.keepListCC(docs, cc)) ==
+      rows(Dedup.keepListCC(docs, liveCC)))
+    assert(rows(Dedup.keepBestQuality(docs, cc)) ==
+      rows(Dedup.keepBestQuality(docs, liveCC)))
+    assert(rows(Dedup.splitLeakproof(docs, cc)) ==
+      rows(Dedup.splitLeakproof(docs, liveCC)))
+    assert(rows(Dedup.clusterSizeHistogram(docs, cc)) ==
+      rows(Dedup.clusterSizeHistogram(docs,
+        Dedup.componentsAdaptive(livePairs, propRounds = 1))))
+    assert(rows(Dedup.corpusFilterReport(docs, pairs)) ==
+      rows(Dedup.corpusFilterReport(docs,
+        Dedup.jaccardPairsUnsorted(docs.where(col("doc_id") > 50), 3, 4, 5))))
   }
 
   test("capstones over staged inputs equal their self-deriving forms") {
     val docs = Tables.documents(spark, dir)
     assert(rows(graft.operators.TextAnalysis.corpusBuild(docs,
-        cc = Some(DedupStage.ccLabels(spark, dir)))) ==
-      rows(graft.operators.TextAnalysis.corpusBuild(docs)))
+        cc = DedupStage.ccLabels(spark, dir))) ==
+      rows(graft.operators.TextAnalysis.corpusBuild(docs,
+        cc = Dedup.componentsAdaptive(
+          Dedup.jaccardPairsUnsorted(docs, 3, 4, 5)))))
     assert(rows(graft.operators.TextAnalysis.corpusBuildV2(docs,
         islands = Some(DedupStage.islands(spark, dir)))) ==
       rows(graft.operators.TextAnalysis.corpusBuildV2(docs)))
@@ -87,8 +96,10 @@ class DedupStageSpec extends SparkSpec {
     assert(rows(staged) == rows(Dedup.blockedFuzzyPairs(cust, maxDist = 1)))
     assert(DedupStage.fuzzyPairs(spark, dir) eq staged)
     val cl = DedupStage.fuzzyClusters(spark, dir)
-    assert(rows(Dedup.goldenRecordFrom(cust, cl)) ==
-      rows(Dedup.goldenRecord(cust, maxDist = 1)))
+    assert(rows(Dedup.goldenRecord(cust, cl)) ==
+      rows(Dedup.goldenRecord(cust,
+        Dedup.componentsStar(Dedup.blockedFuzzyPairs(cust, maxDist = 1))
+          .select(col("doc_id").as("custkey"), col("comp")))))
   }
 
   test("corpusFilterReportFrom accepts the FULL-corpus pair set: " +

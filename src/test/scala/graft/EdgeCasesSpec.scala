@@ -97,7 +97,8 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Relational.weeklyFromDaily(emptyEvents).count() == 0)
     assert(TextAnalysis.boilerplateScrub(emptyDocs).count() == 0)
     assert(TextAnalysis.freqOfFreq(emptyDocs).count() == 0)
-    assert(Graph.triangleCount(emptyDocs).collect().head.getLong(0) == 0L)
+    assert(Graph.triangleCount(Graph.bigramEdges(emptyDocs))
+      .collect().head.getLong(0) == 0L)
   }
 
   test("round-3 TPC-H shapes on empty lineitem-like input") {
@@ -165,10 +166,11 @@ class EdgeCasesSpec extends SparkSpec {
     val emptyLangDocs = emptyDocs.withColumn("lang", lit("en"))
     assert(TextAnalysis.dsirSelect(emptyLangDocs).count() == 0)
     assert(TextAnalysis.perplexityBuckets(emptyLangDocs).count() == 0)
-    assert(graft.operators.Graph.bfsDistances(emptyDocs).count() == 0)
+    val graph = graft.operators.Graph
+    assert(graph.bfsDistances(graph.bigramEdges(emptyDocs)).count() == 0)
     // single doc with one word: no bigram edges -> BFS finds nothing
-    assert(graft.operators.Graph.bfsDistances(
-      Seq((1L, "lonely")).toDF("doc_id", "text")).count() == 0)
+    assert(graph.bfsDistances(graph.bigramEdges(
+      Seq((1L, "lonely")).toDF("doc_id", "text"))).count() == 0)
   }
 
   test("round-6 third-sweep operators on empty input") {
@@ -183,8 +185,9 @@ class EdgeCasesSpec extends SparkSpec {
     assert(TextAnalysis.skipgramCounts(emptyDocs).count() == 0)
     assert(TextAnalysis.temperatureSample(
       emptyDocs.withColumn("source", lit("s")), budget = 10).count() == 0)
-    assert(graft.operators.Graph.wordHits(emptyDocs).count() == 0)
-    assert(graft.operators.Graph.wordKCore(emptyDocs).count() == 0)
+    val noEdges = graft.operators.Graph.bigramEdges(emptyDocs)
+    assert(graft.operators.Graph.wordHits(noEdges).count() == 0)
+    assert(graft.operators.Graph.wordKCore(noEdges).count() == 0)
     assert(graft.operators.Multimodal.realPhashNearDup(spark,
       graft.operators.Multimodal.realMediaOfKind(emptyDocs, 0)).count() == 0)
   }

@@ -5,6 +5,30 @@ package graft
   */
 class GraftSqlSpec extends SparkSpec {
 
+  test("registerViews: functions once per session, views follow the last dir") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fn = FunctionIdentifier("graft_topk_sketch")
+    val s1 = spark.newSession()
+    GraftSql.registerViews(s1, sf0001)
+    val info = s1.sessionState.functionRegistry.lookupFunction(fn)
+    assert(info.isDefined)
+    // a registration builds a fresh ExpressionInfo, so the same
+    // instance means the second call re-registered nothing
+    val sf001 = sf0001.replace("sf0.001", "sf0.01")
+    GraftSql.registerViews(s1, sf001)
+    assert(s1.sessionState.functionRegistry.lookupFunction(fn).get eq info.get)
+    // ...while the views moved to the last dir
+    val n001 = Tables(s1, sf001, "orders").count()
+    assert(n001 != Tables(s1, sf0001, "orders").count())
+    assert(s1.table("orders").count() == n001)
+    // a new session shares no temp functions, so it registers its own
+    val s2 = spark.newSession()
+    GraftSql.registerViews(s2, sf0001)
+    assert(s2.sessionState.functionRegistry.lookupFunction(fn).isDefined)
+    assert(s2.sql("SELECT graft_topk_sketch(lang, 16) FROM documents")
+      .collect().length == 1)
+  }
+
   test("flagship word count via spark.sql equals the DataFrame result") {
     GraftSql.registerViews(spark, sf0001)
     val sql = spark.sql(

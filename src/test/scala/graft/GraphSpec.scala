@@ -9,7 +9,7 @@ class GraphSpec extends SparkSpec {
 
   test("bigramEdges are distinct consecutive pairs") {
     val d = docs(1L -> "a b a b", 2L -> "b c")
-    val got = Graph.triangleCount(d)  // no triangle in a path graph
+    val got = Graph.triangleCount(Graph.bigramEdges(d))  // no triangle in a path graph
     assert(got.collect().head.getLong(0) == 0L)
     val edges = Graph.bigramEdges(d).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -20,7 +20,7 @@ class GraphSpec extends SparkSpec {
     // K4 on {a,b,c,d} = 4 triangles; build via a doc walking all edges
     val d = docs(1L -> "a b c a d b d c d a c b")
     // edges: ab bc ca ad db bd dc cd da ac cb -> all 6 undirected pairs
-    val n = Graph.triangleCount(d).collect().head.getLong(0)
+    val n = Graph.triangleCount(Graph.bigramEdges(d)).collect().head.getLong(0)
     assert(n == 4L)
   }
 
@@ -42,7 +42,8 @@ class GraphSpec extends SparkSpec {
 
   test("wordPpr seeds rank at the top of their own neighborhood") {
     val d = Tables.documents(spark, sf0001)
-    val pr = Graph.wordPpr(d).collect().map(r => (r.getString(0), r.getLong(1)))
+    val pr = Graph.wordPpr(d, Graph.bigramEdges(d)).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
     assert(pr.nonEmpty && pr.map(_._2).toSeq == pr.map(_._2).toSeq.sorted.reverse)
     // seeded mass must be concentrated: some node holds rank > 0 and
     // at least one node is exactly 0 (unreachable from the 2 seeds)
@@ -110,14 +111,14 @@ class GraphSpec extends SparkSpec {
   test("bfsDistances: first-reach depths on a chain with a shortcut") {
     // chain a-b-c-d plus shortcut a-d: d is 1 hop via the shortcut
     val d = docs(1L -> "a b", 2L -> "b c", 3L -> "c d", 4L -> "a d")
-    val got = Graph.bfsDistances(d).collect()
+    val got = Graph.bfsDistances(Graph.bigramEdges(d)).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(got == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 1L))
   }
 
   test("bfsDistances: maxHops bounds the horizon; unreached words absent") {
     val d = docs(1L -> "a b", 2L -> "b c", 3L -> "c d", 4L -> "x y")
-    val got = Graph.bfsDistances(d, maxHops = 2).collect()
+    val got = Graph.bfsDistances(Graph.bigramEdges(d), maxHops = 2).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     // d is 3 hops away -> outside the horizon; x/y disconnected
     assert(got == Map("a" -> 0L, "b" -> 1L, "c" -> 2L))
@@ -140,7 +141,7 @@ class GraphSpec extends SparkSpec {
     val li = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
         (3L, 10L), (3L, 30L), (4L, 30L))
       .toDF("l_orderkey", "l_partkey")
-    val got = Graph.associationRules(li).collect()
+    val got = Graph.associationRules(li, Graph.copurchaseEdges(li)).collect()
       .map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4))))
     // 20→10: conf 2/2 = 1e6; 10→20: conf 2/3 = 666666 (truncated);
@@ -218,14 +219,15 @@ class GraphSpec extends SparkSpec {
     assert(staged == live && staged.nonEmpty)
     // a staged consumer gate equals its live form (assoc rules carry
     // the support values through arithmetic, so a wrong supp breaks it)
-    assert(Graph.associationRulesFrom(li,
+    assert(Graph.associationRules(li,
         GraphStage.copurchase(spark, sf0001)).collect().toSeq ==
-      Graph.associationRules(li).collect().toSeq)
-    // ...and the BFS consumer (exercises closenessBfsFrom)
-    assert(Graph.closenessBfsFrom(
+      Graph.associationRules(li, Graph.copurchaseEdges(li)).collect().toSeq)
+    // ...and the BFS consumer
+    assert(Graph.closenessBfs(
         GraphStage.copurchase(spark, sf0001).select("a", "b"))
         .collect().toSeq ==
-      Graph.closenessBfs(li).collect().toSeq)
+      Graph.closenessBfs(Graph.copurchaseEdges(li).select("a", "b"))
+        .collect().toSeq)
     // derive-once: the second staged handle is the same checkpointed
     // frame, not a re-derivation
     assert(GraphStage.copurchase(spark, sf0001).queryExecution.analyzed
@@ -248,11 +250,14 @@ class GraphSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getString(1))).toSet)
     // staged consumers equal their live forms: an iterative unweighted
     // gate, the weighted family, and an undirected-derivation gate
-    assert(Graph.wordPageRankFrom(GraphStage.wordEdges(spark, sf0001))
-        .collect().toSeq == Graph.wordPageRank(d).collect().toSeq)
-    assert(Graph.ssspWordsFrom(GraphStage.wordEdgeCounts(spark, sf0001))
-        .collect().toSeq == Graph.ssspWords(d).collect().toSeq)
-    assert(Graph.bfsDistancesFrom(GraphStage.wordEdges(spark, sf0001))
-        .collect().toSeq == Graph.bfsDistances(d).collect().toSeq)
+    assert(Graph.wordPageRank(GraphStage.wordEdges(spark, sf0001))
+        .collect().toSeq ==
+      Graph.wordPageRank(Graph.bigramEdges(d)).collect().toSeq)
+    assert(Graph.ssspWords(GraphStage.wordEdgeCounts(spark, sf0001))
+        .collect().toSeq ==
+      Graph.ssspWords(Graph.bigramEdgeCounts(d)).collect().toSeq)
+    assert(Graph.bfsDistances(GraphStage.wordEdges(spark, sf0001))
+        .collect().toSeq ==
+      Graph.bfsDistances(Graph.bigramEdges(d)).collect().toSeq)
   }
 }

@@ -808,12 +808,28 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("windowFunnelN(3 steps) values equal the hard-wired windowFunnel") {
+    // brute-force reference: a user reaches a step iff SOME chain of
+    // step events exists, each strictly after the last and all inside
+    // 6h of the chain's view (no greedy choice anywhere)
     val events = Tables.events(spark, sf0001)
     val n = operators.Relational.windowFunnelN(events,
       Seq("view", "signup", "purchase")).collect()(0)
-    val w = operators.Relational.windowFunnel(events).collect()(0)
-    assert(Seq(n.getLong(0), n.getLong(1), n.getLong(2)) ==
-      Seq(w.getLong(0), w.getLong(1), w.getLong(2)))
+    val w = 6 * 3600000L
+    val perUser = events.select("user_id", "event_type", "ts_ms").collect()
+      .groupBy(_.getLong(0)).values.map { rs =>
+        def at(t: String) = rs.filter(_.getString(1) == t).map(_.getLong(2))
+        val (v, s, p) = (at("view"), at("signup"), at("purchase"))
+        (v.nonEmpty,
+          v.exists(vt => s.exists(st => st > vt && st <= vt + w)),
+          v.exists(vt => s.exists(st => st > vt &&
+            p.exists(pt => pt > st && pt <= vt + w))))
+      }.toSeq
+    val want = Seq(perUser.count(_._1), perUser.count(_._2),
+      perUser.count(_._3)).map(_.toLong)
+    assert(Seq(n.getLong(0), n.getLong(1), n.getLong(2)) == want)
+    assert(want(2) > 0L, "the fixture must hold a full conversion")
+    assert(Seq(n.getLong(3), n.getLong(4)) ==
+      Seq(want(1) * 1000000L / want(0), want(2) * 1000000L / want(0)))
   }
 
   test("madOutliers: one spike day flagged against a zero-MAD baseline") {

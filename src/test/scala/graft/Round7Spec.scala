@@ -99,7 +99,8 @@ class Round7Spec extends SparkSpec {
     // a–b seen twice (cost 500000), b–c once (cost 1000000); source "a"
     val docs = Seq((1L, "a b"), (2L, "a b"), (3L, "b c"))
       .toDF("doc_id", "text")
-    val got = operators.Graph.ssspWords(docs, rounds = 3).collect()
+    val got = operators.Graph.ssspWords(
+        operators.Graph.bigramEdgeCounts(docs), rounds = 3).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 0L, "b" -> 500000L, "c" -> 1500000L))
   }
@@ -235,7 +236,8 @@ class Round7Spec extends SparkSpec {
   test("diameter2Sweep: path graph eccentricity from both sweeps") {
     val docs = Seq((1L, "a b"), (2L, "b c"), (3L, "c d"))
       .toDF("doc_id", "text")
-    val r = operators.Graph.diameter2Sweep(docs).collect().head
+    val r = operators.Graph.diameter2Sweep(operators.Graph.bigramEdges(docs))
+      .collect().head
     assert((r.getString(0), r.getString(1), r.getString(2),
       r.getLong(3)) == (("a", "d", "a", 3L)))
   }
@@ -254,7 +256,8 @@ class Round7Spec extends SparkSpec {
     // through all rounds with final support 2; (d,e) has 0 -> peeled.
     val docs = Seq((1L, "a b c d a c b d"), (2L, "d e"))
       .toDF("doc_id", "text")
-    val got = operators.Graph.ktrussEdges(docs).collect()
+    val got = operators.Graph.ktrussEdges(operators.Graph.bigramEdges(docs))
+      .collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     assert(got.keySet == Set(("a", "b"), ("a", "c"), ("a", "d"),
       ("b", "c"), ("b", "d"), ("c", "d")))
@@ -266,7 +269,8 @@ class Round7Spec extends SparkSpec {
     // wing edges support 1. Round 1 peels the wings; round 2 finds ab
     // triangle-less and peels it too. Nothing survives.
     val docs = Seq((1L, "a b c a"), (2L, "a b d a")).toDF("doc_id", "text")
-    assert(operators.Graph.ktrussEdges(docs).count() == 0L)
+    assert(operators.Graph.ktrussEdges(operators.Graph.bigramEdges(docs))
+      .count() == 0L)
   }
 
   test("sessionSensitivity: one gap scan, three thresholds") {
@@ -366,7 +370,8 @@ class Round7Spec extends SparkSpec {
       (105L, 3L), (105L, 4L), (106L, 3L), (106L, 4L),
       (107L, 4L), (107L, 5L), (108L, 4L), (108L, 5L))
       .toDF("l_orderkey", "l_partkey")
-    val got = operators.Graph.closenessBfs(li).collect()
+    val got = operators.Graph.closenessBfs(
+        operators.Graph.copurchaseEdges(li).select("a", "b")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got(1L) == ((3L, 6L, 500000L)))   // 2@1, 3@2, 4@3

@@ -48,7 +48,7 @@ class Round8Spec extends SparkSpec {
     // both x and y relative to pivot a)
     val docs = Seq((1L, "a b c a"), (2L, "z a"), (3L, "c d"),
       (4L, "x y")).toDF("doc_id", "text")
-    val got = Graph.bowtie(docs).collect()
+    val got = Graph.bowtie(Graph.bigramEdges(docs).localCheckpoint()).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
     assert(got.toSeq == Seq(
       ("disc", 2L, "x", "y"),
@@ -128,7 +128,8 @@ class Round8Spec extends SparkSpec {
     // hash-driven choice is forced and the walk from `a` must be
     // "a b c d"; from `c` (2 steps available) it's "c d" then absorbs.
     val d = Seq((1L, "aa bb cc dd")).toDF("doc_id", "text")
-    val got = Graph.walkCorpus(d, nWalks = 2, len = 3).collect()
+    val got = Graph.walkCorpus(Graph.bigramEdges(d), nWalks = 2, len = 3)
+      .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     // starts = nodes with out-edges: aa, bb, cc (dd is a sink)
     assert(got.length == 6)
@@ -177,7 +178,10 @@ class Round8Spec extends SparkSpec {
       (1L, "aaaa", 7L, 1.50), (2L, "aaab", 7L, 2.25), // lev-1 cluster
       (3L, "zzzz", 7L, 9.99)                          // singleton: dropped
     ).toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    val got = operators.Dedup.goldenRecord(c, maxDist = 1).collect()
+    val clusters = operators.Dedup.componentsStar(
+        operators.Dedup.blockedFuzzyPairs(c, maxDist = 1))
+      .select($"doc_id".as("custkey"), $"comp")
+    val got = operators.Dedup.goldenRecord(c, clusters).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq((1L, "aaaa", 2L, 375L)))
   }
@@ -218,7 +222,7 @@ class Round8Spec extends SparkSpec {
     // sentence corpus is exactly {aa bb cc dd, bb cc dd, cc dd} x 2
     // and PMI is computable by hand: n_total=18, (aa,bb) 2*18k/8=4500
     val d = Seq((1L, "aa bb cc dd")).toDF("doc_id", "text")
-    val sentences = Graph.walkCorpus(d, nWalks = 2, len = 3)
+    val sentences = Graph.walkCorpus(Graph.bigramEdges(d), nWalks = 2, len = 3)
       .select(org.apache.spark.sql.functions.col("path").as("text"),
         lit(0L).as("doc_id"))
     val got = operators.TextAnalysis.bigramPmi(sentences, minCnt = 2, k = 10)
@@ -257,7 +261,8 @@ class Round8Spec extends SparkSpec {
     // 7-token run with them -> winnow candidate, not truth
     val far = (300 until 340).map(w8).mkString(" ") + " " + shared
     val d = Seq((1L, text), (2L, text), (3L, far)).toDF("doc_id", "text")
-    val r = operators.Dedup.winnowEval(d).collect()(0)
+    val r = operators.Dedup.winnowEval(d,
+      operators.Dedup.jaccardPairsUnsorted(d, 3, 4, 5)).collect()(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
       == ((1L, 3L, 1L, 333333L, 1000000L)))
   }

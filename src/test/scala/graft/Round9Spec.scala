@@ -283,7 +283,8 @@ class Round9Spec extends SparkSpec {
       (2L, run + " nu xi omicron pi rho sigma tau upsilon"),
       (3L, run + " aa bb cc dd ee ff gg hh")
     ).toDF("doc_id", "text")
-    val r = operators.Dedup.randIndexEval(d).collect()(0)
+    val r = operators.Dedup.randIndexEval(d,
+      operators.Dedup.jaccardPairsUnsorted(d, 3, 4, 5)).collect()(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
       == ((3L, 1L, 3L, 1L, 333333L)))
   }

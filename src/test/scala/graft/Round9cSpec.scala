@@ -206,7 +206,8 @@ class Round9cSpec extends SparkSpec {
       (10L, 4L, "view", 0L), (11L, 4L, "view", 10 * h),
       (12L, 4L, "signup", 11 * h), (13L, 4L, "purchase", 12 * h)
     ).toDF("event_id", "user_id", "event_type", "ts_ms")
-    val row = operators.Relational.windowFunnel(ev).collect().head
+    val row = operators.Relational.windowFunnelN(ev,
+      Seq("view", "signup", "purchase")).collect().head
     assert(row.getLong(0) == 4L, "all four users viewed")
     assert(row.getLong(1) == 3L, "users 1, 3, 4 reach signup in-window")
     assert(row.getLong(2) == 2L, "users 1 and 4 convert fully")

@@ -150,6 +150,41 @@ class StagingAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("no scaladoc directly above another scaladoc") {
+    // Scaladoc keeps only the lower of two stacked comments, so the
+    // upper text is lost: each belongs on its own definition
+    import scala.jdk.CollectionConverters._
+    val all = filesUnder("src/main/scala").filter(_.toString.endsWith(".scala"))
+      .map(f => (f.toString, java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq))
+    assert(all.exists(_._2.exists(_.trim.startsWith("/**"))),
+      "audit found no scaladoc under src/main/scala")
+    val stacked = all.flatMap { case (rel, lines) =>
+      (1 until lines.size).collect {
+        case i if lines(i - 1).trim.endsWith("*/") &&
+          lines(i).trim.startsWith("/**") => s"  $rel:${i + 1}"
+      }
+    }
+    assert(stacked.isEmpty,
+      "move each upper scaladoc onto its own definition:\n" + stacked.mkString("\n"))
+  }
+
+  test("graph and dedup operators have one entry point: no xxxFrom twin") {
+    // an operator takes its prepared input and staging lives in
+    // sources/*Stage, so no self-deriving wrapper sits beside a From form
+    val files = Set("operators/Graph.scala", "operators/Dedup.scala")
+    val scanned = sources.filter(s => files(s._1))
+    assert(scanned.map(_._1).toSet == files, s"audit found no $files under $root")
+    val Twin = """def\s+\w+From\(""".r
+    val twins = scanned.flatMap { case (rel, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if Twin.findFirstIn(l).isDefined => s"  $rel:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(twins.isEmpty,
+      "give the operator its plain name and pass the derivation at the call site:\n" +
+        twins.mkString("\n"))
+  }
+
   private def filesUnder(dir: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala

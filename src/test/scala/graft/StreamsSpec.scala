@@ -397,8 +397,9 @@ class StreamsSpec extends SparkSpec {
   test("streaming window funnel equals the batch funnel (2-batch replay)") {
     val got = graft.streaming.Streams
       .windowFunnelAvailableNow(spark, sf0001).collect()(0)
-    val want = operators.Relational.windowFunnel(
-      Tables.events(spark, sf0001)).collect()(0)
+    val want = operators.Relational.windowFunnelN(
+      Tables.events(spark, sf0001), Seq("view", "signup", "purchase"))
+      .collect()(0)
     assert((0 to 4).map(got.getLong) == (0 to 4).map(want.getLong))
   }
 
