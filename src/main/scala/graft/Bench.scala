@@ -75,38 +75,42 @@ object Bench {
   private[graft] def summarize(done: Seq[(String, Double)]): Summary = {
     val sorted = done.sortBy(_._1)
     val failed = sorted.collect { case (k, v) if v < 0 => k }
-    Summary(
-      sorted.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"),
-      failed,
+    Summary(Json.obj(sorted.map { case (k, v) => k -> v.toString }), failed,
       sorted.map(_._2).filter(_ >= 0).sum + 600.0 * failed.size)
   }
 
+  /** [[Driver.attempt]] under the `[bench]` prefix that also records a
+    * failure's exception class under `name` in `failed` (the record's
+    * `failed_class`): every failure the sweep catches, not only the
+    * queries that read −1.
+    */
+  private[graft] def attempt[A](failed: scala.collection.mutable.Map[String, String],
+                                name: String)(body: => A): Option[A] =
+    Driver.attempt("bench", name)(body).left.map(failed(name) = _).toOption
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession
-      .builder("graft-bench", s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session("graft-bench", 4, "WARN")
 
-    def report(name: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+    // staging chains record their failures from pool threads
+    val failedClass = scala.collection.concurrent.TrieMap[String, String]()
+    def attempt[A](name: String)(body: => A): Option[A] =
+      Bench.attempt(failedClass, name)(body)
 
-    try SparkEntry.entry(spark).count() catch { case e: Throwable => report("entry", e) }
+    attempt("entry")(SparkEntry.entry(spark).count())
 
     // derive the session-staged family state up front (see scaladoc);
     // each getter localCheckpoints/saves on first call, so count() /
-    // the cheapest consumer forces materialization. Best-effort: a
-    // failed pre-warm just returns the old run-1 behavior.
+    // the cheapest consumer forces materialization.
     // The nine family chains are INDEPENDENT, so they overlap on a
     // small driver thread pool (Spark happily runs concurrent jobs;
     // each chain's tail leaves cores the next chain's tasks back-fill).
     // Within a chain order is preserved (ccLabels derives from pairs,
     // fuzzyClusters from fuzzyPairs) so dependent derivations stay
     // single-computed. Sequential staging measured
-    // 36-77 s; overlapped ~⅓ of that on the same host. Best-effort as
-    // before: a failed chain just returns the old run-1 behavior, but
-    // is reported on stderr (chain index, exception class, message).
+    // 36-77 s; overlapped ~⅓ of that on the same host. Best-effort: a
+    // failed chain moves its cost into its gates' run 1, and is
+    // reported on stderr and in `failed_class` as `staging chain <i>`.
     val stagingSec: Double = {
       val t0 = System.nanoTime()
       import graft.sources.{AnnIndex, CfIndex, DedupStage, GraphStage, MediaStage}
@@ -123,21 +127,14 @@ object Bench {
         () => CfIndex.cfNeighbors(spark, sfDir).count(),
         () => AnnIndex.annIncrementDrift(spark, sfDir).count())
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      val futures = chains.map(c => pool.submit(new Runnable {
-        def run(): Unit = c()
-      }))
+      chains.zipWithIndex.foreach { case (c, i) =>
+        pool.execute(() => attempt(s"staging chain $i")(c()))
+      }
       pool.shutdown()
-      try {
-        futures.zipWithIndex.foreach { case (f, i) =>
-          try f.get() catch {
-            case e: java.util.concurrent.ExecutionException =>
-              report(s"staging chain $i", e.getCause)
-          }
-        }
-        // staging ends when the workers have exited, not at the last get
-        pool.awaitTermination(Long.MaxValue,
-          java.util.concurrent.TimeUnit.NANOSECONDS)
-      } catch {
+      // staging ends when the workers have exited
+      try pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+      catch {
         case _: InterruptedException =>
           pool.shutdownNow()
           Thread.currentThread().interrupt()
@@ -151,21 +148,13 @@ object Bench {
     // auto-classifies: seconds up + counters flat = host)
     val meter = BenchMetrics.install(spark.sparkContext)
 
-    def once(name: String): (Double, BenchMetrics.Snap) = {
-      meter.reset()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, meter.snapshot())
-      } catch { case e: Throwable => report(name, e); (-1.0, null) }
-    }
+    def once(name: String): Option[(Double, BenchMetrics.Snap)] =
+      attempt(name)(Driver.runNoop(spark, meter, name, sfDir))
 
     // last-capture per-query seconds, for the heaviest-first order.
     // Regex-parsed ("name":N pairs) — the non-query headline keys it
     // also picks up ("value", "sf") never collide with query names.
-    val (outPath, priorPath) =
-      paths(sys.env, sys.props.getOrElse("user.dir", "."))
+    val (outPath, priorPath) = paths(sys.env, sys.props.getOrElse("user.dir", "."))
     val prior: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(priorPath)), "UTF-8")
@@ -178,23 +167,20 @@ object Bench {
     }
     val names = orderNames(SparkEntry.queries.keys.toSeq, prior)
 
-    val qmetrics =
-      scala.collection.mutable.Map[String, BenchMetrics.Snap]()
+    val qmetrics = scala.collection.mutable.Map[String, BenchMetrics.Snap]()
     val excursions = scala.collection.mutable.Map[String, Double]()
 
     def writeOut(done: Seq[(String, Double)], partial: Boolean): Unit = {
       val summary = summarize(done)
       val flag = if (partial) "\"partial\":true," else ""
-      val qm = qmetrics.toSeq.sortBy(_._1)
-        .map { case (k, s) => "\"" + k + "\":" + s.json }
-        .mkString("{", ",", "}")
-      val exc = excursions.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
+      val qm = Json.obj(qmetrics.map { case (k, s) => k -> s.json })
+      val exc = Json.obj(excursions.map { case (k, v) => k -> v.toString })
+      val fc = Json.obj(failedClass.map { case (k, c) => k -> Json.quote(c) })
       val full = s"""{"metric":"total",$flag"value":${summary.total},""" +
         s""""unit":"sec","n_queries":${done.size},"queries":${summary.qs},""" +
         s""""failed":${summary.failedJson},"staging":$stagingSec,""" +
-        s""""qmetrics":$qm,"excursions":$exc,"sf":"$sfDir"}"""
+        s""""qmetrics":$qm,"excursions":$exc,""" +
+        s""""failed_class":$fc,"sf":"$sfDir"}"""
       try {
         val out = java.nio.file.Paths.get(outPath)
         Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
@@ -207,31 +193,25 @@ object Bench {
 
     // min-of-runs seconds AND the min run's counters (the clean run is
     // the one adjudication reads; a retried-stage excursion's inflated
-    // task count must not pollute the deterministic record)
+    // task count must not pollute the deterministic record). A failed
+    // run makes the query −1.
     def measure(name: String): Double = {
-      var best = Double.MaxValue
-      var bestSnap: BenchMetrics.Snap = null
-      def run(): Double = {
-        val (t, s) = once(name)
-        if (t >= 0 && t < best) { best = t; bestSnap = s }
+      val runs = scala.collection.mutable.ArrayBuffer(once(name), once(name))
+      // third run when the first two disagree beyond host noise OR
+      // the query is expensive — regression adjudication reads the
+      // heavy queries' minimums, so those keep full min-of-3; the
+      // ~2/3 of queries that are cheap AND stable stay at two runs
+      runs.flatten.map(_._1).toList match {
+        case List(t1, t2) if math.abs(t1 - t2) > 0.2 * math.min(t1, t2) ||
+            math.min(t1, t2) > 1.0 => runs += once(name)
+        case _ =>
+      }
+      if (runs.exists(_.isEmpty)) -1.0
+      else {
+        val (t, snap) = runs.flatten.minBy(_._1)
+        qmetrics(name) = snap
         t
       }
-      val t1 = run()
-      val t2 = run()
-      val t = if (t1 < 0 || t2 < 0) -1.0
-      else {
-        val m = math.min(t1, t2)
-        // third run when the first two disagree beyond host noise OR
-        // the query is expensive — regression adjudication reads the
-        // heavy queries' minimums, so those keep full min-of-3; the
-        // ~2/3 of queries that are cheap AND stable stay at two runs
-        if (math.abs(t1 - t2) > 0.2 * m || m > 1.0) {
-          val t3 = run()
-          if (t3 < 0) -1.0 else math.min(m, t3)
-        } else m
-      }
-      if (t >= 0 && bestSnap != null) qmetrics(name) = bestSnap
-      t
     }
 
     val results = scala.collection.mutable.ArrayBuffer[(String, Double)]()
@@ -247,14 +227,12 @@ object Bench {
     // the sweep's existing methodology.
     for (i <- results.indices) {
       val (name, t) = results(i)
-      if (isExcursion(t, prior.getOrElse(name, 0.0))) {
-        val (t2, s2) = once(name)
-        if (t2 >= 0 && t2 < t) {
+      if (isExcursion(t, prior.getOrElse(name, 0.0)))
+        once(name).filter(_._1 < t).foreach { case (t2, s2) =>
           excursions(name) = t
           results(i) = name -> t2
-          if (s2 != null) qmetrics(name) = s2
+          qmetrics(name) = s2
         }
-      }
     }
     if (excursions.nonEmpty) writeOut(results.toSeq, partial = true)
     val summary = summarize(results.toSeq)

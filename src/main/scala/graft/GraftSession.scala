@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session builder: the configuration posture this engine
-  * assumes at scale, in one place. Local callers (tests, Verify,
-  * Bench) override master/partitions; on a cluster the same knobs are
-  * what matter at 100 TB:
+  * assumes at scale, in one place. Local callers (tests, the driver
+  * mains through [[Driver.session]]) override master/partitions; on a
+  * cluster the same knobs are what matter at 100 TB:
   *
   *  - AQE on (runtime partition coalescing + skew-join splitting
   *    replace hand-tuned reducer counts);

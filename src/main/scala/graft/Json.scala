@@ -1,7 +1,7 @@
 package graft
 
-/** JSON string literals for the artifacts the mains write by hand
-  * (`oracle_sql.json`, `PLAN_SNAPSHOT.json`).
+/** JSON for the artifacts the mains write by hand (`oracle_sql.json`,
+  * `PLAN_SNAPSHOT.json`, the bench record).
   */
 object Json {
 
@@ -19,4 +19,9 @@ object Json {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** A JSON object of already-rendered values, keys quoted and sorted. */
+  def obj(entries: Iterable[(String, String)]): String =
+    entries.toSeq.sortBy(_._1).map { case (k, v) => quote(k) + ":" + v }
+      .mkString("{", ",", "}")
 }

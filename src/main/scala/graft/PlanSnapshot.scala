@@ -4,7 +4,8 @@ package graft
   * NORMALIZED physical-plan skeleton (operator names in tree order,
   * with expression ids, codegen ids, session-unique table tags and
   * temp paths stripped) plus a stable digest of it. Written as JSON to
-  * SPARK_GRAFT_PLAN_OUT (default <cwd>/PLAN_SNAPSHOT.json).
+  * [[outPath]]; the committed `PLAN_SNAPSHOT.json` changes only when a
+  * run's file is copied over it on purpose.
   *
   * Purpose: the bench map catches TIME regressions; this catches PLAN
   * regressions that timing noise hides at bench SF but that kill a
@@ -322,39 +323,39 @@ object PlanSnapshot {
     */
   private[graft] def fingerprint(name: String, full: Boolean)(
       query: => org.apache.spark.sql.DataFrame): String =
-    try {
+    Driver.attempt("plansnap", name) {
       val p = query.queryExecution.executedPlan.toString
       if (full) normalize(p).mkString("\n") else digest(normalize(p))
-    } catch { case e: Throwable =>
-      Console.err.println(
-        s"[plansnap] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-      s"ERROR ${e.getClass.getName}"
-    }
+    }.fold(cls => s"ERROR $cls", identity)
+
+  /** `SPARK_GRAFT_PLAN_OUT`, else the gitignored `target/` copy: a run
+    * never rewrites the committed snapshot.
+    */
+  private[graft] def outPath(env: Map[String, String], cwd: String): String =
+    env.getOrElse("SPARK_GRAFT_PLAN_OUT", s"$cwd/target/PLAN_SNAPSHOT.json")
+
+  /** All gates, or the named ones (a flake-chasing aid), in name order;
+    * an unregistered name fails before Spark starts.
+    */
+  private[graft] def parseArgs(args: Seq[String]): Seq[String] =
+    if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted
+    else Driver.select(args.distinct.sorted)
 
   def main(args: Array[String]): Unit = {
+    val names = parseArgs(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession
-      .builder("graft-plansnap", s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Driver.session("graft-plansnap", 8, "ERROR")
     // SPARK_GRAFT_PLAN_FULL=1: write the normalized skeletons instead
     // of digests — the debug mode for chasing a digest instability
     val full = sys.env.get("SPARK_GRAFT_PLAN_FULL").contains("1")
-    // optional args: restrict to the named queries (flake-chasing aid)
-    val only: Option[Set[String]] = if (args.nonEmpty) Some(args.toSet) else None
-    val entries = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-      .map { name =>
-      val fp = fingerprint(name, full)(SparkEntry.queries(name)(spark, sfDir))
-      s""""$name":${Json.quote(fp)}"""
-    }
-    val json = entries.mkString("{", ",", "}")
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT",
-      sys.props.getOrElse("user.dir", ".") + "/PLAN_SNAPSHOT.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
-    println(s"[plansnap] wrote ${SparkEntry.queries.size} plan digests to $outPath")
+    val json = Json.obj(names.map { name =>
+      name -> Json.quote(fingerprint(name, full)(SparkEntry.queries(name)(spark, sfDir)))
+    })
+    val out = java.nio.file.Paths.get(
+      outPath(sys.env, sys.props.getOrElse("user.dir", ".")))
+    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
+    println(s"[plansnap] wrote ${names.size} plan digests to $out")
     spark.stop()
   }
 }

@@ -129,49 +129,31 @@ object SoakProbe {
     */
   private[graft] def parseArgs(args: Seq[String]): (Seq[Int], Seq[String]) = {
     val (fs, gs) = args.span(a => a.nonEmpty && a.forall(_.isDigit))
-    val gates = if (gs.isEmpty) DefaultGates else gs
-    val unknown = gates.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"no gate named ${unknown.mkString(", ")}")
-    (fs.map(_.toInt).filter(_ > 1).distinct, gates)
+    (fs.map(_.toInt).filter(_ > 1).distinct,
+      Driver.select(if (gs.isEmpty) DefaultGates else gs))
   }
 
   def main(args: Array[String]): Unit = {
     val (factors, gates) = parseArgs(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR must name an sf dir"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession
-      .builder("graft-soak", s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session("graft-soak", 4, "WARN")
     SparkEntry.entry(spark).count()
     val meter = BenchMetrics.install(spark.sparkContext)
     val root = TempDirs.scratchString("graft_soak_")
-
-    def once(gate: String, dir: String): (Double, BenchMetrics.Snap) = {
-      meter.reset()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(gate)(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSparkInternals.waitListenerBusEmpty(spark.sparkContext)
-      (sec, meter.snapshot())
-    }
 
     // factor -> gate -> (cold run, min warm run)
     val points = for (factor <- 1 +: factors) yield {
       val dir = if (factor == 1) sfDir else replicate(spark, sfDir, factor, s"$root/f$factor")
       factor -> gates.flatMap { gate =>
-        try {
+        Driver.attempt("soak", s"$gate x$factor") {
           val runs = (1 to 3).map { i =>
-            val (sec, snap) = once(gate, dir)
+            val (sec, snap) = Driver.runNoop(spark, meter, gate, dir)
             println(f"""{"gate":"$gate","factor":$factor,"run":$i,"sec":$sec%.2f,"metrics":${snap.json}}""")
             (sec, snap)
           }
-          Some(gate -> (runs.head, runs.tail.minBy(_._1)))
-        } catch { case e: Exception =>
-          System.err.println(s"[soak] $gate x$factor failed: ${e.getClass.getName}: ${e.getMessage}")
-          None
-        }
+          gate -> (runs.head, runs.tail.minBy(_._1))
+        }.toOption
       }.toMap
     }
     for (gate <- gates; base <- points.head._2.get(gate)) {

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,33 +16,29 @@ object Verify {
       s"usage: Verify <sfDir> <outDir> [name,name,...] (got ${args.length} arguments)")
     val sfDir = args(0)
     require(new java.io.File(sfDir).isDirectory, s"no sf directory at $sfDir")
-    val only = args.lift(2).map(_.split(',').toSet)
-    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"no gate named ${unknown.toSeq.sorted.mkString(", ")}")
+    val only = args.lift(2).map(a => Driver.select(a.split(',').toSeq).toSet)
     (sfDir, args(1), only)
+  }
+
+  /** `query`'s result as one parquet file in `$outDir/$name`, deleted
+    * first: a gate that fails leaves no stale result for the compare.
+    */
+  private[graft] def dump(outDir: String, name: String)(query: => DataFrame): Unit = {
+    TempDirs.deleteRecursively(Paths.get(outDir, name))
+    Driver.attempt("verify", name) {
+      query.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = parseArgs(args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession
-      .builder("graft-verify", s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session("graft-verify", 4, "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-      }
-    }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+      .foreach { case (name, fn) => dump(outDir, name)(fn(spark, sfDir)) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.obj(SparkEntry.oracleSql
+      .collect { case (k, v) if only.forall(_.contains(k)) => k -> Json.quote(v) }))
     spark.stop()
   }
 }

@@ -328,9 +328,13 @@ object TextGates {
          |FROM chunks GROUP BY 1 ORDER BY 1""".stripMargin),
     // capstone v2: exact dedup + Gopher static&repetition screens +
     // winnow span-cuts + chunk accounting + per-(split, source)
-    // mixture rollup — the round-7..10 operators composed end to end
+    // mixture rollup — the round-7..10 operators composed end to end.
+    // The documents are spread ONCE above the capstone's branches:
+    // every screen re-derives from its input, and redistributing the
+    // sub-split local scan parallelizes each branch's per-row work
+    // (measured 2.6 → 2.1 s)
     Gate("corpus_build_v2", (s, dir) =>
-      TextAnalysis.corpusBuildV2(Tables.documents(s, dir),
+      TextAnalysis.corpusBuildV2(WordCount.fillCores(Tables.documents(s, dir)),
         islands = Some(graft.sources.DedupStage.islands(s, dir))),
       // v2 capstone: winnow islands (SqlCrossDocCtes) + exact-dedup keep
       // + Gopher static/repetition screens + arithmetic chunking over the

@@ -243,25 +243,6 @@ object Relational {
           .otherwise(0L)).as("promo_c4"),
         sum("rev_c4").as("total_c4"))
 
-  /** Full outer join coverage: per-nation customer vs supplier counts —
-    * nations may have customers, suppliers, neither side is guaranteed,
-    * and both sides aggregate BEFORE the join (25-row inputs), so the
-    * outer join itself is trivial at any scale.
-    */
-  def nationCustSuppFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-      .groupBy(col("c_nationkey").cast("long").as("ck"))
-      .agg(count(lit(1)).as("n_cust"))
-    val s = Tables.supplier(spark, dir)
-      .groupBy(col("s_nationkey").cast("long").as("sk"))
-      .agg(count(lit(1)).as("n_supp"))
-    c.join(s, col("ck") === col("sk"), "full_outer")
-      .select(coalesce(col("ck"), col("sk")).as("nationkey"),
-        coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-        coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-      .orderBy("nationkey")
-  }
-
   /** Event-type transition matrix (Markov edges): lag over each user's
     * event sequence, then count (prev → next) pairs, top-k. One shuffle
     * on user_id for the lag, one on the pair for the count — the

@@ -458,27 +458,19 @@ object TextAnalysis {
     * window over ≤ splits×sources rows. No stage is corpus-quadratic.
     */
   def corpusBuildV2(docs: DataFrame, chunkSize: Int = 32, overlap: Int = 8,
-                    w: Int = 8, islands: Option[DataFrame] = None,
-                    fill: Boolean = true): DataFrame = {
+                    w: Int = 8, islands: Option[DataFrame] = None): DataFrame = {
     // `islands`: pre-built cross-doc span islands at window `w` (the
-    // staged frame from [[graft.sources.DedupStage.islands]])
+    // staged frame from [[graft.sources.DedupStage.islands]]). Every
+    // screen re-derives from `docs` as given: a caller that wants the
+    // input spread across cores spreads it once, before the call.
     val stride = chunkSize - overlap
-    // pre-fill ONCE above the branches (r15, `fill`): every screen
-    // re-derives from the input frame; redistributing a sub-split
-    // local input here parallelizes each branch's per-row work
-    // (measured 2.6 → 2.1 s over raw docs). corpusBuildV3 opts OUT —
-    // its input carries the wrap+regex extraction, and an exchange
-    // above that serializes the extraction behind one task while
-    // fanning every downstream stage (measured 4.7 → 7.7 s sweep /
-    // 343-task floods in the repartitioned variants).
-    val d = if (fill) WordCount.fillCores(docs) else docs
-    val keep = d.groupBy(md5(col("text")))
+    val keep = docs.groupBy(md5(col("text")))
       .agg(min("doc_id").as("doc_id")).select("doc_id")
-    val gok = gopherRules(d).where(col("gopher_ok")).select("doc_id")
-    val rok = repetitionProfile(d).where(col("rep_ok")).select("doc_id")
-    val nk = Dedup.cutSpans(d, islands.getOrElse(Dedup.crossDocSpans(d, w)))
+    val gok = gopherRules(docs).where(col("gopher_ok")).select("doc_id")
+    val rok = repetitionProfile(docs).where(col("rep_ok")).select("doc_id")
+    val nk = Dedup.cutSpans(docs, islands.getOrElse(Dedup.crossDocSpans(docs, w)))
       .select("doc_id", "n_kept")
-    val surv = d.select("doc_id", "source")
+    val surv = docs.select("doc_id", "source")
       .join(keep, "doc_id").join(gok, "doc_id").join(rok, "doc_id")
       .join(nk, "doc_id")
       .where(col("n_kept") > 0)
@@ -938,10 +930,15 @@ object TextAnalysis {
     // the scheduler with 32-way fan-out on every downstream stage
     // (529 tasks, 5–9 s scheduler latency). The repeated extraction is
     // the cheaper evil at bench scale; at 100 TB the extracted text is
-    // a written parquet handoff and the branches read THAT.
+    // a written parquet handoff and the branches read THAT. For the
+    // same reason the extracted input is not spread with
+    // [[WordCount.fillCores]]: an exchange above the wrap+regex
+    // extraction serializes it behind one task while fanning every
+    // downstream stage (measured 4.7 → 7.7 s sweep / 343-task floods
+    // in the repartitioned variants).
     corpusBuildV2(docs.withColumn("text",
         htmlExtractCol(htmlWrap(col("doc_id"), col("text")))),
-      chunkSize, overlap, w, fill = false)
+      chunkSize, overlap, w)
 
   /** PII patterns shared with the oracle — kept lookaround-free so Java
     * regex and RE2 agree byte-for-byte.

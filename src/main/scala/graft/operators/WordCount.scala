@@ -82,8 +82,8 @@ object WordCount {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // idempotent: a frame the caller already redistributed (the
-    // corpusBuildV2/V3 composition pre-fills ONCE above its branches)
-    // must not pay a second exchange per branch. Scoped to repartitions
+    // corpus_build_v2 gate spreads its documents ONCE above the
+    // capstone's branches) must not pay a second exchange per branch. Scoped to repartitions
     // that KEY ON keyCol (ADVICE r15): a repartition in an unrelated
     // joined/staged branch must not silently disable the fill for an
     // otherwise single-split input.

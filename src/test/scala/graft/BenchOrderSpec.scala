@@ -65,4 +65,19 @@ class BenchOrderSpec extends AnyFunSuite {
     assert(s.qs == "{\"a\":1.5,\"b\":2.0,\"zz\":-1.0}")
     assert(Bench.summarize(Seq("a" -> 1.5)).failed.isEmpty)
   }
+
+  test("failed_class: attempt records each failure's exception class") {
+    val failed = scala.collection.mutable.Map[String, String]()
+    val err = new java.io.ByteArrayOutputStream()
+    val got = Console.withErr(err) {
+      (Bench.attempt(failed, "ok")(1.5),
+       Bench.attempt(failed, "zz")(throw new IllegalStateException("boom")),
+       Bench.attempt(failed, "staging chain 3")(throw new ArithmeticException("x")))
+    }
+    assert(got == ((Some(1.5), None, None)))
+    assert(err.toString.contains(
+      "[bench] zz failed: java.lang.IllegalStateException: boom"))
+    assert(failed == Map("zz" -> "java.lang.IllegalStateException",
+      "staging chain 3" -> "java.lang.ArithmeticException"))
+  }
 }

@@ -18,4 +18,10 @@ class JsonSpec extends AnyFunSuite {
     assert(Json.quote("") == "\"\"")
     assert(Json.quote("SELECT 'é' AS x") == "\"SELECT 'é' AS x\"")
   }
+
+  test("obj sorts and quotes keys and keeps rendered values as given") {
+    assert(Json.obj(Seq("b" -> "2.0", "a\"x" -> Json.quote("c"), "a" -> "{}")) ==
+      "{\"a\":{},\"a\\\"x\":\"c\",\"b\":2.0}")
+    assert(Json.obj(Nil) == "{}")
+  }
 }

@@ -194,4 +194,19 @@ class PlanSnapshotSpec extends SparkSpec {
     val ok = PlanSnapshot.fingerprint("range", full = false)(spark.range(3).toDF())
     assert(!ok.startsWith("ERROR") && ok.nonEmpty)
   }
+
+  test("paths: a default run writes under target/, never over the committed file") {
+    assert(PlanSnapshot.outPath(Map.empty, "/repo") == "/repo/target/PLAN_SNAPSHOT.json")
+    assert(PlanSnapshot.outPath(Map("SPARK_GRAFT_PLAN_OUT" -> "/x/plans.json"), "/repo") ==
+      "/x/plans.json")
+  }
+
+  test("arguments: all gates in name order, or the named ones; a typo fails") {
+    assert(PlanSnapshot.parseArgs(Nil) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(PlanSnapshot.parseArgs(Seq("wordcount", "q1_pricing", "wordcount")) ==
+      Seq("q1_pricing", "wordcount"))
+    val typo = intercept[IllegalArgumentException](
+      PlanSnapshot.parseArgs(Seq("wordcount", "wordcuont")))
+    assert(typo.getMessage.contains("wordcuont"))
+  }
 }
